@@ -54,6 +54,32 @@ def _materialize(
     return df.sparkSession.read.parquet(path)
 
 
+def _counted_barrier(df: DataFrame) -> tuple[DataFrame, int]:
+    """Loop barrier that reports what it materialized: ``(frame, rows)``.
+
+    A lazy localCheckpoint materialized by counting its internal RDD —
+    the one job an eager localCheckpoint runs anyway, but the row count
+    comes back to the caller, so a loop can stop on an empty frontier
+    without a second action. The checkpointed frame keeps the
+    optimizer's static size estimate of its lineage (a self-join
+    product: GiBs for a few thousand rows), which plans every later
+    join on it as a shuffle; when the MEASURED size, ``rows *
+    (columns + 1) * 8`` bytes, fits the session's own
+    ``spark.sql.autoBroadcastJoinThreshold``, the frame comes back
+    broadcast-hinted instead. Narrow loop state only (ids, counts,
+    hashes): the 8-byte cell estimate assumes no payload columns."""
+    ck = df.localCheckpoint(eager=False)
+    rows = ck._jdf.queryExecution().toRdd().count()
+    limit = (
+        df.sparkSession._jsparkSession.sessionState()
+        .conf()
+        .autoBroadcastJoinThreshold()
+    )
+    if rows * (len(ck.columns) + 1) * 8 <= limit:
+        ck = broadcast(ck)
+    return ck, rows
+
+
 def symmetrize(edges: DataFrame, a1: str = "actor1", a2: str = "actor2") -> DataFrame:
     """Canonical undirected edges -> both orientations (src, dst).
 
@@ -2539,9 +2565,19 @@ def betweenness_centrality(
       join + aggregate per layer, descending.
 
     betweenness(v) = sum over sources of delta(v) / 2 (undirected).
-    Every layer frame is checkpointed so layer i never re-executes
-    layers 1..i-1 (walk-frontier precedent). Cost: O(V^2) state like
-    the rest of the distance family when ``sources`` is None.
+    Cost: O(V^2) state like the rest of the distance family when
+    ``sources`` is None.
+
+    Barriers: the symmetrized edges, the sources, every forward layer
+    and every backward dependency frame pass through
+    :func:`_counted_barrier` — one job each, which checkpoints the
+    frame (so layer i never re-executes layers 1..i-1), counts its
+    rows, and broadcast-hints it when the measured size fits the
+    session's broadcast threshold. The forward pass stops at the
+    first EMPTY layer (on a clique: at layer 2, not ``max_dist``),
+    and the backward pass runs over only the layers that exist.
+    Edgeless input, or a ``sources`` frame that selects no node,
+    gives an empty result.
 
     ``sources`` (one column ``s``) restricts the forward pass to a
     source SAMPLE — the Brandes-Pich (2007) estimator and THE scale
@@ -2551,19 +2587,18 @@ def betweenness_centrality(
     estimate is replayable. Columns: actor, betweenness (rounded
     1e-6, desc).
     """
-    sym = symmetrize(
-        edges.select("actor1", "actor2").distinct()
-    ).localCheckpoint()
+    sym, _ = _counted_barrier(
+        symmetrize(edges.select("actor1", "actor2").distinct())
+    )
     seed_nodes = sym.select(F.col("src").alias("s")).distinct()
     if sources is not None:
         seed_nodes = seed_nodes.join(sources, "s")
-    layer = (
+    layer, n = _counted_barrier(
         seed_nodes.select(
             "s",
             F.col("s").alias("v"),
             F.lit(1).cast("long").alias("sigma"),
         )
-        .localCheckpoint()
     )
     layers = [layer]
     # seen is a UNION of already-checkpointed layer frames: its lineage
@@ -2572,23 +2607,28 @@ def betweenness_centrality(
     # checkpoints themselves stay — each layer is reused by the next
     # round's anti-join AND the backward pass)
     seen = layer.select("s", "v")
-    for _ in range(max_dist):
+    while n and len(layers) <= max_dist:
         expanded = (
             layer.join(sym, layer.v == sym.src)
             .groupBy("s", F.col("dst").alias("v"))
             .agg(F.sum("sigma").alias("sigma"))
         )
-        layer = expanded.join(seen, ["s", "v"], "left_anti").localCheckpoint()
-        seen = seen.unionByName(layer.select("s", "v"))
-        layers.append(layer)
-    deltas: list[DataFrame | None] = [None] * (max_dist + 1)
-    deltas[max_dist] = layers[max_dist].withColumn(
-        "delta", F.lit(0.0)
-    )
-    for d in range(max_dist, 0, -1):
-        w = deltas[d]
+        layer, n = _counted_barrier(
+            expanded.join(seen, ["s", "v"], "left_anti")
+        )
+        if n:
+            seen = seen.unionByName(layer.select("s", "v"))
+            layers.append(layer)
+    # the deepest layer that exists has no successors (the next one is
+    # empty or past the radius), so its dependencies are all zero;
+    # layer 0 holds the sources themselves, which earn no betweenness
+    delta = layers[-1].withColumn("delta", F.lit(0.0))
+    if len(layers) == 1:  # no source reached any node
+        delta = delta.where(F.lit(False))
+    deltas = [delta]  # kept in layer order 1..deepest
+    for u_layer in reversed(layers[1:-1]):
         contrib = (
-            w.join(sym, w.v == sym.src)
+            delta.join(sym, delta.v == sym.src)
             .select(
                 "s",
                 F.col("dst").alias("v"),
@@ -2596,9 +2636,7 @@ def betweenness_centrality(
                 F.col("delta").alias("delta_w"),
             )
         )
-        u = layers[d - 1].select(
-            "s", "v", F.col("sigma").alias("sigma_u")
-        )
+        u = u_layer.select("s", "v", F.col("sigma").alias("sigma_u"))
         acc = (
             u.join(contrib, ["s", "v"])
             .groupBy("s", "v")
@@ -2610,20 +2648,18 @@ def betweenness_centrality(
                 ).alias("acc")
             )
         )
-        deltas[d - 1] = (
-            layers[d - 1]
-            .join(acc, ["s", "v"], "left")
-            .select(
+        delta, _ = _counted_barrier(
+            u_layer.join(acc, ["s", "v"], "left").select(
                 "s",
                 "v",
                 "sigma",
                 F.coalesce(F.col("acc"), F.lit(0.0)).alias("delta"),
             )
-            .localCheckpoint(eager=False)
         )
-    all_delta = deltas[1]
-    for d in range(2, max_dist + 1):
-        all_delta = all_delta.unionByName(deltas[d])
+        deltas.insert(0, delta)
+    all_delta = deltas[0]
+    for delta in deltas[1:]:
+        all_delta = all_delta.unionByName(delta)
     if sources is None:
         return (
             all_delta.groupBy("v")
@@ -3855,16 +3891,23 @@ def wl_refinement(edges: DataFrame, rounds: int = 3) -> DataFrame:
     the oracle. Exactly ``rounds`` rounds (1-WL stabilizes in <= V,
     3 is the WL-kernel default h).
 
+    Barriers: the symmetrized edges and every round's colors pass
+    through :func:`_counted_barrier` — one counted job per round, and
+    the frame comes back broadcast-hinted when its measured size fits
+    the session's broadcast threshold, so the next round's joins plan
+    as broadcasts instead of shuffles sized by the static estimate.
+    The round count is fixed (no convergence check).
+
     Columns: actor, wl_color (the round-``rounds`` color),
     class_size (nodes sharing it; 1 = structurally unique), ordered
     by actor.
     """
     from neo4j_dynagraph_spark import functions as dfn
 
-    sym = symmetrize(
-        edges.select("actor1", "actor2").distinct()
-    ).localCheckpoint()
-    colors = (
+    sym, _ = _counted_barrier(
+        symmetrize(edges.select("actor1", "actor2").distinct())
+    )
+    colors, _ = _counted_barrier(
         sym.groupBy(F.col("src").alias("actor"))
         .agg(F.count(F.lit(1)).alias("deg"))
         .select(
@@ -3873,7 +3916,6 @@ def wl_refinement(edges: DataFrame, rounds: int = 3) -> DataFrame:
                 F.concat(F.lit("wl0:"), F.col("deg").cast("string"))
             ).alias("color"),
         )
-        .localCheckpoint()
     )
     for r in range(1, rounds + 1):
         nb = (
@@ -3891,9 +3933,8 @@ def wl_refinement(edges: DataFrame, rounds: int = 3) -> DataFrame:
                 F.count(F.lit(1)).alias("deg"),
             )
         )
-        colors = (
-            nb.join(colors, "actor")
-            .select(
+        colors, _ = _counted_barrier(
+            nb.join(colors, "actor").select(
                 "actor",
                 dfn.hash64(
                     F.concat(
@@ -3908,7 +3949,6 @@ def wl_refinement(edges: DataFrame, rounds: int = 3) -> DataFrame:
                     )
                 ).alias("color"),
             )
-            .localCheckpoint()
         )
     sizes = colors.groupBy("color").agg(
         F.count(F.lit(1)).cast("long").alias("class_size")

@@ -41,6 +41,18 @@ cannot decide:
   invocation silently reuse an earlier one's materialization — exactly
   the cross-run caching the bench contract forbids. Every invocation
   writes and reads its own fresh staging dir.
+
+Barrier spellings outside this module, which one materialization
+policy would replace:
+
+- raw ``DataFrame.localCheckpoint()`` calls in the operators;
+- ``graph._materialize(df, spill_dir, name)``: localCheckpoint, or
+  write-parquet-read-back when a ``spill_dir`` is given;
+- ``graph._counted_barrier(df)``: a lazy localCheckpoint materialized
+  by a row count that it returns, broadcast-hinted when the measured
+  size fits ``spark.sql.autoBroadcastJoinThreshold`` — the loop
+  barrier of ``betweenness_centrality`` (whose forward pass stops at
+  the first empty layer) and ``wl_refinement``.
 """
 
 from __future__ import annotations

@@ -8,6 +8,8 @@ token pipelines at 100 TB live or die on staying inside codegen).
 
 from __future__ import annotations
 
+import math
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
@@ -1307,9 +1309,20 @@ def bm25_scores(
     as TakeOrderedAndProject. At 100 TB this is scan + one scalar agg.
 
     idf uses the BM25+ always-positive form ln(1 + (N-df+.5)/(df+.5)).
-    Columns: doc_id, n_hit (query terms present), bm25 (round 6).
+    Columns: doc_id, n_hit (query terms present), bm25 (round 6). An
+    empty ``terms`` list hits no document (empty result); a non-finite
+    ``k1`` or ``b`` raises ``ValueError``.
     """
+    for name, val in (("k1", k1), ("b", b)):
+        if not math.isfinite(val):
+            raise ValueError(f"bm25_scores: {name} must be finite, got {val!r}")
     toked = tokens_df(docs, text_col)
+    if not terms:
+        return toked.select(
+            "doc_id",
+            F.lit(0).alias("n_hit"),
+            F.lit(0.0).alias("bm25"),
+        ).where(F.lit(False))
     # r14 (r13 "not yet optimized" #6): expressions are built as
     # batched SQL strings — ONE Py4J parse call per select instead of
     # hundreds of Column-API JVM round-trips. The local bench floor IS

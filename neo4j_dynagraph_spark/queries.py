@@ -1622,7 +1622,7 @@ g AS (SELECT actor1, actor2,
                                             ORDER BY frame_id) AS gap
       FROM e)
 SELECT actor1, actor2, count(*) AS n_gaps, min(gap) AS min_gap,
-       max(gap) AS max_gap, sum(gap) AS sum_gap,
+       max(gap) AS max_gap, CAST(sum(gap) AS BIGINT) AS sum_gap,
        round(avg(gap), 6) AS avg_gap
 FROM g WHERE gap IS NOT NULL
 GROUP BY 1, 2 ORDER BY 1, 2
@@ -2395,128 +2395,6 @@ _GRADE_WINDOW = [
     "q_event_transitions", "q_conversion_latency", "q_event_outliers",
     "q_rfm_segments", "q_scd2_history",
 ]
-
-# ROTATION (round 13): executed per the r12 verdict's next-round list.
-# (a) The only red rows re-enter post-fix: q_domain_weights +
-# q_stream_domain_weights (integer-grid DoReMi terminal) with their
-# arithmetic-sharing siblings q_bigram_ppl / q_stream_bigram_ppl
-# (same 1e-6-grid core, values changed -> must re-grade).
-# (b) The two STALE FAILs re-enter: q_stream_edges_stateful (code
-# fixed since r04 at streaming/edges.py:238-247, record still red)
-# and q_embed_ann_lsh (r03 no_oracle; an oracle now exists).
-# (c) Rows whose results/plans changed this round re-enter:
-# q_mf_recs (de-cartesianed candidate window + integer-grid GD),
-# q_media_resize (REAL nearest-neighbor resample, new oracle),
-# q_kcore / q_ktruss (upgraded rows-only -> full fixpoint value
-# oracles). Birth-round entry: q_media_frames_mp4 (real stsz-sample
-# walk). (d) The remaining 39 slots rotate to the never-driver-graded
-# tail, prioritized exactly as the verdict lists: the whole
-# token-stats/PII/langid/curation sub-family, the decontam rows,
-# q11_count_hour (the last §2 row without a driver entry), the
-# streaming doc drains, the media/codec rows, and the span/dedup
-# tail. EVERY displaced row was r12-green (most with 2+ cumulative
-# greens) and stays pinned by the full-registry parity gate.
-_GRADE_WINDOW_R13 = [
-    # (a) the r12 red pair + arithmetic-sharing siblings
-    "q_domain_weights", "q_stream_domain_weights",
-    "q_bigram_ppl", "q_stream_bigram_ppl",
-    # (b) stale-FAIL re-grades
-    "q_stream_edges_stateful", "q_embed_ann_lsh",
-    # (c) changed-this-round + birth-round
-    "q_mf_recs", "q_kcore", "q_ktruss",
-    "q_media_resize", "q_media_frames_mp4",
-    # (d) never-driver-graded rotation block
-    "q11_count_hour",
-    # token-stats / PII / langid / curation family
-    "q_token_freq", "q_token_zipf", "q_pii_redact", "q_pii_count",
-    "q_lang_stats", "q_langid_accuracy", "q_vocab_prune",
-    "q_bpe_encode", "q_pack_sequences", "q_token_budget_sample",
-    "q_unigram_logprob", "q_ppl_buckets", "q_quality_score",
-    "q_quality_sample", "q_temperature_mix", "q_train_split",
-    "q_train_shards", "q_rank_fusion",
-    # decontamination rows
-    "q_decontam", "q_bloom_decontam", "q_ngram_containment",
-    # streaming document drains
-    "q_stream_dedup_docs", "q_stream_corpus_stats",
-    # media / codec rows
-    "q_media_frames", "q_binary_meta", "q_multimodal_features",
-    "q_ppm_decode", "q_wav_decode",
-    # span-audit / dedup tail
-    "q_chunk_dups", "q_dup_spans", "q_span_removal",
-    "q_span_removal_exact", "q_dedup_clusters", "q_dedup_minhash_b4r4",
-    # round-13 birth-round entries (standing policy): temporal
-    # PageRank, soft dedup + its streaming twin, and the span core
-    # displace q_widest_paths, q_scd2_history, q_hrw_shards, and
-    # q_triadic_closure — all four never driver-graded but all four
-    # among the r12 VERDICT's own 18/18 driver-identical spot-checks,
-    # so they are the rows whose displacement loses the least; they
-    # stay parity-pinned and rotate in next round
-    "q_temporal_pagerank", "q_soft_dedup",
-    "q_stream_soft_dedup", "q_span_core",
-]
-
-_GRADE_WINDOW_R12 = [
-    # round-11 capstones entering their second graded round
-    "q_training_mix", "q_semdedup",
-    "q_node2vec_walks", "q_link_scores",
-    # (q_stream_dedup_lsh, 1 green, displaced by the birth-round
-    # entry q_si_offspring;
-    # q_stream_embed_topk, 1 green, displaced by the birth-round
-    # entry q_influence_seeds;
-    # q_stream_temperature_mix, 1 green, displaced by its own
-    # family's birth-round entry q_stream_unimax_mix — ties among
-    # 1-green rows break toward keeping capstones graded)
-    "q_pq_recall", "q_ivfpq", "q_png_decode",
-    "q_stream_ivf_assign", "q_triangles_capped",
-    # 2-green rows held for a third green before retirement
-    # (q_join_size_est, 2 greens, displaced by the birth-round entry
-    # q_temporal_closeness_sampled per the standing policy;
-    # q_stream_gopher, q_stream_sq_stats, q_stream_training_mix, and
-    # q_minhash_decontam — all 2 greens — displaced by the round-12
-    # session-2 birth-round entries q_si_spread, q_si_thresholds,
-    # q_wl_colors, q_unimax_mix)
-    # round-12 birth-round entries: the temporal-closeness scale twin,
-    # the SI epidemic curve + threshold sweep, 1-WL color refinement,
-    # UniMax allocation
-    "q_temporal_closeness_sampled",
-    "q_si_spread", "q_si_thresholds", "q_wl_colors", "q_unimax_mix",
-    "q_stream_unimax_mix", "q_influence_seeds", "q_si_offspring",
-    "q_mp4_demux", "q_mp3_framewalk", "q_si_immunized",
-    "q_wl_day_similarity", "q_mf_recs",
-    # round-11 dynamic-graph evolution family (first graded r11)
-    "q_component_lifecycle", "q_temporal_motifs", "q_burst_windows",
-    # (q_stream_burst, 1 green, displaced by the birth-round entry
-    # q_wl_day_similarity; q_personalized_pagerank, 1 green,
-    # displaced by q_mf_recs)
-    "q_eigenvector_centrality",
-    # embedding-training pipeline, 2 greens each (q_random_walks and
-    # q_skipgram_pairs, 2 greens each, displaced by the birth-round
-    # entries q_jpeg_decode and q_domain_weights; the SGNS/CTDNE
-    # family rows stay)
-    # (q_degree_powerlaw, 1 green, displaced by the birth-round entry
-    # q_mp4_demux; q_temporal_walks, 1 green, displaced by
-    # q_mp3_framewalk; q_modularity, 1 green, displaced by
-    # q_si_immunized)
-    # round-12 birth-round entries: the real-codec JPEG decode and the
-    # DoReMi domain-reweighting mixture row + its streaming twin
-    # (q_sgns_negatives, 2 greens, displaced by the streaming twin)
-    "q_jpeg_decode", "q_domain_weights", "q_stream_domain_weights",
-    # ROUND-12 ROTATION BLOCK: the never-driver-graded tail (ledger
-    # above). Distance/centrality completion family —
-    "q_betweenness", "q_betweenness_sampled",
-    "q_closeness_centrality", "q_harmonic_centrality",
-    "q_distance_distribution", "q_anf_day", "q_anf_sketch",
-    "q_effective_diameter", "q_percolation", "q_luby_mis",
-    "q_densest_subgraph", "q_rich_club", "q_temporal_closeness",
-    "q_shortest_path_weighted",
-    # — LM-curation probes (trained quality probe, bigram-LM
-    # perplexity + its incremental streaming twin)
-    "q_quality_probe", "q_bigram_ppl", "q_stream_bigram_ppl",
-    # — weighted/bipartite centrality + the GNN-minibatch pair
-    "q_pagerank_weighted", "q_hits_bipartite",
-    "q_sage_aggregate", "q_stream_neighbor_sampling",
-]
-
 
 def _apply_grade_window() -> None:
     # load-bearing import-time checks: explicit raises, NOT assert —

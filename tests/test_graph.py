@@ -1176,8 +1176,10 @@ def _py_bfs_all(adj):
     return dist
 
 
-def _py_brandes(adj):
-    """Reference Brandes betweenness (Brandes 2001, verbatim)."""
+def _py_brandes(adj, max_dist=None):
+    """Reference Brandes betweenness (Brandes 2001, verbatim); a
+    ``max_dist`` stops the BFS at that radius, the bound
+    betweenness_centrality applies."""
     import collections
 
     bc = {v: 0.0 for v in adj}
@@ -1191,6 +1193,8 @@ def _py_brandes(adj):
         while q:
             u = q.popleft()
             stack.append(u)
+            if dist[u] == max_dist:
+                continue
             for w in adj[u]:
                 if dist[w] < 0:
                     dist[w] = dist[u] + 1
@@ -1429,6 +1433,49 @@ def test_betweenness_sampled_single_source_scaling(spark):
         assert got[leaf] == pytest.approx(0.0, abs=1e-6)
 
 
+def test_betweenness_stops_at_first_empty_layer(spark, monkeypatch):
+    # K5, max_dist=4: every node is one hop from every source, so the
+    # forward pass materializes layer 1 (5 sources x 4 nodes) and the
+    # empty layer 2, then stops instead of running layers 3 and 4
+    rows = []
+    barrier = graph._counted_barrier
+
+    def counting(df):
+        out = barrier(df)
+        rows.append(out[1])
+        return out
+
+    monkeypatch.setattr(graph, "_counted_barrier", counting)
+    k5 = spark.createDataFrame(
+        [(a, b) for a in range(5) for b in range(a + 1, 5)],
+        "actor1 long, actor2 long",
+    )
+    got = graph.betweenness_centrality(k5, max_dist=4).collect()
+    # barriers: symmetrized edges, the sources (layer 0), layers 1-2;
+    # no backward barrier, since layer 1 is the deepest non-empty one
+    assert rows == [20, 5, 20, 0]
+    assert {r.actor: r.betweenness for r in got} == {v: 0.0 for v in range(5)}
+
+
+def test_betweenness_empty_inputs(spark):
+    star = spark.createDataFrame(
+        [(0, i) for i in range(1, 5)], "actor1 long, actor2 long"
+    )
+    no_edges = spark.createDataFrame([], "actor1 long, actor2 long")
+    exact = graph.betweenness_centrality(no_edges, max_dist=4)
+    assert exact.collect() == []
+    assert exact.dtypes == graph.betweenness_centrality(star).dtypes
+    # a source sample that selects no node of the graph
+    none = spark.createDataFrame([(99,)], "s long")
+    sampled = graph.betweenness_centrality(star, max_dist=4, sources=none)
+    assert sampled.collect() == []
+    some = spark.createDataFrame([(1,)], "s long")
+    assert (
+        sampled.dtypes
+        == graph.betweenness_centrality(star, sources=some).dtypes
+    )
+
+
 def test_temporal_closeness_asymmetry_and_latency(spark):
     # (1,2)@10 then (2,3)@11: from 1 -> 2 at 10 (1/1), 3 at 11 (1/2);
     # from 3 only 2 is reachable (the 10-frame edge precedes arrival)
@@ -1548,11 +1595,20 @@ def test_link_prediction_eval_empty_class_null_auc(spark):
 def test_betweenness_matches_python_brandes_random_graphs(spark):
     """Property test: radius-8 bounded Brandes on random <=8-node
     graphs (diameter < 8, so the bound is inactive) must equal the
-    reference Python Brandes exactly."""
-    from hypothesis import given, settings
+    reference Python Brandes exactly. Two fixed cases pin the ends of
+    the forward pass: a 6-clique, whose BFS finds an empty layer 2 and
+    stops there, and a 12-node path, whose geodesics of length 9-11
+    the radius cuts off (checked against the radius-bounded
+    reference)."""
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
 
+    clique = [(a, b) for a in range(1, 7) for b in range(a + 1, 7)]
+    path = [(a, a + 1) for a in range(1, 12)]
+
     @settings(max_examples=8, deadline=None)
+    @example(clique)
+    @example(path)
     @given(
         st.lists(
             st.tuples(st.integers(1, 8), st.integers(1, 8)).filter(
@@ -1565,7 +1621,7 @@ def test_betweenness_matches_python_brandes_random_graphs(spark):
     def check(pairs):
         edge_list = sorted({(min(a, b), max(a, b)) for a, b in pairs})
         df = spark.createDataFrame(edge_list, "actor1 long, actor2 long")
-        want = _py_brandes(_adj(edge_list))
+        want = _py_brandes(_adj(edge_list), max_dist=8)
         got = {
             r.actor: r.betweenness
             for r in graph.betweenness_centrality(df, max_dist=8).collect()

@@ -826,6 +826,29 @@ def test_bm25_quoted_term_is_safe(spark):
     assert [r.doc_id for r in out] == [1] and out[0].n_hit == 1
 
 
+def test_bm25_empty_terms_is_empty_result(spark):
+    from neo4j_dynagraph_spark.operators import text as t
+
+    docs = spark.createDataFrame(
+        [(1, "o brien wrote the key paper")], "doc_id long, text string"
+    )
+    out = t.bm25_scores(docs, [])
+    assert out.collect() == []
+    # same columns and types as a non-empty term list
+    assert out.dtypes == t.bm25_scores(docs, ["key"]).dtypes
+
+
+def test_bm25_non_finite_parameters_raise(spark):
+    from neo4j_dynagraph_spark.operators import text as t
+
+    docs = spark.createDataFrame(
+        [(1, "o brien wrote the key paper")], "doc_id long, text string"
+    )
+    for kwargs in ({"k1": float("inf")}, {"b": float("nan")}):
+        with pytest.raises(ValueError, match="finite"):
+            t.bm25_scores(docs, ["key"], **kwargs)
+
+
 def test_gopher_rules_attribute_failures_per_rule(spark):
     base = "the a of and to " + " ".join(f"word{i}" for i in range(20))  # passes all
     docs = spark.createDataFrame(
