@@ -19,12 +19,27 @@ Scale notes:
   dropDuplicates between expansions mirrors the reference's
   `WITH DISTINCT` stages (cypher_query_timing.py:163-198) and is
   required to cap intermediate cardinality (X5 in SURVEY.md §4).
+
+Keyed loops: an analysis over every frame, day, source or lane at once
+carries that dimension in its join and group-by keys rather than
+looping over it on the driver. Three fixpoint loops exist once each
+and take their key columns as a list (empty for the global form):
+- :func:`_arrival_rounds` — earliest-arrival delta rounds, used by
+  temporal closeness (keyed by source) and the SI family (global, or
+  keyed by beta / removal-policy lane);
+- :func:`_min_label_rounds` — min-label + pointer-jump components,
+  used by connected_components (global) and
+  connected_components_per_frame (keyed by frame);
+- :func:`_wl_rounds` — 1-WL color rounds, used by wl_refinement
+  (global) and wl_day_similarity (keyed by day).
+Each caller keeps its own set-up (symmetrize, coin filter, seeds, lane
+grid) and terminal; a loop branches on its key list only.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.functions import broadcast
 
 from neo4j_dynagraph_spark.operators.hub import checkpoint_hub
@@ -78,6 +93,190 @@ def _counted_barrier(df: DataFrame) -> tuple[DataFrame, int]:
     if rows * (len(ck.columns) + 1) * 8 <= limit:
         ck = broadcast(ck)
     return ck, rows
+
+
+def _arrival_rounds(
+    trans: DataFrame, state: DataFrame, keys: list[str], max_hops: int
+) -> DataFrame:
+    """Earliest-arrival delta rounds over a time-respecting contact
+    stream, keyed by ``keys`` (empty for one global state row per
+    node). ``state`` holds (*keys, v, t), t = -1 for a depart-any-time
+    seed; ``trans`` holds (frame_id, src, dst) plus whichever keys it
+    is replicated over (an SI lane), and every round joins on those
+    keys and v = src. Returns the merged state after the rounds.
+
+    Only arrivals that IMPROVED last round expand: an earlier arrival
+    can ride every contact a later one can, so the min-merged state
+    after round h is exactly the <= h-hop earliest arrival and the
+    min-arrival frontier dominates every other path prefix (the
+    full-state re-expansion joined ~frontier x frame-degree x H rows
+    and was 2x slower at sf0.1 even vs the fixpoint form). Exactly
+    ``max_hops`` join+min rounds, no data-dependent actions: per round
+    one eager checkpoint of the merged state and a lazy one of the
+    frontier. State is O(V * key values)."""
+    on = [k for k in keys if k in trans.columns] + ["src"]
+    frontier = state
+    for _ in range(max_hops):
+        # rename on the frontier side: the E-sized contact stream
+        # reaches its shuffle unprojected
+        cand = (
+            frontier.withColumnRenamed("v", "src")
+            .join(trans, on)
+            .where(F.col("frame_id") >= F.col("t"))
+            .groupBy(*keys, F.col("dst").alias("v"))
+            .agg(F.min("frame_id").cast("long").alias("t"))
+        )
+        merged = (
+            state.unionByName(cand)
+            .groupBy(*keys, "v")
+            .agg(F.min("t").alias("t"))
+            .localCheckpoint()
+        )
+        prev = state.select(*keys, "v", F.col("t").alias("t_old"))
+        frontier = (
+            merged.join(prev, [*keys, "v"], "left")
+            .where(
+                F.col("t_old").isNull() | (F.col("t") < F.col("t_old"))
+            )
+            .select(*keys, "v", "t")
+            .localCheckpoint(eager=False)
+        )
+        state = merged
+    return state
+
+
+def _min_label_rounds(
+    sym: DataFrame, keys: list[str], max_iterations: int
+) -> DataFrame:
+    """Min-label + pointer-jump component rounds over symmetrized
+    edges (*keys, src, dst), keyed by ``keys`` (empty for one global
+    graph): every node starts labeled with its own id, each round
+    takes the min of its own and its neighbors' labels and then jumps
+    label <- label(label) (path halving), so rounds are O(log n)
+    rather than O(diameter). Two shuffles per round whatever the
+    number of key values. Returns (*keys, actor, label).
+
+    Each round's labels are an eager localCheckpoint (lineage would
+    otherwise double per round); the changed flag rides inside the
+    round's plan (old_label is already in flight), so convergence is a
+    bare scan of that checkpoint rather than a re-join of new vs old
+    labels."""
+    labels = (
+        sym.select(*keys, F.col("src").alias("actor"))
+        .distinct()
+        .withColumn("label", F.col("actor"))
+        .localCheckpoint()
+    )
+    for _ in range(max_iterations):
+        # rename on the edge side: the labels scan stays unprojected,
+        # so AQE reuses its shuffle in the stepped join (one job fewer
+        # per round than renaming the labels side)
+        nbr_min = (
+            sym.withColumnRenamed("dst", "actor")
+            .join(labels, [*keys, "actor"])
+            .groupBy(*keys, F.col("src").alias("actor"))
+            .agg(F.min("label").alias("nbr_label"))
+        )
+        stepped = labels.join(nbr_min, [*keys, "actor"], "left").select(
+            *keys,
+            "actor",
+            F.col("label").alias("old_label"),
+            F.least(
+                F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
+            ).alias("label"),
+        )
+        # labels are node ids, so the pointer jump is a self-join
+        # against the round's label map
+        lmap = stepped.select(
+            *keys,
+            F.col("actor").alias("label"),
+            F.col("label").alias("l_label"),
+        )
+        jumped = F.coalesce(F.col("l_label"), F.col("label"))
+        new_labels = (
+            stepped.join(lmap, [*keys, "label"], "left")
+            .select(
+                *keys,
+                "actor",
+                jumped.alias("label"),
+                (jumped != F.col("old_label")).alias("chg"),
+            )
+            .localCheckpoint()
+        )
+        changed = new_labels.where("chg").count()
+        labels = new_labels.select(*keys, "actor", "label")
+        if changed == 0:
+            break
+    return labels
+
+
+# two co-prime 31-bit moduli: each neighbor color folds to two
+# independent residues whose SUMS are the commutative multiset
+# fingerprint — sum of V terms < 2^31 stays < 2^54 for V < 2^23-per-
+# class x deg, far inside BIGINT in both engines
+_WL_P1 = 2147483647
+_WL_P2 = 1073741789
+
+
+def _wl_rounds(sym: DataFrame, keys: list[str], rounds: int) -> DataFrame:
+    """1-WL color rounds over symmetrized edges (*keys, src, dst),
+    keyed by ``keys`` (empty for one global graph). Round 0 colors
+    each node hash64('wl0:'deg); round r recolors it
+    hash64('wl<r>:'color':'s1':'s2':'deg) from its own color and the
+    commutative fingerprint of its neighbors' color multiset (two
+    residue sums and the count, see :func:`wl_refinement`). Exactly
+    ``rounds`` rounds; every round's colors pass through
+    :func:`_counted_barrier` (one counted job, broadcast-hinted when
+    small). Returns (*keys, actor, color)."""
+    from neo4j_dynagraph_spark import functions as dfn
+
+    colors, _ = _counted_barrier(
+        sym.groupBy(*keys, F.col("src").alias("actor"))
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .select(
+            *keys,
+            "actor",
+            dfn.hash64(
+                F.concat(F.lit("wl0:"), F.col("deg").cast("string"))
+            ).alias("color"),
+        )
+    )
+    for r in range(1, rounds + 1):
+        nb = (
+            sym.join(
+                colors.select(
+                    *keys,
+                    F.col("actor").alias("dst"),
+                    F.col("color").alias("nb_color"),
+                ),
+                [*keys, "dst"],
+            )
+            .groupBy(*keys, F.col("src").alias("actor"))
+            .agg(
+                F.sum(F.col("nb_color") % _WL_P1).alias("s1"),
+                F.sum(F.col("nb_color") % _WL_P2).alias("s2"),
+                F.count(F.lit(1)).alias("deg"),
+            )
+        )
+        colors, _ = _counted_barrier(
+            nb.join(colors, [*keys, "actor"]).select(
+                *keys,
+                "actor",
+                dfn.hash64(
+                    F.concat(
+                        F.lit(f"wl{r}:"),
+                        F.col("color").cast("string"),
+                        F.lit(":"),
+                        F.col("s1").cast("string"),
+                        F.lit(":"),
+                        F.col("s2").cast("string"),
+                        F.lit(":"),
+                        F.col("deg").cast("string"),
+                    )
+                ).alias("color"),
+            )
+        )
+    return colors
 
 
 def symmetrize(edges: DataFrame, a1: str = "actor1", a2: str = "actor2") -> DataFrame:
@@ -318,59 +517,14 @@ def connected_components(edges: DataFrame, max_iterations: int = 30) -> DataFram
     propagation needs O(diameter) rounds — a 1M-hop chain would never
     finish — so each round adds a pointer-jumping step (label <-
     label's label, path halving), giving O(log n) rounds like the
-    large-star/small-star algorithm. Two shuffles per round.
-    localCheckpoint() truncates lineage each round — without it the
-    plan doubles per iteration and Catalyst analysis time explodes.
-    At cluster scale use checkpoint() on reliable storage instead, and
-    pre-partition `sym` and `labels` on the join key so rounds reuse
-    the partitioning. Columns: actor, component.
+    large-star/small-star algorithm. The rounds are
+    :func:`_min_label_rounds` with no keys. At cluster scale use
+    checkpoint() on reliable storage instead, and pre-partition `sym`
+    and `labels` on the join key so rounds reuse the partitioning.
+    Columns: actor, component.
     """
     sym = symmetrize(edges.select("actor1", "actor2").distinct()).localCheckpoint()
-    labels = (
-        sym.select(F.col("src").alias("actor"))
-        .distinct()
-        .withColumn("label", F.col("actor"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iterations):
-        nbr_min = (
-            sym.join(labels, sym.dst == labels.actor)
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        stepped = labels.join(nbr_min, labels.actor == nbr_min.src, "left").select(
-            "actor",
-            F.col("label").alias("old_label"),
-            F.least(
-                F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-            ).alias("label"),
-        )
-        # pointer jump (path halving): label <- label(label). Labels are
-        # node ids, so the lookup is a self-join against the label map.
-        lmap = stepped.select(
-            F.col("actor").alias("l_actor"), F.col("label").alias("l_label")
-        )
-        # the changed flag rides INSIDE the round's plan (old_label is
-        # already in flight), so convergence detection is a bare scan
-        # of the checkpoint — the old form re-joined new vs old labels
-        # as a separate per-round action (guide §1.2: don't add jobs
-        # the plan can answer for free)
-        new_labels = (
-            stepped.join(lmap, stepped.label == lmap.l_actor, "left")
-            .select(
-                "actor",
-                F.coalesce(F.col("l_label"), F.col("label")).alias("label"),
-                (
-                    F.coalesce(F.col("l_label"), F.col("label"))
-                    != F.col("old_label")
-                ).alias("chg"),
-            )
-            .localCheckpoint()
-        )
-        changed = new_labels.where("chg").count()
-        labels = new_labels.select("actor", "label")
-        if changed == 0:
-            break
+    labels = _min_label_rounds(sym, [], max_iterations)
     return labels.select("actor", F.col("label").alias("component")).orderBy("actor")
 
 
@@ -1991,12 +2145,11 @@ def connected_components_per_frame(
 
     NOT a driver loop over frames: a for-frame-in-frames loop would
     serialize 24 (or at 100 TB, millions of) tiny jobs and bottleneck
-    on the driver. Here frame_id rides in the join/group keys, every
-    round is two shuffles TOTAL regardless of frame count, and rounds
-    are bounded by the largest single-frame component's diameter
-    (pointer jumping halves paths per round, so O(log n)).
-    localCheckpoint truncates lineage per round as in
-    connected_components. Columns: frame_id, actor, component.
+    on the driver. Here frame_id is the key of
+    :func:`_min_label_rounds`, so every round is two shuffles TOTAL
+    regardless of frame count, and rounds are bounded by the largest
+    single-frame component's diameter (pointer jumping halves paths
+    per round, so O(log n)). Columns: frame_id, actor, component.
     """
     e = frame_edges.select("frame_id", "actor1", "actor2").distinct()
     sym = e.select(
@@ -2012,63 +2165,7 @@ def connected_components_per_frame(
             )
         ).alias("p"),
     ).select("frame_id", "p.src", "p.dst").localCheckpoint()
-    labels = (
-        sym.select("frame_id", F.col("src").alias("actor"))
-        .distinct()
-        .withColumn("label", F.col("actor"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iterations):
-        nbr_min = (
-            sym.join(
-                labels,
-                (sym.frame_id == labels.frame_id) & (sym.dst == labels.actor),
-            )
-            .groupBy(sym.frame_id.alias("f"), sym.src.alias("s"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        stepped = labels.join(
-            nbr_min,
-            (labels.frame_id == nbr_min.f) & (labels.actor == nbr_min.s),
-            "left",
-        ).select(
-            labels.frame_id,
-            "actor",
-            F.col("label").alias("old_label"),
-            F.least(
-                F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-            ).alias("label"),
-        )
-        # pointer jump within the frame: label <- label(label)
-        lmap = stepped.select(
-            F.col("frame_id").alias("lf"),
-            F.col("actor").alias("l_actor"),
-            F.col("label").alias("l_label"),
-        )
-        # changed flag computed inline (see connected_components): the
-        # convergence check is a scan of the checkpoint, not a second
-        # join job per round
-        new_labels = (
-            stepped.join(
-                lmap,
-                (stepped.frame_id == lmap.lf) & (stepped.label == lmap.l_actor),
-                "left",
-            )
-            .select(
-                stepped.frame_id,
-                "actor",
-                F.coalesce(F.col("l_label"), F.col("label")).alias("label"),
-                (
-                    F.coalesce(F.col("l_label"), F.col("label"))
-                    != F.col("old_label")
-                ).alias("chg"),
-            )
-            .localCheckpoint()
-        )
-        changed = new_labels.where("chg").count()
-        labels = new_labels.select("frame_id", "actor", "label")
-        if changed == 0:
-            break
+    labels = _min_label_rounds(sym, ["frame_id"], max_iterations)
     return labels.select("frame_id", "actor", F.col("label").alias("component"))
 
 
@@ -2968,52 +3065,6 @@ def neighbor_sampling(
     return out.orderBy("seed", "hop", "src", "dst")
 
 
-def _temporal_arrivals(
-    sym: DataFrame, seeds: DataFrame, max_hops: int
-) -> DataFrame:
-    """Multi-source earliest-arrival table over time-respecting paths:
-    (s, v, t) = min earliest-arrival frame from seed s to node v in
-    <= max_hops edges (t = -1 for v == s, i.e. depart-any-time).
-
-    Delta iteration: only arrivals that IMPROVED last round expand
-    (an earlier arrival can ride every edge a later one can, so the
-    min-arrival frontier dominates all other path prefixes — the
-    full-state re-expansion joined ~frontier x frame-degree x H rows
-    and was 2x slower at sf0.1 even vs the fixpoint form). Exactly
-    ``max_hops`` join+min rounds, no data-dependent actions. State is
-    O(V * |seeds|) — the sampled estimator's scale lever."""
-    arrival = seeds.select(
-        "s",
-        F.col("s").alias("v"),
-        F.lit(-1).cast("long").alias("t"),
-    ).localCheckpoint()
-    frontier = arrival
-    for _ in range(max_hops):
-        cand = (
-            frontier.join(sym, frontier.v == sym.src)
-            .where(F.col("frame_id") >= F.col("t"))
-            .groupBy("s", F.col("dst").alias("v"))
-            .agg(F.min("frame_id").alias("t"))
-        )
-        merged = (
-            arrival.unionByName(cand)
-            .groupBy("s", "v")
-            .agg(F.min("t").alias("t"))
-            .localCheckpoint()
-        )
-        prev = arrival.select("s", "v", F.col("t").alias("t_old"))
-        frontier = (
-            merged.join(prev, ["s", "v"], "left")
-            .where(
-                F.col("t_old").isNull() | (F.col("t") < F.col("t_old"))
-            )
-            .select("s", "v", "t")
-            .localCheckpoint(eager=False)
-        )
-        arrival = merged
-    return arrival
-
-
 def temporal_closeness(
     frame_edges: DataFrame, max_hops: int = 6
 ) -> DataFrame:
@@ -3029,8 +3080,9 @@ def temporal_closeness(
 
     The hop bound is the family's explicit cost contract (radius-4
     harmonic / bounded-CTDNE precedent) AND what keeps the loop free
-    of data-dependent actions: exactly ``max_hops`` join+min rounds,
-    no per-round changed-count (measured: the fixpoint variant's
+    of data-dependent actions: exactly ``max_hops`` join+min rounds
+    (:func:`_arrival_rounds` keyed by the source ``s``), no per-round
+    changed-count (measured: the fixpoint variant's
     count() actions doubled the sf0.1 day-graph wall). Because an
     earlier arrival can ride every edge a later one can, the merged
     min-reduction state after round h is exactly the <=h-hop earliest
@@ -3043,7 +3095,11 @@ def temporal_closeness(
         frame_edges.select("frame_id", "actor1", "actor2").distinct()
     ).localCheckpoint()
     seeds = sym.select(F.col("src").alias("s")).distinct()
-    arrival = _temporal_arrivals(sym, seeds, max_hops)
+    # every source departs itself at any time (t = -1)
+    state = seeds.select(
+        "s", F.col("s").alias("v"), F.lit(-1).cast("long").alias("t")
+    ).localCheckpoint()
+    arrival = _arrival_rounds(sym, state, ["s"], max_hops)
     w0 = sym.agg(F.min("frame_id").cast("long").alias("w0"))
     return (
         arrival.where(F.col("v") != F.col("s"))
@@ -3091,7 +3147,11 @@ def temporal_closeness_sampled(
     ).localCheckpoint()
     nodes = sym.select(F.col("src").alias("s")).distinct()
     seeds = nodes.join(sources, "s").localCheckpoint()
-    arrival = _temporal_arrivals(sym, seeds, max_hops)
+    # every source departs itself at any time (t = -1)
+    state = seeds.select(
+        "s", F.col("s").alias("v"), F.lit(-1).cast("long").alias("t")
+    ).localCheckpoint()
+    arrival = _arrival_rounds(sym, state, ["s"], max_hops)
     w0 = sym.agg(F.min("frame_id").cast("long").alias("w0"))
     nv = nodes.agg(F.count(F.lit(1)).cast("double").alias("nv"))
     ns = seeds.agg(F.count(F.lit(1)).cast("double").alias("ns"))
@@ -3733,24 +3793,13 @@ def sage_aggregate(
     return own.join(per_seed, "seed", "left").orderBy("seed")
 
 
-def _si_state(
-    frame_edges: DataFrame,
-    seed_mod: int,
-    p10: int,
-    max_hops: int,
-    spill_dir: str | None,
-) -> tuple[DataFrame, DataFrame]:
-    """Shared SI core: the coin-filtered contact stream and the
-    converged (v, t) earliest-infection state — consumed by
-    :func:`si_spread` (the curve) and :func:`si_offspring` (the
-    who-infected-whom attribution). Delta iteration with ONE global
-    state row per node; see si_spread for the dominance argument."""
+def _si_coin() -> Column:
+    """The SI per-contact coin over (frame_id, src, dst):
+    hash64('sc:'f':'u':'v) mod 10. A contact transmits under
+    beta = p10/10 iff coin < p10, so the coin is monotone in beta."""
     from neo4j_dynagraph_spark import functions as dfn
 
-    sym = symmetrize(
-        frame_edges.select("frame_id", "actor1", "actor2").distinct()
-    )
-    trans = sym.where(
+    return (
         dfn.hash64(
             F.concat(
                 F.lit("sc:"),
@@ -3762,45 +3811,47 @@ def _si_state(
             )
         )
         % 10
-        < p10
     )
+
+
+def _si_seed(seed_mod: int) -> Column:
+    """The SI seed draw over ``src``: hash64('si:'src) mod seed_mod
+    == 0, a deterministic 1-in-``seed_mod`` sample."""
+    from neo4j_dynagraph_spark import functions as dfn
+
+    return (
+        dfn.hash64(F.concat(F.lit("si:"), F.col("src").cast("string")))
+        % seed_mod
+        == 0
+    )
+
+
+def _si_state(
+    frame_edges: DataFrame,
+    seed_mod: int,
+    p10: int,
+    max_hops: int,
+    spill_dir: str | None,
+) -> tuple[DataFrame, DataFrame]:
+    """Shared SI core: the coin-filtered contact stream and the
+    converged (v, t) earliest-infection state — consumed by
+    :func:`si_spread` (the curve) and :func:`si_offspring` (the
+    who-infected-whom attribution). :func:`_arrival_rounds` with no
+    keys: ONE global state row per node."""
+    sym = symmetrize(
+        frame_edges.select("frame_id", "actor1", "actor2").distinct()
+    )
+    trans = sym.where(_si_coin() < p10)
     # the coin-filtered contact stream is E-sized: the family's
     # _materialize/spill_dir contract applies (SCALE.md sf1 epidemic
     # postmortem: lingering E-sized deserialized blocks from one
     # query starve the NEXT query's heap in a shared session)
     trans = _materialize(trans, spill_dir, "si_trans")
     nodes = sym.select("src").distinct()
-    state = nodes.where(
-        dfn.hash64(F.concat(F.lit("si:"), F.col("src").cast("string")))
-        % seed_mod
-        == 0
-    ).select(
+    state = nodes.where(_si_seed(seed_mod)).select(
         F.col("src").alias("v"), F.lit(-1).cast("long").alias("t")
     ).localCheckpoint()
-    frontier = state
-    for _ in range(max_hops):
-        cand = (
-            frontier.join(trans, frontier.v == trans.src)
-            .where(F.col("frame_id") >= F.col("t"))
-            .groupBy(F.col("dst").alias("v"))
-            .agg(F.min("frame_id").cast("long").alias("t"))
-        )
-        merged = (
-            state.unionByName(cand)
-            .groupBy("v")
-            .agg(F.min("t").alias("t"))
-            .localCheckpoint()
-        )
-        prev = state.select("v", F.col("t").alias("t_old"))
-        frontier = (
-            merged.join(prev, "v", "left")
-            .where(
-                F.col("t_old").isNull() | (F.col("t") < F.col("t_old"))
-            )
-            .select("v", "t")
-            .localCheckpoint(eager=False)
-        )
-        state = merged
+    state = _arrival_rounds(trans, state, [], max_hops)
     return trans, state
 
 
@@ -3824,7 +3875,7 @@ def si_spread(
     earlier infection can ride every contact a later one can, so the
     min-merged earliest-infection state after round h is exactly the
     <= h-hop earliest infection: the same delta-iteration dominance
-    argument as :func:`_temporal_arrivals`, with ONE global state row
+    argument as :func:`_arrival_rounds`, with ONE global state row
     per node — O(V) state, not the all-sources family's O(V^2).
 
     The coin filter lands on the symmetrized contact stream BEFORE
@@ -3859,14 +3910,6 @@ def si_spread(
     ).orderBy("bucket")
 
 
-# two co-prime 31-bit moduli: each neighbor color folds to two
-# independent residues whose SUMS are the commutative multiset
-# fingerprint — sum of V terms < 2^31 stays < 2^54 for V < 2^23-per-
-# class x deg, far inside BIGINT in both engines
-_WL_P1 = 2147483647
-_WL_P2 = 1073741789
-
-
 def wl_refinement(edges: DataFrame, rounds: int = 3) -> DataFrame:
     """1-dimensional Weisfeiler-Leman color refinement (the WL graph-
     isomorphism test; Shervashidze et al. 2011's WL subtree kernel,
@@ -3891,65 +3934,22 @@ def wl_refinement(edges: DataFrame, rounds: int = 3) -> DataFrame:
     the oracle. Exactly ``rounds`` rounds (1-WL stabilizes in <= V,
     3 is the WL-kernel default h).
 
-    Barriers: the symmetrized edges and every round's colors pass
-    through :func:`_counted_barrier` — one counted job per round, and
-    the frame comes back broadcast-hinted when its measured size fits
-    the session's broadcast threshold, so the next round's joins plan
-    as broadcasts instead of shuffles sized by the static estimate.
-    The round count is fixed (no convergence check).
+    Barriers: the symmetrized edges and every round's colors (the
+    rounds are :func:`_wl_rounds` with no keys) pass through
+    :func:`_counted_barrier` — one counted job per round, and the
+    frame comes back broadcast-hinted when its measured size fits the
+    session's broadcast threshold, so the next round's joins plan as
+    broadcasts instead of shuffles sized by the static estimate. The
+    round count is fixed (no convergence check).
 
     Columns: actor, wl_color (the round-``rounds`` color),
     class_size (nodes sharing it; 1 = structurally unique), ordered
     by actor.
     """
-    from neo4j_dynagraph_spark import functions as dfn
-
     sym, _ = _counted_barrier(
         symmetrize(edges.select("actor1", "actor2").distinct())
     )
-    colors, _ = _counted_barrier(
-        sym.groupBy(F.col("src").alias("actor"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .select(
-            "actor",
-            dfn.hash64(
-                F.concat(F.lit("wl0:"), F.col("deg").cast("string"))
-            ).alias("color"),
-        )
-    )
-    for r in range(1, rounds + 1):
-        nb = (
-            sym.join(
-                colors.select(
-                    F.col("actor").alias("dst"),
-                    F.col("color").alias("nb_color"),
-                ),
-                "dst",
-            )
-            .groupBy(F.col("src").alias("actor"))
-            .agg(
-                F.sum(F.col("nb_color") % _WL_P1).alias("s1"),
-                F.sum(F.col("nb_color") % _WL_P2).alias("s2"),
-                F.count(F.lit(1)).alias("deg"),
-            )
-        )
-        colors, _ = _counted_barrier(
-            nb.join(colors, "actor").select(
-                "actor",
-                dfn.hash64(
-                    F.concat(
-                        F.lit(f"wl{r}:"),
-                        F.col("color").cast("string"),
-                        F.lit(":"),
-                        F.col("s1").cast("string"),
-                        F.lit(":"),
-                        F.col("s2").cast("string"),
-                        F.lit(":"),
-                        F.col("deg").cast("string"),
-                    )
-                ).alias("color"),
-            )
-        )
+    colors = _wl_rounds(sym, [], rounds)
     sizes = colors.groupBy("color").agg(
         F.count(F.lit(1)).cast("long").alias("class_size")
     )
@@ -3958,50 +3958,6 @@ def wl_refinement(edges: DataFrame, rounds: int = 3) -> DataFrame:
         .select(F.col("actor"), F.col("color").alias("wl_color"), "class_size")
         .orderBy("actor")
     )
-
-
-def _si_multi(
-    trans: DataFrame,
-    state: DataFrame,
-    max_hops: int,
-    key: str,
-    tkey: str,
-) -> DataFrame:
-    """Lane-keyed SI delta iteration shared by the threshold sweep
-    (key = beta lane) and the immunization evaluation (key =
-    removal-policy lane): trans carries (``tkey``, frame_id, src,
-    dst) — the lane key pre-renamed because localCheckpoint preserves
-    attribute ids (asrc/dsrc precedent) — and state/frontier carry
-    (``key``, v, t). Exactly ``max_hops`` join+min rounds, O(V *
-    lanes) state; the min-merge dominance argument is si_spread's."""
-    frontier = state
-    for _ in range(max_hops):
-        cand = (
-            frontier.join(
-                trans,
-                (frontier[key] == trans[tkey]) & (frontier.v == trans.src),
-            )
-            .where(F.col("frame_id") >= F.col("t"))
-            .groupBy(F.col(tkey).alias(key), F.col("dst").alias("v"))
-            .agg(F.min("frame_id").cast("long").alias("t"))
-        )
-        merged = (
-            state.unionByName(cand)
-            .groupBy(key, "v")
-            .agg(F.min("t").alias("t"))
-            .localCheckpoint()
-        )
-        prev = state.select(key, "v", F.col("t").alias("t_old"))
-        frontier = (
-            merged.join(prev, [key, "v"], "left")
-            .where(
-                F.col("t_old").isNull() | (F.col("t") < F.col("t_old"))
-            )
-            .select(key, "v", "t")
-            .localCheckpoint(eager=False)
-        )
-        state = merged
-    return state
 
 
 def si_attack_rates(
@@ -4033,8 +3989,6 @@ def si_attack_rates(
     1e-6 grid. Columns: p10, n_seeds, n_infected, attack_rate
     (ordered by p10).
     """
-    from neo4j_dynagraph_spark import functions as dfn
-
     sym = _materialize(
         symmetrize(
             frame_edges.select("frame_id", "actor1", "actor2").distinct()
@@ -4046,38 +4000,16 @@ def si_attack_rates(
         [(int(p),) for p in p10_grid], "p10 long"
     )
     trans = (
-        sym.withColumn(
-            "coin",
-            dfn.hash64(
-                F.concat(
-                    F.lit("sc:"),
-                    F.col("frame_id").cast("string"),
-                    F.lit(":"),
-                    F.col("src").cast("string"),
-                    F.lit(":"),
-                    F.col("dst").cast("string"),
-                )
-            )
-            % 10,
-        )
+        sym.withColumn("coin", _si_coin())
         .crossJoin(broadcast(grid))
         .where(F.col("coin") < F.col("p10"))
-        # rename the lane key: localCheckpoint preserves attribute
-        # ids, and state/trans both descend from the same grid frame
-        # (AMBIGUOUS_SELF_JOIN otherwise — the asrc/dsrc precedent)
-        .select(
-            F.col("p10").alias("tp10"), "frame_id", "src", "dst"
-        )
+        .select("p10", "frame_id", "src", "dst")
     )
     # replicated into ~sum(p10)/10 lanes: the heaviest E-sized frame
     # in the family — the spill_dir knob matters here first
     trans = _materialize(trans, spill_dir, "sit_trans")
     nodes = sym.select("src").distinct()
-    seeds = nodes.where(
-        dfn.hash64(F.concat(F.lit("si:"), F.col("src").cast("string")))
-        % seed_mod
-        == 0
-    )
+    seeds = nodes.where(_si_seed(seed_mod))
     state = (
         seeds.crossJoin(broadcast(grid))
         .select(
@@ -4087,7 +4019,7 @@ def si_attack_rates(
         )
         .localCheckpoint()
     )
-    state = _si_multi(trans, state, max_hops, key="p10", tkey="tp10")
+    state = _arrival_rounds(trans, state, ["p10"], max_hops)
     nv = nodes.agg(F.count(F.lit(1)).cast("long").alias("nv"))
     return (
         state.groupBy("p10")
@@ -4303,20 +4235,7 @@ def si_immunized(
     lanes = sym.sparkSession.createDataFrame(
         [("baseline",), ("random",), ("targeted",)], "policy string"
     )
-    coin = sym.where(
-        dfn.hash64(
-            F.concat(
-                F.lit("sc:"),
-                F.col("frame_id").cast("string"),
-                F.lit(":"),
-                F.col("src").cast("string"),
-                F.lit(":"),
-                F.col("dst").cast("string"),
-            )
-        )
-        % 10
-        < p10
-    )
+    coin = sym.where(_si_coin() < p10)
     trans = (
         coin.crossJoin(broadcast(lanes))
         .join(
@@ -4333,17 +4252,11 @@ def si_immunized(
             ["policy", "dst"],
             "left_anti",
         )
-        .select(
-            F.col("policy").alias("tpolicy"), "frame_id", "src", "dst"
-        )
+        .select("policy", "frame_id", "src", "dst")
     )
     trans = _materialize(trans, spill_dir, "sii_trans")
     seeds = (
-        nodes.where(
-            dfn.hash64(F.concat(F.lit("si:"), F.col("src").cast("string")))
-            % seed_mod
-            == 0
-        )
+        nodes.where(_si_seed(seed_mod))
         .crossJoin(broadcast(lanes))
         .join(
             broadcast(removed.select("policy", F.col("rm").alias("src"))),
@@ -4357,7 +4270,7 @@ def si_immunized(
         )
         .localCheckpoint()
     )
-    state = _si_multi(trans, seeds, max_hops, key="policy", tkey="tpolicy")
+    state = _arrival_rounds(trans, seeds, ["policy"], max_hops)
     nv = nodes.agg(F.count(F.lit(1)).cast("long").alias("nv"))
     nrm = removed.groupBy("policy").agg(
         F.count(F.lit(1)).cast("long").alias("n_removed")
@@ -4421,8 +4334,9 @@ def wl_day_similarity(
     """GRAPH-LEVEL near-duplicate detection across the month's daily
     contact graphs — the WL subtree kernel applied as dedup (the
     document-near-dup move lifted to whole graphs): each day's graph
-    gets :func:`wl_refinement` colors (keyed (day, actor), every
-    round still ONE equi-join + one aggregate for ALL days at once),
+    gets :func:`wl_refinement` colors (:func:`_wl_rounds` keyed by
+    day, every round still ONE equi-join + one aggregate for ALL days
+    at once),
     its color HISTOGRAM is the day's WL fingerprint, and day pairs
     score weighted Jaccard over histograms:
 
@@ -4458,48 +4372,7 @@ def wl_day_similarity(
         spill_dir,
         "wld_sym",
     )
-    colors = (
-        sym.groupBy("day", F.col("src").alias("actor"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .select(
-            "day",
-            "actor",
-            dfn_hash64_str("wl0:", F.col("deg")).alias("color"),
-        )
-        .localCheckpoint()
-    )
-    for r in range(1, rounds + 1):
-        nb = (
-            sym.join(
-                colors.select(
-                    F.col("day").alias("nd"),
-                    F.col("actor").alias("ndst"),
-                    F.col("color").alias("nb_color"),
-                ),
-                (sym.day == F.col("nd")) & (sym.dst == F.col("ndst")),
-            )
-            .groupBy(sym.day, F.col("src").alias("actor"))
-            .agg(
-                F.sum(F.col("nb_color") % _WL_P1).alias("s1"),
-                F.sum(F.col("nb_color") % _WL_P2).alias("s2"),
-                F.count(F.lit(1)).alias("deg"),
-            )
-        )
-        colors = (
-            nb.join(colors, ["day", "actor"])
-            .select(
-                "day",
-                "actor",
-                dfn_hash64_str(
-                    f"wl{r}:",
-                    F.col("color"),
-                    F.col("s1"),
-                    F.col("s2"),
-                    F.col("deg"),
-                ).alias("color"),
-            )
-            .localCheckpoint()
-        )
+    colors = _wl_rounds(sym, ["day"], rounds)
     hist = colors.groupBy("day", "color").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
@@ -4540,20 +4413,6 @@ def wl_day_similarity(
         )
         .orderBy("day_a", "day_b")
     )
-
-
-def dfn_hash64_str(prefix: str, *cols) -> "F.Column":  # noqa: ANN002
-    """hash64 over prefix + ':'-joined stringified columns — the WL
-    color-hash convention shared by wl_refinement and
-    wl_day_similarity (identical in the DuckDB replay)."""
-    from neo4j_dynagraph_spark import functions as dfn
-
-    parts = [F.lit(prefix)]
-    for i, c in enumerate(cols):
-        if i:
-            parts.append(F.lit(":"))
-        parts.append(c.cast("string"))
-    return dfn.hash64(F.concat(*parts))
 
 
 def temporal_pagerank(

@@ -52,7 +52,8 @@ policy would replace:
   by a row count that it returns, broadcast-hinted when the measured
   size fits ``spark.sql.autoBroadcastJoinThreshold`` — the loop
   barrier of ``betweenness_centrality`` (whose forward pass stops at
-  the first empty layer) and ``wl_refinement``.
+  the first empty layer) and ``graph._wl_rounds`` (``wl_refinement``,
+  ``wl_day_similarity``).
 """
 
 from __future__ import annotations

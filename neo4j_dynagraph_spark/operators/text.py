@@ -32,7 +32,9 @@ def _sql_str(s: str) -> str:
     escaping is backslash-style (verified: ``'it\\'s'`` / ``'a\\\\b'``
     round-trip), so escaping the backslash itself and the quote makes
     ANY caller-supplied term safe to embed — the injection concern
-    that previously forced the Column API onto the BM25 hot path."""
+    that previously forced the Column API onto the BM25 hot path.
+    Callers pin ``spark.sql.parser.escapedStringLiterals=false``
+    before parsing: the legacy mode keeps backslashes verbatim."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
@@ -1311,7 +1313,8 @@ def bm25_scores(
     idf uses the BM25+ always-positive form ln(1 + (N-df+.5)/(df+.5)).
     Columns: doc_id, n_hit (query terms present), bm25 (round 6). An
     empty ``terms`` list hits no document (empty result); a non-finite
-    ``k1`` or ``b`` raises ``ValueError``.
+    ``k1`` or ``b`` raises ``ValueError``. Sets the session's
+    ``spark.sql.parser.escapedStringLiterals`` to false (the default).
     """
     for name, val in (("k1", k1), ("b", b)):
         if not math.isfinite(val):
@@ -1331,7 +1334,10 @@ def bm25_scores(
     # execution (0.60 s) and identical results. Caller-supplied terms
     # are escaped for Spark SQL string literals (backslash escaping is
     # the parser default — verified; a test pins quote/backslash
-    # terms against the kernel semantics).
+    # terms against the kernel semantics). The default is pinned, as
+    # load_table pins nanosAsLong: a session in the legacy literal
+    # mode would keep the escaping backslashes in the terms.
+    docs.sparkSession.conf.set("spark.sql.parser.escapedStringLiterals", "false")
     per_doc = toked.selectExpr(
         "doc_id",
         "CAST(size(t) AS DOUBLE) AS dl",

@@ -29,6 +29,8 @@ projected expression and does not block pushdown on any other column.
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
@@ -112,7 +114,8 @@ def normalize_stream_ts(
     return stream
 
 
-# Process-scoped parquet STRUCTTYPE cache, keyed by file path (r14,
+# Process-scoped parquet STRUCTTYPE cache, keyed by (file path, mtime
+# in ns) so a file regenerated at a cached path is re-inferred (r14,
 # guide §1.2 step 2 / §6). Schema inference runs a one-task Spark job
 # and a footer read per spark.read.parquet call (~80 ms measured);
 # with the schema supplied explicitly the read is pure plan
@@ -121,8 +124,9 @@ def normalize_stream_ts(
 # reuse as Spark's own file-listing cache
 # (spark.sql.hive.filesourcePartitionFileCacheSize) — never rows,
 # results, or intermediates; every query still computes from the
-# parquet inputs on every invocation.
-_SCHEMA_CACHE: dict[str, "object"] = {}
+# parquet inputs on every invocation. A path the local filesystem
+# cannot stat (a remote URI) is inferred on every read, uncached.
+_SCHEMA_CACHE: dict[tuple[str, int], "object"] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -132,10 +136,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # without our session factory) read legacy TIMESTAMP(NANOS) parquet
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
-    sch = _SCHEMA_CACHE.get(path)
+    try:
+        key = (path, os.stat(path).st_mtime_ns)
+    except OSError:
+        key = None
+    sch = _SCHEMA_CACHE.get(key)
     if sch is None:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
+        if key is not None:
+            _SCHEMA_CACHE[key] = df.schema
     else:
         df = spark.read.schema(sch).parquet(path)
     for col in _EVENT_TS_COLUMNS.get(name, []):

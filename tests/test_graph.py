@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import hashlib
+
 import pytest
 
 from neo4j_dynagraph_spark.operators import graph
@@ -929,21 +931,27 @@ def test_node2vec_walks_valid_deterministic_and_biased(spark):
 
 
 def test_per_frame_components_match_single_frame_cc(spark):
-    """On a one-frame input, per-frame CC must equal plain CC."""
+    """Per-frame CC must equal plain CC run on each frame's own edges:
+    frame 7 is the module graph, frame 9 a differently shaped one
+    sharing actors with it (a 12-node path, which needs several
+    pointer-jump rounds, plus a separate pair)."""
+    frame9 = [(i, i + 1) for i in range(3, 14)] + [(1, 2)]
     fe = spark.createDataFrame(
-        [(7, a, b) for a, b in EDGES], "frame_id long, actor1 long, actor2 long"
+        [(7, a, b) for a, b in EDGES] + [(9, a, b) for a, b in frame9],
+        "frame_id long, actor1 long, actor2 long",
     )
     got = {
         (r.frame_id, r.actor): r.component
         for r in graph.connected_components_per_frame(fe).collect()
     }
-    want = {
-        r.actor: r.component
+    want = {}
+    for f in (7, 9):
         for r in graph.connected_components(
-            fe.select("actor1", "actor2")
-        ).collect()
-    }
-    assert got == {(7, a): c for a, c in want.items()}
+            fe.where(fe.frame_id == f).select("actor1", "actor2")
+        ).collect():
+            want[(f, r.actor)] = r.component
+    assert got == want
+    assert {c for (f, _), c in want.items() if f == 9} == {1, 3}
 
 
 def test_per_frame_components_are_frame_local(spark):
@@ -1817,3 +1825,374 @@ def test_sage_aggregate_closed_form(spark):
         assert out[leaf].h2_mean_f == pytest.approx(float(h2[0]), abs=1e-6)
     # own features pass through
     assert out[3].f == 3
+
+
+# ------------------------------------------------- SI epidemic family
+
+
+def _h64(s: str) -> int:
+    """Pure-Python twin of functions.hash64 (first 15 md5 hex chars)."""
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+def _py_si(contacts, seed_mod, p10, max_hops):
+    """Reference SI: BFS over time-respecting coin-passing contacts.
+    contacts: list of (frame, a, b) undirected."""
+    nodes = {a for _, a, _ in contacts} | {b for _, _, b in contacts}
+    inf = {v: -1 for v in nodes if _h64(f"si:{v}") % seed_mod == 0}
+    directed = [(f, a, b) for f, a, b in contacts] + [
+        (f, b, a) for f, a, b in contacts
+    ]
+    passing = [
+        (f, u, v)
+        for f, u, v in directed
+        if _h64(f"sc:{f}:{u}:{v}") % 10 < p10
+    ]
+    for _ in range(max_hops):
+        new = {}
+        for f, u, v in passing:
+            if u in inf and f >= inf[u]:
+                t = min(new.get(v, f), f)
+                if v not in inf or t < inf[v]:
+                    new[v] = t
+        changed = False
+        for v, t in new.items():
+            if v not in inf or t < inf[v]:
+                inf[v] = t
+                changed = True
+        if not changed:
+            break
+    return inf
+
+
+CONTACTS = [
+    # a little temporal graph: chain 1-2-3-4 with time-increasing
+    # frames, a shortcut, and a late isolated pair
+    (100, 1, 2),
+    (101, 2, 3),
+    (102, 3, 4),
+    (100, 1, 5),
+    (105, 5, 6),
+    (99, 7, 8),
+    (103, 4, 7),
+    (104, 6, 2),
+]
+
+
+def _si_df(spark):
+    return spark.createDataFrame(
+        CONTACTS, "frame_id long, actor1 long, actor2 long"
+    )
+
+
+def test_si_spread_differential(spark):
+    """Spark SI curve == pure-Python replay of the same hash coins,
+    across several (seed_mod, beta) operating points."""
+    for seed_mod, p10 in ((1, 10), (2, 10), (2, 5), (3, 3), (1, 0)):
+        inf = _py_si(CONTACTS, seed_mod, p10, max_hops=6)
+        want = {}
+        for v, t in inf.items():
+            b = -1 if t < 0 else t // 4
+            want[b] = want.get(b, 0) + 1
+        got = {
+            r.bucket: r.n_infected
+            for r in graph.si_spread(
+                _si_df(spark),
+                seed_mod=seed_mod,
+                p10=p10,
+                max_hops=6,
+                bucket_frames=4,
+            ).collect()
+        }
+        assert got == want, (seed_mod, p10, got, want)
+
+
+def test_si_spread_beta1_is_temporal_reach(spark):
+    """beta = 1 (p10=10): the infected set must equal time-respecting
+    reachability from the seed set, and the cumulative column must be
+    a running sum."""
+    rows = graph.si_spread(
+        _si_df(spark), seed_mod=2, p10=10, max_hops=6, bucket_frames=4
+    ).collect()
+    cum = 0
+    for r in rows:
+        cum += r.n_infected
+        assert r.cum_infected == cum
+    inf = _py_si(CONTACTS, 2, 10, 6)
+    assert cum == len(inf)
+    # monotone in beta: lower transmissibility infects a subset
+    low = _py_si(CONTACTS, 2, 3, 6)
+    assert set(low) <= set(inf)
+
+
+def test_si_attack_rates_differential(spark):
+    """Every beta lane of the sweep == an independent pure-Python SI
+    replay at that beta; attack rate monotone non-decreasing in
+    beta; the p10=3 lane's infected count == si_spread's."""
+    grid = (1, 3, 5, 10)
+    rows = {
+        r.p10: r
+        for r in graph.si_attack_rates(
+            _si_df(spark), seed_mod=2, p10_grid=grid, max_hops=6
+        ).collect()
+    }
+    assert set(rows) == set(grid)
+    prev = -1.0
+    for p10 in grid:
+        inf = _py_si(CONTACTS, 2, p10, 6)
+        n_seeds = sum(1 for t in inf.values() if t < 0)
+        n_inf = sum(1 for t in inf.values() if t >= 0)
+        assert rows[p10].n_seeds == n_seeds
+        assert rows[p10].n_infected == n_inf
+        assert rows[p10].attack_rate >= prev
+        prev = rows[p10].attack_rate
+    spread = graph.si_spread(
+        _si_df(spark), seed_mod=2, p10=3, max_hops=6, bucket_frames=4
+    ).collect()
+    assert sum(r.n_infected for r in spread if r.bucket >= 0) == (
+        rows[3].n_infected
+    )
+
+
+def _py_offspring(contacts, seed_mod, p10, max_hops):
+    """Reference attribution: parent = min-id strictly-earlier
+    infected coin-passing contact at the victim's infection frame."""
+    inf = _py_si(contacts, seed_mod, p10, max_hops)
+    directed = [(f, a, b) for f, a, b in contacts] + [
+        (f, b, a) for f, a, b in contacts
+    ]
+    passing = {
+        (f, u, v)
+        for f, u, v in directed
+        if _h64(f"sc:{f}:{u}:{v}") % 10 < p10
+    }
+    noff = {v: 0 for v in inf}
+    for v, t in inf.items():
+        if t < 0:
+            continue
+        cands = [
+            u
+            for f, u, vv in passing
+            if vv == v and f == t and u in inf and inf[u] < t
+        ]
+        if cands:
+            noff[min(cands)] += 1
+    hist = {}
+    for k in noff.values():
+        hist[k] = hist.get(k, 0) + 1
+    return hist
+
+
+def test_si_offspring_differential(spark):
+    """Offspring histogram == pure-Python attribution replay; total
+    attributed offspring <= non-seed infections (same-frame chains
+    unattributed, never double-counted)."""
+    for seed_mod, p10 in ((1, 10), (2, 10), (2, 5), (3, 3)):
+        want = _py_offspring(CONTACTS, seed_mod, p10, 6)
+        got = {
+            r.n_offspring: r.n_actors
+            for r in graph.si_offspring(
+                _si_df(spark), seed_mod=seed_mod, p10=p10, max_hops=6
+            ).collect()
+        }
+        assert got == want, (seed_mod, p10, got, want)
+        inf = _py_si(CONTACTS, seed_mod, p10, 6)
+        n_nonseed = sum(1 for t in inf.values() if t >= 0)
+        attributed = sum(k * n for k, n in got.items())
+        assert attributed <= n_nonseed
+
+
+# ---------------------------------------------------- degree-discount
+
+
+def _py_degree_discount(pairs, k, p10):
+    """Reference greedy (Chen et al. 2009), integer dd10 scores."""
+    adj = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    chosen, out = set(), []
+    for r in range(1, k + 1):
+        best = None
+        for v in sorted(adj):
+            if v in chosen:
+                continue
+            d = len(adj[v])
+            t = len(adj[v] & chosen)
+            dd10 = 10 * d - 20 * t - (d - t) * t * p10
+            if best is None or dd10 > best[0] or (
+                dd10 == best[0] and v < best[1]
+            ):
+                best = (dd10, v, d)
+        if best is None:
+            break
+        chosen.add(best[1])
+        out.append((r, best[1], best[2], best[0]))
+    return out
+
+
+def test_influence_seeds_avoids_hub_neighborhood(spark):
+    """The degree-discount signature move: after picking hub 1, its
+    degree-4 NEIGHBOR (node 2) is discounted below the independent
+    degree-4 hub (node 10), so round 2 jumps to the other community —
+    plain greedy-by-degree would not."""
+    pairs = (
+        [(1, v) for v in (2, 3, 4, 5, 6)]
+        + [(2, v) for v in (7, 8, 9)]
+        + [(10, v) for v in (11, 12, 13, 14)]
+    )
+    e = spark.createDataFrame(pairs, "actor1 long, actor2 long")
+    rows = graph.influence_seeds(e, k=4, p10=3).collect()
+    assert (rows[0].round, rows[0].actor) == (1, 1)
+    assert (rows[1].round, rows[1].actor) == (2, 10)
+    got = [(r.round, r.actor, r.degree, r.dd10) for r in rows]
+    assert got == _py_degree_discount(pairs, 4, 3)
+
+
+def test_influence_seeds_k_exceeds_nodes(spark):
+    """k larger than V: selection stops at V rows (both engines'
+    LIMIT-of-empty semantics), every node selected exactly once."""
+    pairs = [(1, 2), (2, 3)]
+    e = spark.createDataFrame(pairs, "actor1 long, actor2 long")
+    rows = graph.influence_seeds(e, k=8, p10=3).collect()
+    assert len(rows) == 3
+    assert {r.actor for r in rows} == {1, 2, 3}
+    assert [r.round for r in rows] == [1, 2, 3]
+
+
+def _py_si_removed(contacts, seed_mod, p10, max_hops, removed):
+    """SI over the contact set with `removed` actors deleted."""
+    kept = [
+        (f, a, b)
+        for f, a, b in contacts
+        if a not in removed and b not in removed
+    ]
+    inf = _py_si(kept, seed_mod, p10, max_hops)
+    return {v: t for v, t in inf.items() if v not in removed}
+
+
+def test_si_immunized_differential(spark):
+    """All three policy lanes == pure-Python replays: the greedy
+    degree-discount picks, the hash-smallest random draw, and the SI
+    under each removal; a removed lane can never infect MORE than
+    baseline (path-subset argument)."""
+    pairs = sorted({(min(a, b), max(a, b)) for _, a, b in CONTACTS})
+    k = 2
+    targeted = {a for _, a, _, _ in _py_degree_discount(pairs, k, 3)}
+    nodes = {a for _, a, _ in CONTACTS} | {b for _, _, b in CONTACTS}
+    rand = set(sorted(nodes, key=lambda v: (_h64(f"rv:{v}"), v))[:k])
+    rows = {
+        r.policy: r
+        for r in graph.si_immunized(
+            _si_df(spark), k=k, seed_mod=2, p10=5, max_hops=6
+        ).collect()
+    }
+    base = _py_si(CONTACTS, 2, 5, 6)
+    expect = {
+        "baseline": (set(), base),
+        "random": (rand, _py_si_removed(CONTACTS, 2, 5, 6, rand)),
+        "targeted": (targeted, _py_si_removed(CONTACTS, 2, 5, 6, targeted)),
+    }
+    for pol, (rm, inf) in expect.items():
+        r = rows[pol]
+        assert r.n_removed == len(rm), pol
+        assert r.n_seeds == sum(1 for t in inf.values() if t < 0), pol
+        assert r.n_infected == sum(1 for t in inf.values() if t >= 0), pol
+        assert r.n_infected <= rows["baseline"].n_infected
+
+
+# ----------------------------------------------------------------- WL
+
+
+def test_wl_c6_vs_two_triangles_indistinguishable(spark):
+    """The classic 1-WL counterexample: C6 and 2xC3 are both
+    2-regular, so every node keeps the same color forever — one color
+    class of size 12 (the invariance that makes WL a sound, not
+    complete, isomorphism test)."""
+    c6 = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (1, 6)]
+    tri2 = [(11, 12), (12, 13), (11, 13), (14, 15), (15, 16), (14, 16)]
+    e = spark.createDataFrame(c6 + tri2, "actor1 long, actor2 long")
+    rows = graph.wl_refinement(e, rounds=3).collect()
+    assert len(rows) == 12
+    assert len({r.wl_color for r in rows}) == 1
+    assert all(r.class_size == 12 for r in rows)
+
+
+def test_wl_path_splits_by_role(spark):
+    """P4 (a-b-c-d): ends {a,d} and middles {b,c} are the two orbits;
+    WL must find exactly those classes and be deterministic."""
+    e = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4)], "actor1 long, actor2 long"
+    )
+    rows = {r.actor: (r.wl_color, r.class_size) for r in
+            graph.wl_refinement(e, rounds=3).collect()}
+    assert rows[1] == rows[4] and rows[2] == rows[3]
+    assert rows[1][0] != rows[2][0]
+    assert rows[1][1] == 2 and rows[2][1] == 2
+    again = {r.actor: (r.wl_color, r.class_size) for r in
+             graph.wl_refinement(e, rounds=3).collect()}
+    assert rows == again
+
+
+def test_wl_star_refines_past_degree(spark):
+    """Star + pendant chain: node 5 and the leaves share degree 1 at
+    round 0 only if symmetric — here leaf-of-hub vs leaf-of-path
+    split once neighbor colors flow (round >= 2). Fixture: hub 1 with
+    leaves 2,3,4 and a path 4-5."""
+    e = spark.createDataFrame(
+        [(1, 2), (1, 3), (1, 4), (4, 5)], "actor1 long, actor2 long"
+    )
+    rows = {r.actor: r.wl_color for r in
+            graph.wl_refinement(e, rounds=3).collect()}
+    # leaves of the hub (2,3) identical; 5 (leaf of a degree-2 node)
+    # must differ from them even though all three have degree 1
+    assert rows[2] == rows[3]
+    assert rows[5] != rows[2]
+    assert len({rows[1], rows[4]}) == 2  # hub vs bridge distinct
+
+
+def test_wl_day_similarity_structural_twins(spark):
+    """Two days with the SAME contact shape on disjoint actor sets
+    must score wl_jaccard 1.0 (structural, not identity); a clique
+    day vs a path day must score < 1; output covers every day pair
+    including zero-overlap ones."""
+    tri_day0 = [(1, 11, 12), (1, 12, 13), (1, 11, 13)]
+    tri_day1 = [(30, 21, 22), (30, 22, 23), (30, 21, 23)]
+    path_day2 = [(55, 31, 32), (55, 32, 33), (56, 33, 34)]
+    e = spark.createDataFrame(
+        tri_day0 + tri_day1 + path_day2,
+        "frame_id long, actor1 long, actor2 long",
+    )
+    rows = {
+        (r.day_a, r.day_b): r
+        for r in graph.wl_day_similarity(e, rounds=2).collect()
+    }
+    assert len(rows) == 3  # all 3 day pairs present
+    d0, d1, d2 = 0, 1, 2
+    assert rows[(d0, d1)].wl_jaccard == 1.0
+    assert rows[(d0, d2)].wl_jaccard < 1.0
+    assert rows[(d0, d2)].n_a == 3 and rows[(d0, d2)].n_b == 4
+
+
+def test_wl_day_keyed_colors_match_per_day_refinement(spark):
+    """The day-keyed rounds behind wl_day_similarity color every day
+    exactly as wl_refinement colors that day's edges alone. Day 0 is a
+    star with a pendant chain, day 1 a 5-cycle sharing actors with it."""
+    day0 = [(1, 2), (1, 3), (1, 4), (4, 5)]
+    day1 = [(1, 2), (2, 3), (3, 4), (4, 5), (1, 5)]
+    rows = [("d0", a, b) for a, b in day0] + [("d1", a, b) for a, b in day1]
+    e = spark.createDataFrame(rows, "day string, actor1 long, actor2 long")
+    sym = graph.symmetrize(e).select("day", "src", "dst")
+    got = {
+        (r.day, r.actor): r.color
+        for r in graph._wl_rounds(sym, ["day"], 3).collect()
+    }
+    want = {}
+    for day in ("d0", "d1"):
+        for r in graph.wl_refinement(
+            e.where(e.day == day).select("actor1", "actor2"), rounds=3
+        ).collect():
+            want[(day, r.actor)] = r.wl_color
+    assert got == want
+    # the two shapes refine differently although they share actors
+    assert got[("d0", 2)] != got[("d1", 2)]

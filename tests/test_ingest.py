@@ -202,6 +202,21 @@ def test_ts_normalization_all_arrival_types(spark, tmp_path):
         assert got == want, f"{name} arrival: ts_ns mismatch {got} != {want}"
 
 
+def test_load_table_rereads_schema_of_rewritten_file(spark, tmp_path):
+    # the schema cache must not serve a stale schema for a parquet
+    # file regenerated at the same path within one process
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "probe.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "probe").columns == ["a"]
+    pq.write_table(pa.table({"a": [3], "b": ["x"]}), path)
+    df = load_table(spark, str(tmp_path), "probe")
+    assert df.columns == ["a", "b"]
+    assert [tuple(r) for r in df.collect()] == [(3, "x")]
+
+
 def test_bucketed_star_join_no_shuffle(spark, tmp_path):
     # the co-located-join layout: both facts bucketed+sorted on
     # frame_id, so a frame-keyed fact-to-fact join runs with ZERO

@@ -826,6 +826,32 @@ def test_bm25_quoted_term_is_safe(spark):
     assert [r.doc_id for r in out] == [1] and out[0].n_hit == 1
 
 
+def test_bm25_quoted_term_under_legacy_literal_mode(spark):
+    # the legacy parser mode keeps backslashes verbatim, so the
+    # escaped literal o\'brien would reach the plan with its
+    # backslash; bm25_scores pins the default, so the term compared
+    # is the caller's own and the result is the default session's
+    from neo4j_dynagraph_spark.operators import text as t
+
+    docs = spark.createDataFrame(
+        [(1, "o brien wrote the key paper"), (2, "another doc entirely")],
+        "doc_id long, text string",
+    )
+    conf = "spark.sql.parser.escapedStringLiterals"
+    want = t.bm25_scores(docs, ["o'brien", "key"]).collect()
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "true")
+    try:
+        out = t.bm25_scores(docs, ["o'brien", "key"])
+        got = out.collect()
+    finally:
+        spark.conf.set(conf, prev)
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert "o'brien" in plan and "o\\'brien" not in plan
+    assert got == want
+    assert [r.doc_id for r in got] == [1] and got[0].n_hit == 1
+
+
 def test_bm25_empty_terms_is_empty_result(spark):
     from neo4j_dynagraph_spark.operators import text as t
 
