@@ -20,10 +20,11 @@ Scale notes:
   `WITH DISTINCT` stages (cypher_query_timing.py:163-198) and is
   required to cap intermediate cardinality (X5 in SURVEY.md §4).
 
-Keyed loops: an analysis over every frame, day, source or lane at once
-carries that dimension in its join and group-by keys rather than
-looping over it on the driver. Three fixpoint loops exist once each
-and take their key columns as a list (empty for the global form):
+Shared loops: six iterative rounds are written once each, and their
+callers differ only in the inputs they pass. Three fixpoint loops are
+keyed: an analysis over every frame, day, source or lane at once
+carries that dimension in its join and group-by keys (empty for the
+global form) rather than looping over it on the driver:
 - :func:`_arrival_rounds` — earliest-arrival delta rounds, used by
   temporal closeness (keyed by source) and the SI family (global, or
   keyed by beta / removal-policy lane);
@@ -32,11 +33,24 @@ and take their key columns as a list (empty for the global form):
   connected_components_per_frame (keyed by frame);
 - :func:`_wl_rounds` — 1-WL color rounds, used by wl_refinement
   (global) and wl_day_similarity (keyed by day).
+Three more take their variation as columns or a round function:
+- :func:`_power_rounds` — the PageRank power method over a
+  degree-annotated adjacency, used by pagerank (unit weights, uniform
+  teleport), pagerank_weighted (edge weights) and
+  personalized_pagerank (seed teleport);
+- :func:`_l1_rounds` — L1-normalized propagation hops, used by
+  eigenvector_centrality (one hop per round) and hits_bipartite (two);
+- :func:`_peel_rounds` — peel to a fixpoint on counted barriers, used
+  by k_core and k_core_rounds (:func:`_core_peel_round`) and k_truss
+  and k_truss_rounds (:func:`_truss_peel_round`).
 Each caller keeps its own set-up (symmetrize, coin filter, seeds, lane
-grid) and terminal; a loop branches on its key list only.
+grid) and terminal — the PageRank family shares its rank terminal —
+and a loop branches on its inputs only.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
@@ -279,6 +293,115 @@ def _wl_rounds(sym: DataFrame, keys: list[str], rounds: int) -> DataFrame:
     return colors
 
 
+def _power_rounds(
+    edges: DataFrame,
+    weight: Column,
+    teleport: Column | None,
+    damping: float,
+    iterations: int,
+    spill_dir: str | None = None,
+) -> DataFrame:
+    """Fixed-iteration power method over canonical ``edges``:
+    rank_{i+1}(v) = tele(v) + d * sum_{u~v} rank_i(u) * w(u,v) / W(u),
+    W(u) = sum of u's weights (a unit weight gives rank * 1 / W,
+    bit-equal to rank / deg). ``teleport`` is a per-node distribution
+    t over ``actor``: rank_0 = t, tele = (1-d) * t; None is uniform,
+    rank_0 = 1/n and the single constant tele = (1-d)/n. The
+    symmetrized and degree-annotated adjacencies are materialized once
+    (``spill_dir``); each round is one join + one group-by, ranks
+    eagerly checkpointed. Every node is some edge's dst, so each round
+    carries the whole node vector (no dangling mass; an unreached node
+    sums exact 0.0 contributions). Columns: actor, rank (1e-6, desc)."""
+    sym = _materialize(symmetrize(edges), spill_dir, "pr_sym")
+    adj = _materialize(
+        sym.join(sym.groupBy("src").agg(F.sum(weight).alias("wdeg")), "src"),
+        spill_dir,
+        "pr_adj",
+    )
+    nodes = adj.select(F.col("src").alias("actor")).distinct()
+    if teleport is None:
+        n = nodes.count()
+        rank0, tele = F.lit(1.0 / n), F.lit((1.0 - damping) / n)
+    else:
+        rank0, tele = teleport, F.lit(1.0 - damping) * teleport
+    ranks = nodes.select("actor", rank0.alias("rank")).localCheckpoint()
+    for _ in range(iterations):
+        ranks = (
+            adj.join(ranks, adj.src == ranks.actor)
+            .select(
+                "dst", (F.col("rank") * weight / F.col("wdeg")).alias("contrib")
+            )
+            .groupBy(F.col("dst").alias("actor"))
+            .agg(F.sum("contrib").alias("mass"))
+            .select("actor", (tele + F.lit(damping) * F.col("mass")).alias("rank"))
+            .localCheckpoint()
+        )
+    return ranks.select("actor", F.round("rank", 6).alias("rank")).orderBy(
+        F.desc("rank"), "actor"
+    )
+
+
+def _l1_rounds(
+    hops: list[tuple[DataFrame, str, Column, str]],
+    scores: DataFrame,
+    rounds: int,
+) -> list[DataFrame]:
+    """L1-normalized propagation rounds over the vector ``scores`` (key,
+    value). Each round applies every hop (edges, on, by, out) in turn:
+    join the vector to ``edges`` on ``on``, sum its value by ``by``,
+    divide by the broadcast 1-row total, checkpoint as (by, out) — the
+    next hop's input. One double division is the only nonlinearity, so
+    an unrolled oracle hash-matches. Returns each hop's last vector
+    (zero rounds: the input vector for every hop)."""
+    last = [scores] * len(hops)
+    for _ in range(rounds):
+        last = []
+        for edges, on, by, out in hops:
+            raw = (
+                edges.join(scores, on)
+                .groupBy(by)
+                .agg(F.sum(scores.columns[1]).alias("raw"))
+            )
+            total = raw.agg(F.sum("raw").alias("t"))
+            scores = (
+                raw.crossJoin(broadcast(total))
+                .select(raw.columns[0], (F.col("raw") / F.col("t")).alias(out))
+                .localCheckpoint()
+            )
+            last.append(scores)
+    return last
+
+
+def _peel_rounds(
+    e: DataFrame,
+    peel: Callable[[DataFrame, int], DataFrame],
+    k: int,
+    max_rounds: int,
+    spill_dir: str | None = None,
+) -> tuple[DataFrame, bool]:
+    """Peel rounds toward a unique fixpoint (k-core, k-truss): ``peel(e,
+    k)`` keeps a subset of ``e``, so a round that removes nothing has
+    reached the fixpoint and every later round is the identity. The
+    input and each round pass :func:`_counted_barrier`, whose one job
+    also returns the row count; the loop stops after the first round
+    that keeps every row, or after ``max_rounds``, and returns (edges,
+    converged). A ``spill_dir`` writes parquet instead
+    (:func:`_materialize`): no count, all rounds run, not converged."""
+
+    def barrier(df: DataFrame, name: str) -> tuple[DataFrame, int | None]:
+        if spill_dir is None:
+            return _counted_barrier(df)
+        return _materialize(df, spill_dir, name), None
+
+    e, rows = barrier(e, "peel_in")
+    for r in range(max_rounds):
+        e, n = barrier(peel(e, k), f"peel_r{r}")
+        if n is not None and n == rows:
+            return e, True
+        rows = n
+    return e, False
+
+
 def symmetrize(edges: DataFrame, a1: str = "actor1", a2: str = "actor2") -> DataFrame:
     """Canonical undirected edges -> both orientations (src, dst).
 
@@ -363,41 +486,41 @@ def degree(edges: DataFrame) -> DataFrame:
     )
 
 
+def _core_peel_round(e: DataFrame, k: int) -> DataFrame:
+    """One degree-peel round on symmetrized edges ``e`` (src, dst): a
+    degree aggregation, then a double broadcast semi-join keeping the
+    edges whose endpoints both have degree >= k."""
+    keep = (
+        e.groupBy("src")
+        .agg(F.count(F.lit(1)).alias("degree"))
+        .where(F.col("degree") >= k)
+        .select("src")
+    )
+    return e.join(broadcast(keep), "src", "semi").join(
+        broadcast(keep.withColumnRenamed("src", "dst")), "dst", "semi"
+    )
+
+
 def k_core(edges: DataFrame, k: int = 2, max_iterations: int = 50) -> DataFrame:
     """The k-core: the maximal subgraph where every node has degree >= k
     within the subgraph. Iterative peeling — drop nodes below k,
     recompute degrees on the surviving edges, repeat to the (unique)
     fixpoint. Columns: actor, core_degree (its degree inside the core).
 
-    One degree aggregation + one semi-join filter per round; rounds
-    bounded by the longest peel cascade. Lineage truncated per round
-    (localCheckpoint; use checkpoint() on a cluster). The fixpoint is
-    unique, so the result is deterministic regardless of peel order —
-    which is what makes the operator testable without an oracle.
-
-    Convergence costs ONE action per round on the NODE-sized keep set
-    (not two full edge-table counts): keep_r ⊆ nodes(e_r) ⊆ keep_{r-1}
-    are non-increasing, so equal keep counts in consecutive rounds
-    force keep_r == nodes(e_r) — every surviving node already has
-    degree >= k and the next peel is the identity. At 100x scale this
-    saves two edge-scan jobs per peel round.
+    One degree aggregation + one double semi-join filter per round
+    (:func:`_core_peel_round`); rounds bounded by the longest peel
+    cascade. The unique fixpoint makes the result deterministic
+    regardless of peel order — which is what makes the operator
+    testable without an oracle. The rounds are :func:`_peel_rounds`,
+    whose counted barriers end the loop on the first round that peels
+    nothing, with no action of their own.
     """
-    e = symmetrize(edges.select("actor1", "actor2").distinct()).localCheckpoint()
-    prev_kept: int | None = None
-    for _ in range(max_iterations):
-        deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
-        keep = deg.where(F.col("degree") >= k).select("src").localCheckpoint()
-        n_kept = keep.count()
-        if n_kept == prev_kept:
-            break
-        prev_kept = n_kept
-        e = (
-            e.join(F.broadcast(keep), "src", "semi")
-            .join(
-                F.broadcast(keep.withColumnRenamed("src", "dst")), "dst", "semi"
-            )
-            .localCheckpoint()
-        )
+    e, _ = _peel_rounds(
+        symmetrize(edges.select("actor1", "actor2").distinct()),
+        _core_peel_round,
+        k,
+        max_iterations,
+    )
     return (
         e.groupBy(F.col("src").alias("actor"))
         .agg(F.count(F.lit(1)).alias("core_degree"))
@@ -411,16 +534,19 @@ def k_core_rounds(
     rounds: int = 2,
     spill_dir: str | None = None,
 ) -> DataFrame:
-    """Exactly `rounds` degree-peel rounds toward the k-core — the
+    """At most `rounds` degree-peel rounds toward the k-core — the
     deterministic bounded form of :func:`k_core`, the node-level twin
     of :func:`k_truss_rounds`.
 
-    No fixpoint loop, no convergence actions: the plan is a fixed
-    composition of `rounds` (degree-agg -> keep -> double semi-join)
-    peels, so an independent engine can replay it as an unrolled CTE
-    and the surviving (actor, degree) set compares bit-for-bit (the
-    unrolled-iteration oracle pattern of ``k_truss_rounds`` /
-    ``_kmeans_cte``). The result is a superset of the k-core that
+    The result is that of a fixed composition of `rounds` (degree-agg
+    -> keep -> double semi-join) peels, so an independent engine can
+    replay it as an unrolled CTE and the surviving (actor, degree) set
+    compares bit-for-bit (the unrolled-iteration oracle pattern of
+    ``k_truss_rounds`` / ``_kmeans_cte``). It stops once a round
+    removes nothing (same result: a peel at its fixpoint is the
+    identity), seen in its barrier's own count (:func:`_peel_rounds`),
+    so it runs no convergence action; with a ``spill_dir`` all
+    `rounds` rounds run. The result is a superset of the k-core that
     equals it whenever the cascade converges within `rounds`; use
     :func:`k_core` when fixpoint semantics are required. Output
     columns (actor, degree) — `degree` is the node's degree in the
@@ -428,21 +554,13 @@ def k_core_rounds(
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    e = _materialize(
+    e, _ = _peel_rounds(
         symmetrize(edges.select("actor1", "actor2").distinct()),
+        _core_peel_round,
+        k,
+        rounds,
         spill_dir,
-        "kcore_sym",
     )
-    for r in range(rounds):
-        deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
-        keep = deg.where(F.col("degree") >= k).select("src")
-        e = _materialize(
-            e.join(F.broadcast(keep), "src", "semi").join(
-                F.broadcast(keep.withColumnRenamed("src", "dst")), "dst", "semi"
-            ),
-            spill_dir,
-            f"kcore_r{r}",
-        )
     return (
         e.groupBy(F.col("src").alias("actor"))
         .agg(F.count(F.lit(1)).alias("degree"))
@@ -541,48 +659,19 @@ def pagerank(
     rank_0 = 1/n;  rank_{i+1}(v) = (1-d)/n + d * sum_{u~v} rank_i(u)/deg(u)
 
     Every node in `edges` has degree >= 1 after symmetrization, so
-    there is no dangling mass. One join + one groupBy shuffle per
-    iteration; the degree-annotated adjacency is checkpointed once and
-    reused, and at cluster scale should be pre-partitioned on src so
-    each round's join is co-located (no re-shuffle of the big side).
-    Columns: actor, rank (rounded 1e-6, desc).
+    there is no dangling mass. :func:`_power_rounds` with unit weights
+    and the uniform teleport: one join + one groupBy shuffle per
+    iteration over an adjacency materialized once (``spill_dir``),
+    which at cluster scale should be pre-partitioned on src so each
+    round's join is co-located. Columns: actor, rank (1e-6, desc).
     """
-    sym = _materialize(
-        symmetrize(edges.select("actor1", "actor2").distinct()),
+    return _power_rounds(
+        edges.select("actor1", "actor2").distinct(),
+        F.lit(1),
+        None,
+        damping,
+        iterations,
         spill_dir,
-        "pr_sym",
-    )
-    adj = _materialize(
-        sym.join(
-            sym.groupBy("src").agg(F.count(F.lit(1)).alias("degree")),
-            "src",
-        ),
-        spill_dir,
-        "pr_adj",
-    )
-    n = adj.select("src").distinct().count()
-    ranks = (
-        adj.select(F.col("src").alias("actor"))
-        .distinct()
-        .withColumn("rank", F.lit(1.0 / n))
-        .localCheckpoint()
-    )
-    for _ in range(iterations):
-        ranks = (
-            adj.join(ranks, adj.src == ranks.actor)
-            .select("dst", (F.col("rank") / F.col("degree")).alias("contrib"))
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("mass"))
-            .select(
-                F.col("dst").alias("actor"),
-                (F.lit((1.0 - damping) / n) + F.lit(damping) * F.col("mass")).alias(
-                    "rank"
-                ),
-            )
-            .localCheckpoint()
-        )
-    return ranks.select("actor", F.round("rank", 6).alias("rank")).orderBy(
-        F.desc("rank"), "actor"
     )
 
 
@@ -902,28 +991,28 @@ def _truss_peel_round(e: DataFrame, k: int) -> DataFrame:
 
 
 def k_truss_rounds(edges: DataFrame, k: int = 4, rounds: int = 2) -> DataFrame:
-    """Exactly `rounds` support-peel rounds toward the k-truss — the
+    """At most `rounds` support-peel rounds toward the k-truss — the
     deterministic bounded form of :func:`k_truss`.
 
-    No fixpoint loop, no convergence actions (zero counts on the
-    driver): the plan is a fixed composition of `rounds` peel rounds,
+    The result is that of a fixed composition of `rounds` peel rounds,
     so an independent engine can replay it as an unrolled CTE and the
     two results compare bit-for-bit (the same unrolled-iteration
-    oracle pattern as the SemDeDup k-means fit). The result is a
-    superset of the k-truss that equals it whenever the peel converges
-    within `rounds` (always true on graphs whose cascade depth is
-    short, e.g. after k_truss has been profiled once); use
-    :func:`k_truss` when fixpoint semantics are required.
+    oracle pattern as the SemDeDup k-means fit). It stops once a round
+    removes nothing (same result: a peel at its fixpoint is the
+    identity), seen in its barrier's own count (:func:`_peel_rounds`),
+    so it runs no convergence action. The result is a superset of the k-truss that
+    equals it whenever the peel converges within `rounds` (always true
+    on graphs whose cascade depth is short, e.g. after k_truss has
+    been profiled once); use :func:`k_truss` when fixpoint semantics
+    are required.
     """
     if k < 2:
         raise ValueError("k-truss requires k >= 2")
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    e = edges.select("actor1", "actor2").distinct().localCheckpoint()
-    if k == 2:
-        return e.orderBy("actor1", "actor2")
-    for _ in range(rounds):
-        e = _truss_peel_round(e, k).localCheckpoint()
+    e = edges.select("actor1", "actor2").distinct()
+    if k > 2:
+        e, _ = _peel_rounds(e, _truss_peel_round, k, rounds)
     return e.orderBy("actor1", "actor2")
 
 
@@ -934,16 +1023,15 @@ def k_truss(edges: DataFrame, k: int = 4, max_iterations: int = 30) -> DataFrame
     contact-network community core. Returns the surviving canonical
     edge set (actor1, actor2).
 
-    Iterative support peeling: enumerate triangles on the surviving
-    canonical edges (the same three-way broadcast join as
-    :func:`triangles`), count per-edge support by exploding each
-    triangle into its three edges (map-side combined), semi-join the
-    edges that clear k-2, repeat to the unique fixpoint. One
-    triangle-enumeration + one aggregation + one semi-join per round;
-    convergence costs a single edge-count action per round (equal
-    consecutive counts == nothing peeled == fixpoint, since the
-    support computation is deterministic). Lineage truncated per round
-    (localCheckpoint; checkpoint() on a cluster).
+    Iterative support peeling (:func:`_truss_peel_round`): enumerate
+    triangles on the surviving canonical edges (the same three-way
+    broadcast join as :func:`triangles`), count per-edge support by
+    exploding each triangle into its three edges (map-side combined),
+    semi-join the edges that clear k-2, repeat to the unique fixpoint.
+    The rounds are :func:`_peel_rounds`: convergence (an unchanged
+    edge count == nothing peeled == fixpoint, since the support
+    computation is deterministic) rides on each round's counted
+    barrier, so it costs no action of its own.
 
     If the peel has not reached the fixpoint when ``max_iterations``
     runs out (long cascades peel one layer per round, so worst-case
@@ -954,26 +1042,17 @@ def k_truss(edges: DataFrame, k: int = 4, max_iterations: int = 30) -> DataFrame
     """
     if k < 2:
         raise ValueError("k-truss requires k >= 2")
-    e = edges.select("actor1", "actor2").distinct().localCheckpoint()
-    if k == 2:
-        # every edge is trivially in the 2-truss; the support semi-join
-        # below would wrongly drop triangle-free edges (no support row)
-        return e.orderBy("actor1", "actor2")
-    prev: int | None = None
-    converged = False
-    for _ in range(max_iterations):
-        n_edges = e.count()
-        if n_edges == prev:
-            converged = True
-            break
-        prev = n_edges
-        e = _truss_peel_round(e, k).localCheckpoint()
-    if not converged and e.count() != prev:
-        raise RuntimeError(
-            f"k_truss did not converge within max_iterations={max_iterations}: "
-            "the surviving edge set is a superset of the k-truss. "
-            "Increase max_iterations."
-        )
+    e = edges.select("actor1", "actor2").distinct()
+    # every edge is trivially in the 2-truss; the support semi-join
+    # would wrongly drop triangle-free edges (no support row)
+    if k > 2:
+        e, converged = _peel_rounds(e, _truss_peel_round, k, max_iterations)
+        if not converged:
+            raise RuntimeError(
+                f"k_truss did not converge within max_iterations={max_iterations}: "
+                "the surviving edge set is a superset of the k-truss. "
+                "Increase max_iterations."
+            )
     return e.orderBy("actor1", "actor2")
 
 
@@ -2062,14 +2141,7 @@ def temporal_walks(
     adj_arr = adj.groupBy("src").agg(
         F.array_sort(F.collect_list(F.struct("frame_id", "dst"))).alias("nbrs")
     )
-    if spill_dir is None:
-        adj_arr = adj_arr.localCheckpoint()
-    else:
-        import os as _os
-
-        path = _os.path.join(spill_dir, "twalk_adj")
-        adj_arr.write.mode("overwrite").parquet(path)
-        adj_arr = adj_arr.sparkSession.read.parquet(path)
+    adj_arr = _materialize(adj_arr, spill_dir, "twalk_adj")
     if max_gap is None:
         cur = adj_arr.select(
             F.col("src").alias("walk_id"),
@@ -2377,54 +2449,24 @@ def personalized_pagerank(
         rank_{i+1}(v)= (1-d) * tele(v) + d * sum_{u~v} rank_i(u)/deg(u)
 
     Fixed-iteration deterministic power method like :func:`pagerank`
-    (same checkpointed degree-annotated adjacency, one join + one
-    groupBy per round). The full node vector is carried every round via
-    a LEFT join from the node-teleport table, so unreached nodes hold
-    an exact 0.0 — both engines sum the identical zero contributions
-    and the rounded vector hash-matches. Columns: actor, rank
-    (rounded 1e-6, desc).
+    (:func:`_power_rounds` with unit weights and the seed teleport:
+    the same checkpointed degree-annotated adjacency, one join + one
+    groupBy per round). Every round carries the full node vector, so
+    unreached nodes hold an exact 0.0 — both engines sum the identical
+    zero contributions and the rounded vector hash-matches. Columns:
+    actor, rank (rounded 1e-6, desc).
     """
     if not seeds:
         raise ValueError("personalized_pagerank needs >= 1 seed")
-    sym = symmetrize(
-        edges.select("actor1", "actor2").distinct()
-    ).localCheckpoint()
-    adj = sym.join(
-        sym.groupBy("src").agg(F.count(F.lit(1)).alias("degree")), "src"
-    ).localCheckpoint()
-    tele_val = 1.0 / len(seeds)
-    nodes = (
-        adj.select(F.col("src").alias("actor"))
-        .distinct()
-        .withColumn(
-            "tele",
-            F.when(F.col("actor").isin(seeds), F.lit(tele_val)).otherwise(
-                F.lit(0.0)
-            ),
-        )
-        .localCheckpoint()
+    tele = F.when(F.col("actor").isin(seeds), F.lit(1.0 / len(seeds))).otherwise(
+        F.lit(0.0)
     )
-    ranks = nodes.select("actor", F.col("tele").alias("rank"))
-    for _ in range(iterations):
-        mass = (
-            adj.join(ranks, adj.src == ranks.actor)
-            .select("dst", (F.col("rank") / F.col("degree")).alias("contrib"))
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("mass"))
-        )
-        ranks = (
-            nodes.join(mass, nodes.actor == mass.dst, "left")
-            .select(
-                "actor",
-                (
-                    F.lit(1.0 - damping) * F.col("tele")
-                    + F.lit(damping) * F.coalesce(F.col("mass"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-    return ranks.select("actor", F.round("rank", 6).alias("rank")).orderBy(
-        F.desc("rank"), "actor"
+    return _power_rounds(
+        edges.select("actor1", "actor2").distinct(),
+        F.lit(1),
+        tele,
+        damping,
+        iterations,
     )
 
 
@@ -2439,11 +2481,10 @@ def eigenvector_centrality(
     over the conventional L2 so the only nonlinearity cross-engine is
     one divide, not a sqrt of a sum of squares).
 
-    Fixed-iteration and deterministic like :func:`pagerank` (same
-    checkpointed symmetrized adjacency; one join + one groupBy + one
-    scalar cross-join per round). The normalizer is a 1-row aggregate
-    broadcast into the division. Columns: actor, score (rounded 1e-6,
-    desc).
+    Fixed-iteration and deterministic like :func:`pagerank`: the
+    rounds are :func:`_l1_rounds` with one hop over the checkpointed
+    symmetrized adjacency (one join + one groupBy + one scalar
+    cross-join per round). Columns: actor, score (rounded 1e-6, desc).
     """
     sym = symmetrize(
         edges.select("actor1", "actor2").distinct()
@@ -2455,19 +2496,18 @@ def eigenvector_centrality(
         .withColumn("score", F.lit(1.0 / n))
         .localCheckpoint()
     )
-    for _ in range(iterations):
-        raw = (
-            sym.join(scores, sym.dst == scores.actor)
-            .groupBy("src")
-            .agg(F.sum("score").alias("raw"))
-            .select(F.col("src").alias("actor"), "raw")
-        )
-        total = raw.agg(F.sum("raw").alias("t"))
-        scores = (
-            raw.crossJoin(F.broadcast(total))
-            .select("actor", (F.col("raw") / F.col("t")).alias("score"))
-            .localCheckpoint()
-        )
+    (scores,) = _l1_rounds(
+        [
+            (
+                sym.withColumnRenamed("dst", "actor"),
+                "actor",
+                F.col("src").alias("actor"),
+                "score",
+            )
+        ],
+        scores,
+        iterations,
+    )
     return scores.select(
         "actor", F.round("score", 6).alias("score")
     ).orderBy(F.desc("score"), "actor")
@@ -3528,51 +3568,18 @@ def pagerank_weighted(
     transition mass splits proportionally to integer edge weights
     instead of uniformly — rank_{i+1}(v) = (1-d)/n + d * sum over
     neighbors u of rank_i(u) * w(u,v) / W(u), W(u) = sum of u's
-    weights. Same fixed-iteration deterministic power method, join
-    shapes, and checkpointing as :func:`pagerank`; weights stay exact
-    integers so only the rank vector is floating (1e-6 grid).
-    Input: canonical (actor1, actor2, ``weight_col``) rows, weights
-    pre-aggregated per pair. Columns: actor, rank (round 6, desc).
+    weights. The same :func:`_power_rounds` as :func:`pagerank`, with
+    these weights; weights stay exact integers so only the rank vector
+    is floating (1e-6 grid). Input: canonical (actor1, actor2,
+    ``weight_col``) rows, weights pre-aggregated per pair. Columns:
+    actor, rank (round 6, desc).
     """
-    sym = symmetrize(
-        edges.select("actor1", "actor2", weight_col)
-    ).localCheckpoint()
-    adj = (
-        sym.join(
-            sym.groupBy("src").agg(F.sum(weight_col).alias("wdeg")),
-            "src",
-        )
-        .localCheckpoint()
-    )
-    n = adj.select("src").distinct().count()
-    ranks = (
-        adj.select(F.col("src").alias("actor"))
-        .distinct()
-        .withColumn("rank", F.lit(1.0 / n))
-        .localCheckpoint()
-    )
-    for _ in range(iterations):
-        ranks = (
-            adj.join(ranks, adj.src == ranks.actor)
-            .select(
-                "dst",
-                (
-                    F.col("rank") * F.col(weight_col) / F.col("wdeg")
-                ).alias("contrib"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("mass"))
-            .select(
-                F.col("dst").alias("actor"),
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.col("mass")
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-    return ranks.select("actor", F.round("rank", 6).alias("rank")).orderBy(
-        F.desc("rank"), "actor"
+    return _power_rounds(
+        edges.select("actor1", "actor2", weight_col),
+        F.col(weight_col),
+        None,
+        damping,
+        iterations,
     )
 
 
@@ -3589,8 +3596,9 @@ def hits_bipartite(presence: DataFrame, iterations: int = 8) -> DataFrame:
     :func:`eigenvector_centrality` convention — the only nonlinearity
     is a plain double division, so the unrolled oracle hash-matches):
     a(f) = sum of h(u) over u present in f, normalized; then h(u) =
-    sum of a(f) over f containing u, normalized. One join + aggregate
-    per half-step, both vectors checkpointed per round. Columns:
+    sum of a(f) over f containing u, normalized — :func:`_l1_rounds`
+    with those two hops. One join + aggregate per half-step, both
+    vectors checkpointed per round. Columns:
     kind ('actor' | 'frame'), id, score (round 6; desc within kind).
     """
     if iterations < 1:
@@ -3606,30 +3614,14 @@ def hits_bipartite(presence: DataFrame, iterations: int = 8) -> DataFrame:
         .withColumn("h", F.lit(1.0 / n_a))
         .localCheckpoint()
     )
-    auth = None
-    for _ in range(iterations):
-        araw = (
-            inc.join(hub, "actor")
-            .groupBy("frame_id")
-            .agg(F.sum("h").alias("raw"))
-        )
-        atot = araw.agg(F.sum("raw").alias("t"))
-        auth = (
-            araw.crossJoin(broadcast(atot))
-            .select("frame_id", (F.col("raw") / F.col("t")).alias("a"))
-            .localCheckpoint()
-        )
-        hraw = (
-            inc.join(auth, "frame_id")
-            .groupBy("actor")
-            .agg(F.sum("a").alias("raw"))
-        )
-        htot = hraw.agg(F.sum("raw").alias("t"))
-        hub = (
-            hraw.crossJoin(broadcast(htot))
-            .select("actor", (F.col("raw") / F.col("t")).alias("h"))
-            .localCheckpoint()
-        )
+    auth, hub = _l1_rounds(
+        [
+            (inc, "actor", F.col("frame_id"), "a"),
+            (inc, "frame_id", F.col("actor"), "h"),
+        ],
+        hub,
+        iterations,
+    )
     out_h = hub.select(
         F.lit("actor").alias("kind"),
         F.col("actor").alias("id"),

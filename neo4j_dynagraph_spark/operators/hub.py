@@ -52,8 +52,12 @@ policy would replace:
   by a row count that it returns, broadcast-hinted when the measured
   size fits ``spark.sql.autoBroadcastJoinThreshold`` — the loop
   barrier of ``betweenness_centrality`` (whose forward pass stops at
-  the first empty layer) and ``graph._wl_rounds`` (``wl_refinement``,
-  ``wl_day_similarity``).
+  the first empty layer), ``graph._wl_rounds`` (``wl_refinement``,
+  ``wl_day_similarity``) and ``graph._peel_rounds`` (``k_core``,
+  ``k_core_rounds``, ``k_truss``, ``k_truss_rounds``; the peel stops
+  on the first round whose count shows nothing removed, and
+  ``k_core_rounds`` falls back to ``_materialize`` when given a
+  ``spill_dir``).
 """
 
 from __future__ import annotations

@@ -339,53 +339,20 @@ def decontaminate(
     benchmark: DataFrame,
     text_col: str = "text",
     n: int = 8,
-    bloom_prefilter: bool = False,
-    n_words: int = 32768,
-    n_hashes: int = 4,
 ) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing any
     word n-gram with a benchmark/eval set (the GPT-3/PaLM-style 8-gram
     overlap rule, computed on portable n-gram hashes).
 
-    Default scale shape: the benchmark side is distinct-hashed and
-    BROADCAST (eval sets are tiny relative to a 100 TB corpus, by the
-    nature of benchmark decontamination), so the check is a map-side
-    left join against the training n-gram stream computing hit and
-    total counts in a single pass; the only shuffle is the final
-    per-doc aggregation (map-side combined).
-
-    ``bloom_prefilter=True`` (r14, VERDICT r13 #5) switches to the
-    shape for the regime where the distinct benchmark gram table
-    CANNOT broadcast and the join must shuffle the gram stream:
-
-    - hits come from an INNER join (only matching grams cross the
-      join boundary), per-doc totals are recomputed afterwards over
-      ONLY the flagged docs (a broadcast semi-join of the tiny hit
-      list — the guide §8 "decide with small rows" move), so
-      non-matching gram rows no longer need to carry or produce
-      anything;
-    - a manual runtime Bloom filter — an ``n_words``x63-bit portable
-      bit table (256 KB, CONSTANT in benchmark size) embedded as a
-      plan LITERAL (built by one bounded <=``n_words``-row collect,
-      the same driver-side build as Scala's df.stat.bloomFilter;
-      Spark's native bloom_filter_agg/might_contain are not
-      SQL-registered in this build) — drops definitely-clean grams
-      BEFORE the join with ``n_hashes`` in-row xxhash64 probes.
-
-    One-sided: Bloom false positives are removed by the exact join
-    that follows, so both modes return IDENTICAL rows (test-pinned;
-    the probe hash therefore needs no cross-engine portability).
-    Measured at sf0.1 (r14): default 1.35 s; prefilter mode 2.3 s —
-    the extra is one checkpoint job plus a doubled join-key hash from
-    the inner join's inferred isnotnull, which is why the default
-    stays the left join wherever the benchmark side broadcasts (guide
-    §3.2 "the costs, and the reason it is not always on"). Rejected
-    variants, measured: materializing the per-doc gram array into a
-    column (8.7 s — O(array) UnsafeRow traffic through the explode),
-    in-row totals alongside the generator (30 s — ExtractGenerator
-    re-evaluates the whole gram transform per exploded row), Bloom
-    array via broadcast crossJoin (35 s — the 256 KB array is copied
-    into every output row).
+    Scale shape: the benchmark side is distinct-hashed and BROADCAST
+    (eval sets are tiny relative to a 100 TB corpus, by the nature of
+    benchmark decontamination), so the check is a map-side left join
+    against the training n-gram stream computing hit and total counts
+    in a single pass; the only shuffle is the final per-doc
+    aggregation (map-side combined). Measured alternatives, all slower
+    at sf0.1 than this shape's 1.35 s (a Bloom-prefiltered inner join,
+    2.2-2.3 s; a materialized gram-array column; in-row totals beside
+    the generator): OPTIMIZATION_r14.md.
 
     Returns one row per CONTAMINATED training doc:
     doc_id, n_hit_ngrams (distinct benchmark n-grams matched),
@@ -393,118 +360,47 @@ def decontaminate(
     """
     from pyspark.sql.functions import broadcast
 
-    from neo4j_dynagraph_spark.operators.hub import checkpoint_hub
-
     # per-doc dedup happens IN-ROW (array_distinct over the doc's own
     # gram array) before the explode: a document's n-grams all live in
     # one row, so a post-explode `.distinct()` — a full Exchange of
     # every (doc_id, gram-hash) position in the corpus — would buy
     # nothing the in-row dedup doesn't (guide §2.4). The expression
-    # stays INLINE in the generator (see rejected variants above).
+    # stays INLINE in the generator: as a materialized column it
+    # measured 8.7 s (O(array) UnsafeRow traffic through the explode).
     g_expr = F.expr(
         f"array_distinct(transform(sequence(0, size(t) - {n}), "
         f"i -> concat_ws(' ', slice(t, i + 1, {n}))))"
     )
 
-    def toked(df: DataFrame) -> DataFrame:
-        return df.select(
-            "doc_id", dfn.tokens(F.col(text_col)).alias("t")
-        ).where(F.size("t") >= n)
-
     def grams(df: DataFrame) -> DataFrame:
         return (
-            toked(df)
+            df.select("doc_id", dfn.tokens(F.col(text_col)).alias("t"))
+            .where(F.size("t") >= n)
             .select("doc_id", F.explode(g_expr).alias("gram"))
             .select("doc_id", dfn.hash64(F.col("gram")).alias("gh"))
         )
 
-    bench_grams = grams(benchmark).select("gh").distinct()
-    if not bloom_prefilter:
-        bench_hashes = bench_grams.withColumn("hit", F.lit(1))
-        # broadcast left-join + one groupBy: hit and total counts in a
-        # single pass over the training n-gram stream (no second scan)
-        return (
-            grams(train)
-            .join(broadcast(bench_hashes), "gh", "left")
-            .groupBy("doc_id")
-            .agg(
-                F.count("hit").alias("n_hit_ngrams"),
-                F.count(F.lit(1)).alias("n_doc_ngrams"),
-            )
-            .where(F.col("n_hit_ngrams") > 0)
-            .select(
-                "doc_id",
-                "n_hit_ngrams",
-                "n_doc_ngrams",
-                F.round(
-                    F.col("n_hit_ngrams") / F.col("n_doc_ngrams"), 6
-                ).alias("hit_ratio"),
-            )
-        )
-
-    m = n_words * 63
-    pos = F.explode(
-        F.array(
-            *[
-                F.pmod(F.xxhash64(F.col("gh"), F.lit(i)), F.lit(m))
-                for i in range(n_hashes)
-            ]
-        )
-    ).alias("pos")
-    words = (
-        bench_grams.select(pos)
-        .select(
-            (F.col("pos") / 63).cast("long").alias("word"),
-            F.expr("shiftleft(1L, cast(pos % 63 as int))").alias("mask"),
-        )
-        .groupBy("word")
-        .agg(F.bit_or("mask").alias("bits"))
-        .collect()
+    bench_hashes = grams(benchmark).select("gh").distinct().withColumn(
+        "hit", F.lit(1)
     )
-    bits = [0] * n_words
-    for r in words:
-        bits[r["word"]] = r["bits"]
-    bf_lit = F.lit(bits)
-    might_contain = F.lit(True)
-    for i in range(n_hashes):
-        p = F.pmod(F.xxhash64(F.col("gh"), F.lit(i)), F.lit(m))
-        mask = F.expr(
-            f"shiftleft(1L, cast(pmod(xxhash64(gh, {i}), {m}) % 63 as int))"
-        )
-        might_contain = might_contain & (
-            F.element_at(bf_lit, (p / 63).cast("int") + F.lit(1)).bitwiseAND(
-                mask
-            )
-            != 0
-        )
-    # the Bloom probe prunes the stream BEFORE the join boundary; the
-    # exact inner join then removes false positives
-    hits = (
-        grams(train)
-        .where(might_contain)
-        .join(broadcast(bench_grams), "gh")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_hit_ngrams"))
-        # referenced twice below (semi-join probe + final join) —
-        # contaminated-doc-bounded narrow hub
-        .transform(checkpoint_hub)
-    )
-    # per-doc totals recomputed for ONLY the flagged docs: an in-row
-    # size over the doc's own distinct-gram array, no explode
-    totals = toked(
-        train.join(broadcast(hits.select("doc_id")), "doc_id", "semi")
-    ).select(
-        "doc_id", F.size(g_expr).cast("long").alias("n_doc_ngrams")
-    )
+    # broadcast left-join + one groupBy: hit and total counts in a
+    # single pass over the training n-gram stream (no second scan)
     return (
-        hits.join(broadcast(totals), "doc_id")
+        grams(train)
+        .join(broadcast(bench_hashes), "gh", "left")
+        .groupBy("doc_id")
+        .agg(
+            F.count("hit").alias("n_hit_ngrams"),
+            F.count(F.lit(1)).alias("n_doc_ngrams"),
+        )
+        .where(F.col("n_hit_ngrams") > 0)
         .select(
             "doc_id",
             "n_hit_ngrams",
             "n_doc_ngrams",
-            F.round(F.col("n_hit_ngrams") / F.col("n_doc_ngrams"), 6).alias(
-                "hit_ratio"
-            ),
+            F.round(
+                F.col("n_hit_ngrams") / F.col("n_doc_ngrams"), 6
+            ).alias("hit_ratio"),
         )
     )
 

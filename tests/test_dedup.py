@@ -316,3 +316,74 @@ def test_remove_exact_dup_spans_matches_span_audit(spark):
     import hashlib
 
     assert removed[1].rebuilt_md5 == hashlib.md5(b"w1 w2 v1").hexdigest()
+
+
+def test_soft_dedup_reweights_planted_duplicates(spark):
+    """Planted corpus: source A is one doc repeated 4x (effective
+    mass 1 doc), source B is 2 unique docs, one shared with A's
+    content (that doc's group size is 5 across sources). Weights are
+    1/group-size on the 1e-6 grid."""
+    from neo4j_dynagraph_spark.operators import dedup
+
+    rows = (
+        [(i, "same text here", "A") for i in range(4)]
+        + [(10, "same text here", "B"), (11, "unique words only", "B")]
+    )
+    d = spark.createDataFrame(rows, "doc_id long, text string, source string")
+    out = {r.source: r for r in dedup.soft_dedup(d).collect()}
+    assert out["A"].n_docs == 4 and out["A"].dup_docs == 4
+    assert out["B"].n_docs == 2 and out["B"].dup_docs == 1
+    # group size for 'same text here' is 5 (4 in A + 1 in B)
+    assert abs(out["A"].effective_docs - 4 * 0.2) < 1e-6
+    assert abs(out["B"].effective_docs - (0.2 + 1.0)) < 1e-6
+    # token mass: 3 tokens per doc
+    assert abs(out["A"].effective_tokens - 4 * 3 * 0.2) < 1e-5
+    assert abs(out["B"].effective_tokens - (3 * 0.2 + 3.0)) < 1e-5
+
+
+def test_stream_soft_dedup_multibatch_equals_batch(spark, tmp_path):
+    """The soft-dedup streaming twin, one file per micro-batch, must
+    equal batch soft_dedup bit-for-bit: a duplicate whose copies
+    arrive in DIFFERENT batches (the late-arrival reweight the store
+    exists for) plus a within-batch duplicate group."""
+    import glob
+    import os
+    import shutil
+
+    from neo4j_dynagraph_spark.operators.dedup import soft_dedup
+    from neo4j_dynagraph_spark.streaming.soft_dedup import stream_soft_dedup
+
+    src = tmp_path / "docs"
+    src.mkdir()
+    shards = [
+        [(0, "shared boilerplate text", "A"), (1, "unique alpha words", "A")],
+        [(2, "shared boilerplate text", "B"), (3, "shared boilerplate text", "B")],
+        [(4, "unique beta words", "B"), (5, "shared boilerplate text", "A")],
+    ]
+    for i, rows in enumerate(shards):
+        spark.createDataFrame(
+            rows, "doc_id long, text string, source string"
+        ).coalesce(1).write.parquet(str(src / f"shard_{i}"))
+    for i in range(len(shards)):
+        part = glob.glob(str(src / f"shard_{i}" / "*.parquet"))[0]
+        shutil.move(part, str(src / f"s{i}.parquet"))
+        shutil.rmtree(str(src / f"shard_{i}"))
+        os.utime(str(src / f"s{i}.parquet"), (1000 + i, 1000 + i))
+
+    schema = spark.read.parquet(str(src)).schema
+    streamed = stream_soft_dedup(
+        spark,
+        str(src),
+        schema,
+        store_root=str(tmp_path / "sd_store"),
+        max_files_per_trigger=1,
+    )
+    batch = soft_dedup(spark.read.parquet(str(src)))
+    s_rows = sorted(map(tuple, streamed.collect()))
+    b_rows = sorted(map(tuple, batch.collect()))
+    assert s_rows == b_rows and len(s_rows) == 2
+    by_src = {r[0]: r for r in s_rows}
+    # 'shared boilerplate text' has 4 copies across batches/sources:
+    # A holds 2 of them (weight 0.25 each) + 1 unique doc
+    assert abs(by_src["A"][3] - (2 * 0.25 + 1.0)) < 1e-6
+    assert by_src["A"][2] == 2 and by_src["B"][2] == 2  # dup_docs

@@ -5,9 +5,11 @@ from __future__ import annotations
 
 import hashlib
 
+import pyspark.sql.functions as F
 import pytest
 
 from neo4j_dynagraph_spark.operators import graph
+from neo4j_dynagraph_spark.operators.hub import checkpoint_hub, stage_corpus_scale
 
 # canonical edges of: triangle 1-2-3, plus path 3-4, 4-5, and edge 1-5
 EDGES = [(1, 2), (1, 3), (2, 3), (3, 4), (4, 5), (1, 5)]
@@ -99,6 +101,17 @@ def test_pagerank_matches_numpy(edges):
     assert abs(sum(rk for _, rk in rows) - 1.0) < 1e-6 * len(rows)
 
 
+def test_pagerank_spill_dir_bit_identical(edges, tmp_path):
+    a = [tuple(r) for r in graph.pagerank(edges, iterations=6).collect()]
+    b = [
+        tuple(r)
+        for r in graph.pagerank(
+            edges, iterations=6, spill_dir=str(tmp_path)
+        ).collect()
+    ]
+    assert a == b and len(a) == 5
+
+
 def test_temporal_reachability_respects_time(spark):
     """A-B@1, B-C@2: A reaches C (1 then 2, non-decreasing) but C does
     NOT reach A (would need B-A at frame >= 2; the edge is at 1) — the
@@ -171,6 +184,23 @@ def test_k_core_rounds_matches_fixpoint_when_converged(spark):
     r1 = {r.actor: r.degree for r in graph.k_core_rounds(e, k=2, rounds=1).collect()}
     # after one round only leaf 6 is gone; 5 survives with degree 1
     assert r1 == {1: 3, 2: 3, 3: 3, 4: 4, 5: 1}
+
+
+def test_k_core_rounds_spill_dir_bit_identical(spark, tmp_path):
+    """The parquet path runs every round and the default path stops
+    once a round removes nothing; both give the same survivors."""
+    clique = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
+    path = [(4, 5), (5, 6)]
+    e = spark.createDataFrame(clique + path, "actor1 long, actor2 long")
+    for rounds in (1, 4):
+        a = [tuple(r) for r in graph.k_core_rounds(e, k=2, rounds=rounds).collect()]
+        b = [
+            tuple(r)
+            for r in graph.k_core_rounds(
+                e, k=2, rounds=rounds, spill_dir=str(tmp_path / f"r{rounds}")
+            ).collect()
+        ]
+        assert a == b and len(a) >= 4
 
 
 # frame-edges for temporal-pair stats: pair (1,2) present in frames
@@ -406,6 +436,47 @@ def test_k_truss_rounds_matches_fixpoint_when_converged(spark):
         for r in graph.k_truss_rounds(e, k=4, rounds=1).collect()
     }
     assert r1 == set(k4) | {(4, 5)}
+
+
+def test_k_truss_max_iterations_boundary(spark):
+    """On the K4 + two-layer pendant graph the 4-truss peel removes
+    edges in two rounds and a third round finds nothing to remove:
+    two iterations cannot tell the peel has converged (RuntimeError),
+    three return the K4."""
+    k4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
+    pendant = [(3, 5), (4, 5), (4, 6), (5, 6)]
+    e = spark.createDataFrame(k4 + pendant, "actor1 long, actor2 long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        graph.k_truss(e, k=4, max_iterations=2)
+    got = {
+        (r.actor1, r.actor2)
+        for r in graph.k_truss(e, k=4, max_iterations=3).collect()
+    }
+    assert got == set(k4)
+
+
+def test_peel_rounds_stop_when_a_round_removes_nothing(spark, monkeypatch):
+    # the bounded form runs at most `rounds` peels but stops at the
+    # first round whose counted barrier sees no edge removed
+    rows = []
+    barrier = graph._counted_barrier
+
+    def counting(df):
+        out = barrier(df)
+        rows.append(out[1])
+        return out
+
+    monkeypatch.setattr(graph, "_counted_barrier", counting)
+    k4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
+    pendant = [(3, 5), (4, 5), (4, 6), (5, 6)]
+    e = spark.createDataFrame(k4 + pendant, "actor1 long, actor2 long")
+    got = {
+        (r.actor1, r.actor2)
+        for r in graph.k_truss_rounds(e, k=4, rounds=10).collect()
+    }
+    assert got == set(k4)
+    # barriers: the input, then rounds 1-3; round 3 removes nothing
+    assert rows == [10, 7, 6, 6]
 
 
 def test_temporal_path_counts_hand_graph(spark):
@@ -1098,6 +1169,14 @@ def test_eigenvector_centrality_numpy_differential(spark, edges):
     assert min(got[1], got[3]) > max(got[2], got[4], got[5])
 
 
+def test_eigenvector_centrality_zero_iterations_is_uniform(edges):
+    got = {
+        r.actor: r.score
+        for r in graph.eigenvector_centrality(edges, iterations=0).collect()
+    }
+    assert got == {a: 0.2 for a in range(1, 6)}
+
+
 def test_harmonic_centrality_closed_form(spark, edges):
     """Hand-computed distances on the 5-node fixture: every node
     reaches all 4 others within 2 hops; 1 and 3 (degree 3) score
@@ -1465,6 +1544,67 @@ def test_betweenness_stops_at_first_empty_layer(spark, monkeypatch):
     assert {r.actor: r.betweenness for r in got} == {v: 0.0 for v in range(5)}
 
 
+def test_checkpoint_hub_narrow_frame_roundtrips(spark):
+    df = spark.range(100).select(
+        F.col("id").alias("actor"), (F.col("id") % 7).alias("degree")
+    )
+    out = checkpoint_hub(df)
+    assert out.columns == ["actor", "degree"]
+    assert out.count() == 100
+    # the barrier is real: the plan is an RDD scan, not the range
+    assert "LogicalRDD" in out._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_checkpoint_hub_rejects_wide_frames(spark):
+    wide = spark.range(5).select(
+        *[(F.col("id") + i).alias(f"c{i}") for i in range(9)]
+    )
+    with pytest.raises(ValueError, match="wider than the hub bound"):
+        checkpoint_hub(wide)
+    # the explicit override at the call site is the sanctioned escape
+    assert checkpoint_hub(wide, max_width=9).count() == 5
+
+
+def test_stage_corpus_scale_roundtrips_fresh_each_call(spark):
+    df = spark.range(1000).select(
+        "id", F.md5(F.col("id").cast("string")).alias("h")
+    )
+    a = stage_corpus_scale(df, "t14")
+    b = stage_corpus_scale(df, "t14")
+    assert a.count() == b.count() == 1000
+    # each call stages its own directory (no cross-invocation reuse)
+    fa = a.inputFiles()[0].rsplit("/", 2)[-2]
+    fb = b.inputFiles()[0].rsplit("/", 2)[-2]
+    assert fa != fb
+    assert sorted(r["h"] for r in a.collect()) == sorted(
+        r["h"] for r in df.collect()
+    )
+
+
+def test_wedge_pairs_contract_checked_under_flag(spark, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CHECK_INVARIANTS", "1")
+    dup = spark.createDataFrame(
+        [(1, 2), (1, 2), (2, 3)], ["actor1", "actor2"]
+    )
+    with pytest.raises(AssertionError, match="input contract violated"):
+        graph._wedge_pairs(dup)
+    ok = dup.distinct()
+    # distinct input passes the check and produces the 1-wedge stream
+    rows = graph._wedge_pairs(ok).collect()
+    assert [(r["center"], r["actor1"], r["actor2"]) for r in rows] == [
+        (2, 1, 3)
+    ]
+
+
+def test_wedge_pairs_contract_unchecked_by_default(spark, monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CHECK_INVARIANTS", raising=False)
+    dup = spark.createDataFrame(
+        [(1, 2), (1, 2), (2, 3)], ["actor1", "actor2"]
+    )
+    # no action, no raise: the default path stays lazy and un-gated
+    graph._wedge_pairs(dup)
+
+
 def test_betweenness_empty_inputs(spark):
     star = spark.createDataFrame(
         [(0, i) for i in range(1, 5)], "actor1 long, actor2 long"
@@ -1697,10 +1837,11 @@ def test_minklattice_merge_chop_invariant(spark, tmp_path):
 def test_pagerank_weighted_uniform_equals_unweighted(spark, edges):
     import pyspark.sql.functions as F
 
-    uw = {
-        r.actor: r.rank
-        for r in graph.pagerank(edges, iterations=6).collect()
-    }
+    pr = [tuple(r) for r in graph.pagerank(edges, iterations=6).collect()]
+    uw = dict(pr)
+    # unit weights: rank * 1 / W is rank / deg, bit for bit
+    unit = graph.pagerank_weighted(edges.withColumn("w", F.lit(1)), iterations=6)
+    assert [tuple(r) for r in unit.collect()] == pr
     ew = edges.withColumn("w", F.lit(7))  # any constant weight
     ww = {
         r.actor: r.rank
@@ -2196,3 +2337,143 @@ def test_wl_day_keyed_colors_match_per_day_refinement(spark):
     assert got == want
     # the two shapes refine differently although they share actors
     assert got[("d0", 2)] != got[("d1", 2)]
+
+
+def _tpr(spark, rows, frames, beta=0.85):
+    e = spark.createDataFrame(
+        rows, "frame_id long, actor1 long, actor2 long"
+    )
+    return {
+        r.actor: r.tpr
+        for r in graph.temporal_pagerank(e, frames, beta=beta).collect()
+    }
+
+
+def test_temporal_pagerank_respects_time_order(spark):
+    """The defining property: rank depends on the ORDER frames occur,
+    which a static PageRank (same edge multiset either way) cannot
+    see. A star at node 1 drains its leaves (deg-2 hub sends two
+    half-shares but receives two full shares); node 4 contacts leaf
+    3 either BEFORE the drain (symmetric equal swap — node 4
+    unchanged) or AFTER (it meets a drained node 3 and swaps its
+    full share for a depleted one). So node 4 ends strictly poorer
+    when its contact comes second, and the hub strictly richer."""
+    star_then_edge = [(0, 1, 2), (0, 1, 3), (1, 3, 4)]
+    edge_then_star = [(0, 3, 4), (1, 1, 2), (1, 1, 3)]
+    fwd = _tpr(spark, star_then_edge, [0, 1])
+    rev = _tpr(spark, edge_then_star, [0, 1])
+    assert set(fwd) == set(rev) == {1, 2, 3, 4}
+    # node 4 swaps its full share for a drained one only in fwd
+    assert fwd[4] < rev[4]
+    # node 3 recovers mass from 4 after the drain only in fwd
+    assert fwd[3] > rev[3]
+
+
+def test_temporal_pagerank_python_differential(spark):
+    """Pure-Python replay of the integer recursion (the house
+    differential for every iterative operator): same 1e-9 grid, same
+    round-half-away share, same keep/receive bookkeeping — the Spark
+    output must match the replay bit-for-bit, and the replay's
+    integer state proves conservation is EXACT (sum invariant)."""
+    rows = [
+        (0, 1, 2), (0, 1, 3), (1, 3, 4), (1, 2, 4),
+        (2, 1, 4), (3, 2, 3), (3, 1, 2), (5, 4, 2),
+    ]
+    frames = list(range(6))
+    out = _tpr(spark, rows, frames)
+
+    import collections
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def rnd(x: float) -> int:
+        return int(Decimal(x).quantize(Decimal(1), rounding=ROUND_HALF_UP))
+
+    actors = sorted({a for _, a, b in rows} | {b for _, a, b in rows})
+    r = {a: rnd(1e9 / len(actors)) for a in actors}
+    total0 = sum(r.values())
+    for f in frames:
+        adj = collections.defaultdict(list)
+        for fr, a, b in rows:
+            if fr == f:
+                adj[a].append(b)
+                adj[b].append(a)
+        # receivers accumulate on top of their own send-adjusted value
+        r2 = dict(r)
+        for u, nbrs in adj.items():
+            s = rnd(0.85 * r[u] / len(nbrs))
+            r2[u] -= len(nbrs) * s
+        for u, nbrs in adj.items():
+            s = rnd(0.85 * r[u] / len(nbrs))
+            for v in nbrs:
+                r2[v] += s
+        r = r2
+        assert sum(r.values()) == total0  # EXACT integer conservation
+    expect = {
+        a: float(
+            Decimal(r[a] / 1e9).quantize(
+                Decimal("0.000001"), rounding=ROUND_HALF_UP
+            )
+        )
+        for a in actors
+    }
+    assert out == expect
+
+
+def test_temporal_pagerank_inactive_frames_are_identity(spark):
+    """Frame slots with no edges must be exact no-ops: running with
+    the tight slot list equals running with trailing/leading empty
+    slots added."""
+    rows = [(5, 1, 2), (7, 2, 3)]
+    a = _tpr(spark, rows, [5, 7])
+    b = _tpr(spark, rows, [3, 4, 5, 6, 7, 8, 9])
+    assert a == b
+
+
+def test_temporal_pagerank_bit_stable_under_partitioning(spark):
+    """House convention: integer sums make the recursion bit-identical
+    whatever the input partitioning / shuffle-partition count."""
+    rows = [
+        (f, a, b)
+        for f in range(4)
+        for (a, b) in [(1, 2), (2, 3), (3, 4), (1, 4), (2, 4)]
+    ]
+    e = spark.createDataFrame(rows, "frame_id long, actor1 long, actor2 long")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        outs = []
+        for nshuf, npart in [(1, 1), (7, 5), (8, 3)]:
+            spark.conf.set("spark.sql.shuffle.partitions", str(nshuf))
+            outs.append(
+                sorted(
+                    tuple(r)
+                    for r in graph.temporal_pagerank(
+                        e.repartition(npart), list(range(4))
+                    ).collect()
+                )
+            )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert outs[0] == outs[1] == outs[2]
+
+
+def test_persistent_degree_core_planted(spark):
+    """Planted persistence: a star hub with degree 2 in frames 0-2
+    qualifies for both 2-frame windows at k=2; a hub equally dense in
+    aggregate but active only in frame 1 (the rotating-actor case)
+    qualifies for none; leaves never qualify. min_deg reports the
+    weakest frame in the window."""
+    rows = (
+        # hub 1: deg 2 in frames 0,1; deg 3 in frame 2
+        [(0, 1, 2), (0, 1, 3), (1, 1, 2), (1, 1, 4),
+         (2, 1, 2), (2, 1, 3), (2, 1, 5)]
+        # hub 9: deg 3 but only in frame 1
+        + [(1, 9, 6), (1, 9, 7), (1, 9, 8)]
+    )
+    e = spark.createDataFrame(rows, "frame_id long, actor1 long, actor2 long")
+    out = {
+        (r.window_start, r.actor): r.min_deg
+        for r in graph.persistent_degree_core(
+            e, [0, 1, 2], k=2, delta=2
+        ).collect()
+    }
+    assert out == {(0, 1): 2, (1, 1): 2}

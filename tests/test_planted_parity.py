@@ -17,6 +17,8 @@ row; node-similarity (min_common=2) returns (1,3) and the edge (2,4).
 
 from __future__ import annotations
 
+import types
+
 import duckdb
 import pandas as pd
 import pytest
@@ -303,3 +305,24 @@ def test_planted_pit_features_leakage_cutoff(spark, planted_pit_dir):
     assert out[3].n_views_7d == 2 and out[3].val_views_7d == 5.0
     # 8-day-old view is outside the window -> zero-feature row survives
     assert out[5].n_views_7d == 0 and out[5].val_views_7d == 0.0
+
+
+def test_planted_hugeint_oracle_is_a_type_problem(spark):
+    """A bare DuckDB sum() of integers types as HUGEINT; fetchall()
+    returns a plain Python int equal to Spark's bigint, so only the
+    type check can see it (the q_intercontact shape). The CAST form of
+    the same oracle passes."""
+    con = duckdb.connect()
+    spec = types.SimpleNamespace(
+        name="planted_hugeint",
+        fn=lambda s, _dir: s.createDataFrame([(1, 12)], "k bigint, sum_gap bigint"),
+        oracle="SELECT 1::BIGINT AS k, sum(x) AS sum_gap FROM (VALUES (5), (7)) t(x)",
+        empty_ok=False,
+    )
+    problems, _ = compare_query(spark, con, spec, None)
+    assert problems == ["type sum_gap: spark=long oracle=HUGEINT"]
+    spec.oracle = (
+        "SELECT 1::BIGINT AS k, CAST(sum(x) AS BIGINT) AS sum_gap "
+        "FROM (VALUES (5), (7)) t(x)"
+    )
+    assert compare_query(spark, con, spec, None) == ([], 1)

@@ -1,8 +1,9 @@
 """Local replica of the driver's correctness gate.
 
 Runs every registered query in Spark AND its DuckDB oracle on the same
-parquet, compares row count, column names, and order-insensitive values
-(columns sorted by name, rows sorted, exact equality). Usage:
+parquet, compares row count, column names, column type classes, and
+order-insensitive values (columns sorted by name, rows sorted, exact
+equality). Usage:
 
     python tools/check_parity.py [sf_dir] [query ...]
 """
@@ -35,14 +36,53 @@ def rowset(cols, rows):  # noqa: ANN001
     return sorted(tuple(norm(r[i]) for i in order) for r in rows)
 
 
+# Spark ``DataType.typeName()`` and DuckDB type ids, by the class a
+# result hash sees. Unlisted names are their own class: HUGEINT reads
+# as float through pandas while ``fetchall()`` returns a Python int
+# equal to Spark's long, so it must never pass for integral.
+_TYPE_CLASS = {
+    **dict.fromkeys(
+        "byte short integer long tinyint smallint bigint utinyint "
+        "usmallint uinteger ubigint".split(),
+        "integral",
+    ),
+    **dict.fromkeys(["float", "double"], "floating"),
+    "varchar": "string",
+    "timestamp_ntz": "timestamp",
+    "timestamp with time zone": "timestamp",
+    "array": "list",
+    "binary": "blob",
+}
+
+
+def _type_class(name: str) -> str:
+    return _TYPE_CLASS.get(name, name)
+
+
+def type_problems(schema, cols, types) -> list[str]:  # noqa: ANN001
+    """Columns whose Spark type (``schema``) and DuckDB type (``cols``
+    named, ``types`` in order) fall in different classes."""
+    spark_t = {f.name: f.dataType.typeName() for f in schema.fields}
+    return [
+        f"type {c}: spark={spark_t[c]} oracle={t}"
+        for c, t in zip(cols, types)
+        if c in spark_t and _type_class(spark_t[c]) != _type_class(t.id)
+    ]
+
+
 def compare_query(spark, con, spec, sf_dir):  # noqa: ANN001
     """Run one registry entry in Spark and (when present) its DuckDB
     oracle; return (problems, n_rows); empty problems == pass.
 
-    The comparison is the driver's: row count, column-name set, and
-    order-insensitive exact values with columns sorted by name. Shared
-    by the CLI gate below and the opt-in `pytest -m parity` suite so
-    the graded window and the tail rows are re-proved by ONE protocol.
+    The comparison: row count, column-name set, the type class of
+    each column, and order-insensitive exact values with columns
+    sorted by name. Shared by the CLI gate below and the opt-in
+    `pytest -m parity` suite so the graded window and the tail rows
+    are re-proved by ONE protocol. Types are checked only when
+    the frame carries a Spark ``schema`` (a collected stand-in with
+    just ``columns`` and ``collect()`` is compared on values alone);
+    the oracle's types come from the bound relation its rows are
+    fetched from, so it runs once.
     """
     sdf = spec.fn(spark, sf_dir)
     scols = sdf.columns
@@ -51,12 +91,15 @@ def compare_query(spark, con, spec, sf_dir):  # noqa: ANN001
         if not srows and not spec.empty_ok:
             return [f"{spec.name}: empty result (rows-only check)"], 0
         return [], len(srows)
-    cur = con.execute(spec.oracle)
-    ocols = [d[0] for d in cur.description]
-    orows = cur.fetchall()
+    rel = con.sql(spec.oracle)
+    ocols = rel.columns
+    otypes = rel.types
+    orows = rel.fetchall()
     problems = []
     if sorted(scols) != sorted(ocols):
         problems.append(f"cols spark={scols} oracle={ocols}")
+    elif hasattr(sdf, "schema"):
+        problems += type_problems(sdf.schema, ocols, otypes)
     if len(srows) != len(orows):
         problems.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
     if not problems:
