@@ -203,6 +203,23 @@ def test_k_core_rounds_spill_dir_bit_identical(spark, tmp_path):
         assert a == b and len(a) >= 4
 
 
+def test_spill_dir_calls_do_not_share_files(spark, tmp_path):
+    """Two calls with one ``spill_dir`` on different graphs: the second
+    call must not overwrite files the first call's frame still reads."""
+    clique = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
+    path = [(4, 5), (5, 6)]
+    e1 = spark.createDataFrame(clique + path, "actor1 long, actor2 long")
+    e2 = spark.createDataFrame(
+        [(10 + a, 10 + b) for a, b in clique], "actor1 long, actor2 long"
+    )
+    d = str(tmp_path)
+    first = graph.k_core_rounds(e1, k=2, rounds=2, spill_dir=d)
+    second = graph.k_core_rounds(e2, k=2, rounds=2, spill_dir=d)
+    want = [tuple(r) for r in graph.k_core_rounds(e1, k=2, rounds=2).collect()]
+    assert [tuple(r) for r in first.collect()] == want
+    assert second.count() == 4
+
+
 # frame-edges for temporal-pair stats: pair (1,2) present in frames
 # 0,1,2, 5, 9 -> gaps 1,1,3,4; runs [3,1,1]. pair (3,4) in frames 7,8
 # -> gap 1; runs [2]. pair (5,6) only frame 4 -> no gaps; runs [1].
