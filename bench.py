@@ -271,18 +271,16 @@ def main() -> None:
     # The driver keeps only a TAIL of stdout; a wide registry's full
     # payload line overflows it and the recorded BENCH_r{N}.json parses
     # as null (r6/r9/r10). Print a COMPACT line LAST — totals,
-    # calibration, and the top-10 medians — sized well under the tail
+    # calibration, and every per-query median rounded to 1 ms (~1.5 KB
+    # for 45 rows, no spread/drift detail) — sized well under the tail
     # window, so the driver-side artifact always ends with parseable
     # JSON. BENCH_local.json above stays the authoritative full record.
-    top10 = dict(
-        sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:10]
-    )
     compact = {
         "metric": f"sum of per-query medians, {len(timings)} queries "
         "(compact tail record; full payload in BENCH_local.json)",
         "value": total,
         "unit": "sec",
-        "queries": {k: round(v, 3) for k, v in top10.items()},
+        "queries": {k: round(v, 3) for k, v in timings.items()},
         "n_queries": len(timings),
         "calibration": {"first": cal_first, "last": cal_last},
         "loadavg": {"before": list(load_before), "after": list(load_after)},

@@ -25,9 +25,12 @@ callers differ only in the inputs they pass. Three fixpoint loops are
 keyed: an analysis over every frame, day, source or lane at once
 carries that dimension in its join and group-by keys (empty for the
 global form) rather than looping over it on the driver:
-- :func:`_arrival_rounds` — earliest-arrival delta rounds, used by
-  temporal closeness (keyed by source) and the SI family (global, or
-  keyed by beta / removal-policy lane);
+- :func:`_relax_rounds` — frontier relaxation to the first empty
+  frontier: earliest arrival for temporal_reachability, temporal
+  closeness (keyed by source) and the SI family (global, or keyed by
+  beta / removal-policy lane); hop distance for bounded_distances
+  (keyed by source); min-plus, max-min and KMV union-then-prune for
+  shortest_paths_weighted, widest_paths and kmv_neighborhood;
 - :func:`_min_label_rounds` — min-label + pointer-jump components,
   used by connected_components (global) and
   connected_components_per_frame (keyed by frame);
@@ -45,18 +48,23 @@ Three more take their variation as columns or a round function:
   and k_truss_rounds (:func:`_truss_peel_round`).
 Each caller keeps its own set-up (symmetrize, coin filter, seeds, lane
 grid) and terminal — the PageRank family shares its rank terminal —
-and a loop branches on its inputs only.
+and a loop branches on its inputs only. Rounds still written in place:
+label_propagation, betweenness_centrality, the random / node2vec /
+temporal walks, neighbor_sampling, luby_mis, densest_subgraph,
+sage_aggregate, influence_seeds and temporal_pagerank.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.functions import broadcast
+from pyspark.sql.types import ArrayType, MapType
 
-from neo4j_dynagraph_spark.operators.hub import checkpoint_hub
+from neo4j_dynagraph_spark.operators.hub import checkpoint_hub, stage_parquet
 
 
 def _materialize(
@@ -72,15 +80,11 @@ def _materialize(
     whole iterative-graph family: at sf10 the saturated day graph's
     ~4e9-row symmetrized edge set OOMs localCheckpoint, measured —
     every operator whose materialized state is E-sized takes the knob.
-    Per-round callers must pass distinct names (the read-back leaves
-    an open handle on the previous round's files)."""
+    Each call writes its own ``<spill_dir>/<name>_<uuid>`` directory
+    (:func:`~neo4j_dynagraph_spark.operators.hub.stage_parquet`)."""
     if spill_dir is None:
         return df.localCheckpoint()
-    import os as _os
-
-    path = _os.path.join(spill_dir, name)
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return stage_parquet(df, spill_dir, name)
 
 
 def _counted_barrier(df: DataFrame) -> tuple[DataFrame, int]:
@@ -95,8 +99,9 @@ def _counted_barrier(df: DataFrame) -> tuple[DataFrame, int]:
     join on it as a shuffle; when the MEASURED size, ``rows *
     (columns + 1) * 8`` bytes, fits the session's own
     ``spark.sql.autoBroadcastJoinThreshold``, the frame comes back
-    broadcast-hinted instead. Narrow loop state only (ids, counts,
-    hashes): the 8-byte cell estimate assumes no payload columns."""
+    broadcast-hinted instead. The 8-byte cell estimate holds for
+    narrow loop state (ids, counts, hashes, short labels); a frame
+    with an array or map column (a KMV sketch) is never hinted."""
     ck = df.localCheckpoint(eager=False)
     rows = ck._jdf.queryExecution().toRdd().count()
     limit = (
@@ -104,59 +109,89 @@ def _counted_barrier(df: DataFrame) -> tuple[DataFrame, int]:
         .conf()
         .autoBroadcastJoinThreshold()
     )
-    if rows * (len(ck.columns) + 1) * 8 <= limit:
+    wide = any(isinstance(f.dataType, (ArrayType, MapType)) for f in ck.schema)
+    if not wide and rows * (len(ck.columns) + 1) * 8 <= limit:
         ck = broadcast(ck)
     return ck, rows
 
 
-def _arrival_rounds(
-    trans: DataFrame, state: DataFrame, keys: list[str], max_hops: int
-) -> DataFrame:
-    """Earliest-arrival delta rounds over a time-respecting contact
-    stream, keyed by ``keys`` (empty for one global state row per
-    node). ``state`` holds (*keys, v, t), t = -1 for a depart-any-time
-    seed; ``trans`` holds (frame_id, src, dst) plus whichever keys it
-    is replicated over (an SI lane), and every round joins on those
-    keys and v = src. Returns the merged state after the rounds.
+def _relax_rounds(
+    adj: DataFrame,
+    state: DataFrame,
+    keys: list[str],
+    step: Column,
+    better: Callable[[Column], Column],
+    max_rounds: int,
+) -> list[DataFrame]:
+    """Frontier relaxation rounds in Pregelix's superstep shape: one
+    join plus one group-by per round, under one driver loop that stops
+    at the first empty frontier or after ``max_rounds``.
 
-    Only arrivals that IMPROVED last round expand: an earlier arrival
-    can ride every contact a later one can, so the min-merged state
-    after round h is exactly the <= h-hop earliest arrival and the
-    min-arrival frontier dominates every other path prefix (the
-    full-state re-expansion joined ~frontier x frame-degree x H rows
-    and was 2x slower at sf0.1 even vs the fixpoint form). Exactly
-    ``max_hops`` join+min rounds, no data-dependent actions: per round
-    one eager checkpoint of the merged state and a lazy one of the
-    frontier. State is O(V * key values)."""
-    on = [k for k in keys if k in trans.columns] + ["src"]
+    ``state`` holds (*keys, v, x) — node v's best value x per key lane,
+    x the last column; ``adj`` holds (src, dst, ...) plus whichever
+    keys it is replicated over, and no column named x. Each round joins
+    the frontier (last round's changed rows; the whole state at first)
+    to ``adj`` on those keys and v = src, computes dst's candidate with
+    ``step`` (null: no path) and merges it by the ``better`` aggregate
+    (min, max, KMV union-then-prune). The old value rides through the
+    same group-by, so the changed rows — the next frontier, passed
+    through :func:`_counted_barrier` — need no second join.
+
+    Every caller's ``step`` is monotone in x and ``better`` is an
+    idempotent merge, so a row that did not change was already
+    extended from the same value: expanding only changed rows reaches
+    the state a full-state round would (after h rounds, the best value
+    over paths of at most h hops), and every round after an empty
+    frontier is the identity. Returns the state after each round, the
+    input first (``[-1]`` is the result); each merged state is a lazy
+    localCheckpoint that the frontier's counted job materializes."""
+    x = state.columns[-1]
+    on = [k for k in keys if k in adj.columns] + ["src"]
+    history = [state]
     frontier = state
-    for _ in range(max_hops):
-        # rename on the frontier side: the E-sized contact stream
-        # reaches its shuffle unprojected
+    for _ in range(max_rounds):
+        # rename on the frontier side: the E-sized adjacency reaches
+        # its join unprojected
         cand = (
             frontier.withColumnRenamed("v", "src")
-            .join(trans, on)
-            .where(F.col("frame_id") >= F.col("t"))
-            .groupBy(*keys, F.col("dst").alias("v"))
-            .agg(F.min("frame_id").cast("long").alias("t"))
-        )
-        merged = (
-            state.unionByName(cand)
-            .groupBy(*keys, "v")
-            .agg(F.min("t").alias("t"))
-            .localCheckpoint()
-        )
-        prev = state.select(*keys, "v", F.col("t").alias("t_old"))
-        frontier = (
-            merged.join(prev, [*keys, "v"], "left")
-            .where(
-                F.col("t_old").isNull() | (F.col("t") < F.col("t_old"))
+            .join(adj, on)
+            .select(
+                *keys,
+                F.col("dst").alias("v"),
+                step.alias(x),
+                F.lit(False).alias("old"),
             )
-            .select(*keys, "v", "t")
+            .where(F.col(x).isNotNull())
+        )
+        # one state row per key, so max() of the flagged value is it
+        merged = (
+            state.withColumn("old", F.lit(True))
+            .unionByName(cand)
+            .groupBy(*keys, "v")
+            .agg(
+                better(F.col(x)).alias(x),
+                F.max(F.when(F.col("old"), F.col(x))).alias("was"),
+            )
             .localCheckpoint(eager=False)
         )
-        state = merged
-    return state
+        frontier, rows = _counted_barrier(
+            merged.where(F.col("was").isNull() | (F.col(x) != F.col("was")))
+            .select(*keys, "v", x)
+        )
+        state = merged.select(*keys, "v", x)
+        history.append(state)
+        if rows == 0:
+            break
+    return history
+
+
+def _arrival_step() -> Column:
+    """The time-respecting extension over (frame_id, t): a contact in
+    frame f carries an arrival at t onward iff f >= t (equal frames
+    chain), arriving at f; null otherwise."""
+    return F.when(F.col("frame_id") >= F.col("t"), F.col("frame_id")).cast(
+        "long"
+    )
 
 
 def _min_label_rounds(
@@ -581,47 +616,22 @@ def temporal_reachability(
     This is THE query class that makes a graph "temporal" (reachability
     differs from the static graph's, and is asymmetric even on
     undirected edges: A-B@1, B-C@2 reaches A->C but not C->A). Iterative
-    relaxation: one join + min-agg per round, O(temporal diameter)
-    rounds, lineage truncated per round like connected_components.
+    relaxation (:func:`_relax_rounds`): one join + min-agg per round
+    over the arrivals that improved last round, stopping at the first
+    round that improves none, at most ``max_iterations`` rounds.
     """
     sym = symmetrize(
         edges.select("frame_id", "actor1", "actor2").distinct()
     ).localCheckpoint()
-    spark = edges.sparkSession
-    arrival = spark.createDataFrame(
-        [(int(source), -1)], "actor long, t long"
+    arrival = edges.sparkSession.createDataFrame(
+        [(int(source), -1)], "v long, t long"
     ).localCheckpoint()
-    for _ in range(max_iterations):
-        cand = (
-            sym.join(arrival, sym.src == arrival.actor)
-            .where(F.col("frame_id") >= F.col("t"))
-            .select(
-                F.col("dst").alias("actor"),
-                F.col("frame_id").alias("t"),
-                F.lit(False).alias("is_old"),
-            )
-        )
-        # the old arrival rides through the same min-aggregate tagged
-        # is_old, so convergence (new min differs from the old row, or
-        # the actor is new) is decided inline — no separate new-vs-old
-        # join job per round
-        new_arrival = (
-            arrival.select("actor", "t", F.lit(True).alias("is_old"))
-            .unionByName(cand)
-            .groupBy("actor")
-            .agg(
-                F.min("t").alias("t"),
-                F.min(F.when(F.col("is_old"), F.col("t"))).alias("old_t"),
-            )
-            .localCheckpoint()
-        )
-        changed = new_arrival.where(
-            F.col("old_t").isNull() | (F.col("t") != F.col("old_t"))
-        ).count()
-        arrival = new_arrival.select("actor", "t")
-        if changed == 0:
-            break
-    return arrival.select("actor", F.col("t").alias("arrival_frame")).orderBy("actor")
+    arrival = _relax_rounds(
+        sym, arrival, [], _arrival_step(), F.min, max_iterations
+    )[-1]
+    return arrival.select(
+        F.col("v").alias("actor"), F.col("t").alias("arrival_frame")
+    ).orderBy("actor")
 
 
 def connected_components(edges: DataFrame, max_iterations: int = 30) -> DataFrame:
@@ -1187,12 +1197,12 @@ def widest_paths(
     discarded width could make. The frontier is therefore O(nodes)
     per round, never O(paths).
 
-    Scale shape per round: one hash equi-join of the O(nodes) frontier
-    against the symmetrized edge table on the node key, one map-side-
-    combined max-aggregate. The edge table is localCheckpointed once
-    (symmetrize's union re-derives its subtree per reference
-    otherwise); a ``hops``-round search is ``hops`` joins, no
-    fixpoint, so an unrolled SQL CTE replays it exactly.
+    Scale shape per round (:func:`_relax_rounds`, max-min): one hash
+    equi-join of the widths that improved last round against the
+    symmetrized edge table on the node key, one map-side-combined
+    max-aggregate; the edge table is localCheckpointed once. At most
+    ``hops`` - 1 rounds after the anchor's ring, stopping once no width
+    improves, so an unrolled SQL CTE over ``hops`` rings replays it.
 
     Columns: actor, width (bottleneck weight of the best path),
     anchor excluded.
@@ -1200,29 +1210,17 @@ def widest_paths(
     if hops < 1:
         raise ValueError("hops must be >= 1")
     sym = symmetrize(weighted_edges).localCheckpoint()
-    frontier = (
+    ring = (
         sym.where(F.col("src") == anchor)
-        .groupBy(F.col("dst").alias("actor"))
+        .groupBy(F.col("dst").alias("v"))
         .agg(F.max("weight").alias("width"))
     )
-    best = frontier
-    for _ in range(hops - 1):
-        nxt = (
-            frontier.join(sym, frontier["actor"] == sym["src"])
-            .select(
-                F.col("dst").alias("actor"),
-                F.least(F.col("width"), F.col("weight")).alias("width"),
-            )
-            .groupBy("actor")
-            .agg(F.max("width").alias("width"))
-        )
-        frontier = nxt
-        best = (
-            best.unionByName(nxt)
-            .groupBy("actor")
-            .agg(F.max("width").alias("width"))
-        )
-    return best.where(F.col("actor") != anchor)
+    best = _relax_rounds(
+        sym, ring, [], F.least(F.col("width"), F.col("weight")), F.max, hops - 1
+    )[-1]
+    return best.select(F.col("v").alias("actor"), "width").where(
+        F.col("actor") != anchor
+    )
 
 
 def triadic_closure(e1: DataFrame, e2: DataFrame) -> DataFrame:
@@ -2520,12 +2518,12 @@ def bounded_distances(edges: DataFrame, max_dist: int) -> DataFrame:
     closeness / distance distribution).
 
     ALL sources advance per distributed round (the
-    :func:`connected_components_per_frame` pattern): each round joins
-    the current frontier (rows at d == i) against the symmetrized
+    :func:`connected_components_per_frame` pattern), keyed by the
+    source ``s`` in :func:`_relax_rounds`: each round joins the rows
+    first reached last round (the BFS shell) against the symmetrized
     adjacency, unions into the reach set, and reduces by min(d); the
-    reach set is eagerly checkpointed per round so round i never
-    re-executes rounds 1..i-1 (walk-frontier precedent). Distances
-    are exact integers — no floats anywhere in the state.
+    loop stops at the first empty shell. Distances are exact integers
+    — no floats anywhere in the state.
 
     Cost contract: O(sum over s of |ball(s, max_dist)|) = O(V^2) on a
     dense graph; callers bound the graph (pinned-hour scope,
@@ -2541,19 +2539,7 @@ def bounded_distances(edges: DataFrame, max_dist: int) -> DataFrame:
         .select("s", F.col("s").alias("v"), F.lit(0).alias("d"))
         .localCheckpoint()
     )
-    for i in range(max_dist):
-        frontier = reach.where(F.col("d") == i)
-        expanded = (
-            frontier.join(sym, frontier.v == sym.src)
-            .select("s", F.col("dst").alias("v"), F.lit(i + 1).alias("d"))
-        )
-        reach = (
-            reach.unionByName(expanded)
-            .groupBy("s", "v")
-            .agg(F.min("d").alias("d"))
-            .localCheckpoint()
-        )
-    return reach
+    return _relax_rounds(sym, reach, ["s"], F.col("d") + 1, F.min, max_dist)[-1]
 
 
 def harmonic_centrality(
@@ -2950,20 +2936,24 @@ def kmv_neighborhood(
     # round (distinct on E*k rows + the prune window's partitionBy) —
     # the array form's propagate ships E rows (each a <= k-double
     # array) through ONE groupBy whose merge (flatten -> distinct ->
-    # sort -> slice k) is the identical KMV union-then-prune, and the
-    # state side of the propagate join is V rows, broadcast/cheap
-    # (guide §2.3 'shuffle fewer bytes', §2.4 'remove shuffles').
+    # sort -> slice k) is the identical KMV union-then-prune
+    # (guide §2.3 'shuffle fewer bytes', §2.4 'remove shuffles'). The
+    # rounds are :func:`_relax_rounds`: only the sketches that changed
+    # last round propagate (union-then-prune is idempotent: an
+    # unchanged sketch is already merged into its neighbors'), and
+    # the loop stops once no sketch changes.
     state = (
         sym.select(F.col("src").alias("v"))
         .distinct()
         .select("v", F.array(u).alias("us"))
         .localCheckpoint()
     )
-    merged_us = F.slice(
-        F.array_sort(F.array_distinct(F.flatten(F.collect_list("us")))),
-        1,
-        k,
-    ).alias("us")
+
+    def union_prune(us: Column) -> Column:
+        return F.slice(
+            F.array_sort(F.array_distinct(F.flatten(F.collect_list(us)))), 1, k
+        )
+
     # (k-1)/u_k estimator via operators.sketch.kmv_estimate semantics,
     # computed straight off the sorted array: exact (= ball size) when
     # the sketch holds fewer than k hashes. Per-node round(..., 6)
@@ -2975,27 +2965,16 @@ def kmv_neighborhood(
         ),
         6,
     )
-    per_d = []
-    for d in range(1, max_dist + 1):
-        prop = state.join(sym, state.v == sym.dst).select(
-            F.col("src").alias("v"), "us"
+    states = _relax_rounds(sym, state, [], F.col("us"), union_prune, max_dist)
+    # after the loop's exit every later radius holds the last sketches
+    per_d = [
+        states[min(d, len(states) - 1)].select(est.alias("e")).agg(
+            F.lit(d).alias("d"),
+            F.round(F.sum(F.col("e") - 1), 6).alias("est_pairs"),
         )
-        state = (
-            state.unionByName(prop)
-            .groupBy("v")
-            .agg(merged_us)
-            .localCheckpoint()
-        )
-        per_d.append(
-            state.select(est.alias("e")).agg(
-                F.lit(d).alias("d"),
-                F.round(F.sum(F.col("e") - 1), 6).alias("est_pairs"),
-            )
-        )
-    out = per_d[0]
-    for frame in per_d[1:]:
-        out = out.unionByName(frame)
-    return out.orderBy("d")
+        for d in range(1, max_dist + 1)
+    ]
+    return reduce(DataFrame.unionByName, per_d).orderBy("d")
 
 
 def shortest_paths_weighted(
@@ -3009,8 +2988,9 @@ def shortest_paths_weighted(
 
     ``edges`` must carry an integer ``cost`` column on canonical
     (actor1, actor2) rows; the graph is symmetrized here. All state
-    is exact integers — one equi-join + min-aggregate per round, the
-    frontier eagerly checkpointed. V-sized state, scale-safe.
+    is exact integers — one equi-join + min-aggregate per round over
+    the costs that improved last round (:func:`_relax_rounds`,
+    min-plus), stopping once none improves. V-sized state, scale-safe.
 
     Columns: actor, cost (minimum total cost from ``source`` over
     paths of <= max_hops edges; includes the source itself at 0).
@@ -3021,20 +3001,12 @@ def shortest_paths_weighted(
     dist = (
         sym.sparkSession.createDataFrame(
             [(int(source),)], "v long"
-        ).select("v", F.lit(0).cast("long").alias("cost"))
+        ).select("v", F.lit(0).cast("long").alias("d"))
     )
-    for _ in range(max_hops):
-        relax = dist.join(sym, dist.v == sym.src).select(
-            F.col("dst").alias("v"),
-            (dist.cost + sym.cost).alias("cost"),
-        )
-        dist = (
-            dist.unionByName(relax)
-            .groupBy("v")
-            .agg(F.min("cost").alias("cost"))
-            .localCheckpoint()
-        )
-    return dist.select(F.col("v").alias("actor"), "cost").orderBy(
+    dist = _relax_rounds(
+        sym, dist, [], F.col("d") + F.col("cost"), F.min, max_hops
+    )[-1]
+    return dist.select(F.col("v").alias("actor"), F.col("d").alias("cost")).orderBy(
         "cost", "actor"
     )
 
@@ -3119,11 +3091,10 @@ def temporal_closeness(
     contribute 0 without a convention fight.
 
     The hop bound is the family's explicit cost contract (radius-4
-    harmonic / bounded-CTDNE precedent) AND what keeps the loop free
-    of data-dependent actions: exactly ``max_hops`` join+min rounds
-    (:func:`_arrival_rounds` keyed by the source ``s``), no per-round
-    changed-count (measured: the fixpoint variant's
-    count() actions doubled the sf0.1 day-graph wall). Because an
+    harmonic / bounded-CTDNE precedent): at most ``max_hops`` join+min
+    rounds (:func:`_relax_rounds` keyed by the source ``s``), stopping
+    at the first round that improves no arrival — the count rides the
+    frontier barrier's own job, no separate action. Because an
     earlier arrival can ride every edge a later one can, the merged
     min-reduction state after round h is exactly the <=h-hop earliest
     arrival. Exact integer frames; only the terminal harmonic sum is
@@ -3139,7 +3110,7 @@ def temporal_closeness(
     state = seeds.select(
         "s", F.col("s").alias("v"), F.lit(-1).cast("long").alias("t")
     ).localCheckpoint()
-    arrival = _arrival_rounds(sym, state, ["s"], max_hops)
+    arrival = _relax_rounds(sym, state, ["s"], _arrival_step(), F.min, max_hops)[-1]
     w0 = sym.agg(F.min("frame_id").cast("long").alias("w0"))
     return (
         arrival.where(F.col("v") != F.col("s"))
@@ -3191,7 +3162,7 @@ def temporal_closeness_sampled(
     state = seeds.select(
         "s", F.col("s").alias("v"), F.lit(-1).cast("long").alias("t")
     ).localCheckpoint()
-    arrival = _arrival_rounds(sym, state, ["s"], max_hops)
+    arrival = _relax_rounds(sym, state, ["s"], _arrival_step(), F.min, max_hops)[-1]
     w0 = sym.agg(F.min("frame_id").cast("long").alias("w0"))
     nv = nodes.agg(F.count(F.lit(1)).cast("double").alias("nv"))
     ns = seeds.agg(F.count(F.lit(1)).cast("double").alias("ns"))
@@ -3828,8 +3799,9 @@ def _si_state(
     """Shared SI core: the coin-filtered contact stream and the
     converged (v, t) earliest-infection state — consumed by
     :func:`si_spread` (the curve) and :func:`si_offspring` (the
-    who-infected-whom attribution). :func:`_arrival_rounds` with no
-    keys: ONE global state row per node."""
+    who-infected-whom attribution). :func:`_relax_rounds` with the
+    earliest-arrival step and no keys: ONE global state row per
+    node."""
     sym = symmetrize(
         frame_edges.select("frame_id", "actor1", "actor2").distinct()
     )
@@ -3843,7 +3815,7 @@ def _si_state(
     state = nodes.where(_si_seed(seed_mod)).select(
         F.col("src").alias("v"), F.lit(-1).cast("long").alias("t")
     ).localCheckpoint()
-    state = _arrival_rounds(trans, state, [], max_hops)
+    state = _relax_rounds(trans, state, [], _arrival_step(), F.min, max_hops)[-1]
     return trans, state
 
 
@@ -3867,13 +3839,14 @@ def si_spread(
     earlier infection can ride every contact a later one can, so the
     min-merged earliest-infection state after round h is exactly the
     <= h-hop earliest infection: the same delta-iteration dominance
-    argument as :func:`_arrival_rounds`, with ONE global state row
+    argument as :func:`_relax_rounds`, with ONE global state row
     per node — O(V) state, not the all-sources family's O(V^2).
 
     The coin filter lands on the symmetrized contact stream BEFORE
     the loop (one narrow map-side projection, candidate volume cut to
-    ~beta of E per round); exactly ``max_hops`` join+min rounds, no
-    data-dependent actions. Terminal: the epidemic curve — new and
+    ~beta of E per round); at most ``max_hops`` join+min rounds,
+    stopping at the first round that infects no one earlier.
+    Terminal: the epidemic curve — new and
     cumulative infections per ``bucket_frames``-frame bucket (bucket
     -1 = the seed generation, t = -1 by the depart-any-time
     convention), a <= (frames/bucket)-row table whose running sum is
@@ -4011,7 +3984,9 @@ def si_attack_rates(
         )
         .localCheckpoint()
     )
-    state = _arrival_rounds(trans, state, ["p10"], max_hops)
+    state = _relax_rounds(
+        trans, state, ["p10"], _arrival_step(), F.min, max_hops
+    )[-1]
     nv = nodes.agg(F.count(F.lit(1)).cast("long").alias("nv"))
     return (
         state.groupBy("p10")
@@ -4262,7 +4237,9 @@ def si_immunized(
         )
         .localCheckpoint()
     )
-    state = _arrival_rounds(trans, seeds, ["policy"], max_hops)
+    state = _relax_rounds(
+        trans, seeds, ["policy"], _arrival_step(), F.min, max_hops
+    )[-1]
     nv = nodes.agg(F.count(F.lit(1)).cast("long").alias("nv"))
     nrm = removed.groupBy("policy").agg(
         F.count(F.lit(1)).cast("long").alias("n_removed")
@@ -4560,7 +4537,11 @@ def persistent_degree_core(
     )
     n_windows = len(frame_ids) - delta + 1
     spark = frame_edges.sparkSession
-    wins = spark.range(n_windows).select(F.col("id").alias("w"))
+    # splits from the session conf, not the core count: one plan anywhere
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    wins = spark.range(n_windows, numPartitions=n_part).select(
+        F.col("id").alias("w")
+    )
     return (
         deg.join(
             broadcast(wins),

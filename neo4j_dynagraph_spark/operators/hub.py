@@ -47,17 +47,19 @@ policy would replace:
 
 - raw ``DataFrame.localCheckpoint()`` calls in the operators;
 - ``graph._materialize(df, spill_dir, name)``: localCheckpoint, or
-  write-parquet-read-back when a ``spill_dir`` is given;
+  :func:`stage_parquet` under a ``spill_dir``;
 - ``graph._counted_barrier(df)``: a lazy localCheckpoint materialized
   by a row count that it returns, broadcast-hinted when the measured
   size fits ``spark.sql.autoBroadcastJoinThreshold`` — the loop
   barrier of ``betweenness_centrality`` (whose forward pass stops at
   the first empty layer), ``graph._wl_rounds`` (``wl_refinement``,
-  ``wl_day_similarity``) and ``graph._peel_rounds`` (``k_core``,
+  ``wl_day_similarity``), ``graph._peel_rounds`` (``k_core``,
   ``k_core_rounds``, ``k_truss``, ``k_truss_rounds``; the peel stops
   on the first round whose count shows nothing removed, and
   ``k_core_rounds`` falls back to ``_materialize`` when given a
-  ``spill_dir``).
+  ``spill_dir``) and ``graph._relax_rounds`` (the arrival, distance,
+  weighted-path and KMV frontiers; the loop stops at the first empty
+  one).
 """
 
 from __future__ import annotations
@@ -119,15 +121,21 @@ def checkpoint_hub(
     return df.localCheckpoint(eager=eager)
 
 
+def stage_parquet(df: DataFrame, root: str, name: str) -> DataFrame:
+    """Write-parquet-read-back into a fresh ``<root>/<name>_<uuid>``
+    directory: a later call never overwrites files that an earlier,
+    still-uncollected frame reads."""
+    path = os.path.join(root, f"{name}_{uuid.uuid4().hex[:12]}")
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.parquet(path)
+
+
 def stage_corpus_scale(df: DataFrame, name: str) -> DataFrame:
     """Materialize-once barrier for a CORPUS-SIZED intermediate via
     write-parquet-read-back (the scale-safe variant of localCheckpoint:
     no executor-memory pin, survives executor loss by re-reading).
 
-    ``name`` labels the staging subdir for debuggability; each call
-    stages into its own uuid directory, so results are always computed
-    fresh from the inputs (no cross-invocation reuse).
+    Each call stages into its own directory under the process-scoped
+    root, so results are always computed fresh from the inputs.
     """
-    path = os.path.join(_spill_root(), f"{name}_{uuid.uuid4().hex[:12]}")
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return stage_parquet(df, _spill_root(), name)

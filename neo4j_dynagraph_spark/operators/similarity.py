@@ -228,10 +228,10 @@ def cosine_near_dup_pairs(
         # interpreted lambda evals — and a small corpus arrives as ONE
         # parquet file = one partition, serializing the whole verify in
         # a single task. Round-robin repartition the probe side to the
-        # default parallelism first (same treatment as shingles_df);
-        # when the corpus outgrows the broadcast threshold the planner
-        # shuffles both sides on `bucket` anyway and AQE's skew-join
-        # splitting handles hot sign patterns.
+        # session's shuffle-partition count first (same treatment as
+        # shingles_df); when the corpus outgrows the broadcast threshold
+        # the planner shuffles both sides on `bucket` anyway and AQE's
+        # skew-join splitting handles hot sign patterns.
         wb = hyperplane_buckets(corpus, n_planes, id_col, vec_col)
         base = wb.select(
             F.col(id_col),
@@ -239,7 +239,7 @@ def cosine_near_dup_pairs(
             F.expr(_NORM.format(c=vec_col)).alias("n"),
             "bucket",
         )
-        par = corpus.sparkSession.sparkContext.defaultParallelism
+        par = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         left = base.repartition(par).select(
             F.col(id_col).alias("id1"),
             F.col(vec_col).alias("v1"),
@@ -259,7 +259,7 @@ def cosine_near_dup_pairs(
     else:
         # probe side parallelized for the same one-file-corpus reason
         # as the bucketed path above
-        par = corpus.sparkSession.sparkContext.defaultParallelism
+        par = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         pairs = c1.repartition(par).join(
             F.broadcast(c2), F.col("id1") < F.col("id2")
         )
@@ -616,7 +616,7 @@ def semantic_dedup(
     # probe side of the pair join carries the cosine-verify work; a
     # one-file corpus would otherwise run it in ONE task (same fix as
     # cosine_near_dup_pairs' bucketed path)
-    par = corpus.sparkSession.sparkContext.defaultParallelism
+    par = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     a1 = withv.repartition(par).select(
         F.col(id_col).alias("id1"),
         F.col(vec_col).alias("v1"),

@@ -1713,7 +1713,9 @@ def train_quality_probe(
     )
     train = feats.join(labels, "doc_id").localCheckpoint()
     spark = docs.sparkSession
-    w = spark.range(1).select(
+    # splits from the session conf, not the core count: one plan anywhere
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    w = spark.range(1, numPartitions=n_part).select(
         F.lit(0.0).alias("b"),
         *[F.lit(0.0).alias(f"w_{f[2:]}") for f in _PROBE_FEATS],
     )

@@ -2777,8 +2777,9 @@ def q_temporal_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     by a time-respecting path of <= 6 hops (the family's explicit
     bound contract) — the latency-weighted twin of q_temporal_reach
     (which is single-source, arrival only). Exact integer arrivals,
-    one join+min round per hop, no data-dependent actions; the oracle
-    replays it as a hop-bounded recursive CTE with min-reduction."""
+    one join+min round per hop, stopping at the first hop that improves
+    no arrival; the oracle replays it as a hop-bounded recursive CTE
+    with min-reduction."""
     from neo4j_dynagraph_spark import queries as qmod
 
     return graph.temporal_closeness(

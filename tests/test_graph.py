@@ -1415,6 +1415,13 @@ def test_kmv_neighborhood_exact_when_sketch_not_full(spark):
         for r in graph.kmv_neighborhood(star, k=16, max_dist=3).collect()
     }
     assert rows == {1: 8.0, 2: 20.0, 3: 20.0}
+    # no sketch changes in round 3, so the loop stops there and every
+    # later radius repeats the last estimate
+    rows = {
+        r.d: r.est_pairs
+        for r in graph.kmv_neighborhood(star, k=16, max_dist=5).collect()
+    }
+    assert rows == {1: 8.0, 2: 20.0, 3: 20.0, 4: 20.0, 5: 20.0}
 
 
 def test_kmv_neighborhood_small_k_monotone(spark, edges):
@@ -1461,6 +1468,60 @@ def test_shortest_paths_weighted_hop_bound(spark):
         for r in graph.shortest_paths_weighted(ew, 1, max_hops=2).collect()
     }
     assert got == {1: 0, 2: 1, 3: 2}
+
+
+def _py_bounded_bf(edges, source, hops, init, ext, pick):
+    """Plain hop-bounded Bellman-Ford over undirected (a, b, w) edges:
+    every round extends EVERY reached node's value over every edge."""
+    best = {source: init}
+    for _ in range(hops):
+        nxt = dict(best)
+        for a, b, w in edges:
+            for u, v in ((a, b), (b, a)):
+                if u in best:
+                    c = ext(best[u], w)
+                    nxt[v] = pick(nxt[v], c) if v in nxt else c
+        best = nxt
+    return best
+
+
+def test_weighted_paths_match_python_bellman_ford(spark):
+    """shortest_paths_weighted (min-plus) and widest_paths (max-min)
+    against the full-state reference on random integer-weight graphs,
+    plus a path whose cheaper / wider route needs one hop more than
+    the bound allows."""
+    import random
+
+    rng = random.Random(7)
+    graphs = []
+    for _ in range(3):
+        pairs = sorted(
+            {tuple(sorted(rng.sample(range(8), 2))) for _ in range(12)}
+        )
+        graphs.append([(a, b, rng.randint(1, 9)) for a, b in pairs])
+    # 0-1-2-3 costs 3 and bottlenecks at 9; the direct 0-3 edge costs
+    # 10 and is 1 wide, the only route to 3 within 2 hops
+    trunc = [(0, 1, 1), (1, 2, 1), (2, 3, 1), (0, 3, 10)]
+    wide = [(0, 1, 9), (1, 2, 9), (2, 3, 9), (0, 3, 1)]
+    cases = [(g, 0, h) for g in graphs for h in (1, 2, 4)]
+    cases += [(trunc, 0, 2), (trunc, 0, 3), (wide, 0, 2), (wide, 0, 3)]
+    for g, src, hops in cases:
+        ew = spark.createDataFrame(g, "actor1 long, actor2 long, cost long")
+        got = {
+            r.actor: r.cost
+            for r in graph.shortest_paths_weighted(ew, src, max_hops=hops).collect()
+        }
+        assert got == _py_bounded_bf(g, src, hops, 0, lambda d, w: d + w, min)
+        ww = ew.withColumnRenamed("cost", "weight")
+        got = {
+            r.actor: r.width
+            for r in graph.widest_paths(ww, anchor=src, hops=hops).collect()
+        }
+        want = _py_bounded_bf(g, src, hops, float("inf"), min, max)
+        want.pop(src)
+        assert got == want
+    assert _py_bounded_bf(trunc, 0, 2, 0, lambda d, w: d + w, min)[3] == 10
+    assert _py_bounded_bf(wide, 0, 2, float("inf"), min, max)[3] == 1
 
 
 def test_neighbor_sampling_fanout_bound_and_determinism(spark):
@@ -1559,6 +1620,31 @@ def test_betweenness_stops_at_first_empty_layer(spark, monkeypatch):
     # no backward barrier, since layer 1 is the deepest non-empty one
     assert rows == [20, 5, 20, 0]
     assert {r.actor: r.betweenness for r in got} == {v: 0.0 for v in range(5)}
+
+
+def test_relax_rounds_stop_at_first_empty_frontier(spark, monkeypatch):
+    # K4, every contact in frame 0: round 1 reaches every node from
+    # every source, round 2 improves nothing, and the loop stops there
+    # instead of running the remaining rounds
+    rows = []
+    barrier = graph._counted_barrier
+
+    def counting(df):
+        out = barrier(df)
+        rows.append(out[1])
+        return out
+
+    monkeypatch.setattr(graph, "_counted_barrier", counting)
+    k4 = [(0, a, b) for a in range(4) for b in range(a + 1, 4)]
+    fe = spark.createDataFrame(k4, "frame_id long, actor1 long, actor2 long")
+    got = {r.actor: r.n_reached for r in graph.temporal_closeness(fe).collect()}
+    assert got == {v: 3 for v in range(4)}
+    # frontier barriers: 4 sources x 3 first arrivals, then empty
+    assert rows == [12, 0]
+    rows.clear()
+    reach = graph.bounded_distances(fe.drop("frame_id"), max_dist=4).collect()
+    assert sorted(r.d for r in reach) == [0] * 4 + [1] * 12
+    assert rows == [12, 0]
 
 
 def test_checkpoint_hub_narrow_frame_roundtrips(spark):

@@ -496,3 +496,68 @@ def test_ivf_tuning_monotone_in_nprobe(spark):
         # therefore never lowers recall
         assert d[1].n_cands <= d[2].n_cands <= d[4].n_cands
         assert d[1].recall <= d[2].recall <= d[4].recall
+
+
+# --------------------------------------------------------- rank-1 MF
+
+
+def test_mf_rank1_converges_and_recommends_unrated(spark):
+    """The GD fit must monotonically reduce MSE on a small planted
+    rating matrix, and factor signs/scale must stay sane; the rec
+    terminal can only surface unrated items."""
+    from neo4j_dynagraph_spark.operators.similarity import mf_rank1
+
+    rows = [
+        (1, 10, 5.0), (1, 11, 3.0), (2, 10, 4.0), (2, 12, 1.0),
+        (3, 11, 2.0), (3, 12, 5.0), (4, 10, 5.0), (4, 11, 4.0),
+    ]
+    rt = spark.createDataFrame(rows, "cust long, part long, r double")
+
+    def mse(u, v):
+        j = (
+            rt.crossJoin(rt.agg(F.max("r").alias("m")))
+            .select("cust", "part", (F.col("r") / F.col("m")).alias("rn"))
+            .join(u, "cust").join(v, "part")
+        )
+        return j.select(
+            F.avg((F.col("rn") - F.col("u") * F.col("v")) ** 2).alias("m")
+        ).collect()[0].m
+
+    losses = []
+    for steps in (0, 4, 8):
+        u, v = mf_rank1(rt, steps=steps, lr=0.5, reg=0.01)
+        losses.append(mse(u, v))
+    assert losses[0] > losses[1] > losses[2]
+    # determinism: same steps twice -> identical factors
+    u1, v1 = mf_rank1(rt, steps=4, lr=0.5, reg=0.01)
+    u2, v2 = mf_rank1(rt, steps=4, lr=0.5, reg=0.01)
+    assert sorted(map(tuple, u1.collect())) == sorted(map(tuple, u2.collect()))
+    assert sorted(map(tuple, v1.collect())) == sorted(map(tuple, v2.collect()))
+
+
+def test_mf_rank1_factors_positive_at_testdata(spark):
+    """q_mf_recs' de-cartesianed candidate window ranks by (v desc,
+    part) and claims that equals u*v score order — true iff every
+    fitted u is positive. Pin it on the real sf0.001 ratings (0.1
+    init, nonnegative ratings, mean gradients keep factors in the
+    positive cone at our lr/reg)."""
+    from neo4j_dynagraph_spark.operators.similarity import mf_rank1
+    from neo4j_dynagraph_spark.sources.tables import load_table
+
+    li = load_table(spark, "/root/testdata/sf0.001", "lineitem").select(
+        "l_orderkey", "l_partkey", "l_quantity"
+    )
+    od = load_table(spark, "/root/testdata/sf0.001", "orders").select(
+        "o_orderkey", "o_custkey"
+    )
+    rt = (
+        li.join(od, li.l_orderkey == od.o_orderkey)
+        .groupBy(
+            F.col("o_custkey").alias("cust"),
+            F.col("l_partkey").alias("part"),
+        )
+        .agg(F.sum("l_quantity").cast("double").alias("r"))
+    )
+    u, v = mf_rank1(rt, steps=8, lr=0.5, reg=0.01)
+    assert u.where(F.col("u") <= 0).count() == 0
+    assert v.where(F.col("v") <= 0).count() == 0
