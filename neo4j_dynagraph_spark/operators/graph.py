@@ -20,7 +20,7 @@ Scale notes:
   `WITH DISTINCT` stages (cypher_query_timing.py:163-198) and is
   required to cap intermediate cardinality (X5 in SURVEY.md §4).
 
-Shared loops: six iterative rounds are written once each, and their
+Shared loops: seven iterative rounds are written once each, and their
 callers differ only in the inputs they pass. Three fixpoint loops are
 keyed: an analysis over every frame, day, source or lane at once
 carries that dimension in its join and group-by keys (empty for the
@@ -36,7 +36,7 @@ global form) rather than looping over it on the driver:
   connected_components_per_frame (keyed by frame);
 - :func:`_wl_rounds` — 1-WL color rounds, used by wl_refinement
   (global) and wl_day_similarity (keyed by day).
-Three more take their variation as columns or a round function:
+Four more take their variation as columns or a round function:
 - :func:`_power_rounds` — the PageRank power method over a
   degree-annotated adjacency, used by pagerank (unit weights, uniform
   teleport), pagerank_weighted (edge weights) and
@@ -45,13 +45,17 @@ Three more take their variation as columns or a round function:
   eigenvector_centrality (one hop per round) and hits_bipartite (two);
 - :func:`_peel_rounds` — peel to a fixpoint on counted barriers, used
   by k_core and k_core_rounds (:func:`_core_peel_round`) and k_truss
-  and k_truss_rounds (:func:`_truss_peel_round`).
+  and k_truss_rounds (:func:`_truss_peel_round`);
+- :func:`_walk_rounds` — one join of the frontier to its node's
+  neighbor array per hop and an in-row pick, used by random_walks
+  (uniform), node2vec_walks (second-order weights) and temporal_walks
+  (later-frame candidates, walks may end early).
 Each caller keeps its own set-up (symmetrize, coin filter, seeds, lane
-grid) and terminal — the PageRank family shares its rank terminal —
-and a loop branches on its inputs only. Rounds still written in place:
-label_propagation, betweenness_centrality, the random / node2vec /
-temporal walks, neighbor_sampling, luby_mis, densest_subgraph,
-sage_aggregate, influence_seeds and temporal_pagerank.
+grid, adjacency arrays) and terminal — the PageRank family shares its
+rank terminal — and a loop branches on its inputs only. Rounds still
+written in place: label_propagation, betweenness_centrality,
+neighbor_sampling, luby_mis, densest_subgraph, sage_aggregate,
+influence_seeds and temporal_pagerank.
 """
 
 from __future__ import annotations
@@ -205,11 +209,12 @@ def _min_label_rounds(
     rather than O(diameter). Two shuffles per round whatever the
     number of key values. Returns (*keys, actor, label).
 
-    Each round's labels are an eager localCheckpoint (lineage would
+    Each round's labels are a lazy localCheckpoint (lineage would
     otherwise double per round); the changed flag rides inside the
-    round's plan (old_label is already in flight), so convergence is a
-    bare scan of that checkpoint rather than a re-join of new vs old
-    labels."""
+    round's plan (old_label is already in flight), and the changed
+    rows pass :func:`_counted_barrier`, whose one job both
+    materializes the round's labels and returns the count the loop
+    stops on — no re-join of new vs old labels, no second action."""
     labels = (
         sym.select(*keys, F.col("src").alias("actor"))
         .distinct()
@@ -250,9 +255,9 @@ def _min_label_rounds(
                 jumped.alias("label"),
                 (jumped != F.col("old_label")).alias("chg"),
             )
-            .localCheckpoint()
+            .localCheckpoint(eager=False)
         )
-        changed = new_labels.where("chg").count()
+        _, changed = _counted_barrier(new_labels.where("chg"))
         labels = new_labels.select(*keys, "actor", "label")
         if changed == 0:
             break
@@ -435,6 +440,66 @@ def _peel_rounds(
             return e, True
         rows = n
     return e, False
+
+
+def _walk_draw(seed: str, i: int, n: Column) -> Column:
+    """Hop i's draw in [0, n): hash64('{seed}:' walk_id ':' i) mod n.
+    No RNG state, so a walk corpus is a pure function of the graph and
+    the seed string: re-runs and re-tried tasks reproduce it, and a
+    SQL oracle replays every hop."""
+    from neo4j_dynagraph_spark import functions as dfn
+
+    return F.pmod(
+        dfn.hash64(
+            F.concat(
+                F.lit(f"{seed}:"), F.col("walk_id").cast("string"), F.lit(f":{i}")
+            )
+        ),
+        n,
+    )
+
+
+def _uniform_pick(arr: str, seed: str, i: int) -> Column:
+    """Hop i's uniform pick from the array column ``arr``: the element
+    at the draw mod its size (1-based)."""
+    idx = _walk_draw(seed, i, F.size(arr).cast("long")) + 1
+    return F.element_at(arr, idx.cast("int"))
+
+
+def _walk_rounds(
+    adj_arr: DataFrame,
+    start: DataFrame,
+    pick: Callable[[DataFrame, int], DataFrame],
+    n_steps: int,
+) -> DataFrame:
+    """The hop loop of the walk operators, in Pregelix's vertex-local
+    superstep shape: per hop ONE equi-join of the frontier to its
+    node's adjacency row and an in-row pick — n_steps joins in total,
+    no per-walk driver loop, no shuffle of candidate rows.
+
+    ``adj_arr`` holds (src, nbrs), one row per node; ``start`` is the
+    step-0 frontier (walk_id, step, node, ...), and its columns are
+    the output's. ``pick(hop, i)`` maps hop i's rows — the frontier
+    joined to the node's (src, nbrs) — to the next frontier: walk_id
+    first, then the drawn node and whatever hop i+1 reads. A null
+    node ends its walk (a temporal walk with no later edge).
+
+    Each frontier is a LAZY localCheckpoint: without it hop i
+    re-executes hops 1..i-1 inside both the next hop's lineage and the
+    final union (Spark has no cross-branch CSE), O(n_steps^2) joins;
+    lazy, so the first consumer materializes it and no per-hop
+    blocking action runs on the driver. Returns the union of every
+    frontier over start's columns."""
+    out = cur = start
+    for i in range(1, n_steps + 1):
+        nxt = pick(cur.join(adj_arr, adj_arr.src == F.col("node")), i)
+        cur = (
+            nxt.select("walk_id", F.lit(i).alias("step"), *nxt.columns[1:])
+            .where(F.col("node").isNotNull())
+            .localCheckpoint(eager=False)
+        )
+        out = out.unionByName(cur.select(*start.columns))
+    return out
 
 
 def symmetrize(edges: DataFrame, a1: str = "actor1", a2: str = "actor2") -> DataFrame:
@@ -1674,6 +1739,21 @@ def triangle_formation_spans(frame_edges: DataFrame) -> DataFrame:
     )
 
 
+def _nbr_arrays(edges: DataFrame) -> DataFrame:
+    """(src, nbrs): each node's distinct undirected neighbors as one
+    dst-sorted array, checkpointed once — the walk adjacency. The
+    sorted array carries rank AND degree, so a hop is one join plus an
+    in-row pick; array_sort(collect_list) over the distinct adjacency
+    is exactly a per-src window's ORDER BY dst."""
+    return (
+        symmetrize(edges.select("actor1", "actor2"))
+        .distinct()
+        .groupBy("src")
+        .agg(F.array_sort(F.collect_list("dst")).alias("nbrs"))
+        .localCheckpoint()
+    )
+
+
 def random_walks(
     edges: DataFrame, n_steps: int = 4, seed: str = "walk"
 ) -> DataFrame:
@@ -1687,76 +1767,24 @@ def random_walks(
     hop and what makes re-runs (or re-tried tasks) reproduce the
     identical corpus at 100 TB.
 
-    Scale shape: the adjacency gets a per-source neighbor rank (a
-    window PARTITIONed by src — bounded by max degree, the same bound
-    the adjacency list itself already carries), and each hop is ONE
-    equi-join of the frontier against (src, rank) — co-partitionable
-    by src at rest, n_steps joins total, no per-walk driver loop.
+    Scale shape: per-node sorted neighbor arrays (:func:`_nbr_arrays`)
+    and the shared hop loop :func:`_walk_rounds` — each hop is ONE
+    equi-join of the frontier against its node's array and an in-row
+    element_at, n_steps joins total, no per-walk driver loop.
     Output: (walk_id, step, node), step 0 = the seed node.
     """
     if n_steps < 1:
         raise ValueError("n_steps must be >= 1")
-    from neo4j_dynagraph_spark import functions as dfn
+    adj_arr = _nbr_arrays(edges)
 
-    # Per-node SORTED neighbor arrays, checkpointed ONCE (r13
-    # optimization; the LPA/PageRank checkpoint precedent still
-    # applies). The old shape ranked the adjacency with a per-src
-    # window and ran TWO equi-joins per hop (degree lookup + the
-    # (src, rnk) == (node, idx) pick); the dst-sorted array carries
-    # rank AND degree implicitly, so each hop is ONE small join plus
-    # an in-row element_at — per hop: 2 joins -> 1, and the ranked-
-    # window build disappears (guide §2.4). array_sort(collect_list)
-    # over the distinct adjacency is exactly the old window's ORDER BY
-    # dst, so the drawn corpus is bit-identical.
-    adj_arr = (
-        edges.select(F.col("actor1").alias("src"), F.col("actor2").alias("dst"))
-        .unionByName(
-            edges.select(
-                F.col("actor2").alias("src"), F.col("actor1").alias("dst")
-            )
-        )
-        .distinct()
-        .groupBy("src")
-        .agg(F.array_sort(F.collect_list("dst")).alias("nbrs"))
-        .localCheckpoint()
-    )
-    cur = adj_arr.select(
+    def pick(hop: DataFrame, i: int) -> DataFrame:
+        return hop.select("walk_id", _uniform_pick("nbrs", seed, i).alias("node"))
+
+    start = adj_arr.select(
         F.col("src").alias("walk_id"), F.lit(0).alias("step"),
         F.col("src").alias("node"),
     )
-    out = cur
-    for i in range(1, n_steps + 1):
-        idx = (
-            F.pmod(
-                dfn.hash64(
-                    F.concat(
-                        F.lit(f"{seed}:"),
-                        F.col("walk_id").cast("string"),
-                        F.lit(f":{i}"),
-                    )
-                ),
-                F.size("nbrs").cast("long"),
-            )
-            + 1
-        ).cast("int")
-        cur = (
-            cur.join(adj_arr, adj_arr.src == F.col("node"))
-            .select(
-                "walk_id",
-                F.lit(i).alias("step"),
-                F.element_at("nbrs", idx).alias("node"),
-            )
-            # frontier checkpoint: without it hop i re-executes hops
-            # 1..i-1 inside BOTH the next hop's lineage and the final
-            # union (Spark has no cross-branch CSE), making the walk
-            # O(n_steps^2) joins; with it, exactly n_steps joins run
-            # over an O(walks)-row frontier (LPA/PageRank precedent).
-            # LAZY (eager=False): the first consumer materializes it,
-            # so no extra per-hop blocking action on the driver
-            .localCheckpoint(eager=False)
-        )
-        out = out.unionByName(cur)
-    return out
+    return _walk_rounds(adj_arr, start, pick, n_steps)
 
 
 def sgns_negatives(
@@ -1923,14 +1951,18 @@ def node2vec_walks(
     same no-FP-boundary, no-RNG-state contract as sgns_negatives, so
     re-runs and the SQL oracle replay every hop bit-for-bit.
 
-    Scale shape: hop 1 is uniform (no prev yet — the standard
-    node2vec start), each later hop is ONE equi-join of the frontier
-    on cur's adjacency plus ONE edge-existence left join on the
-    canonical (prev, d) pair, then a per-WALK window (bounded by
-    cur's degree) for the integer prefix-sum CDF. Frontiers are
-    lazily checkpointed per hop (linear in hops, not quadratic — the
-    random_walks precedent). Walks all have n_steps hops (connected
-    neighborhoods always offer a candidate: prev itself).
+    Scale shape: the walk adjacency is per-node sorted neighbor
+    arrays (:func:`_nbr_arrays`) and the hops are the shared loop
+    :func:`_walk_rounds`. Hop 1 is random_walks' uniform pick (no prev
+    yet — the standard node2vec start). Each later hop is ONE
+    equi-join of the frontier, which carries prev and nbrs(prev), to
+    the current node's array; every candidate d is weighted in-row
+    (d == prev: return; array_contains(nbrs(prev), d): stay; else
+    explore), and the pick is the first d whose integer prefix sum
+    exceeds the draw, one fold over the array. No candidate row is
+    shuffled, no window sorts, no edge-existence join runs. Walks all
+    have n_steps hops (connected neighborhoods always offer a
+    candidate: prev itself).
     Output: (walk_id, step, node), step 0 = the seed node.
     """
     if n_steps < 1:
@@ -1939,125 +1971,61 @@ def node2vec_walks(
         # w_back >= 1 backs the docstring guarantee that walks always
         # complete n_steps hops: at a degree-1 node the only candidate
         # is prev, and a zero return-weight would make the CDF total 0
-        # and silently truncate the walk (pmod by 0 is null).
+        # and leave the walk with nothing to draw.
         raise ValueError(
             "w_back must be >= 1 (walks must always be able to return) "
             "and w_same/w_fwd non-negative"
         )
-    from pyspark.sql import Window
+    adj_arr = _nbr_arrays(edges)
 
-    from neo4j_dynagraph_spark import functions as dfn
+    def weight(d: Column) -> Column:
+        return (
+            F.when(d == F.col("prev"), F.lit(w_back))
+            .when(F.array_contains("pnbrs", d), F.lit(w_same))
+            .otherwise(F.lit(w_fwd))
+            .cast("long")
+        )
 
-    d0 = edges.select("actor1", "actor2").distinct()
-    adj = (
-        d0.select(F.col("actor1").alias("src"), F.col("actor2").alias("dst"))
-        .unionByName(
-            d0.select(F.col("actor2").alias("src"), F.col("actor1").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint()
-        .select(F.col("src").alias("asrc"), "dst")
+    # the fold starts at minus the draw: the first candidate whose
+    # running weight sum turns positive is the first whose prefix sum
+    # exceeds the draw. Weights and draw sit in their own columns, so
+    # the fold's lambda reads them instead of recomputing them per
+    # element.
+    first_past = F.aggregate(
+        F.arrays_zip("nbrs", "_w"),
+        F.struct(
+            (-F.col("_d")).alias("acc"),
+            F.lit(None).cast(adj_arr.schema["nbrs"].dataType.elementType).alias("node"),
+        ),
+        lambda s, x: F.struct(
+            (s["acc"] + x["_w"]).alias("acc"),
+            F.when(
+                s["node"].isNull() & (s["acc"] + x["_w"] > 0), x["nbrs"]
+            ).otherwise(s["node"]).alias("node"),
+        ),
+        lambda s: s["node"],
     )
-    # canonical orientation (least, greatest) so the distance-1 probe
-    # below — which joins on least(prev, dst) = e1 AND
-    # greatest(prev, dst) = e2 — matches edges however the caller
-    # oriented them; without this an edge supplied only as (b, a) with
-    # b > a would silently score as 'explore' instead of 'stay'
-    canon = (
-        d0.select(
-            F.least("actor1", "actor2").alias("e1"),
-            F.greatest("actor1", "actor2").alias("e2"),
-        )
-        .distinct()
-        .localCheckpoint()
-        .withColumn("_adj", F.lit(True))
-    )
-    deg = adj.groupBy("asrc").agg(F.count(F.lit(1)).alias("deg"))
-    rnk = adj.withColumn(
-        "rnk", F.row_number().over(Window.partitionBy("asrc").orderBy("dst"))
-    )
-    # hop 1: uniform over the seed's neighbors (hash mod degree)
-    seeds = deg.select(F.col("asrc").alias("walk_id"))
-    idx1 = (
-        F.pmod(
-            dfn.hash64(
-                F.concat(
-                    F.lit(f"{seed}:"), F.col("walk_id").cast("string"),
-                    F.lit(":1"),
-                )
-            ),
-            F.col("deg"),
-        )
-        + 1
-    )
-    cur = (
-        seeds.join(deg, F.col("asrc") == F.col("walk_id"))
-        .withColumn("_i", idx1)
-        .join(
-            rnk.select(
-                F.col("asrc").alias("rsrc"), F.col("dst"), F.col("rnk")
-            ),
-            (F.col("rsrc") == F.col("walk_id")) & (F.col("rnk") == F.col("_i")),
-        )
-        .select(
+
+    def pick(hop: DataFrame, i: int) -> DataFrame:
+        if i == 1:
+            nxt = _uniform_pick("nbrs", seed, 1)
+        else:
+            hop = hop.withColumn("_w", F.transform("nbrs", weight))
+            total = F.aggregate("_w", F.lit(0).cast("long"), lambda a, b: a + b)
+            hop = hop.withColumn("_d", _walk_draw(seed, i, total))
+            nxt = first_past
+        return hop.select(
             "walk_id",
-            F.col("walk_id").alias("prev"),
-            F.col("dst").alias("node"),
+            nxt.alias("node"),
+            F.col("node").alias("prev"),
+            F.col("nbrs").alias("pnbrs"),
         )
-        .localCheckpoint(eager=False)
+
+    start = adj_arr.select(
+        F.col("src").alias("walk_id"), F.lit(0).alias("step"),
+        F.col("src").alias("node"),
     )
-    out = seeds.select(
-        "walk_id", F.lit(0).alias("step"), F.col("walk_id").alias("node")
-    ).unionByName(
-        cur.select("walk_id", F.lit(1).alias("step"), "node")
-    )
-    w = Window.partitionBy("walk_id").orderBy("dst")
-    wtot = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    for i in range(2, n_steps + 1):
-        cand = (
-            cur.join(adj, F.col("asrc") == F.col("node"))
-            .join(
-                canon,
-                (F.least("prev", "dst") == F.col("e1"))
-                & (F.greatest("prev", "dst") == F.col("e2")),
-                "left",
-            )
-            .withColumn(
-                "wgt",
-                F.when(F.col("dst") == F.col("prev"), F.lit(w_back))
-                .when(F.col("_adj"), F.lit(w_same))
-                .otherwise(F.lit(w_fwd))
-                .cast("long"),
-            )
-            .withColumn("cum", F.sum("wgt").over(w))
-            .withColumn("total", F.sum("wgt").over(wtot))
-        )
-        draw = F.pmod(
-            dfn.hash64(
-                F.concat(
-                    F.lit(f"{seed}:"), F.col("walk_id").cast("string"),
-                    F.lit(f":{i}"),
-                )
-            ),
-            F.col("total"),
-        )
-        cur = (
-            cand.withColumn("_d", draw)
-            .where(
-                (F.col("cum") - F.col("wgt") <= F.col("_d"))
-                & (F.col("_d") < F.col("cum"))
-            )
-            .select(
-                "walk_id",
-                F.col("node").alias("prev"),
-                F.col("dst").alias("node"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        out = out.unionByName(
-            cur.select("walk_id", F.lit(i).alias("step"), "node")
-        )
-    return out
+    return _walk_rounds(adj_arr, start, pick, n_steps)
 
 
 def temporal_walks(
@@ -2077,10 +2045,11 @@ def temporal_walks(
     later-frame edges ordered by (frame, dst); walks with no later edge
     terminate early (variable length, like real temporal paths).
 
-    Scale shape: each hop is one equi-join of the frontier on src with
-    the frame bound as a residual, then a per-WALK window (bounded by
-    the node's temporal degree) for the rank + count — n_steps joins,
-    no per-walk loop, no RNG state, every hop oracle-replayable.
+    Scale shape: per-node (frame_id, dst)-sorted temporal adjacency
+    arrays and the shared hop loop :func:`_walk_rounds` — each hop is
+    one equi-join of the frontier on the node, then an in-row filter
+    to the later-frame candidates and a hash pick among them; n_steps
+    joins, no per-walk loop, no RNG state, every hop oracle-replayable.
     Output: (walk_id, step, node, t) — t is the arrival frame, -1 for
     the seed row.
 
@@ -2107,99 +2076,57 @@ def temporal_walks(
     """
     if n_steps < 1:
         raise ValueError("n_steps must be >= 1")
-    from neo4j_dynagraph_spark import functions as dfn
-
-    # Per-node SORTED temporal adjacency arrays (r13 optimization):
-    # the hop used to explode every walk's full candidate set —
-    # frontier x later-frame edges — through an Exchange plus a
-    # per-walk sort window just to pick ONE ranked row. The candidate
-    # rank/count live inside the node's (frame_id, dst)-sorted array
-    # instead: each hop is a V-row equi-join on the node plus an O(deg)
-    # in-row array filter (JVM codegen, no shuffle of candidates, no
-    # sort) — guide §2.4 'remove shuffles outright'. Semantics are
-    # byte-identical: array_sort on struct(frame_id, dst) is exactly
-    # the old window's ORDER BY frame_id, dst; filter preserves order;
-    # element_at(flt, pmod(hash, size)+1) is the same rk == idx draw.
-    # Skew note: a hub's whole candidate array sits in one row, but the
-    # old per-walk window funneled the identical rows into one task —
-    # same bound, fewer moves.
-    adj = (
-        frame_edges.select(
-            "frame_id", F.col("actor1").alias("src"), F.col("actor2").alias("dst")
-        )
-        .unionByName(
-            frame_edges.select(
-                "frame_id",
-                F.col("actor2").alias("src"),
-                F.col("actor1").alias("dst"),
-            )
-        )
+    if max_gap is not None and max_gap < 1:
+        raise ValueError("max_gap must be >= 1")
+    # Per-node (frame_id, dst)-sorted temporal adjacency arrays: a hop
+    # filters its node's array in-row (JVM codegen, no shuffle of
+    # candidates, no sort). array_sort on struct(frame_id, dst) is a
+    # window's ORDER BY frame_id, dst and filter preserves order, so
+    # element_at(flt, pmod(hash, size) + 1) is the rank == idx draw.
+    # Skew note: a hub's whole candidate array sits in one row — the
+    # bound a per-walk window would funnel into one task anyway.
+    adj_arr = (
+        symmetrize(frame_edges.select("frame_id", "actor1", "actor2"))
         .distinct()
-    )
-    adj_arr = adj.groupBy("src").agg(
-        F.array_sort(F.collect_list(F.struct("frame_id", "dst"))).alias("nbrs")
+        .groupBy("src")
+        .agg(
+            F.array_sort(F.collect_list(F.struct("frame_id", "dst"))).alias("nbrs")
+        )
     )
     adj_arr = _materialize(adj_arr, spill_dir, "twalk_adj")
     if max_gap is None:
-        cur = adj_arr.select(
-            F.col("src").alias("walk_id"),
-            F.lit(0).alias("step"),
-            F.col("src").alias("node"),
-            F.lit(-1).cast("long").alias("t"),
-        )
+        t0 = F.lit(-1).cast("long")
     else:
-        if max_gap < 1:
-            raise ValueError("max_gap must be >= 1")
-        # nbrs is sorted by frame_id: the node's first active frame is
-        # element 1 — the old separate min(frame_id) aggregate, free
-        cur = adj_arr.select(
-            F.col("src").alias("walk_id"),
-            F.lit(0).alias("step"),
-            F.col("src").alias("node"),
-            (F.element_at("nbrs", 1).getField("frame_id") - 1)
-            .cast("long")
-            .alias("t"),
-        )
-    out = cur
-    for i in range(1, n_steps + 1):
+        # nbrs is sorted by frame_id: element 1 holds the node's first
+        # active frame
+        t0 = (F.element_at("nbrs", 1).getField("frame_id") - 1).cast("long")
+
+    def later(x: Column) -> Column:
+        f = x.getField("frame_id")
         if max_gap is None:
-            flt = F.filter(
-                F.col("nbrs"), lambda x: x.getField("frame_id") > F.col("t")
-            )
-        else:
-            flt = F.filter(
-                F.col("nbrs"),
-                lambda x: (x.getField("frame_id") > F.col("t"))
-                & (x.getField("frame_id") <= F.col("t") + F.lit(max_gap)),
-            )
-        idx = (
-            F.pmod(
-                dfn.hash64(
-                    F.concat(
-                        F.lit(f"{seed}:"),
-                        F.col("walk_id").cast("string"),
-                        F.lit(f":{i}"),
-                    )
-                ),
-                F.size("flt").cast("long"),
-            )
-            + 1
-        ).cast("int")
-        cur = (
-            cur.join(adj_arr, adj_arr.src == cur.node)
-            .withColumn("flt", flt)
-            .where(F.size("flt") >= 1)
-            .withColumn("pick", F.element_at("flt", idx))
-            .select(
-                "walk_id",
-                F.lit(i).alias("step"),
-                F.col("pick").getField("dst").alias("node"),
-                F.col("pick").getField("frame_id").alias("t"),
-            )
-            .localCheckpoint(eager=False)  # frontier checkpoint — see random_walks
+            return f > F.col("t")
+        return (f > F.col("t")) & (f <= F.col("t") + F.lit(max_gap))
+
+    def pick(hop: DataFrame, i: int) -> DataFrame:
+        # an empty candidate array has no draw: the pick stays null and
+        # the walk ends
+        hop = hop.withColumn("flt", F.filter("nbrs", later))
+        hop = hop.withColumn(
+            "pick", F.when(F.size("flt") > 0, _uniform_pick("flt", seed, i))
         )
-        out = out.unionByName(cur)
-    return out
+        return hop.select(
+            "walk_id",
+            F.col("pick").getField("dst").alias("node"),
+            F.col("pick").getField("frame_id").alias("t"),
+        )
+
+    start = adj_arr.select(
+        F.col("src").alias("walk_id"),
+        F.lit(0).alias("step"),
+        F.col("src").alias("node"),
+        t0.alias("t"),
+    )
+    return _walk_rounds(adj_arr, start, pick, n_steps)
 
 
 def connected_components_per_frame(
@@ -2966,14 +2893,20 @@ def kmv_neighborhood(
         6,
     )
     states = _relax_rounds(sym, state, [], F.col("us"), union_prune, max_dist)
-    # after the loop's exit every later radius holds the last sketches
+    last = len(states) - 1
     per_d = [
-        states[min(d, len(states) - 1)].select(est.alias("e")).agg(
+        states[d].select(est.alias("e")).agg(
             F.lit(d).alias("d"),
             F.round(F.sum(F.col("e") - 1), 6).alias("est_pairs"),
         )
-        for d in range(1, max_dist + 1)
+        for d in range(1, last + 1)
     ]
+    if last < max_dist:
+        # after an early exit every later radius holds the last
+        # sketches: aggregate them once and fan the estimate out
+        per_d[-1] = per_d[-1].withColumn(
+            "d", F.explode(F.sequence(F.lit(last), F.lit(max_dist)))
+        )
     return reduce(DataFrame.unionByName, per_d).orderBy("d")
 
 

@@ -45,7 +45,9 @@ cannot decide:
 Barrier spellings outside this module, which one materialization
 policy would replace:
 
-- raw ``DataFrame.localCheckpoint()`` calls in the operators;
+- raw ``DataFrame.localCheckpoint()`` calls in the operators, among
+  them the lazy per-hop frontier of ``graph._walk_rounds``
+  (``random_walks``, ``node2vec_walks``, ``temporal_walks``);
 - ``graph._materialize(df, spill_dir, name)``: localCheckpoint, or
   :func:`stage_parquet` under a ``spill_dir``;
 - ``graph._counted_barrier(df)``: a lazy localCheckpoint materialized
@@ -57,9 +59,11 @@ policy would replace:
   ``k_core_rounds``, ``k_truss``, ``k_truss_rounds``; the peel stops
   on the first round whose count shows nothing removed, and
   ``k_core_rounds`` falls back to ``_materialize`` when given a
-  ``spill_dir``) and ``graph._relax_rounds`` (the arrival, distance,
+  ``spill_dir``), ``graph._relax_rounds`` (the arrival, distance,
   weighted-path and KMV frontiers; the loop stops at the first empty
-  one).
+  one) and ``graph._min_label_rounds`` (``connected_components``,
+  ``connected_components_per_frame``; the count of changed labels
+  materializes the round's lazy labels and stops the loop at 0).
 """
 
 from __future__ import annotations

@@ -1712,10 +1712,8 @@ def train_quality_probe(
         "doc_id", F.col("passed").cast("double").alias("y")
     )
     train = feats.join(labels, "doc_id").localCheckpoint()
-    spark = docs.sparkSession
-    # splits from the session conf, not the core count: one plan anywhere
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    w = spark.range(1, numPartitions=n_part).select(
+    # one row in one split: no empty tasks, and one plan on any core count
+    w = docs.sparkSession.range(1, numPartitions=1).select(
         F.lit(0.0).alias("b"),
         *[F.lit(0.0).alias(f"w_{f[2:]}") for f in _PROBE_FEATS],
     )

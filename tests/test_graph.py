@@ -1009,9 +1009,9 @@ def test_node2vec_walks_valid_deterministic_and_biased(spark):
     with _pytest.raises(ValueError):
         node2vec_walks(df, w_back=0)
     # orientation-agnostic adjacency (ADVICE r10): flipping every edge
-    # to (b, a) with b > a must not change a single hop — the
-    # distance-1 'stay' probe joins on the canonical (least, greatest)
-    # pair, which now matches however the caller oriented the input
+    # to (b, a) with b > a must not change a single hop — the 'stay'
+    # test reads prev's symmetrized neighbor array, which holds both
+    # orientations however the caller oriented the input
     flipped = spark.createDataFrame(
         [(b, a) for a, b in edges], "actor1 long, actor2 long"
     )
@@ -2071,12 +2071,117 @@ def test_sage_aggregate_closed_form(spark):
     assert out[3].f == 3
 
 
-# ------------------------------------------------- SI epidemic family
+# ------------------------------------------------- walk corpus replay
 
 
 def _h64(s: str) -> int:
     """Pure-Python twin of functions.hash64 (first 15 md5 hex chars)."""
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+def _py_walks(nbrs, n_steps, seed, bias=None, max_gap=None):
+    """Reference walk corpus: replays every hop's draw
+    hash64('{seed}:' walk ':' i) over ``nbrs`` (node -> sorted
+    candidates). Plain dst ids give random_walks, or node2vec_walks
+    with ``bias`` = (w_back, w_same, w_fwd): hop 1 uniform, later hops
+    take the first candidate whose integer prefix weight exceeds
+    draw mod total. (frame, dst) pairs give temporal_walks: candidates
+    in a later frame, within ``max_gap`` when given; a walk with none
+    ends. Rows: (walk_id, step, node[, t])."""
+    temporal = isinstance(next(iter(nbrs.values()))[0], tuple)
+    rows = []
+    for w in sorted(nbrs):
+        node, prev = w, None
+        t = -1 if max_gap is None else nbrs[w][0][0] - 1
+        rows.append((w, 0, node, t) if temporal else (w, 0, node))
+        for i in range(1, n_steps + 1):
+            h = _h64(f"{seed}:{w}:{i}")
+            cands = nbrs[node]
+            if temporal:
+                cands = [
+                    c for c in cands
+                    if c[0] > t and (max_gap is None or c[0] <= t + max_gap)
+                ]
+                if not cands:
+                    break
+            if bias is None or prev is None:
+                nxt = cands[h % len(cands)]
+            else:
+                wb, ws, wf = bias
+                wts = [
+                    wb if d == prev else ws if d in nbrs[prev] else wf
+                    for d in cands
+                ]
+                draw, cum = h % sum(wts), 0
+                for d, x in zip(cands, wts):
+                    cum += x
+                    if cum > draw:
+                        nxt = d
+                        break
+            prev = node
+            if temporal:
+                t, node = nxt
+                rows.append((w, i, node, t))
+            else:
+                node = nxt
+                rows.append((w, i, node))
+    return sorted(rows)
+
+
+# two triangles joined by a path, pendant leaves and a 4-clique: every
+# node2vec weight class (back, stay, explore) occurs at many hops
+WALK_EDGES = [
+    (1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (4, 6), (6, 7),
+    (7, 8), (8, 9), (9, 10), (7, 9), (8, 10), (7, 10), (2, 11),
+    (11, 12), (12, 13), (13, 1), (5, 14), (10, 15), (15, 16), (16, 3),
+]
+# a contact stream over those edges, some pairs repeating in later
+# frames so walks can continue or stall
+WALK_CONTACTS = [(f, a, b) for f, (a, b) in enumerate(WALK_EDGES)] + [
+    (f + 3, a, b) for f, (a, b) in enumerate(WALK_EDGES[::2])
+]
+
+
+def test_walk_corpora_match_python_replay(spark):
+    """Row-for-row corpus check of random_walks, node2vec_walks
+    (default weights, w_same=0, w_fwd=0) and temporal_walks (unbounded
+    and max_gap=2) against the pure-Python replay of the same hash
+    draws — the drawn walks themselves, not only their validity."""
+    und: dict = {}
+    for a, b in WALK_EDGES:
+        und.setdefault(a, set()).add(b)
+        und.setdefault(b, set()).add(a)
+    nbrs = {v: sorted(ns) for v, ns in und.items()}
+    df = spark.createDataFrame(WALK_EDGES, "actor1 long, actor2 long")
+
+    def rows(walks):
+        return sorted(map(tuple, walks.collect()))
+
+    assert rows(graph.random_walks(df, n_steps=4)) == _py_walks(nbrs, 4, "walk")
+    for ws, wf in ((4, 16), (0, 16), (4, 0)):
+        assert rows(
+            graph.node2vec_walks(df, n_steps=4, w_same=ws, w_fwd=wf)
+        ) == _py_walks(nbrs, 4, "n2v", bias=(1, ws, wf)), (ws, wf)
+
+    tadj: dict = {}
+    for f, a, b in WALK_CONTACTS:
+        tadj.setdefault(a, set()).add((f, b))
+        tadj.setdefault(b, set()).add((f, a))
+    tnbrs = {v: sorted(cs) for v, cs in tadj.items()}
+    fe = spark.createDataFrame(
+        WALK_CONTACTS, "frame_id long, actor1 long, actor2 long"
+    )
+    for gap in (None, 2):
+        want = _py_walks(tnbrs, 3, "twalk", max_gap=gap)
+        assert rows(graph.temporal_walks(fe, n_steps=3, max_gap=gap)) == want
+        # some walks end early, some run all three hops
+        steps = {}
+        for w, s, _, _ in want:
+            steps[w] = max(steps.get(w, 0), s)
+        assert 3 in steps.values() and min(steps.values()) < 3, gap
+
+
+# ------------------------------------------------- SI epidemic family
 
 
 def _py_si(contacts, seed_mod, p10, max_hops):
