@@ -211,10 +211,10 @@ def _min_label_rounds(
 
     Each round's labels are a lazy localCheckpoint (lineage would
     otherwise double per round); the changed flag rides inside the
-    round's plan (old_label is already in flight), and the changed
-    rows pass :func:`_counted_barrier`, whose one job both
-    materializes the round's labels and returns the count the loop
-    stops on — no re-join of new vs old labels, no second action."""
+    round's plan (old_label is already in flight), and counting the
+    changed rows is the one job that both materializes the round's
+    labels and returns the count the loop stops on — no re-join of new
+    vs old labels, no second action."""
     labels = (
         sym.select(*keys, F.col("src").alias("actor"))
         .distinct()
@@ -257,7 +257,9 @@ def _min_label_rounds(
             )
             .localCheckpoint(eager=False)
         )
-        _, changed = _counted_barrier(new_labels.where("chg"))
+        # count through the internal RDD: the one job that materializes
+        # the round's labels, with no checkpoint of the changed rows
+        changed = new_labels.where("chg")._jdf.queryExecution().toRdd().count()
         labels = new_labels.select(*keys, "actor", "label")
         if changed == 0:
             break
