@@ -33,7 +33,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from neo4j_dynagraph_spark import functions as dfn
-from neo4j_dynagraph_spark.operators.hub import checkpoint_hub, stage_corpus_scale
+from neo4j_dynagraph_spark.operators.hub import checkpoint_hub
 
 # Positional (per-offset, duplicates kept) word-3-gram expression; the
 # distinct form below is DERIVED from it so the two can never drift.

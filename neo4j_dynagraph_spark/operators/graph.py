@@ -66,57 +66,12 @@ from functools import reduce
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.functions import broadcast
-from pyspark.sql.types import ArrayType, MapType
 
-from neo4j_dynagraph_spark.operators.hub import checkpoint_hub, stage_parquet
-
-
-def _materialize(
-    df: DataFrame, spill_dir: str | None, name: str
-) -> DataFrame:
-    """Truncate lineage on a DATA-SIZED intermediate. spill_dir=None ->
-    localCheckpoint (fast, but stores deserialized MEMORY_AND_DISK
-    blocks that pin the unified memory region — fine up to ~1e8 rows
-    on the 16g default heap). A spill_dir switches to write-parquet-
-    read-back: bit-identical, columnar on disk, the reliable-checkpoint
-    analogue a real cluster would use. This is the temporal_walks
-    spill_dir contract (SCALE.md sf10 walk postmortem) extended to the
-    whole iterative-graph family: at sf10 the saturated day graph's
-    ~4e9-row symmetrized edge set OOMs localCheckpoint, measured —
-    every operator whose materialized state is E-sized takes the knob.
-    Each call writes its own ``<spill_dir>/<name>_<uuid>`` directory
-    (:func:`~neo4j_dynagraph_spark.operators.hub.stage_parquet`)."""
-    if spill_dir is None:
-        return df.localCheckpoint()
-    return stage_parquet(df, spill_dir, name)
-
-
-def _counted_barrier(df: DataFrame) -> tuple[DataFrame, int]:
-    """Loop barrier that reports what it materialized: ``(frame, rows)``.
-
-    A lazy localCheckpoint materialized by counting its internal RDD —
-    the one job an eager localCheckpoint runs anyway, but the row count
-    comes back to the caller, so a loop can stop on an empty frontier
-    without a second action. The checkpointed frame keeps the
-    optimizer's static size estimate of its lineage (a self-join
-    product: GiBs for a few thousand rows), which plans every later
-    join on it as a shuffle; when the MEASURED size, ``rows *
-    (columns + 1) * 8`` bytes, fits the session's own
-    ``spark.sql.autoBroadcastJoinThreshold``, the frame comes back
-    broadcast-hinted instead. The 8-byte cell estimate holds for
-    narrow loop state (ids, counts, hashes, short labels); a frame
-    with an array or map column (a KMV sketch) is never hinted."""
-    ck = df.localCheckpoint(eager=False)
-    rows = ck._jdf.queryExecution().toRdd().count()
-    limit = (
-        df.sparkSession._jsparkSession.sessionState()
-        .conf()
-        .autoBroadcastJoinThreshold()
-    )
-    wide = any(isinstance(f.dataType, (ArrayType, MapType)) for f in ck.schema)
-    if not wide and rows * (len(ck.columns) + 1) * 8 <= limit:
-        ck = broadcast(ck)
-    return ck, rows
+from neo4j_dynagraph_spark.operators.hub import (
+    checkpoint_hub,
+    counted_barrier,
+    materialize,
+)
 
 
 def _relax_rounds(
@@ -139,7 +94,7 @@ def _relax_rounds(
     ``step`` (null: no path) and merges it by the ``better`` aggregate
     (min, max, KMV union-then-prune). The old value rides through the
     same group-by, so the changed rows — the next frontier, passed
-    through :func:`_counted_barrier` — need no second join.
+    through :func:`counted_barrier` — need no second join.
 
     Every caller's ``step`` is monotone in x and ``better`` is an
     idempotent merge, so a row that did not change was already
@@ -148,7 +103,7 @@ def _relax_rounds(
     over paths of at most h hops), and every round after an empty
     frontier is the identity. Returns the state after each round, the
     input first (``[-1]`` is the result); each merged state is a lazy
-    localCheckpoint that the frontier's counted job materializes."""
+    barrier that the frontier's counted job materializes."""
     x = state.columns[-1]
     on = [k for k in keys if k in adj.columns] + ["src"]
     history = [state]
@@ -176,9 +131,9 @@ def _relax_rounds(
                 better(F.col(x)).alias(x),
                 F.max(F.when(F.col("old"), F.col(x))).alias("was"),
             )
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
-        frontier, rows = _counted_barrier(
+        frontier, rows = counted_barrier(
             merged.where(F.col("was").isNull() | (F.col(x) != F.col("was")))
             .select(*keys, "v", x)
         )
@@ -209,7 +164,7 @@ def _min_label_rounds(
     rather than O(diameter). Two shuffles per round whatever the
     number of key values. Returns (*keys, actor, label).
 
-    Each round's labels are a lazy localCheckpoint (lineage would
+    Each round's labels are a lazy barrier (lineage would
     otherwise double per round); the changed flag rides inside the
     round's plan (old_label is already in flight), and counting the
     changed rows is the one job that both materializes the round's
@@ -219,7 +174,7 @@ def _min_label_rounds(
         sym.select(*keys, F.col("src").alias("actor"))
         .distinct()
         .withColumn("label", F.col("actor"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     for _ in range(max_iterations):
         # rename on the edge side: the labels scan stays unprojected,
@@ -255,7 +210,7 @@ def _min_label_rounds(
                 jumped.alias("label"),
                 (jumped != F.col("old_label")).alias("chg"),
             )
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
         # count through the internal RDD: the one job that materializes
         # the round's labels, with no checkpoint of the changed rows
@@ -282,11 +237,11 @@ def _wl_rounds(sym: DataFrame, keys: list[str], rounds: int) -> DataFrame:
     commutative fingerprint of its neighbors' color multiset (two
     residue sums and the count, see :func:`wl_refinement`). Exactly
     ``rounds`` rounds; every round's colors pass through
-    :func:`_counted_barrier` (one counted job, broadcast-hinted when
+    :func:`counted_barrier` (one counted job, broadcast-hinted when
     small). Returns (*keys, actor, color)."""
     from neo4j_dynagraph_spark import functions as dfn
 
-    colors, _ = _counted_barrier(
+    colors, _ = counted_barrier(
         sym.groupBy(*keys, F.col("src").alias("actor"))
         .agg(F.count(F.lit(1)).alias("deg"))
         .select(
@@ -314,7 +269,7 @@ def _wl_rounds(sym: DataFrame, keys: list[str], rounds: int) -> DataFrame:
                 F.count(F.lit(1)).alias("deg"),
             )
         )
-        colors, _ = _counted_barrier(
+        colors, _ = counted_barrier(
             nb.join(colors, [*keys, "actor"]).select(
                 *keys,
                 "actor",
@@ -341,7 +296,6 @@ def _power_rounds(
     teleport: Column | None,
     damping: float,
     iterations: int,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration power method over canonical ``edges``:
     rank_{i+1}(v) = tele(v) + d * sum_{u~v} rank_i(u) * w(u,v) / W(u),
@@ -349,16 +303,14 @@ def _power_rounds(
     bit-equal to rank / deg). ``teleport`` is a per-node distribution
     t over ``actor``: rank_0 = t, tele = (1-d) * t; None is uniform,
     rank_0 = 1/n and the single constant tele = (1-d)/n. The
-    symmetrized and degree-annotated adjacencies are materialized once
-    (``spill_dir``); each round is one join + one group-by, ranks
+    symmetrized and degree-annotated adjacencies are materialized once;
+    each round is one join + one group-by, ranks
     eagerly checkpointed. Every node is some edge's dst, so each round
     carries the whole node vector (no dangling mass; an unreached node
     sums exact 0.0 contributions). Columns: actor, rank (1e-6, desc)."""
-    sym = _materialize(symmetrize(edges), spill_dir, "pr_sym")
-    adj = _materialize(
-        sym.join(sym.groupBy("src").agg(F.sum(weight).alias("wdeg")), "src"),
-        spill_dir,
-        "pr_adj",
+    sym = materialize(symmetrize(edges))
+    adj = materialize(
+        sym.join(sym.groupBy("src").agg(F.sum(weight).alias("wdeg")), "src")
     )
     nodes = adj.select(F.col("src").alias("actor")).distinct()
     if teleport is None:
@@ -366,7 +318,7 @@ def _power_rounds(
         rank0, tele = F.lit(1.0 / n), F.lit((1.0 - damping) / n)
     else:
         rank0, tele = teleport, F.lit(1.0 - damping) * teleport
-    ranks = nodes.select("actor", rank0.alias("rank")).localCheckpoint()
+    ranks = nodes.select("actor", rank0.alias("rank")).transform(materialize)
     for _ in range(iterations):
         ranks = (
             adj.join(ranks, adj.src == ranks.actor)
@@ -376,7 +328,7 @@ def _power_rounds(
             .groupBy(F.col("dst").alias("actor"))
             .agg(F.sum("contrib").alias("mass"))
             .select("actor", (tele + F.lit(damping) * F.col("mass")).alias("rank"))
-            .localCheckpoint()
+            .transform(materialize)
         )
     return ranks.select("actor", F.round("rank", 6).alias("rank")).orderBy(
         F.desc("rank"), "actor"
@@ -408,7 +360,7 @@ def _l1_rounds(
             scores = (
                 raw.crossJoin(broadcast(total))
                 .select(raw.columns[0], (F.col("raw") / F.col("t")).alias(out))
-                .localCheckpoint()
+                .transform(materialize)
             )
             last.append(scores)
     return last
@@ -419,26 +371,18 @@ def _peel_rounds(
     peel: Callable[[DataFrame, int], DataFrame],
     k: int,
     max_rounds: int,
-    spill_dir: str | None = None,
 ) -> tuple[DataFrame, bool]:
     """Peel rounds toward a unique fixpoint (k-core, k-truss): ``peel(e,
     k)`` keeps a subset of ``e``, so a round that removes nothing has
     reached the fixpoint and every later round is the identity. The
-    input and each round pass :func:`_counted_barrier`, whose one job
+    input and each round pass :func:`counted_barrier`, whose one job
     also returns the row count; the loop stops after the first round
     that keeps every row, or after ``max_rounds``, and returns (edges,
-    converged). A ``spill_dir`` writes parquet instead
-    (:func:`_materialize`): no count, all rounds run, not converged."""
-
-    def barrier(df: DataFrame, name: str) -> tuple[DataFrame, int | None]:
-        if spill_dir is None:
-            return _counted_barrier(df)
-        return _materialize(df, spill_dir, name), None
-
-    e, rows = barrier(e, "peel_in")
-    for r in range(max_rounds):
-        e, n = barrier(peel(e, k), f"peel_r{r}")
-        if n is not None and n == rows:
+    converged)."""
+    e, rows = counted_barrier(e)
+    for _ in range(max_rounds):
+        e, n = counted_barrier(peel(e, k))
+        if n == rows:
             return e, True
         rows = n
     return e, False
@@ -486,11 +430,12 @@ def _walk_rounds(
     first, then the drawn node and whatever hop i+1 reads. A null
     node ends its walk (a temporal walk with no later edge).
 
-    Each frontier is a LAZY localCheckpoint: without it hop i
+    Each frontier is a LAZY barrier: without it hop i
     re-executes hops 1..i-1 inside both the next hop's lineage and the
     final union (Spark has no cross-branch CSE), O(n_steps^2) joins;
-    lazy, so the first consumer materializes it and no per-hop
-    blocking action runs on the driver. Returns the union of every
+    lazy (without a checkpoint dir), so the first consumer
+    materializes it and no per-hop blocking action runs on the
+    driver. Returns the union of every
     frontier over start's columns."""
     out = cur = start
     for i in range(1, n_steps + 1):
@@ -498,7 +443,7 @@ def _walk_rounds(
         cur = (
             nxt.select("walk_id", F.lit(i).alias("step"), *nxt.columns[1:])
             .where(F.col("node").isNotNull())
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
         out = out.unionByName(cur.select(*start.columns))
     return out
@@ -634,7 +579,6 @@ def k_core_rounds(
     edges: DataFrame,
     k: int = 2,
     rounds: int = 2,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """At most `rounds` degree-peel rounds toward the k-core — the
     deterministic bounded form of :func:`k_core`, the node-level twin
@@ -647,10 +591,10 @@ def k_core_rounds(
     ``k_truss_rounds`` / ``_kmeans_cte``). It stops once a round
     removes nothing (same result: a peel at its fixpoint is the
     identity), seen in its barrier's own count (:func:`_peel_rounds`),
-    so it runs no convergence action; with a ``spill_dir`` all
-    `rounds` rounds run. The result is a superset of the k-core that
-    equals it whenever the cascade converges within `rounds`; use
-    :func:`k_core` when fixpoint semantics are required. Output
+    so it runs no convergence action. The result is a superset of the
+    k-core that equals it whenever the cascade converges within
+    `rounds`; use :func:`k_core` when fixpoint semantics are required.
+    Output
     columns (actor, degree) — `degree` is the node's degree in the
     r-round survivor subgraph, NOT necessarily its core degree.
     """
@@ -661,7 +605,6 @@ def k_core_rounds(
         _core_peel_round,
         k,
         rounds,
-        spill_dir,
     )
     return (
         e.groupBy(F.col("src").alias("actor"))
@@ -689,10 +632,10 @@ def temporal_reachability(
     """
     sym = symmetrize(
         edges.select("frame_id", "actor1", "actor2").distinct()
-    ).localCheckpoint()
+    ).transform(materialize)
     arrival = edges.sparkSession.createDataFrame(
         [(int(source), -1)], "v long, t long"
-    ).localCheckpoint()
+    ).transform(materialize)
     arrival = _relax_rounds(
         sym, arrival, [], _arrival_step(), F.min, max_iterations
     )[-1]
@@ -718,7 +661,7 @@ def connected_components(edges: DataFrame, max_iterations: int = 30) -> DataFram
     and `labels` on the join key so rounds reuse the partitioning.
     Columns: actor, component.
     """
-    sym = symmetrize(edges.select("actor1", "actor2").distinct()).localCheckpoint()
+    sym = symmetrize(edges.select("actor1", "actor2").distinct()).transform(materialize)
     labels = _min_label_rounds(sym, [], max_iterations)
     return labels.select("actor", F.col("label").alias("component")).orderBy("actor")
 
@@ -727,7 +670,6 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 10,
     damping: float = 0.85,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """PageRank over the undirected interaction graph, fixed-iteration
     power method (deterministic — no convergence test, so two engines
@@ -738,9 +680,9 @@ def pagerank(
     Every node in `edges` has degree >= 1 after symmetrization, so
     there is no dangling mass. :func:`_power_rounds` with unit weights
     and the uniform teleport: one join + one groupBy shuffle per
-    iteration over an adjacency materialized once (``spill_dir``),
-    which at cluster scale should be pre-partitioned on src so each
-    round's join is co-located. Columns: actor, rank (1e-6, desc).
+    iteration over an adjacency materialized once, which at cluster
+    scale should be pre-partitioned on src so each round's join is
+    co-located. Columns: actor, rank (1e-6, desc).
     """
     return _power_rounds(
         edges.select("actor1", "actor2").distinct(),
@@ -748,7 +690,6 @@ def pagerank(
         None,
         damping,
         iterations,
-        spill_dir,
     )
 
 
@@ -1013,7 +954,7 @@ def label_propagation(edges: DataFrame, n_iter: int = 2) -> DataFrame:
     # upstream distinct/symmetrize subtree (n_iter-deep nesting)
     sym = symmetrize(
         edges.select("actor1", "actor2").distinct()
-    ).localCheckpoint()
+    ).transform(materialize)
     labels = (
         sym.select(F.col("src").alias("actor"))
         .distinct()
@@ -1180,7 +1121,7 @@ def _temporal_2hop_paths(
     e = (
         frame_edges.select("frame_id", "actor1", "actor2")
         .distinct()
-        .localCheckpoint()
+        .transform(materialize)
     )
     sym = e.select(
         "frame_id",
@@ -1276,7 +1217,7 @@ def widest_paths(
     """
     if hops < 1:
         raise ValueError("hops must be >= 1")
-    sym = symmetrize(weighted_edges).localCheckpoint()
+    sym = symmetrize(weighted_edges).transform(materialize)
     ring = (
         sym.where(F.col("src") == anchor)
         .groupBy(F.col("dst").alias("v"))
@@ -1752,7 +1693,7 @@ def _nbr_arrays(edges: DataFrame) -> DataFrame:
         .distinct()
         .groupBy("src")
         .agg(F.array_sort(F.collect_list("dst")).alias("nbrs"))
-        .localCheckpoint()
+        .transform(materialize)
     )
 
 
@@ -1873,7 +1814,7 @@ def sgns_negatives(
             (F.col("hi_local") + F.col("_off") - F.col("w")).alias("lo"),
             (F.col("hi_local") + F.col("_off")).alias("hi"),
         )
-        .localCheckpoint()
+        .transform(materialize)
     )
     # one-row (total, cell width) broadcast; cw = ceil(total/n_buckets)
     # in INTEGER arithmetic (div), so both sides compute identical cells
@@ -2035,7 +1976,6 @@ def temporal_walks(
     n_steps: int = 3,
     seed: str = "twalk",
     max_gap: int | None = None,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """Deterministic TIME-RESPECTING random walks (CTDNE, Nguyen et al.
     2018): each hop may only traverse an edge in a STRICTLY LATER frame
@@ -2067,14 +2007,12 @@ def temporal_walks(
     node's activity inside max_gap frames. None preserves the original
     unbounded semantics exactly.
 
-    ``spill_dir`` switches the temporal-adjacency materialization from
-    ``localCheckpoint`` (deserialized MEMORY_AND_DISK blocks — at sf3+
-    the day adjacency's hundreds of millions of rows pin the unified
-    region and starve execution memory) to write-parquet-and-read-back
-    — the cluster-correct reliable-checkpoint analogue, O(columnar
-    disk) instead of O(deserialized heap), and lineage-free for the
-    n_steps self-referencing hops. Purely physical: the result is
-    bit-identical either way (test-pinned).
+    The temporal adjacency is one :func:`~neo4j_dynagraph_spark.
+    operators.hub.materialize` barrier: at sf3+ the day adjacency's
+    hundreds of millions of rows pin the unified memory region as
+    local-checkpoint blocks, so a large run sets a checkpoint dir
+    (columnar on disk instead of deserialized heap). Purely physical:
+    the result is bit-identical either way (test-pinned).
     """
     if n_steps < 1:
         raise ValueError("n_steps must be >= 1")
@@ -2095,7 +2033,7 @@ def temporal_walks(
             F.array_sort(F.collect_list(F.struct("frame_id", "dst"))).alias("nbrs")
         )
     )
-    adj_arr = _materialize(adj_arr, spill_dir, "twalk_adj")
+    adj_arr = materialize(adj_arr)
     if max_gap is None:
         t0 = F.lit(-1).cast("long")
     else:
@@ -2163,7 +2101,7 @@ def connected_components_per_frame(
                 ),
             )
         ).alias("p"),
-    ).select("frame_id", "p.src", "p.dst").localCheckpoint()
+    ).select("frame_id", "p.src", "p.dst").transform(materialize)
     labels = _min_label_rounds(sym, ["frame_id"], max_iterations)
     return labels.select("frame_id", "actor", F.col("label").alias("component"))
 
@@ -2272,7 +2210,7 @@ def temporal_motifs(
     e = (
         frame_edges.select("frame_id", "actor1", "actor2")
         .distinct()
-        .localCheckpoint()
+        .transform(materialize)
     )
     struct_src = structure_edges if structure_edges is not None else e
     tri = triangles(
@@ -2415,13 +2353,13 @@ def eigenvector_centrality(
     """
     sym = symmetrize(
         edges.select("actor1", "actor2").distinct()
-    ).localCheckpoint()
+    ).transform(materialize)
     n = sym.select("src").distinct().count()
     scores = (
         sym.select(F.col("src").alias("actor"))
         .distinct()
         .withColumn("score", F.lit(1.0 / n))
-        .localCheckpoint()
+        .transform(materialize)
     )
     (scores,) = _l1_rounds(
         [
@@ -2461,12 +2399,12 @@ def bounded_distances(edges: DataFrame, max_dist: int) -> DataFrame:
     """
     sym = symmetrize(
         edges.select("actor1", "actor2").distinct()
-    ).localCheckpoint()
+    ).transform(materialize)
     reach = (
         sym.select(F.col("src").alias("s"))
         .distinct()
         .select("s", F.col("s").alias("v"), F.lit(0).alias("d"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     return _relax_rounds(sym, reach, ["s"], F.col("d") + 1, F.min, max_dist)[-1]
 
@@ -2622,7 +2560,7 @@ def betweenness_centrality(
 
     Barriers: the symmetrized edges, the sources, every forward layer
     and every backward dependency frame pass through
-    :func:`_counted_barrier` — one job each, which checkpoints the
+    :func:`counted_barrier` — one job each, which checkpoints the
     frame (so layer i never re-executes layers 1..i-1), counts its
     rows, and broadcast-hints it when the measured size fits the
     session's broadcast threshold. The forward pass stops at the
@@ -2639,13 +2577,13 @@ def betweenness_centrality(
     estimate is replayable. Columns: actor, betweenness (rounded
     1e-6, desc).
     """
-    sym, _ = _counted_barrier(
+    sym, _ = counted_barrier(
         symmetrize(edges.select("actor1", "actor2").distinct())
     )
     seed_nodes = sym.select(F.col("src").alias("s")).distinct()
     if sources is not None:
         seed_nodes = seed_nodes.join(sources, "s")
-    layer, n = _counted_barrier(
+    layer, n = counted_barrier(
         seed_nodes.select(
             "s",
             F.col("s").alias("v"),
@@ -2665,7 +2603,7 @@ def betweenness_centrality(
             .groupBy("s", F.col("dst").alias("v"))
             .agg(F.sum("sigma").alias("sigma"))
         )
-        layer, n = _counted_barrier(
+        layer, n = counted_barrier(
             expanded.join(seen, ["s", "v"], "left_anti")
         )
         if n:
@@ -2700,7 +2638,7 @@ def betweenness_centrality(
                 ).alias("acc")
             )
         )
-        delta, _ = _counted_barrier(
+        delta, _ = counted_barrier(
             u_layer.join(acc, ["s", "v"], "left").select(
                 "s",
                 "v",
@@ -2764,7 +2702,7 @@ def rich_club(edges: DataFrame, ks: list[int]) -> DataFrame:
         symmetrize(e)
         .groupBy(F.col("src").alias("actor"))
         .agg(F.count(F.lit(1)).alias("degree"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     d1 = deg.select(
         F.col("actor").alias("actor1"), F.col("degree").alias("deg1")
@@ -2817,7 +2755,6 @@ def kmv_neighborhood(
     edges: DataFrame,
     k: int = 16,
     max_dist: int = 4,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """Approximate neighborhood function N(d) via per-node KMV
     sketches — HyperANF (Boldi, Rosa & Vigna 2011) with KMV counters
@@ -2852,11 +2789,7 @@ def kmv_neighborhood(
     from neo4j_dynagraph_spark import functions as dfn
     from neo4j_dynagraph_spark.operators.sketch import _TWO_60
 
-    sym = _materialize(
-        symmetrize(edges.select("actor1", "actor2").distinct()),
-        spill_dir,
-        "anf_sym",
-    )
+    sym = materialize(symmetrize(edges.select("actor1", "actor2").distinct()))
     u = (
         dfn.hash64(F.concat(F.lit("anf:"), F.col("v").cast("string"))) + 1
     ) / F.lit(_TWO_60)
@@ -2875,7 +2808,7 @@ def kmv_neighborhood(
         sym.select(F.col("src").alias("v"))
         .distinct()
         .select("v", F.array(u).alias("us"))
-        .localCheckpoint()
+        .transform(materialize)
     )
 
     def union_prune(us: Column) -> Column:
@@ -2932,7 +2865,7 @@ def shortest_paths_weighted(
     """
     sym = symmetrize(
         edges.select("actor1", "actor2", "cost")
-    ).localCheckpoint()
+    ).transform(materialize)
     dist = (
         sym.sparkSession.createDataFrame(
             [(int(source),)], "v long"
@@ -2976,7 +2909,7 @@ def neighbor_sampling(
 
     sym = symmetrize(
         edges.select("actor1", "actor2").distinct()
-    ).localCheckpoint()
+    ).transform(materialize)
     if seeds is None:
         seeds = sym.select(F.col("src").alias("seed")).distinct()
     frontier = seeds.select("seed", F.col("seed").alias("v"))
@@ -3002,7 +2935,7 @@ def neighbor_sampling(
             .select(
                 "seed", F.lit(hop).alias("hop"), "src", "dst"
             )
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
         sampled.append(block)
         frontier = block.select("seed", F.col("dst").alias("v")).distinct()
@@ -3039,12 +2972,12 @@ def temporal_closeness(
     """
     sym = symmetrize(
         frame_edges.select("frame_id", "actor1", "actor2").distinct()
-    ).localCheckpoint()
+    ).transform(materialize)
     seeds = sym.select(F.col("src").alias("s")).distinct()
     # every source departs itself at any time (t = -1)
     state = seeds.select(
         "s", F.col("s").alias("v"), F.lit(-1).cast("long").alias("t")
-    ).localCheckpoint()
+    ).transform(materialize)
     arrival = _relax_rounds(sym, state, ["s"], _arrival_step(), F.min, max_hops)[-1]
     w0 = sym.agg(F.min("frame_id").cast("long").alias("w0"))
     return (
@@ -3090,13 +3023,13 @@ def temporal_closeness_sampled(
     (scaled harmonic sum, round 6; desc)."""
     sym = symmetrize(
         frame_edges.select("frame_id", "actor1", "actor2").distinct()
-    ).localCheckpoint()
+    ).transform(materialize)
     nodes = sym.select(F.col("src").alias("s")).distinct()
-    seeds = nodes.join(sources, "s").localCheckpoint()
+    seeds = nodes.join(sources, "s").transform(materialize)
     # every source departs itself at any time (t = -1)
     state = seeds.select(
         "s", F.col("s").alias("v"), F.lit(-1).cast("long").alias("t")
-    ).localCheckpoint()
+    ).transform(materialize)
     arrival = _relax_rounds(sym, state, ["s"], _arrival_step(), F.min, max_hops)[-1]
     w0 = sym.agg(F.min("frame_id").cast("long").alias("w0"))
     nv = nodes.agg(F.count(F.lit(1)).cast("double").alias("nv"))
@@ -3153,7 +3086,7 @@ def node_minhash_similarity(
 
     sym = symmetrize(
         edges.select("actor1", "actor2").distinct()
-    ).localCheckpoint()
+    ).transform(materialize)
     sh = sym.select(
         F.col("src").alias("doc_id"),
         F.concat(F.lit("nb:"), F.col("dst").cast("string")).alias(
@@ -3225,8 +3158,8 @@ def luby_mis(edges: DataFrame, rounds: int = 6) -> DataFrame:
 
     sym = symmetrize(
         edges.select("actor1", "actor2").distinct()
-    ).localCheckpoint()
-    active = sym.select(F.col("src").alias("v")).distinct().localCheckpoint()
+    ).transform(materialize)
+    active = sym.select(F.col("src").alias("v")).distinct().transform(materialize)
     decided = []
     for r in range(1, rounds + 1):
         draws = active.select(
@@ -3234,7 +3167,7 @@ def luby_mis(edges: DataFrame, rounds: int = 6) -> DataFrame:
             dfn.hash64(
                 F.concat(F.lit(f"mis:{r}:"), F.col("v").cast("string"))
             ).alias("dr"),
-        ).localCheckpoint()
+        ).transform(materialize)
         d_src = draws.select(
             F.col("v").alias("src"), F.col("dr").alias("dr_src")
         )
@@ -3248,14 +3181,14 @@ def luby_mis(edges: DataFrame, rounds: int = 6) -> DataFrame:
             .select(F.col("src").alias("v"))
             .distinct()
         )
-        winners = active.join(blocked, "v", "left_anti").localCheckpoint()
+        winners = active.join(blocked, "v", "left_anti").transform(materialize)
         dominated = (
             sym.join(winners.select(F.col("v").alias("src")), "src")
             .select(F.col("dst").alias("v"))
             .distinct()
             .join(active, "v")
             .join(winners, "v", "left_anti")
-            .localCheckpoint()
+            .transform(materialize)
         )
         decided.append(
             winners.select(
@@ -3272,7 +3205,7 @@ def luby_mis(edges: DataFrame, rounds: int = 6) -> DataFrame:
         active = (
             active.join(winners, "v", "left_anti")
             .join(dominated, "v", "left_anti")
-            .localCheckpoint()
+            .transform(materialize)
         )
     out = decided[0]
     for frame in decided[1:]:
@@ -3312,7 +3245,7 @@ def densest_subgraph(edges: DataFrame, rounds: int = 8) -> DataFrame:
     Columns: round, n_nodes, n_edges, density (round 6), is_best
     (density equals the max over emitted rounds).
     """
-    e = edges.select("actor1", "actor2").distinct().localCheckpoint()
+    e = edges.select("actor1", "actor2").distinct().transform(materialize)
     stats = []
     for r in range(1, rounds + 1):
         deg = (
@@ -3346,7 +3279,7 @@ def densest_subgraph(edges: DataFrame, rounds: int = 8) -> DataFrame:
             )
             .join(survivors.select(F.col("v").alias("actor2")), "actor2")
             .select("actor1", "actor2")
-            .localCheckpoint()
+            .transform(materialize)
         )
     out = stats[0]
     for frame in stats[1:]:
@@ -3412,7 +3345,7 @@ def link_prediction_eval(
         "actor2",
         "score",
         F.coalesce(F.col("label"), F.lit(0)).cast("long").alias("label"),
-    ).localCheckpoint()
+    ).transform(materialize)
     hist = lab.groupBy("score").agg(
         F.count(F.lit(1)).alias("cnt"), F.sum("label").alias("pos")
     )
@@ -3512,13 +3445,13 @@ def hits_bipartite(presence: DataFrame, iterations: int = 8) -> DataFrame:
             f"hits_bipartite needs iterations >= 1 (got {iterations}): "
             "the authority vector only exists after the first half-step"
         )
-    inc = presence.select("frame_id", "actor").distinct().localCheckpoint()
+    inc = presence.select("frame_id", "actor").distinct().transform(materialize)
     n_a = inc.select("actor").distinct().count()
     hub = (
         inc.select("actor")
         .distinct()
         .withColumn("h", F.lit(1.0 / n_a))
-        .localCheckpoint()
+        .transform(materialize)
     )
     auth, hub = _l1_rounds(
         [
@@ -3729,7 +3662,6 @@ def _si_state(
     seed_mod: int,
     p10: int,
     max_hops: int,
-    spill_dir: str | None,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared SI core: the coin-filtered contact stream and the
     converged (v, t) earliest-infection state — consumed by
@@ -3741,15 +3673,15 @@ def _si_state(
         frame_edges.select("frame_id", "actor1", "actor2").distinct()
     )
     trans = sym.where(_si_coin() < p10)
-    # the coin-filtered contact stream is E-sized: the family's
-    # _materialize/spill_dir contract applies (SCALE.md sf1 epidemic
-    # postmortem: lingering E-sized deserialized blocks from one
-    # query starve the NEXT query's heap in a shared session)
-    trans = _materialize(trans, spill_dir, "si_trans")
+    # the coin-filtered contact stream is E-sized: its own barrier
+    # (SCALE.md sf1 epidemic postmortem: lingering E-sized local-
+    # checkpoint blocks from one query starve the NEXT query's heap in
+    # a shared session; a checkpoint dir keeps them on disk)
+    trans = materialize(trans)
     nodes = sym.select("src").distinct()
     state = nodes.where(_si_seed(seed_mod)).select(
         F.col("src").alias("v"), F.lit(-1).cast("long").alias("t")
-    ).localCheckpoint()
+    ).transform(materialize)
     state = _relax_rounds(trans, state, [], _arrival_step(), F.min, max_hops)[-1]
     return trans, state
 
@@ -3760,7 +3692,6 @@ def si_spread(
     p10: int = 3,
     max_hops: int = 6,
     bucket_frames: int = 4,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """Deterministic SI epidemic over time-respecting contacts — the
     SocioPatterns domain's headline simulation (the reference's data
@@ -3791,7 +3722,7 @@ def si_spread(
     """
     from pyspark.sql import Window
 
-    trans, state = _si_state(frame_edges, seed_mod, p10, max_hops, spill_dir)
+    trans, state = _si_state(frame_edges, seed_mod, p10, max_hops)
     curve = state.groupBy(
         F.when(F.col("t") < 0, F.lit(-1))
         .otherwise(F.floor(F.col("t") / bucket_frames))
@@ -3836,7 +3767,7 @@ def wl_refinement(edges: DataFrame, rounds: int = 3) -> DataFrame:
 
     Barriers: the symmetrized edges and every round's colors (the
     rounds are :func:`_wl_rounds` with no keys) pass through
-    :func:`_counted_barrier` — one counted job per round, and the
+    :func:`counted_barrier` — one counted job per round, and the
     frame comes back broadcast-hinted when its measured size fits the
     session's broadcast threshold, so the next round's joins plan as
     broadcasts instead of shuffles sized by the static estimate. The
@@ -3846,7 +3777,7 @@ def wl_refinement(edges: DataFrame, rounds: int = 3) -> DataFrame:
     class_size (nodes sharing it; 1 = structurally unique), ordered
     by actor.
     """
-    sym, _ = _counted_barrier(
+    sym, _ = counted_barrier(
         symmetrize(edges.select("actor1", "actor2").distinct())
     )
     colors = _wl_rounds(sym, [], rounds)
@@ -3865,7 +3796,6 @@ def si_attack_rates(
     seed_mod: int = 20,
     p10_grid: tuple[int, ...] = (1, 2, 3, 5, 8),
     max_hops: int = 6,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """Attack rate vs transmissibility — the epidemic-threshold SWEEP
     completing the SI family (:func:`si_spread` is one operating
@@ -3889,12 +3819,10 @@ def si_attack_rates(
     1e-6 grid. Columns: p10, n_seeds, n_infected, attack_rate
     (ordered by p10).
     """
-    sym = _materialize(
+    sym = materialize(
         symmetrize(
             frame_edges.select("frame_id", "actor1", "actor2").distinct()
-        ),
-        spill_dir,
-        "sit_sym",
+        )
     )
     grid = sym.sparkSession.createDataFrame(
         [(int(p),) for p in p10_grid], "p10 long"
@@ -3906,8 +3834,8 @@ def si_attack_rates(
         .select("p10", "frame_id", "src", "dst")
     )
     # replicated into ~sum(p10)/10 lanes: the heaviest E-sized frame
-    # in the family — the spill_dir knob matters here first
-    trans = _materialize(trans, spill_dir, "sit_trans")
+    # in the family — a checkpoint dir matters here first
+    trans = materialize(trans)
     nodes = sym.select("src").distinct()
     seeds = nodes.where(_si_seed(seed_mod))
     state = (
@@ -3917,7 +3845,7 @@ def si_attack_rates(
             F.col("src").alias("v"),
             F.lit(-1).cast("long").alias("t"),
         )
-        .localCheckpoint()
+        .transform(materialize)
     )
     state = _relax_rounds(
         trans, state, ["p10"], _arrival_step(), F.min, max_hops
@@ -3978,11 +3906,11 @@ def influence_seeds(edges: DataFrame, k: int = 8, p10: int = 3) -> DataFrame:
     """
     sym = symmetrize(
         edges.select("actor1", "actor2").distinct()
-    ).localCheckpoint()
+    ).transform(materialize)
     deg = (
         sym.groupBy(F.col("src").alias("actor"))
         .agg(F.count(F.lit(1)).cast("long").alias("d"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     chosen = deg.sparkSession.createDataFrame(
         [], "round long, actor long, degree long, dd10 long"
@@ -4025,7 +3953,7 @@ def influence_seeds(edges: DataFrame, k: int = 8, p10: int = 3) -> DataFrame:
                 "dd10",
             )
         )
-        chosen = chosen.unionByName(pick).localCheckpoint()
+        chosen = chosen.unionByName(pick).transform(materialize)
     return chosen.orderBy("round")
 
 
@@ -4034,7 +3962,6 @@ def si_offspring(
     seed_mod: int = 20,
     p10: int = 3,
     max_hops: int = 6,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """Who-infected-whom attribution over the :func:`si_spread`
     outbreak: each infected node's PARENT is the smallest-id earlier-
@@ -4054,7 +3981,7 @@ def si_offspring(
     (over ALL infected-or-seed nodes; k=0 rows included), ordered by
     n_offspring.
     """
-    trans, state = _si_state(frame_edges, seed_mod, p10, max_hops, spill_dir)
+    trans, state = _si_state(frame_edges, seed_mod, p10, max_hops)
     vt = state.select("v", "t")
     cand = (
         vt.where(F.col("t") >= 0)
@@ -4090,7 +4017,6 @@ def si_immunized(
     seed_mod: int = 20,
     p10: int = 3,
     max_hops: int = 6,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """Targeted-immunization EVALUATION — the epidemic family's
     closing loop: re-run the :func:`si_spread` outbreak under three
@@ -4114,14 +4040,12 @@ def si_immunized(
     n_infected, attack_rate (ordered by policy)."""
     from neo4j_dynagraph_spark import functions as dfn
 
-    sym = _materialize(
+    sym = materialize(
         symmetrize(
             frame_edges.select("frame_id", "actor1", "actor2").distinct()
-        ),
-        spill_dir,
-        "sii_sym",
+        )
     )
-    nodes = sym.select("src").distinct().localCheckpoint()
+    nodes = sym.select("src").distinct().transform(materialize)
     targeted = influence_seeds(frame_edges, k=k, p10=p10).select(
         F.lit("targeted").alias("policy"), F.col("actor").alias("rm")
     )
@@ -4133,7 +4057,7 @@ def si_immunized(
         .limit(k)
         .select(F.lit("random").alias("policy"), F.col("src").alias("rm"))
     )
-    removed = targeted.unionByName(rand).localCheckpoint()
+    removed = targeted.unionByName(rand).transform(materialize)
     lanes = sym.sparkSession.createDataFrame(
         [("baseline",), ("random",), ("targeted",)], "policy string"
     )
@@ -4156,7 +4080,7 @@ def si_immunized(
         )
         .select("policy", "frame_id", "src", "dst")
     )
-    trans = _materialize(trans, spill_dir, "sii_trans")
+    trans = materialize(trans)
     seeds = (
         nodes.where(_si_seed(seed_mod))
         .crossJoin(broadcast(lanes))
@@ -4170,7 +4094,7 @@ def si_immunized(
             F.col("src").alias("v"),
             F.lit(-1).cast("long").alias("t"),
         )
-        .localCheckpoint()
+        .transform(materialize)
     )
     state = _relax_rounds(
         trans, seeds, ["policy"], _arrival_step(), F.min, max_hops
@@ -4233,7 +4157,6 @@ def wl_day_similarity(
     frame_edges: DataFrame,
     rounds: int = 2,
     frames_per_day: int = 24,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """GRAPH-LEVEL near-duplicate detection across the month's daily
     contact graphs — the WL subtree kernel applied as dedup (the
@@ -4266,15 +4189,13 @@ def wl_day_similarity(
         )
         .distinct()
     )
-    # month-wide day-keyed edges are E-sized x days: the family's
-    # spill_dir contract applies (at sf1 the saturated month is
-    # ~1.2G sym rows — past localCheckpoint's comfortable range)
-    sym = _materialize(
+    # month-wide day-keyed edges are E-sized x days (at sf1 the
+    # saturated month is ~1.2G sym rows — past a local checkpoint's
+    # comfortable range; a checkpoint dir keeps them on disk)
+    sym = materialize(
         symmetrize(he.select("day", "actor1", "actor2")).select(
             "day", "src", "dst"
-        ),
-        spill_dir,
-        "wld_sym",
+        )
     )
     colors = _wl_rounds(sym, ["day"], rounds)
     hist = colors.groupBy("day", "color").agg(
@@ -4366,7 +4287,7 @@ def temporal_pagerank(
     e = (
         frame_edges.select("frame_id", "actor1", "actor2")
         .distinct()
-        .localCheckpoint()
+        .transform(materialize)
     )
     sym = (
         e.select("frame_id", F.col("actor1").alias("src"), F.col("actor2").alias("dst"))
@@ -4377,7 +4298,7 @@ def temporal_pagerank(
                 F.col("actor1").alias("dst"),
             )
         )
-        .localCheckpoint()
+        .transform(materialize)
     )
     actors = sym.select(F.col("src").alias("actor")).distinct()
     nv = actors.agg(F.count(F.lit(1)).cast("long").alias("nv"))
@@ -4389,7 +4310,7 @@ def temporal_pagerank(
             "actor",
             F.round(F.lit(1e9) / F.col("nv")).cast("long").alias("r"),
         )
-        .localCheckpoint()
+        .transform(materialize)
     )
     for fid in sorted(frame_ids):
         ef = sym.where(F.col("frame_id") == fid)
@@ -4412,7 +4333,7 @@ def temporal_pagerank(
             .unionByName(recv)
             .groupBy("actor")
             .agg(F.sum("r").alias("r"))
-            .localCheckpoint()
+            .transform(materialize)
         )
     return (
         r.select("actor", F.round(F.col("r") / F.lit(1e9), 6).alias("tpr"))

@@ -34,6 +34,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from neo4j_dynagraph_spark import functions as dfn
+from neo4j_dynagraph_spark.operators.hub import materialize
 
 DEFAULT_DELTA = 3600  # engine default frame width for the events table, seconds
 
@@ -76,12 +77,12 @@ def salted_equi_join(
     if how not in ("inner", "left"):
         raise ValueError(f"salted join supports inner/left, got {how}")
     if hot_keys is not None:
-        # localCheckpoint: the hot-key set is referenced three times
+        # one barrier: the hot-key set is referenced three times
         # (left semi, left anti, right semi) — without materializing
         # it once, each reference re-runs the derivation (at scale,
         # three full scans of the pre-count input)
         hot = F.broadcast(
-            hot_keys.select(*keys).distinct().localCheckpoint()
+            hot_keys.select(*keys).distinct().transform(materialize)
         )
         left_hot = left.join(hot, keys, "semi")
         left_cold = left.join(hot, keys, "left_anti")

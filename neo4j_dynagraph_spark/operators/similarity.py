@@ -21,8 +21,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from neo4j_dynagraph_spark import functions as dfn
-from neo4j_dynagraph_spark.operators.hub import checkpoint_hub
+from neo4j_dynagraph_spark.operators.hub import checkpoint_hub, materialize
 
 _DOT = "aggregate(zip_with(qv, v, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
 _NORM = "sqrt(aggregate(transform({c}, x -> x * x), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x))"
@@ -720,7 +719,7 @@ def pca_top_component(
                 F.col("i").alias("j"),
                 (F.col("val") / F.col("n")).alias("val"),
             )
-            .localCheckpoint()
+            .transform(materialize)
         )
     gv = (
         gram.join(vec, "j")
@@ -1047,7 +1046,7 @@ def pq_codebooks(
             # references in each pq consumer) re-executes the entire
             # unrolled training (q_pq_recall's audited plan carried
             # 44 parquet scans)
-            .localCheckpoint()
+            .transform(materialize)
         )
     return cent.select("j", "cid", F.col("_cv").alias("cv"))
 
@@ -1418,14 +1417,14 @@ def mf_rank1(
     rn = (
         r.crossJoin(broadcast(rmax))
         .select("cust", "part", (F.col("r") / F.col("rmax")).alias("rn"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     u = rn.select("cust").distinct().select(
         "cust", F.lit(0.1).cast("double").alias("u")
-    ).localCheckpoint()
+    ).transform(materialize)
     v = rn.select("part").distinct().select(
         "part", F.lit(0.1).cast("double").alias("v")
-    ).localCheckpoint()
+    ).transform(materialize)
     for _ in range(steps):
         j = (
             rn.join(u, "cust")
@@ -1462,7 +1461,7 @@ def mf_rank1(
                     * (F.col("g") - F.lit(reg) * F.col("u_old"))
                 ).alias("u"),
             )
-            .localCheckpoint()
+            .transform(materialize)
         )
         vn = (
             j.groupBy("part")
@@ -1475,7 +1474,7 @@ def mf_rank1(
                     * (F.col("g") - F.lit(reg) * F.col("v_old"))
                 ).alias("v"),
             )
-            .localCheckpoint()
+            .transform(materialize)
         )
         u, v = un, vn
     return u, v

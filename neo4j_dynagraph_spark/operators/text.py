@@ -15,7 +15,7 @@ from pyspark.sql import Column, DataFrame
 
 from neo4j_dynagraph_spark import functions as dfn
 from neo4j_dynagraph_spark.operators.dedup import shingles_df, tokens_df
-from neo4j_dynagraph_spark.operators.hub import checkpoint_hub
+from neo4j_dynagraph_spark.operators.hub import checkpoint_hub, materialize
 
 # tiny, deterministic stopword profiles for the heuristic language-ID
 LANG_PROFILES: dict[str, tuple[str, ...]] = {
@@ -1086,7 +1086,7 @@ def _bpe_fit(
                 F.concat("left_sym", "right_sym").alias("merged"),
                 "weight",
             )
-            .localCheckpoint()
+            .transform(materialize)
         )
         bests.append(best)
         if r < n_merges or apply_last:
@@ -1105,7 +1105,7 @@ def _bpe_fit(
                         merge_step,
                     ).alias("s"),
                 )
-                .localCheckpoint()
+                .transform(materialize)
             )
     out = bests[0]
     for b in bests[1:]:
@@ -1316,7 +1316,7 @@ def temperature_mix_from_catalog(
     c = (
         docs.groupBy(F.col(source_col).alias("source"))
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     tot = c.agg(
         F.sum("n").cast("double").alias("total"),
@@ -1342,7 +1342,7 @@ def temperature_mix_from_catalog(
                 (F.col("target") / F.col("share")) / F.col("mr"), 6
             ).alias("rate"),
         )
-        .localCheckpoint()
+        .transform(materialize)
     )
     u = (
         dfn.hash64(F.concat(F.lit("temp:"), F.col("doc_id").cast("string")))
@@ -1711,7 +1711,7 @@ def train_quality_probe(
     labels = gopher_rules(docs, text_col).select(
         "doc_id", F.col("passed").cast("double").alias("y")
     )
-    train = feats.join(labels, "doc_id").localCheckpoint()
+    train = feats.join(labels, "doc_id").transform(materialize)
     # one row in one split: no empty tasks, and one plan on any core count
     w = docs.sparkSession.range(1, numPartitions=1).select(
         F.lit(0.0).alias("b"),
@@ -1769,7 +1769,7 @@ def train_quality_probe(
                         for f in _PROBE_FEATS
                     ],
                 )
-                .localCheckpoint()
+                .transform(materialize)
             )
     out = log_rows[0]
     for frame in log_rows[1:]:
@@ -1799,8 +1799,8 @@ def bigram_ppl(
     Columns: source, n_docs, mean_logprob, mean_ppl (round 6).
     """
     pr = bigram_pairs(docs, text_col)
-    train = pr.where(F.col("source") == train_source).localCheckpoint()
-    vocab = train.select(F.col("w").alias("tok")).distinct().localCheckpoint()
+    train = pr.where(F.col("source") == train_source).transform(materialize)
+    vocab = train.select(F.col("w").alias("tok")).distinct().transform(materialize)
     cb = train.groupBy("v", "w").agg(F.count(F.lit(1)).alias("cb"))
     cu = train.groupBy("v").agg(F.count(F.lit(1)).alias("cu"))
     return bigram_score(pr, vocab, cb, cu, alpha)
@@ -1978,8 +1978,8 @@ def domain_weights(
     one-row frames. Columns: source, n_docs, token_share, excess_nll,
     weight (round 6; weight sums to 1 up to rounding)."""
     pr = bigram_pairs(docs, text_col)
-    train = pr.where(F.col("source") == train_source).localCheckpoint()
-    vocab = train.select(F.col("w").alias("tok")).distinct().localCheckpoint()
+    train = pr.where(F.col("source") == train_source).transform(materialize)
+    vocab = train.select(F.col("w").alias("tok")).distinct().transform(materialize)
     cb = train.groupBy("v", "w").agg(F.count(F.lit(1)).alias("cb"))
     cu = train.groupBy("v").agg(F.count(F.lit(1)).alias("cu"))
     per_doc = bigram_doc_scores(pr, vocab, cb, cu, alpha)
@@ -2009,7 +2009,7 @@ def domain_weights_from_scores(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_tok").cast("long").alias("n_tokens"),
         F.sum(F.col("mlp_i6").cast("decimal(38,0)")).alias("s_mlp"),
-    ).localCheckpoint()
+    ).transform(materialize)
     ref = per_src.where(F.col("source") == train_source).select(
         F.col("s_mlp").alias("ref_num"),
         F.col("n_docs").alias("ref_den"),
@@ -2114,7 +2114,7 @@ def unimax_mix(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("ws_tokens").cast("long").alias("n_tokens"),
         )
-        .localCheckpoint()
+        .transform(materialize)
     )
     return unimax_from_counts(per, epoch_cap, budget_num, budget_den)
 

@@ -6,31 +6,11 @@ verbatim. Registered into the shared REGISTRY on import via @query.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from neo4j_dynagraph_spark.operators import (  # noqa: F401
-    dedup,
-    graph,
-    multimodal,
-    similarity,
-    text,
-)
-from neo4j_dynagraph_spark.queries import (  # noqa: F401
-    ACTOR1,
-    _EDGES_FROM_P,
-    _FID,
-    DAY,
-    DELTA,
-    HOUR,
-    MONTH,
-    SPELL_LEN,
-    YEAR,
-    _edges,
-    _presence_sql,
-    query,
-)
-from neo4j_dynagraph_spark.sources.tables import load_table  # noqa: F401
+from neo4j_dynagraph_spark.operators import text
+from neo4j_dynagraph_spark.queries import DAY, MONTH, YEAR
+from neo4j_dynagraph_spark.sources.tables import load_table
 
 
 _TOK = "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')"

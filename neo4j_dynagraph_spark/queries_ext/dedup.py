@@ -10,39 +10,15 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from neo4j_dynagraph_spark.operators import (  # noqa: F401
-    dedup,
-    graph,
-    multimodal,
-    similarity,
-    text,
-)
-from neo4j_dynagraph_spark.queries import (  # noqa: F401
-    ACTOR1,
-    _EDGES_FROM_P,
-    _FID,
-    DAY,
-    DELTA,
-    HOUR,
-    MONTH,
-    SPELL_LEN,
-    YEAR,
-    _edges,
-    _presence_sql,
-    query,
-)
-from neo4j_dynagraph_spark.operators.hub import checkpoint_hub  # noqa: F401
-from neo4j_dynagraph_spark.sources.tables import load_table  # noqa: F401
+from neo4j_dynagraph_spark.operators import dedup, graph, text
+from neo4j_dynagraph_spark.queries import query
+from neo4j_dynagraph_spark.operators.hub import checkpoint_hub
 
-from neo4j_dynagraph_spark.queries_ext._shared import (  # noqa: F401
-    _BM25_TERMS,
-    _DAY_WHERE,
+from neo4j_dynagraph_spark.queries_ext._shared import (
     _H64,
     _SH_CTE,
     _TOK,
     _TOK_CTE,
-    _bm25_term_sql,
-    _bm25_tf_sql,
     _docs,
 )
 

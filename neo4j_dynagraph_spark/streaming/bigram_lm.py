@@ -32,6 +32,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from neo4j_dynagraph_spark.operators.hub import materialize
 from neo4j_dynagraph_spark.operators.text import bigram_pairs, bigram_score
 from neo4j_dynagraph_spark.streaming.staging import (
     cleanup_on_error,
@@ -111,7 +112,7 @@ def _drain_counts(
     stream = reader.parquet(docs_path)
 
     def count_batch(batch_df: DataFrame, batch_id: int) -> None:
-        docs = batch_df.select("doc_id", "source", text_col).localCheckpoint()
+        docs = batch_df.select("doc_id", "source", text_col).transform(materialize)
         doc_store.merge(
             docs.select(
                 F.lit(batch_id).cast("long").alias("batch_id"), "*"

@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from neo4j_dynagraph_spark.operators.hub import materialize
+
 
 def snapshot_and_drop(spark: SparkSession, sink_name: str) -> DataFrame:
     """Materialize a terminated memory sink and release it.
@@ -34,7 +36,7 @@ def snapshot_and_drop(spark: SparkSession, sink_name: str) -> DataFrame:
     :func:`drain_stream_to_parquet` instead, which never routes data
     through the driver.
     """
-    out = spark.table(sink_name).localCheckpoint(eager=True)
+    out = materialize(spark.table(sink_name))
     spark.catalog.dropTempView(sink_name)
     return out
 

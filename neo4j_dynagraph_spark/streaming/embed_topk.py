@@ -36,6 +36,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from neo4j_dynagraph_spark.operators.hub import materialize
 from neo4j_dynagraph_spark.operators.similarity import _DOT, _NORM
 from neo4j_dynagraph_spark.streaming.staging import (
     cleanup_on_error,
@@ -126,7 +127,7 @@ def stream_embed_topk(
             "vec_id",
             F.col(vec_col).cast("array<double>").alias("v"),
             is_query.alias("_q"),
-        ).localCheckpoint()
+        ).transform(materialize)
         # 1. the batch joins the index (replay overwrites its own rows)
         vec_store.merge(
             vecs.select(
@@ -147,7 +148,7 @@ def stream_embed_topk(
         )
         if old_q is not None:
             new_q = new_q.join(old_q.select("qid"), "qid", "left_anti")
-        new_q = new_q.localCheckpoint()
+        new_q = new_q.transform(materialize)
         if new_q.count() > 0:
             corpus = vec_store.read().select("vec_id", "v")
             topk_store.merge(_scores(corpus, new_q))

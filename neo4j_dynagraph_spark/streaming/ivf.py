@@ -38,6 +38,7 @@ import uuid
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from neo4j_dynagraph_spark.operators.hub import materialize
 from neo4j_dynagraph_spark.operators.similarity import ivf_assign
 from neo4j_dynagraph_spark.streaming.staging import (
     cleanup_on_error,
@@ -107,7 +108,7 @@ def stream_ivf_assign(
     # freeze the codebook once — foreachBatch re-evaluates closures
     # per batch, and the contract is that every batch sees the SAME
     # centroids regardless of what the codebook frame reads from
-    cent = centroids.localCheckpoint(eager=True)
+    cent = centroids.transform(materialize)
 
     emb_path = stage_single_file(emb_path, into=src_stage)
     reader = spark.readStream.schema(schema)

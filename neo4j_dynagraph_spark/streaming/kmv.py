@@ -26,8 +26,6 @@ sketch.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 

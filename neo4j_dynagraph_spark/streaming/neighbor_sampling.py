@@ -41,6 +41,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from neo4j_dynagraph_spark import functions as dfn
+from neo4j_dynagraph_spark.operators.hub import materialize
 from neo4j_dynagraph_spark.operators.ingest import DEFAULT_DELTA
 from neo4j_dynagraph_spark.streaming.staging import (
     cleanup_on_error,
@@ -136,7 +137,7 @@ def stream_neighbor_sampling(
         old = pres.read()
         if old is not None:
             newp = newp.join(old, ["frame_id", "actor"], "left_anti")
-        newp = newp.localCheckpoint()
+        newp = newp.transform(materialize)
         if newp.count() == 0:
             return
         # Commit order matters for crash-replay exactly-once: the
@@ -163,7 +164,7 @@ def stream_neighbor_sampling(
             pairs.select(
                 F.col("dst").alias("src"), F.col("src").alias("dst")
             )
-        ).distinct().localCheckpoint()
+        ).distinct().transform(materialize)
         for hop, lat in enumerate(lattices, start=1):
             lat.merge(
                 sym_new.select("src", "dst", _hop_hash(hop).alias("h"))

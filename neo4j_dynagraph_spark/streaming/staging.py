@@ -21,6 +21,8 @@ import threading
 
 from pyspark.sql import DataFrame
 
+from neo4j_dynagraph_spark.operators.hub import materialize
+
 # Ephemeral roots created by drain_dirs that have not yet been cleaned
 # up by finalize_drain. Thread-local so concurrent drains (e.g. a
 # parallel test runner) never free each other's roots. Consumed by
@@ -151,9 +153,6 @@ def finalize_drain(df: DataFrame, ephemeral_root: str | None) -> DataFrame:
     lazily — its store stays on disk by design."""
     if ephemeral_root is None:
         return df
-    out = df.localCheckpoint(eager=True)
-    shutil.rmtree(ephemeral_root, ignore_errors=True)
-    roots = _pending_roots()
-    if ephemeral_root in roots:
-        roots.remove(ephemeral_root)
+    out = materialize(df)
+    release_root(ephemeral_root)
     return out

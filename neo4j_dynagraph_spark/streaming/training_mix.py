@@ -40,6 +40,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from neo4j_dynagraph_spark import functions as dfn
+from neo4j_dynagraph_spark.operators.hub import materialize
 from neo4j_dynagraph_spark.operators.text import (
     pack_token_counts,
     text_stats,
@@ -153,7 +154,7 @@ def stream_training_mix(
             toked.select("doc_id", F.explode(gram).alias("g"))
             .select("doc_id", dfn.hash64(F.col("g")).alias("gh"))
             .distinct()
-            .localCheckpoint()
+            .transform(materialize)
         )
         # the four store commits are independent of each other — run
         # them as concurrent jobs so each commit's write tail

@@ -23,6 +23,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from neo4j_dynagraph_spark.operators.hub import materialize
 from neo4j_dynagraph_spark.operators.text import (
     token_counts,
     unimax_from_counts,
@@ -119,7 +120,7 @@ def stream_unimax_mix(
                 F.sum("n_docs").cast("long").alias("n_docs"),
                 F.sum("n_tokens").cast("long").alias("n_tokens"),
             )
-            .localCheckpoint()
+            .transform(materialize)
         )
         out = unimax_from_counts(per, epoch_cap, budget_num, budget_den)
     return finalize_drain(out, eph)

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import sys
 from pathlib import Path
 
@@ -33,6 +34,24 @@ def spark():
     s = get_spark("dynagraph-tests", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture
+def reliable_mode(spark, tmp_path):
+    """A context manager: inside it the session has a checkpoint dir
+    under ``tmp_path``, so every barrier is a reliable checkpoint
+    (``hub.materialize``); on exit the dir is unset again."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def reliable():
+        sc.setCheckpointDir(str(tmp_path / "checkpoints"))
+        try:
+            yield
+        finally:
+            getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+
+    return reliable
 
 
 @pytest.fixture(scope="session")

@@ -7,9 +7,10 @@ import hashlib
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from neo4j_dynagraph_spark.operators import graph
-from neo4j_dynagraph_spark.operators.hub import checkpoint_hub, stage_corpus_scale
+from neo4j_dynagraph_spark.operators.hub import checkpoint_hub, counted_barrier
 
 # canonical edges of: triangle 1-2-3, plus path 3-4, 4-5, and edge 1-5
 EDGES = [(1, 2), (1, 3), (2, 3), (3, 4), (4, 5), (1, 5)]
@@ -101,14 +102,12 @@ def test_pagerank_matches_numpy(edges):
     assert abs(sum(rk for _, rk in rows) - 1.0) < 1e-6 * len(rows)
 
 
-def test_pagerank_spill_dir_bit_identical(edges, tmp_path):
+def test_pagerank_spill_dir_bit_identical(edges, reliable_mode):
+    # reliable checkpoints (a checkpoint dir) replaced the spill_dir
+    # parquet staging: the ranks must not depend on the mode
     a = [tuple(r) for r in graph.pagerank(edges, iterations=6).collect()]
-    b = [
-        tuple(r)
-        for r in graph.pagerank(
-            edges, iterations=6, spill_dir=str(tmp_path)
-        ).collect()
-    ]
+    with reliable_mode():
+        b = [tuple(r) for r in graph.pagerank(edges, iterations=6).collect()]
     assert a == b and len(a) == 5
 
 
@@ -186,35 +185,50 @@ def test_k_core_rounds_matches_fixpoint_when_converged(spark):
     assert r1 == {1: 3, 2: 3, 3: 3, 4: 4, 5: 1}
 
 
-def test_k_core_rounds_spill_dir_bit_identical(spark, tmp_path):
-    """The parquet path runs every round and the default path stops
-    once a round removes nothing; both give the same survivors."""
+def test_k_core_rounds_spill_dir_bit_identical(spark, reliable_mode, monkeypatch):
+    """Reliable checkpoints (the successor of the spill_dir parquet
+    path) give the default mode's survivors, and both modes stop at the
+    first round that removes nothing."""
     clique = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
     path = [(4, 5), (5, 6)]
     e = spark.createDataFrame(clique + path, "actor1 long, actor2 long")
     for rounds in (1, 4):
         a = [tuple(r) for r in graph.k_core_rounds(e, k=2, rounds=rounds).collect()]
-        b = [
-            tuple(r)
-            for r in graph.k_core_rounds(
-                e, k=2, rounds=rounds, spill_dir=str(tmp_path / f"r{rounds}")
-            ).collect()
-        ]
+        with reliable_mode():
+            b = [
+                tuple(r)
+                for r in graph.k_core_rounds(e, k=2, rounds=rounds).collect()
+            ]
         assert a == b and len(a) >= 4
+    calls = {"checkpoint": 0, "localCheckpoint": 0}
+    for name in calls:
+        orig = getattr(ClassicDataFrame, name)
+
+        def counting(self, *args, _orig=orig, _name=name, **kwargs):
+            calls[_name] += 1
+            return _orig(self, *args, **kwargs)
+
+        monkeypatch.setattr(ClassicDataFrame, name, counting)
+    with reliable_mode():
+        graph.k_core_rounds(e, k=2, rounds=10)
+    # the input, then rounds 1-3 (round 3 removes nothing), each one
+    # reliable checkpoint; no local checkpoint in this mode
+    assert calls == {"checkpoint": 4, "localCheckpoint": 0}
 
 
-def test_spill_dir_calls_do_not_share_files(spark, tmp_path):
-    """Two calls with one ``spill_dir`` on different graphs: the second
-    call must not overwrite files the first call's frame still reads."""
+def test_spill_dir_calls_do_not_share_files(spark, reliable_mode):
+    """Two calls with one checkpoint dir (the spill_dir's successor) on
+    different graphs: the second call must not overwrite files the
+    first call's frame still reads."""
     clique = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
     path = [(4, 5), (5, 6)]
     e1 = spark.createDataFrame(clique + path, "actor1 long, actor2 long")
     e2 = spark.createDataFrame(
         [(10 + a, 10 + b) for a, b in clique], "actor1 long, actor2 long"
     )
-    d = str(tmp_path)
-    first = graph.k_core_rounds(e1, k=2, rounds=2, spill_dir=d)
-    second = graph.k_core_rounds(e2, k=2, rounds=2, spill_dir=d)
+    with reliable_mode():
+        first = graph.k_core_rounds(e1, k=2, rounds=2)
+        second = graph.k_core_rounds(e2, k=2, rounds=2)
     want = [tuple(r) for r in graph.k_core_rounds(e1, k=2, rounds=2).collect()]
     assert [tuple(r) for r in first.collect()] == want
     assert second.count() == 4
@@ -476,14 +490,14 @@ def test_peel_rounds_stop_when_a_round_removes_nothing(spark, monkeypatch):
     # the bounded form runs at most `rounds` peels but stops at the
     # first round whose counted barrier sees no edge removed
     rows = []
-    barrier = graph._counted_barrier
+    barrier = graph.counted_barrier
 
     def counting(df):
         out = barrier(df)
         rows.append(out[1])
         return out
 
-    monkeypatch.setattr(graph, "_counted_barrier", counting)
+    monkeypatch.setattr(graph, "counted_barrier", counting)
     k4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
     pendant = [(3, 5), (4, 5), (4, 6), (5, 6)]
     e = spark.createDataFrame(k4 + pendant, "actor1 long, actor2 long")
@@ -1214,7 +1228,7 @@ def test_harmonic_centrality_closed_form(spark, edges):
     assert r1[1] == (3, 3.0) and r1[4] == (2, 2.0)
 
 
-def test_temporal_walks_spill_dir_bit_identical(spark, tmp_path):
+def test_temporal_walks_spill_dir_bit_identical(spark, reliable_mode):
     fe = spark.createDataFrame(
         [(0, 1, 2), (1, 2, 3), (2, 1, 3), (3, 3, 4), (5, 4, 5)],
         "frame_id long, actor1 long, actor2 long",
@@ -1223,12 +1237,12 @@ def test_temporal_walks_spill_dir_bit_identical(spark, tmp_path):
         tuple(r)
         for r in graph.temporal_walks(fe, n_steps=3, max_gap=2).collect()
     )
-    b = sorted(
-        tuple(r)
-        for r in graph.temporal_walks(
-            fe, n_steps=3, max_gap=2, spill_dir=str(tmp_path)
-        ).collect()
-    )
+    # reliable checkpoints replaced the spill_dir parquet staging
+    with reliable_mode():
+        b = sorted(
+            tuple(r)
+            for r in graph.temporal_walks(fe, n_steps=3, max_gap=2).collect()
+        )
     assert a == b and len(a) > 0
 
 
@@ -1603,14 +1617,14 @@ def test_betweenness_stops_at_first_empty_layer(spark, monkeypatch):
     # forward pass materializes layer 1 (5 sources x 4 nodes) and the
     # empty layer 2, then stops instead of running layers 3 and 4
     rows = []
-    barrier = graph._counted_barrier
+    barrier = graph.counted_barrier
 
     def counting(df):
         out = barrier(df)
         rows.append(out[1])
         return out
 
-    monkeypatch.setattr(graph, "_counted_barrier", counting)
+    monkeypatch.setattr(graph, "counted_barrier", counting)
     k5 = spark.createDataFrame(
         [(a, b) for a in range(5) for b in range(a + 1, 5)],
         "actor1 long, actor2 long",
@@ -1627,14 +1641,14 @@ def test_relax_rounds_stop_at_first_empty_frontier(spark, monkeypatch):
     # every source, round 2 improves nothing, and the loop stops there
     # instead of running the remaining rounds
     rows = []
-    barrier = graph._counted_barrier
+    barrier = graph.counted_barrier
 
     def counting(df):
         out = barrier(df)
         rows.append(out[1])
         return out
 
-    monkeypatch.setattr(graph, "_counted_barrier", counting)
+    monkeypatch.setattr(graph, "counted_barrier", counting)
     k4 = [(0, a, b) for a in range(4) for b in range(a + 1, 4)]
     fe = spark.createDataFrame(k4, "frame_id long, actor1 long, actor2 long")
     got = {r.actor: r.n_reached for r in graph.temporal_closeness(fe).collect()}
@@ -1668,20 +1682,56 @@ def test_checkpoint_hub_rejects_wide_frames(spark):
     assert checkpoint_hub(wide, max_width=9).count() == 5
 
 
-def test_stage_corpus_scale_roundtrips_fresh_each_call(spark):
-    df = spark.range(1000).select(
-        "id", F.md5(F.col("id").cast("string")).alias("h")
-    )
-    a = stage_corpus_scale(df, "t14")
-    b = stage_corpus_scale(df, "t14")
-    assert a.count() == b.count() == 1000
-    # each call stages its own directory (no cross-invocation reuse)
-    fa = a.inputFiles()[0].rsplit("/", 2)[-2]
-    fb = b.inputFiles()[0].rsplit("/", 2)[-2]
-    assert fa != fb
-    assert sorted(r["h"] for r in a.collect()) == sorted(
-        r["h"] for r in df.collect()
-    )
+def test_counted_barrier_reliable_mode_same_jobs(spark, reliable_mode, tmp_path):
+    """A counted barrier of a 1-shuffle aggregate: a reliable checkpoint
+    takes the count from its own write job, so it runs the jobs and
+    stages of the default mode's lazy local checkpoint plus count — its
+    input computed once (a lazy reliable checkpoint would recompute it
+    in a second write job)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def traced(group, n):
+        sc.setJobGroup(group, group)
+        try:
+            df = spark.range(0, n, numPartitions=4).groupBy(
+                (F.col("id") % 97).alias("k")
+            ).agg(F.count(F.lit(1)).alias("c"))
+            ck, rows = counted_barrier(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        ids = tracker.getJobIdsForGroup(group)
+        stages = sum(len(tracker.getJobInfo(j).stageIds) for j in ids)
+        return ck, rows, len(ids), stages
+
+    _, rows_a, jobs_a, stages_a = traced("barrier-default", 1000)
+    with reliable_mode():
+        ck, rows_b, jobs_b, stages_b = traced("barrier-reliable", 1001)
+    assert rows_a == rows_b == 97
+    assert jobs_b <= jobs_a and stages_b <= stages_a
+    assert ck.count() == 97
+    assert any(tmp_path.rglob("part-*"))
+
+
+def test_barriers_stay_in_hub():
+    """Every lineage barrier goes through hub.materialize: no module
+    of the package but operators/hub.py calls localCheckpoint or
+    checkpoint."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(graph.__file__).resolve().parent.parent
+    hub_py = pkg / "operators" / "hub.py"
+    offenders = [
+        f"{path.relative_to(pkg)}:{node.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != hub_py
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("localCheckpoint", "checkpoint")
+    ]
+    assert offenders == []
 
 
 def test_wedge_pairs_contract_checked_under_flag(spark, monkeypatch):

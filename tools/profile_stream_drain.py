@@ -16,10 +16,11 @@ Usage: python tools/profile_stream_drain.py [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from neo4j_dynagraph_spark import get_spark  # noqa: E402
 from neo4j_dynagraph_spark.queries import DELTA  # noqa: E402

@@ -13,10 +13,11 @@ session layout (fresh process per SF) and quote walls side by side.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from neo4j_dynagraph_spark import get_spark  # noqa: E402
 from neo4j_dynagraph_spark.queries import REGISTRY  # noqa: E402
