@@ -34,117 +34,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from neo4j_dynagraph_spark import functions as dfn
-from neo4j_dynagraph_spark.operators.hub import materialize
 
 DEFAULT_DELTA = 3600  # engine default frame width for the events table, seconds
-
-
-def salted_equi_join(
-    left: DataFrame,
-    right: DataFrame,
-    keys: list[str],
-    n_salt: int = 8,
-    how: str = "inner",
-    hot_keys: DataFrame | None = None,
-) -> DataFrame:
-    """Skew-salted equi-join, result-identical to ``left.join(right,
-    keys, how)`` for inner/left joins.
-
-    The left side gets a DETERMINISTIC salt in [0, n_salt) hashed from
-    its whole row (no rand(): rerunning a stage under task retry must
-    re-produce the same salt or Spark can duplicate/lose rows); the
-    right side is replicated once per salt value via explode. The join
-    key becomes (keys..., salt), so a hot key's build/probe work
-    scatters across n_salt tasks instead of hammering one. Output
-    volume is unchanged (salting fixes COMPUTE skew, not output skew).
-
-    ``hot_keys=None`` salts EVERYTHING: right-side volume is n_salt x.
-    Measured (tools/skew_stress.py): on a 2000-frame fixture with one
-    20k-actor hot frame, full salting made the join 10x SLOWER — the
-    32x replication of millions of COLD right rows swamps the skew
-    win. Pass ``hot_keys`` (a small DataFrame of the skewed key
-    values; broadcast) to salt ONLY those keys: cold keys join plain,
-    hot keys' right rows alone are replicated, and both regimes get
-    the fast path. This is the skew-hint pattern — the caller (or a
-    cheap pre-count, see presence_to_frame_interactions'
-    salt_hot_threshold) knows which keys are hot.
-
-    Use for big-big joins where a hot key's OUTPUT dominates a task;
-    broadcast for small dims; AQE skew-split when post-shuffle INPUT
-    partition size alone is the problem (AQE keys on shuffle bytes, so
-    it never sees a small-input/quadratic-output key).
-    """
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted join supports inner/left, got {how}")
-    if hot_keys is not None:
-        # one barrier: the hot-key set is referenced three times
-        # (left semi, left anti, right semi) — without materializing
-        # it once, each reference re-runs the derivation (at scale,
-        # three full scans of the pre-count input)
-        hot = F.broadcast(
-            hot_keys.select(*keys).distinct().transform(materialize)
-        )
-        left_hot = left.join(hot, keys, "semi")
-        left_cold = left.join(hot, keys, "left_anti")
-        right_hot = right.join(hot, keys, "semi")
-        # cold keys never match right's hot-key rows, so the full
-        # right side is safe (and cheaper than an anti-join pass)
-        cold = left_cold.join(right, keys, how)
-        return cold.unionByName(
-            salted_equi_join(left_hot, right_hot, keys, n_salt, how)
-        )
-    salt_col = "_salt"
-    if salt_col in left.columns or salt_col in right.columns:
-        # never silently overwrite (then drop) a user column
-        raise ValueError(
-            "salted_equi_join: input already has a '_salt' column; "
-            "rename it before joining"
-        )
-    # F.hash raises on MapType columns — hash only the hashable ones.
-    # Any deterministic row-derived value works as a salt; skipping
-    # unhashable columns only affects salt dispersion, not results.
-    hashable = [
-        f.name
-        for f in left.schema.fields
-        if not _contains_map_type(f.dataType)
-    ]
-    if not hashable:
-        raise ValueError(
-            "salted_equi_join: no hashable columns on the left side "
-            "to derive a deterministic salt from"
-        )
-    salt = F.pmod(F.hash(*[F.col(c) for c in hashable]), F.lit(n_salt))
-    lsalted = left.withColumn(salt_col, salt)
-    rsalted = right.withColumn(
-        salt_col, F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-    )
-    # The salt only helps if the join SHUFFLES on (keys, salt) — left
-    # a broadcast join, the probe side keeps its incoming partitioning
-    # and the hot key still hammers one task (measured: the broadcast
-    # plan ran the whole hot frame serially, salt and all). The
-    # shuffle_hash hint forces the exchange that scatters each key's
-    # probe rows across its n_salt buckets. Hint the LEFT as the
-    # build side: per-task build is then |left|/n_partitions
-    # UNREPLICATED rows, while building the exploded right would hold
-    # |right| * n_salt / n_partitions rows per task — measured as a
-    # per-task hash-map OOM once the right side is millions of rows
-    # (tools/skew_stress.py, 200k-frame fixture).
-    return lsalted.hint("shuffle_hash").join(
-        rsalted, [*keys, salt_col], how
-    ).drop(salt_col)
-
-
-def _contains_map_type(dtype) -> bool:
-    """True if dtype is or nests a MapType (unhashable for F.hash)."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    if isinstance(dtype, MapType):
-        return True
-    if isinstance(dtype, ArrayType):
-        return _contains_map_type(dtype.elementType)
-    if isinstance(dtype, StructType):
-        return any(_contains_map_type(f.dataType) for f in dtype.fields)
-    return False
 
 
 @dataclass
@@ -187,8 +78,6 @@ def events_to_presence(
 def presence_to_frame_interactions(
     presence: DataFrame,
     max_actors_per_frame: int | None = None,
-    n_salt: int | None = None,
-    salt_hot_threshold: int | None = None,
 ) -> DataFrame:
     """Self-join presence on frame_id -> co-activity edges per frame.
 
@@ -230,37 +119,9 @@ def presence_to_frame_interactions(
     right = presence.select(
         "frame_id", F.col("actor").alias("actor2"), F.col("n_events").alias("n2")
     )
-    # n_salt: scatter a hot frame's join build/probe across salt tasks
-    # (salted_equi_join) — the cap drops pathological frames, AQE splits
-    # big post-shuffle partitions, salting parallelizes one hot KEY's
-    # compute; three independent levers for three skew shapes.
-    # salt_hot_threshold targets the salt at frames with >= that many
-    # actors (one cheap O(frames)-output pre-count); without it the
-    # whole right side replicates n_salt x, which tools/skew_stress.py
-    # measured as a net LOSS on realistic mostly-cold inputs.
-    if salt_hot_threshold is not None and not n_salt:
-        # never a silent no-op: the caller asked for hot-frame
-        # protection; without a salt width it cannot be applied
-        raise ValueError(
-            "salt_hot_threshold requires n_salt — pass the salt width "
-            "(e.g. n_salt=32) or drop the threshold"
-        )
-    if n_salt and salt_hot_threshold is not None:
-        hot_frames = (
-            presence.groupBy("frame_id")
-            .agg(F.count(F.lit(1)).alias("_k"))
-            .where(F.col("_k") >= salt_hot_threshold)
-            .select("frame_id")
-        )
-        joined = salted_equi_join(
-            left, right, ["frame_id"], n_salt, hot_keys=hot_frames
-        )
-    elif n_salt:
-        joined = salted_equi_join(left, right, ["frame_id"], n_salt)
-    else:
-        joined = left.join(right, "frame_id")
     return (
-        joined.where(F.col("actor1") < F.col("actor2"))
+        left.join(right, "frame_id")
+        .where(F.col("actor1") < F.col("actor2"))
         .select(
             "frame_id",
             "actor1",

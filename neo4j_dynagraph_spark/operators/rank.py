@@ -42,7 +42,7 @@ def two_phase_rank(
     total order by the tail of ``order_cols`` or ranks are
     nondeterministic.
 
-    ``group_cols`` restarts the rank per group (the grouped form a
+    ``group_cols`` ranks each group on its own (the grouped form a
     per-stratum quota sampler needs): buckets split WITHIN each group,
     the offset prefix-sum runs per group over the tiny
     (groups x buckets) count table, and no task ever holds more than

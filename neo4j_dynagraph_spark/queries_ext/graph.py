@@ -2026,7 +2026,7 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank from the pinned anchor actors {1, 2} over
     the pinned-day interaction graph (GDS pageRank sourceNodes parity
     — random walk with restart, THE seed-centric relevance measure;
-    the seeded twin of q_pagerank): teleport mass restarts at the
+    the seeded twin of q_pagerank): teleport mass jumps back to the
     seeds, so ranks measure graph proximity to them. Fixed 10-round
     deterministic power method; the oracle unrolls all rounds with
     bit-identical interpolated constants and the full-vector LEFT-join

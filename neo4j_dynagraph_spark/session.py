@@ -95,6 +95,10 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # a reliable checkpoint's files (hub.materialize under a
+        # checkpoint dir) are deleted once its frame is garbage
+        # collected, instead of outliving the query and the process
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         # -Xlog:disable: JVM unified-logging warnings (gc,alloc under

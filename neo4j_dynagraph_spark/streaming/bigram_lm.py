@@ -27,24 +27,16 @@ and graded by its oracle.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from neo4j_dynagraph_spark.operators.hub import materialize
 from neo4j_dynagraph_spark.operators.text import bigram_pairs, bigram_score
-from neo4j_dynagraph_spark.streaming.staging import (
-    cleanup_on_error,
-    drain_dirs,
-    finalize_drain,
-    stage_single_file,
-)
+from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.training_mix import BatchRowStore
 from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
 
-@cleanup_on_error
 def stream_bigram_ppl(
     spark: SparkSession,
     docs_path: str,
@@ -63,53 +55,31 @@ def stream_bigram_ppl(
     ``store_root=None`` drains ephemerally; a persistent root keeps
     its checkpoint so re-invocations ingest only new files.
     """
-    (doc_store, vocab_store, cb_store, cu_store), eph = _drain_counts(
-        spark, docs_path, schema, train_source, text_col,
-        store_root, max_files_per_trigger,
-    )
-    docs_state = doc_store.read()
-    if docs_state is None:
-        out = spark.createDataFrame(
-            [],
-            "source string, n_docs bigint, mean_logprob double, "
-            "mean_ppl double",
+    with bounded_drain(spark, store_root) as drain:
+        state = _drain_counts(
+            drain, docs_path, schema, train_source, text_col, max_files_per_trigger
         )
-        return finalize_drain(out, eph)
-    pr, vocab, cb, cu = _read_lm_state(
-        spark, docs_state, vocab_store, cb_store, cu_store, text_col
-    )
-    return finalize_drain(bigram_score(pr, vocab, cb, cu, alpha), eph)
+        if state is None:
+            return drain.result(spark.createDataFrame(
+                [],
+                "source string, n_docs bigint, mean_logprob double, "
+                "mean_ppl double",
+            ))
+        return drain.result(bigram_score(*state, alpha))
 
 
 def _drain_counts(
-    spark, docs_path, schema, train_source, text_col,
-    store_root, max_files_per_trigger,
+    drain, docs_path, schema, train_source, text_col, max_files_per_trigger
 ):  # noqa: ANN001
     """Run the incremental bigram-LM count drain (doc / vocab / bigram
-    / context stores) and return the stores plus the ephemeral-root
-    handle — the stateful half shared by the perplexity and
-    domain-weight streaming terminals."""
-    store_root, ckpt, src_stage, eph = drain_dirs(
-        store_root, "dynagraph_bigram_"
-    )
-    cb_store = BatchRowStore(
-        spark, os.path.join(store_root, "cb"), ["batch_id", "v", "w"]
-    )
-    cu_store = BatchRowStore(
-        spark, os.path.join(store_root, "cu"), ["batch_id", "v"]
-    )
-    vocab_store = DimensionStore(
-        spark, os.path.join(store_root, "vocab"), ["tok"]
-    )
-    doc_store = BatchRowStore(
-        spark, os.path.join(store_root, "docs"), ["batch_id", "doc_id"]
-    )
-
-    docs_path = stage_single_file(docs_path, into=src_stage)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_path)
+    / context stores) and return the (pr, vocab, cb, cu) scoring inputs
+    read from them, or None for an empty stream — the stateful half
+    shared by the perplexity and domain-weight streaming terminals."""
+    spark = drain.spark
+    cb_store = BatchRowStore(spark, drain.path("cb"), ["batch_id", "v", "w"])
+    cu_store = BatchRowStore(spark, drain.path("cu"), ["batch_id", "v"])
+    vocab_store = DimensionStore(spark, drain.path("vocab"), ["tok"])
+    doc_store = BatchRowStore(spark, drain.path("docs"), ["batch_id", "doc_id"])
 
     def count_batch(batch_df: DataFrame, batch_id: int) -> None:
         docs = batch_df.select("doc_id", "source", text_col).transform(materialize)
@@ -134,17 +104,15 @@ def _drain_counts(
         )
         vocab_store.merge(tr.select(F.col("w").alias("tok")))
 
-    q = (
-        stream.writeStream.foreachBatch(count_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain.run(drain.source(docs_path, schema, max_files_per_trigger), count_batch)
+    docs_state = doc_store.read()
+    if docs_state is None:
+        return None
+    return _read_lm_state(
+        spark, docs_state, vocab_store, cb_store, cu_store, text_col
     )
-    q.awaitTermination()
-    return (doc_store, vocab_store, cb_store, cu_store), eph
 
 
-@cleanup_on_error
 def stream_domain_weights(
     spark: SparkSession,
     docs_path: str,
@@ -170,25 +138,20 @@ def stream_domain_weights(
         domain_weights_from_scores,
     )
 
-    (doc_store, vocab_store, cb_store, cu_store), eph = _drain_counts(
-        spark, docs_path, schema, train_source, text_col,
-        store_root, max_files_per_trigger,
-    )
-    docs_state = doc_store.read()
-    if docs_state is None:
-        out = spark.createDataFrame(
-            [],
-            "source string, n_docs bigint, token_share double, "
-            "excess_nll double, weight double",
+    with bounded_drain(spark, store_root) as drain:
+        state = _drain_counts(
+            drain, docs_path, schema, train_source, text_col, max_files_per_trigger
         )
-        return finalize_drain(out, eph)
-    pr, vocab, cb, cu = _read_lm_state(
-        spark, docs_state, vocab_store, cb_store, cu_store, text_col
-    )
-    per_doc = bigram_doc_scores(pr, vocab, cb, cu, alpha)
-    return finalize_drain(
-        domain_weights_from_scores(per_doc, train_source, eta, smooth), eph
-    )
+        if state is None:
+            return drain.result(spark.createDataFrame(
+                [],
+                "source string, n_docs bigint, token_share double, "
+                "excess_nll double, weight double",
+            ))
+        per_doc = bigram_doc_scores(*state, alpha)
+        return drain.result(
+            domain_weights_from_scores(per_doc, train_source, eta, smooth)
+        )
 
 
 def _read_lm_state(

@@ -38,12 +38,7 @@ from neo4j_dynagraph_spark import functions as dfn
 from neo4j_dynagraph_spark.operators.graph import burst_windows
 from neo4j_dynagraph_spark.operators.ingest import DEFAULT_DELTA
 from neo4j_dynagraph_spark.streaming.corpus_stats import CounterStore
-from neo4j_dynagraph_spark.streaming.staging import (
-    cleanup_on_error,
-    drain_dirs,
-    finalize_drain,
-    stage_single_file,
-)
+from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
 
@@ -57,7 +52,6 @@ class PresenceStore(CounterStore):
         )
 
 
-@cleanup_on_error
 def stream_burst_windows(
     spark: SparkSession,
     events_path: str,
@@ -80,57 +74,40 @@ def stream_burst_windows(
     ``store_root`` keeps its checkpoint inside it so re-invocations
     are truly incremental.
     """
-    from neo4j_dynagraph_spark.sources.tables import normalize_stream_ts
+    with bounded_drain(spark, store_root) as drain:
+        store = PresenceStore(spark, drain.root)
+        stream = drain.source(events_path, schema, max_files_per_trigger)
 
-    store_root, ckpt, src_stage, eph = drain_dirs(
-        store_root, "dynagraph_burst_"
-    )
-    store = PresenceStore(spark, store_root)
-    events_path = stage_single_file(events_path, into=src_stage)
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = normalize_stream_ts(
-        spark, reader.parquet(events_path), schema
-    )
-
-    def count_batch(batch_df: DataFrame, batch_id: int) -> None:
-        partial = (
-            batch_df.select(
-                dfn.frame_id(
-                    dfn.epoch_seconds(F.col("ts")), delta, 0
-                ).alias("frame_id"),
-                F.col("user_id").alias("actor"),
+        def count_batch(batch_df: DataFrame, batch_id: int) -> None:
+            partial = (
+                batch_df.select(
+                    dfn.frame_id(
+                        dfn.epoch_seconds(F.col("ts")), delta, 0
+                    ).alias("frame_id"),
+                    F.col("user_id").alias("actor"),
+                )
+                .groupBy("frame_id", "actor")
+                .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
             )
-            .groupBy("frame_id", "actor")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-        )
-        store.merge(
-            partial.select(
-                F.lit(batch_id).cast("long").alias("batch_id"), "*"
+            store.merge(
+                partial.select(
+                    F.lit(batch_id).cast("long").alias("batch_id"), "*"
+                )
             )
-        )
 
-    q = (
-        stream.writeStream.foreachBatch(count_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    state = store.read()
-    if state is None:
-        out = spark.createDataFrame(
-            [],
-            "frame_id bigint, actor bigint, n_events bigint, "
-            "n_obs bigint, z double",
-        )
-    else:
-        presence = state.groupBy("frame_id", "actor").agg(
-            F.sum("n_events").cast("long").alias("n_events")
-        )
-        out = burst_windows(
-            presence, window=window, min_obs=min_obs, z_thresh=z_thresh
-        )
-    return finalize_drain(out, eph)
+        drain.run(stream, count_batch)
+        state = store.read()
+        if state is None:
+            out = spark.createDataFrame(
+                [],
+                "frame_id bigint, actor bigint, n_events bigint, "
+                "n_obs bigint, z double",
+            )
+        else:
+            presence = state.groupBy("frame_id", "actor").agg(
+                F.sum("n_events").cast("long").alias("n_events")
+            )
+            out = burst_windows(
+                presence, window=window, min_obs=min_obs, z_thresh=z_thresh
+            )
+        return drain.result(out)

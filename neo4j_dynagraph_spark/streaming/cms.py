@@ -28,12 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from neo4j_dynagraph_spark import functions as dfn
 from neo4j_dynagraph_spark.streaming.corpus_stats import CounterStore
-from neo4j_dynagraph_spark.streaming.staging import (
-    cleanup_on_error,
-    drain_dirs,
-    finalize_drain,
-    stage_single_file,
-)
+from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
 
@@ -45,7 +40,6 @@ class CMSStore(CounterStore):
         DimensionStore.__init__(self, spark, root, ["batch_id", "r", "c"])
 
 
-@cleanup_on_error
 def stream_cms_table(
     spark: SparkSession,
     docs_path: str,
@@ -70,54 +64,41 @@ def stream_cms_table(
     semantics — the checkpoint lives inside it, so re-invoking only
     processes files arrived since the last drain.
     """
-    store_root, ckpt, src_stage, eph = drain_dirs(
-        store_root, "dynagraph_cms_"
-    )
-    store = CMSStore(spark, store_root)
-    docs_path = stage_single_file(docs_path, into=src_stage)
+    with bounded_drain(spark, store_root) as drain:
+        store = CMSStore(spark, drain.root)
+        stream = drain.source(docs_path, schema, max_files_per_trigger)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_path)
+        cells = F.array(
+            *[
+                F.struct(
+                    F.lit(r).alias("r"),
+                    F.pmod(
+                        dfn.hash64(F.concat(F.lit(f"cms{r}:"), F.col("token"))),
+                        F.lit(w),
+                    ).alias("c"),
+                )
+                for r in range(d)
+            ]
+        )
 
-    cells = F.array(
-        *[
-            F.struct(
-                F.lit(r).alias("r"),
-                F.pmod(
-                    dfn.hash64(F.concat(F.lit(f"cms{r}:"), F.col("token"))),
-                    F.lit(w),
-                ).alias("c"),
+        def cms_batch(batch_df: DataFrame, batch_id: int) -> None:
+            occ = batch_df.select(
+                F.explode(dfn.tokens(F.col(text_col))).alias("token")
             )
-            for r in range(d)
-        ]
-    )
+            partial = (
+                occ.select(F.explode(cells).alias("cell"))
+                .groupBy(F.col("cell.r").alias("r"), F.col("cell.c").alias("c"))
+                .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+                .select(F.lit(batch_id).cast("long").alias("batch_id"), "r", "c", "cnt")
+            )
+            store.merge(partial)
 
-    def cms_batch(batch_df: DataFrame, batch_id: int) -> None:
-        occ = batch_df.select(
-            F.explode(dfn.tokens(F.col(text_col))).alias("token")
-        )
-        partial = (
-            occ.select(F.explode(cells).alias("cell"))
-            .groupBy(F.col("cell.r").alias("r"), F.col("cell.c").alias("c"))
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-            .select(F.lit(batch_id).cast("long").alias("batch_id"), "r", "c", "cnt")
-        )
-        store.merge(partial)
-
-    q = (
-        stream.writeStream.foreachBatch(cms_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    state = store.read()
-    if state is None:
-        out = spark.createDataFrame([], "r int, c bigint, cnt bigint")
-    else:
-        out = state.groupBy("r", "c").agg(
-            F.sum("cnt").cast("long").alias("cnt")
-        )
-    return finalize_drain(out, eph)
+        drain.run(stream, cms_batch)
+        state = store.read()
+        if state is None:
+            out = spark.createDataFrame([], "r int, c bigint, cnt bigint")
+        else:
+            out = state.groupBy("r", "c").agg(
+                F.sum("cnt").cast("long").alias("cnt")
+            )
+        return drain.result(out)

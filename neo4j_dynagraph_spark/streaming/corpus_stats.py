@@ -29,12 +29,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from neo4j_dynagraph_spark.streaming.staging import (
-    cleanup_on_error,
-    drain_dirs,
-    finalize_drain,
-    stage_single_file,
-)
+from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
 _CORPUS_KEY = "#corpus"
@@ -59,7 +54,6 @@ class CounterStore(DimensionStore):
         self._commit(kept.unionByName(batch))
 
 
-@cleanup_on_error
 def stream_corpus_stats(
     spark: SparkSession,
     docs_path: str,
@@ -84,93 +78,79 @@ def stream_corpus_stats(
     """
     from neo4j_dynagraph_spark import functions as dfn
 
-    store_root, ckpt, src_stage, eph = drain_dirs(
-        store_root, "dynagraph_cstats_"
-    )
-    store = CounterStore(spark, store_root)
-    docs_path = stage_single_file(docs_path, into=src_stage)
+    with bounded_drain(spark, store_root) as drain:
+        store = CounterStore(spark, drain.root)
+        stream = drain.source(docs_path, schema, max_files_per_trigger)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_path)
+        def stats_batch(batch_df: DataFrame, batch_id: int) -> None:
+            toked = batch_df.select(dfn.tokens(F.col(text_col)).alias("t"))
+            per_doc = toked.select(
+                F.size("t").cast("long").alias("dl"),
+                *[
+                    # Column API (quote-safe for caller-supplied terms);
+                    # single-arg lambda — a 2nd param would receive the
+                    # array index. F.filter evaluates it eagerly per loop
+                    # iteration, so the closure capture is correct.
+                    (F.size(F.filter(F.col("t"), lambda x: x == F.lit(t))) > 0)
+                    .cast("long")
+                    .alias(f"hit{i}")
+                    for i, t in enumerate(terms)
+                ],
+            )
+            agg = per_doc.agg(
+                F.count(F.lit(1)).cast("long").alias("n_docs"),
+                F.sum("dl").cast("long").alias("tok_sum"),
+                *[
+                    F.sum(f"hit{i}").cast("long").alias(f"df{i}")
+                    for i in range(len(terms))
+                ],
+            )
+            rows = agg.select(
+                F.lit(batch_id).cast("long").alias("batch_id"),
+                F.lit(_CORPUS_KEY).alias("key"),
+                F.col("n_docs").alias("cnt_docs"),
+                F.col("tok_sum").alias("cnt_toks"),
+                F.lit(0).cast("long").alias("cnt_df"),
+            )
+            for i, t in enumerate(terms):
+                rows = rows.unionByName(
+                    agg.select(
+                        F.lit(batch_id).cast("long").alias("batch_id"),
+                        F.lit(t).alias("key"),
+                        F.lit(0).cast("long").alias("cnt_docs"),
+                        F.lit(0).cast("long").alias("cnt_toks"),
+                        F.col(f"df{i}").alias("cnt_df"),
+                    )
+                )
+            store.merge(rows)
 
-    def stats_batch(batch_df: DataFrame, batch_id: int) -> None:
-        toked = batch_df.select(dfn.tokens(F.col(text_col)).alias("t"))
-        per_doc = toked.select(
-            F.size("t").cast("long").alias("dl"),
-            *[
-                # Column API (quote-safe for caller-supplied terms);
-                # single-arg lambda — a 2nd param would receive the
-                # array index. F.filter evaluates it eagerly per loop
-                # iteration, so the closure capture is correct.
-                (F.size(F.filter(F.col("t"), lambda x: x == F.lit(t))) > 0)
-                .cast("long")
-                .alias(f"hit{i}")
-                for i, t in enumerate(terms)
-            ],
-        )
-        agg = per_doc.agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("dl").cast("long").alias("tok_sum"),
-            *[
-                F.sum(f"hit{i}").cast("long").alias(f"df{i}")
-                for i in range(len(terms))
-            ],
-        )
-        rows = agg.select(
-            F.lit(batch_id).cast("long").alias("batch_id"),
-            F.lit(_CORPUS_KEY).alias("key"),
-            F.col("n_docs").alias("cnt_docs"),
-            F.col("tok_sum").alias("cnt_toks"),
-            F.lit(0).cast("long").alias("cnt_df"),
-        )
-        for i, t in enumerate(terms):
-            rows = rows.unionByName(
-                agg.select(
-                    F.lit(batch_id).cast("long").alias("batch_id"),
-                    F.lit(t).alias("key"),
-                    F.lit(0).cast("long").alias("cnt_docs"),
-                    F.lit(0).cast("long").alias("cnt_toks"),
-                    F.col(f"df{i}").alias("cnt_df"),
+        drain.run(stream, stats_batch)
+        state = store.read()
+        if state is None:
+            return drain.result(
+                spark.createDataFrame(
+                    [], "term string, df bigint, n_docs bigint, avgdl double"
                 )
             )
-        store.merge(rows)
-
-    q = (
-        stream.writeStream.foreachBatch(stats_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    state = store.read()
-    if state is None:
-        return finalize_drain(
-            spark.createDataFrame(
-                [], "term string, df bigint, n_docs bigint, avgdl double"
-            ),
-            eph,
+        corpus = state.where(F.col("key") == _CORPUS_KEY).agg(
+            F.sum("cnt_docs").cast("long").alias("n_docs"),
+            F.sum("cnt_toks").cast("long").alias("tok_sum"),
         )
-    corpus = state.where(F.col("key") == _CORPUS_KEY).agg(
-        F.sum("cnt_docs").cast("long").alias("n_docs"),
-        F.sum("cnt_toks").cast("long").alias("tok_sum"),
-    )
-    per_term = (
-        state.where(F.col("key") != _CORPUS_KEY)
-        .groupBy(F.col("key").alias("term"))
-        .agg(F.sum("cnt_df").cast("long").alias("df"))
-    )
-    out = (
-        per_term.crossJoin(F.broadcast(corpus))
-        .select(
-            "term",
-            "df",
-            "n_docs",
-            F.round(
-                F.col("tok_sum") / F.col("n_docs").cast("double"), 6
-            ).alias("avgdl"),
+        per_term = (
+            state.where(F.col("key") != _CORPUS_KEY)
+            .groupBy(F.col("key").alias("term"))
+            .agg(F.sum("cnt_df").cast("long").alias("df"))
         )
-        .orderBy("term")
-    )
-    return finalize_drain(out, eph)
+        out = (
+            per_term.crossJoin(F.broadcast(corpus))
+            .select(
+                "term",
+                "df",
+                "n_docs",
+                F.round(
+                    F.col("tok_sum") / F.col("n_docs").cast("double"), 6
+                ).alias("avgdl"),
+            )
+            .orderBy("term")
+        )
+        return drain.result(out)

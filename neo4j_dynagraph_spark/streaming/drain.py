@@ -1,101 +1,148 @@
-"""Memory-sink lifecycle for bounded drains.
+"""One owner for the life of a bounded streaming drain.
 
-Every bounded-drain runner (Trigger.AvailableNow + memory sink) used to
-return ``spark.table(sink_name)`` with a fresh uuid-suffixed sink per
-call and NEVER drop it — each invocation parked a full result copy in
-the driver heap forever. Repeated drains of a large result (the bench
-protocol runs every query N=10 times; q_stream_edges at sf0.1 is
-millions of rows) accumulated until the JVM OOMed.
+The reference loads its dynamic graph in transaction batches
+(load_gexf_to_neo4j.py, SURVEY T2); every ``stream_*`` drain and
+``*_from_parquet`` runner in this package is the incremental form of
+that ingest: stage a file input, read it as a stream, run one query
+with Trigger.AvailableNow to completion, read the result back. All of
+them do it through :func:`bounded_drain`, which owns one root:
 
-``snapshot_and_drop`` fixes the lifecycle: snapshot the sink's rows
-into checkpointed RDD blocks (MEMORY_AND_DISK — evictable, spillable,
-and freed by the ContextCleaner once the returned DataFrame goes out
-of scope), then drop the memory-sink temp view so the sink's row
-buffer is unreachable as soon as the terminated query object is
-collected. Net: at most ONE live copy per drain, reclaimed when the
-caller drops the result.
+    <root>/_src         the staged input (streaming/staging.py)
+    <root>/_checkpoint  the streaming query's checkpoint
+    <root>/_out         the parquet sink, for parquet drains
+    <root>/...          the caller's stores (streaming/upsert.py)
+
+The root is the caller's ``store_root`` when given: PERSISTENT, so a
+second drain resumes from the recorded offsets and processes only new
+files; nothing is deleted and the result stays lazy. Otherwise it is
+one fresh temp dir: EPHEMERAL, so :meth:`Drain.result` materializes
+the result through ``hub.materialize`` (an eager checkpoint,
+independent of the files) and the root is deleted when the ``with``
+block exits, on success and on error alike.
+
+On a multi-node cluster an ephemeral root must live on a filesystem
+every executor sees (set ``TMPDIR`` / ``tempfile.tempdir``): executors
+write the sinks and stores, the driver lists them.
 """
 
 from __future__ import annotations
 
+import contextlib
+import os
+import shutil
+import tempfile
+import uuid
+from typing import Callable, Iterator
+
 from pyspark.sql import DataFrame, SparkSession
 
 from neo4j_dynagraph_spark.operators.hub import materialize
+from neo4j_dynagraph_spark.sources.tables import normalize_stream_ts
+from neo4j_dynagraph_spark.streaming.staging import stage_input, stage_with_sentinel
 
 
-def snapshot_and_drop(spark: SparkSession, sink_name: str) -> DataFrame:
-    """Materialize a terminated memory sink and release it.
+class Drain:
+    """A drain's root, its staged source, and its one streaming run."""
 
-    Returns a DataFrame backed by checkpointed blocks, independent of
-    the catalog entry (safe to use after the view is gone).
+    def __init__(self, spark: SparkSession, root: str, ephemeral: bool) -> None:
+        self.spark = spark
+        self.root = root
+        self.ephemeral = ephemeral
+        self.query = None  # the terminated StreamingQuery of run()
+        self.view: str | None = None  # the memory sink's table
 
-    Right-sized for SMALL drained results (windowed aggregates,
-    session summaries): the memory sink buffers every row in the
-    driver heap. Large-output drains (the co-presence edge sets —
-    millions of rows per run, unbounded at 100 TB) must use
-    :func:`drain_stream_to_parquet` instead, which never routes data
-    through the driver.
-    """
-    out = materialize(spark.table(sink_name))
-    spark.catalog.dropTempView(sink_name)
-    return out
+    def path(self, *parts: str) -> str:
+        return os.path.join(self.root, *parts)
 
+    def source(
+        self,
+        path: str,
+        schema,  # noqa: ANN001 — StructType of the batch-read table
+        max_files_per_trigger: int | None = None,
+        sentinel: bool | tuple[str, ...] = False,
+        stagger_seconds: int = 3600,
+    ) -> DataFrame:
+        """Stage ``path`` and return it as a streaming DataFrame with an
+        explicit schema and a normalized ``ts`` (when it has one).
 
-def drain_stream_to_parquet(
-    stream_df: DataFrame,
-    prefix: str,
-    base_dir: str | None = None,
-    restarts: int = 0,
-) -> DataFrame:
-    """Bounded drain through a DISTRIBUTED file sink.
+        ``sentinel``: True stages one end-of-stream sentinel, a tuple
+        one per ``event_type`` value (see stage_with_sentinel).
+        ``max_files_per_trigger`` caps files per micro-batch, oldest
+        first: over a directory of time-ordered files, state must carry
+        across micro-batches."""
+        into = self.path("_src")
+        if sentinel:
+            types = sentinel if isinstance(sentinel, tuple) else ()
+            src = stage_with_sentinel(
+                self.spark, path, schema, into, types, stagger_seconds
+            )
+        else:
+            src = stage_input(path, into)
+        reader = self.spark.readStream.schema(schema)
+        if max_files_per_trigger:
+            reader = reader.option(
+                "maxFilesPerTrigger", str(max_files_per_trigger)
+            ).option("latestFirst", "false")
+        stream = reader.parquet(src)
+        if "ts" in schema.fieldNames():
+            stream = normalize_stream_ts(self.spark, stream, schema)
+        return stream
 
-    ``restarts``: number of additional AvailableNow runs against the
-    SAME checkpoint after the first terminates — the escape hatch for
-    deep stateful chains. Watermark propagation takes one no-data
-    batch per stateful operator, and an AvailableNow run stops once
-    the source is exhausted and no further batch makes progress; a
-    chain deep enough can leave final windows in state, and a
-    checkpoint-preserving restart runs the extra finalization batches
-    (cheap: no source data, state-store catch-up only). The join→agg
-    chains in this repo finalize without restarts once every stream
-    branch observes the end-of-stream sentinel (see
-    edges._stage_with_sentinel's ``type_values``).
+    def run(
+        self,
+        frame: DataFrame,
+        sink: Callable[[DataFrame, int], None] | str,
+        output_mode: str = "append",
+    ) -> DataFrame | None:
+        """Run ``frame`` to completion (Trigger.AvailableNow) into
+        ``sink`` with its checkpoint under the root; one run per drain.
 
-    Runs ``stream_df`` (append-mode streaming plan) to completion with
-    Trigger.AvailableNow into a parquet directory and returns the
-    batch DataFrame reading it back. Unlike the memory sink, rows go
-    executor -> files -> executor: the driver never holds the result,
-    so drain size is bounded by storage, not driver heap — the only
-    drain shape that survives a 100 TB stream.
-
-    ``base_dir`` is where the sink and checkpoint directories are
-    created. On a multi-node cluster it MUST be a path on a SHARED
-    filesystem visible to every executor (HDFS/S3A/NFS) — executors
-    write the sink files, the driver-side read-back lists them, and a
-    node-local path would scatter the files across machines. The
-    default (``None`` -> ``tempfile.mkdtemp()``) is the local-mode
-    convenience only, where driver and executors share one disk.
-    """
-    import tempfile
-
-    if base_dir is None:
-        out_dir = tempfile.mkdtemp(prefix=f"dynagraph_{prefix}_out_")
-        ckpt = tempfile.mkdtemp(prefix="dynagraph_ckpt_")
-    else:
-        import uuid
-
-        run = uuid.uuid4().hex[:12]
-        out_dir = f"{base_dir.rstrip('/')}/dynagraph_{prefix}_out_{run}"
-        ckpt = f"{base_dir.rstrip('/')}/dynagraph_{prefix}_ckpt_{run}"
-    for _ in range(1 + restarts):
-        query = (
-            stream_df.writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        ``sink`` is a foreachBatch function (returns None: the result
+        lives in the caller's stores), ``"memory"`` (the driver-held
+        sink, for small results; returns its table) or ``"parquet"``
+        (executor-written files under ``_out``, for large results;
+        returns their read-back)."""
+        writer = frame.writeStream.outputMode(output_mode).option(
+            "checkpointLocation", self.path("_checkpoint")
         )
-        query.awaitTermination()
-    # explicit schema: an all-empty drain leaves no files to infer from
-    return stream_df.sparkSession.read.schema(stream_df.schema).parquet(out_dir)
+        if callable(sink):
+            writer = writer.foreachBatch(sink)
+        elif sink == "memory":
+            self.view = f"dynagraph_drain_{uuid.uuid4().hex[:12]}"
+            writer = writer.format("memory").queryName(self.view)
+        elif sink == "parquet":
+            writer = writer.format("parquet").option("path", self.path("_out"))
+        else:
+            raise ValueError(f"unknown drain sink: {sink!r}")
+        self.query = writer.trigger(availableNow=True).start()
+        self.query.awaitTermination()
+        if callable(sink):
+            return None
+        if sink == "memory":
+            return self.spark.table(self.view)
+        # explicit schema: an all-empty drain leaves no files to infer from
+        return self.spark.read.schema(frame.schema).parquet(self.path("_out"))
+
+    def result(self, df: DataFrame) -> DataFrame:
+        """The drain's result: materialized when the root is ephemeral
+        (it is about to be deleted), lazy when it is persistent."""
+        return materialize(df) if self.ephemeral else df
+
+
+@contextlib.contextmanager
+def bounded_drain(
+    spark: SparkSession, store_root: str | None = None
+) -> Iterator[Drain]:
+    """Yield a :class:`Drain` on ``store_root`` (persistent) or on one
+    fresh temp dir (ephemeral, deleted on exit). A memory sink's view
+    is dropped on exit, so a memory drain must return ``result(...)``."""
+    ephemeral = store_root is None
+    root = tempfile.mkdtemp(prefix="dynagraph_drain_") if ephemeral else store_root
+    drain = Drain(spark, root, ephemeral)
+    try:
+        yield drain
+    finally:
+        if drain.view is not None:
+            spark.catalog.dropTempView(drain.view)
+        if ephemeral:
+            shutil.rmtree(root, ignore_errors=True)

@@ -9,8 +9,7 @@ incremental forms live here:
   frame-id column with a side time-bound — is the watermark-extractable
   form: the join key itself contains the event-time window, so Spark
   derives a key watermark and evicts each side's state as soon as the
-  watermark passes a window (no "cannot extract state constraint"
-  fallback to unbounded state). State is O(events in the watermark
+  watermark passes a window. State is O(events in the watermark
   horizon) per side.
 
 - ``stateful_frame_edges``: applyInPandasWithState keyed by frame.
@@ -23,10 +22,14 @@ incremental forms live here:
   (O(1) from that point) and emits nothing — identical drop semantics
   to batch, so stream == batch holds guard-for-guard.
 
-Drained with Trigger.AvailableNow, both must equal the batch
-``presence_to_frame_interactions`` edge set — q_stream_edges checks the
-join form against the batch SQL oracle; the stateful form is
-differentially tested with a synthetic hot frame.
+The ``*_from_parquet`` runners drain either form through one
+``bounded_drain`` (streaming/drain.py): the input is staged with an
+end-of-stream sentinel so the trailing frames finalize, the edges go
+to a parquet sink (or, for the degree view, a pair store), and the
+result is materialized before the temp root is deleted. Drained, both
+forms must equal the batch ``presence_to_frame_interactions`` edge set:
+q_stream_edges and q_stream_edges_stateful are graded by the batch SQL
+oracle, and the hot-frame guard is differentially tested.
 """
 
 from __future__ import annotations
@@ -34,6 +37,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType, BooleanType, LongType, StructField, StructType
+
+from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 
 
 def stream_frame_edges(
@@ -264,101 +269,18 @@ def stateful_frame_edges(
     )
 
 
-def _stage_with_sentinel(
+def _drain_edges(
     spark,  # noqa: ANN001
     parquet_path: str,
     schema,  # noqa: ANN001
-    type_values: tuple[str, ...] = (),
-    type_col: str = "event_type",
-    stagger_seconds: int = 3600,
-) -> str:
-    """Stage the input files plus a SENTINEL event far past the real
-    data (alone in its own frame, so it can never produce a pair).
-
-    Append-mode stateful operators only emit what the watermark has
-    passed, and a drained stream's watermark stops at max_ts - delay —
-    the trailing frames would be withheld forever. The sentinel pushes
-    the final watermark beyond every real frame: the streaming
-    equivalent of an end-of-stream flush marker.
-
-    The ts arrival type (legacy long nanos vs timestamp/timestamp_ntz)
-    is derived from ``schema``; the sentinel is built from the MAX-ts
-    row plus the horizon, so it sits past every real frame regardless
-    of type (an arbitrary limit(1) row's ts + horizon need not).
-
-    ``type_values``: when the downstream plan filters the stream by
-    ``type_col`` into separate branches, Catalyst pushes those filters
-    BELOW the EventTimeWatermark node — so a branch whose type the
-    single sentinel doesn't carry never observes it and its watermark
-    stalls at its own last real event, stranding the trailing windows
-    in state. Passing the filtered-on values stages one sentinel PER
-    value, each a further ``stagger_seconds`` apart so no two
-    sentinels can fall inside one frame/spell and pair with each
-    other.
-    """
-    import os
-    import tempfile
-
-    import pyspark.sql.functions as F_
-    from pyspark.sql.types import LongType as _Long
-
-    stage = tempfile.mkdtemp(prefix="dynagraph_edges_src_")
-    # absolute symlink targets: os.symlink stores the string verbatim,
-    # so a relative parquet_path would resolve relative to the temp
-    # dir — a broken link the file source reads as zero files (see
-    # streaming/staging.py)
-    parquet_abs = os.path.abspath(parquet_path)
-    if os.path.isfile(parquet_abs):
-        os.symlink(parquet_abs, os.path.join(stage, os.path.basename(parquet_abs)))
-    else:
-        for f in os.listdir(parquet_abs):
-            if f.endswith(".parquet"):
-                os.symlink(os.path.join(parquet_abs, f), os.path.join(stage, f))
-    batch_df = spark.read.schema(schema).parquet(parquet_path)
-    horizon_s = 7 * 24 * 3600
-    last = batch_df.orderBy(F_.col("ts").desc_nulls_last()).limit(1)
-    if last.isEmpty():
-        raise ValueError(f"no rows under {parquet_path}; nothing to stream")
-    def _advanced(df, seconds):  # noqa: ANN001, ANN202
-        if isinstance(schema["ts"].dataType, _Long):
-            return df.withColumn(
-                "ts", (F_.col("ts") + F_.lit(seconds * 1_000_000_000)).cast("long")
-            )
-        # timestamp / timestamp_ntz: interval addition preserves the
-        # exact column type, so the staged sentinel file's physical
-        # parquet type matches the real files under the one schema
-        return df.withColumn(
-            "ts", F_.col("ts") + F_.expr(f"INTERVAL {seconds} SECONDS")
-        )
-
-    if type_values:
-        parts = [
-            _advanced(last, horizon_s + i * stagger_seconds).withColumn(
-                type_col, F_.lit(v)
-            )
-            for i, v in enumerate(type_values)
-        ]
-        sentinel = parts[0]
-        for p in parts[1:]:
-            sentinel = sentinel.unionByName(p)
-    else:
-        sentinel = _advanced(last, horizon_s)
-    sentinel.write.mode("overwrite").parquet(os.path.join(stage, "_sentinel"))
-    for f in os.listdir(os.path.join(stage, "_sentinel")):
-        if f.endswith(".parquet"):
-            os.rename(
-                os.path.join(stage, "_sentinel", f),
-                os.path.join(stage, f"zz_sentinel_{f}"),
-            )
-    return stage
-
-
-def _drain(edges: DataFrame, prefix: str):  # noqa: ANN202
-    # edge drains are the large-output case (pairs grow quadratically
-    # with frame occupancy): distributed file sink, never the driver
-    from neo4j_dynagraph_spark.streaming.drain import drain_stream_to_parquet
-
-    return drain_stream_to_parquet(edges, prefix)
+    build,  # noqa: ANN001 — stream -> edge stream
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    # edge sets grow quadratically with frame occupancy: the parquet
+    # sink keeps them on executors, never in the driver
+    with bounded_drain(spark) as drain:
+        stream = drain.source(parquet_path, schema, max_files_per_trigger, sentinel=True)
+        return drain.result(drain.run(build(stream), "parquet"))
 
 
 def streaming_frame_edges_from_parquet(
@@ -366,20 +288,12 @@ def streaming_frame_edges_from_parquet(
     parquet_path: str,
     schema,  # noqa: ANN001
     delta_seconds: int = 3600,
-    ts_is_nanos: bool | None = None,  # retained for API compat; ignored
 ) -> DataFrame:
-    """Bounded-drain runner for the join form (Trigger.AvailableNow,
-    memory sink): returns the finalized edge set for differential
-    testing against the batch operator. The ts arrival type is derived
-    from ``schema`` (``ts_is_nanos`` is ignored — the flag was always
-    implied by the schema and hardcoding it broke when the testdata's
-    physical type changed)."""
-    from neo4j_dynagraph_spark.sources.tables import normalize_stream_ts
-
-    stage = _stage_with_sentinel(spark, parquet_path, schema)
-    stream = spark.readStream.schema(schema).parquet(stage)
-    stream = normalize_stream_ts(spark, stream, schema)
-    return _drain(stream_frame_edges(stream, delta_seconds), "stream_edges")
+    """Bounded-drain runner for the join form: returns the finalized
+    edge set for differential testing against the batch operator."""
+    return _drain_edges(
+        spark, parquet_path, schema, lambda s: stream_frame_edges(s, delta_seconds)
+    )
 
 
 def stateful_frame_edges_from_parquet(
@@ -387,32 +301,24 @@ def stateful_frame_edges_from_parquet(
     parquet_path: str,
     schema,  # noqa: ANN001
     delta_seconds: int = 3600,
-    ts_is_nanos: bool | None = None,  # retained for API compat; ignored
     max_actors_per_frame: int | None = None,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Bounded-drain runner for the stateful (hot-frame-guarded) form.
-    ts arrival type derived from ``schema`` (see join-form runner).
 
     ``max_files_per_trigger`` caps files per micro-batch: pointed at a
     directory of time-ordered files with cap 1, a frame's actor map is
     forced to accumulate ACROSS micro-batches before its event-time
     timeout flushes it — the state-carry path the single-batch drain
     never exercises."""
-    from neo4j_dynagraph_spark.sources.tables import normalize_stream_ts
-
-    stage = _stage_with_sentinel(spark, parquet_path, schema)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        reader = reader.option("latestFirst", "false")
-    stream = reader.parquet(stage)
-    stream = normalize_stream_ts(spark, stream, schema)
-    return _drain(
-        stateful_frame_edges(
-            stream, delta_seconds, max_actors_per_frame=max_actors_per_frame
+    return _drain_edges(
+        spark,
+        parquet_path,
+        schema,
+        lambda s: stateful_frame_edges(
+            s, delta_seconds, max_actors_per_frame=max_actors_per_frame
         ),
-        "stream_edges_stateful",
+        max_files_per_trigger,
     )
 
 
@@ -421,57 +327,31 @@ def streaming_degree_from_parquet(
     parquet_path: str,
     schema,  # noqa: ANN001
     delta_seconds: int = 3600,
-    edge_builder: str = "stateful",
 ) -> DataFrame:
     """Incrementally-maintained degree view (the streaming
     materialized-view pattern, T2+T4): the finalized co-presence edge
-    stream drains through foreachBatch into a versioned canonical-pair
-    DIMENSION (DimensionStore merge-on-key — idempotent under
-    micro-batch replay, atomic pointer-flip commits), and degree is a
-    read of the materialized dimension: union of endpoints + count,
-    exactly QUERY10's semantics. At scale the store is the incremental
-    alternative to recomputing q10's full-history distinct: each
-    micro-batch merges O(new pairs), not O(all pairs ever).
-
-    edge_builder picks the upstream operator: 'stateful' (default) uses
-    the applyInPandasWithState builder whose state is O(actors in
-    open frames) — measured 93 state rows / 4 MB while emitting 633M
-    edge rows at generator-sf1; 'join' uses the stream-stream self-join
-    whose state is O(edges in the watermark horizon) (80.8M rows at
-    the same scale — needs the RocksDB state store above laptop SFs).
-    Both produce identical finalized edges (each is parity-checked
-    against the batch oracle)."""
-    import tempfile
-
-    from neo4j_dynagraph_spark.sources.tables import normalize_stream_ts
+    stream of the stateful builder drains through foreachBatch into a
+    versioned canonical-pair DIMENSION (DimensionStore merge-on-key —
+    idempotent under micro-batch replay, atomic pointer-flip commits),
+    and degree is a read of the materialized dimension: union of
+    endpoints + count, exactly QUERY10's semantics. At scale the store
+    is the incremental alternative to recomputing q10's full-history
+    distinct: each micro-batch merges O(new pairs), not O(all pairs
+    ever)."""
     from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
-    if edge_builder not in ("stateful", "join"):
-        raise ValueError(f"unknown edge_builder: {edge_builder!r}")
-    stage = _stage_with_sentinel(spark, parquet_path, schema)
-    stream = spark.readStream.schema(schema).parquet(stage)
-    stream = normalize_stream_ts(spark, stream, schema)
-    build = stateful_frame_edges if edge_builder == "stateful" else stream_frame_edges
-    edges = build(stream, delta_seconds)
-    store = DimensionStore(
-        spark, tempfile.mkdtemp(prefix="dynagraph_pairdim_"), ["actor1", "actor2"]
-    )
+    with bounded_drain(spark) as drain:
+        stream = drain.source(parquet_path, schema, sentinel=True)
+        store = DimensionStore(spark, drain.path("pairs"), ["actor1", "actor2"])
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:  # noqa: ANN001
-        store.merge(batch_df.select("actor1", "actor2"))
+        def upsert(batch_df: DataFrame, batch_id: int) -> None:
+            store.merge(batch_df.select("actor1", "actor2"))
 
-    q = (
-        edges.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="dynagraph_ckpt_"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    pairs = store.read()
-    if pairs is None:
-        raise ValueError(f"no edges drained from {parquet_path}")
-    ends = pairs.select(F.col("actor1").alias("actor")).unionByName(
-        pairs.select(F.col("actor2").alias("actor"))
-    )
-    return ends.groupBy("actor").agg(F.count(F.lit(1)).alias("degree"))
+        drain.run(stateful_frame_edges(stream, delta_seconds), upsert)
+        pairs = store.read()
+        if pairs is None:
+            raise ValueError(f"no edges drained from {parquet_path}")
+        ends = pairs.select(F.col("actor1").alias("actor")).unionByName(
+            pairs.select(F.col("actor2").alias("actor"))
+        )
+        return drain.result(ends.groupBy("actor").agg(F.count(F.lit(1)).alias("degree")))

@@ -31,19 +31,12 @@ window's exactly, ties broken on cid.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from neo4j_dynagraph_spark.operators.hub import materialize
 from neo4j_dynagraph_spark.operators.similarity import _DOT, _NORM
-from neo4j_dynagraph_spark.streaming.staging import (
-    cleanup_on_error,
-    drain_dirs,
-    finalize_drain,
-    stage_single_file,
-)
+from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.training_mix import BatchRowStore
 from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
@@ -84,7 +77,6 @@ def _scores(cand: DataFrame, queries: DataFrame) -> DataFrame:
     )
 
 
-@cleanup_on_error
 def stream_embed_topk(
     spark: SparkSession,
     emb_path: str,
@@ -103,75 +95,63 @@ def stream_embed_topk(
     the result materializes); a persistent ``store_root`` keeps its
     checkpoint inside it so re-invocations ingest only new files.
     """
-    store_root, ckpt, src_stage, eph = drain_dirs(
-        store_root, "dynagraph_topk_"
-    )
-    vec_store = BatchRowStore(
-        spark, os.path.join(store_root, "vectors"), ["batch_id", "vec_id"]
-    )
-    # key_cols carry the vector too — DimensionStore.merge projects to
-    # its key_cols, and the scorer needs (qid, qv) back from read()
-    query_store = DimensionStore(
-        spark, os.path.join(store_root, "queries"), ["qid", "qv"]
-    )
-    topk_store = TopKScoreStore(spark, os.path.join(store_root, "topk"), k)
+    with bounded_drain(spark, store_root) as drain:
+        vec_store = BatchRowStore(
+            spark, drain.path("vectors"), ["batch_id", "vec_id"]
+        )
+        # key_cols carry the vector too — DimensionStore.merge projects to
+        # its key_cols, and the scorer needs (qid, qv) back from read()
+        query_store = DimensionStore(
+            spark, drain.path("queries"), ["qid", "qv"]
+        )
+        topk_store = TopKScoreStore(spark, drain.path("topk"), k)
 
-    emb_path = stage_single_file(emb_path, into=src_stage)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(emb_path)
+        stream = drain.source(emb_path, schema, max_files_per_trigger)
 
-    def topk_batch(batch_df: DataFrame, batch_id: int) -> None:
-        vecs = batch_df.select(
-            "vec_id",
-            F.col(vec_col).cast("array<double>").alias("v"),
-            is_query.alias("_q"),
-        ).transform(materialize)
-        # 1. the batch joins the index (replay overwrites its own rows)
-        vec_store.merge(
-            vecs.select(
-                F.lit(batch_id).cast("long").alias("batch_id"),
+        def topk_batch(batch_df: DataFrame, batch_id: int) -> None:
+            vecs = batch_df.select(
                 "vec_id",
-                "v",
+                F.col(vec_col).cast("array<double>").alias("v"),
+                is_query.alias("_q"),
+            ).transform(materialize)
+            # 1. the batch joins the index (replay overwrites its own rows)
+            vec_store.merge(
+                vecs.select(
+                    F.lit(batch_id).cast("long").alias("batch_id"),
+                    "vec_id",
+                    "v",
+                )
             )
-        )
-        # 2. EXISTING queries score only the new candidates
-        old_q = query_store.read()
-        if old_q is not None:
-            topk_store.merge(_scores(vecs, old_q))
-        # 3. NEW queries score once against the FULL stored corpus
-        #    (which already includes this batch) — the only history
-        #    scan, paid only in the batch where a query first appears
-        new_q = vecs.where(F.col("_q")).select(
-            F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-        )
-        if old_q is not None:
-            new_q = new_q.join(old_q.select("qid"), "qid", "left_anti")
-        new_q = new_q.transform(materialize)
-        if new_q.count() > 0:
-            corpus = vec_store.read().select("vec_id", "v")
-            topk_store.merge(_scores(corpus, new_q))
-            query_store.merge(new_q)
+            # 2. EXISTING queries score only the new candidates
+            old_q = query_store.read()
+            if old_q is not None:
+                topk_store.merge(_scores(vecs, old_q))
+            # 3. NEW queries score once against the FULL stored corpus
+            #    (which already includes this batch) — the only history
+            #    scan, paid only in the batch where a query first appears
+            new_q = vecs.where(F.col("_q")).select(
+                F.col("vec_id").alias("qid"), F.col("v").alias("qv")
+            )
+            if old_q is not None:
+                new_q = new_q.join(old_q.select("qid"), "qid", "left_anti")
+            new_q = new_q.transform(materialize)
+            if new_q.count() > 0:
+                corpus = vec_store.read().select("vec_id", "v")
+                topk_store.merge(_scores(corpus, new_q))
+                query_store.merge(new_q)
 
-    q = (
-        stream.writeStream.foreachBatch(topk_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        drain.run(stream, topk_batch)
 
-    state = topk_store.read()
-    if state is None:
-        out = spark.createDataFrame(
-            [], "qid long, rank long, cid long, sim double"
-        )
-    else:
-        w = Window.partitionBy("qid").orderBy(F.desc("sim_raw"), "cid")
-        out = (
-            state.withColumn("rank", F.row_number().over(w).cast("long"))
-            .select("qid", "rank", "cid", F.round("sim_raw", 6).alias("sim"))
-            .orderBy("qid", "rank")
-        )
-    return finalize_drain(out, eph)
+        state = topk_store.read()
+        if state is None:
+            out = spark.createDataFrame(
+                [], "qid long, rank long, cid long, sim double"
+            )
+        else:
+            w = Window.partitionBy("qid").orderBy(F.desc("sim_raw"), "cid")
+            out = (
+                state.withColumn("rank", F.row_number().over(w).cast("long"))
+                .select("qid", "rank", "cid", F.round("sim_raw", 6).alias("sim"))
+                .orderBy("qid", "rank")
+            )
+        return drain.result(out)

@@ -18,13 +18,10 @@ prove batch/stream equivalence on identical input.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from neo4j_dynagraph_spark.streaming.drain import snapshot_and_drop
+from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 
 
 def stream_tumbling_counts(
@@ -104,30 +101,12 @@ def streaming_presence_from_parquet(
     parquet_path: str,
     schema,  # noqa: ANN001
     delta_seconds: int = 3600,
-    ts_is_nanos: bool | None = None,  # retained for API compat; ignored
 ) -> DataFrame:
     """Bounded-drain runner for stream_presence_dedup (AvailableNow,
-    memory sink): drained output == batch distinct presence. The ts
-    arrival type is derived from ``schema``, never from the flag."""
-    from neo4j_dynagraph_spark.sources.tables import normalize_stream_ts
-    from neo4j_dynagraph_spark.streaming.staging import stage_single_file
-
-    parquet_path = stage_single_file(parquet_path, "dynagraph_presence_src_")
-    stream = spark.readStream.schema(schema).parquet(parquet_path)
-    stream = normalize_stream_ts(spark, stream, schema)
-    dedup = stream_presence_dedup(stream, delta_seconds)
-    sink_name = f"stream_presence_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="dynagraph_ckpt_")
-    query = (
-        dedup.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return snapshot_and_drop(spark, sink_name)
+    memory sink): drained output == batch distinct presence."""
+    with bounded_drain(spark) as drain:
+        dedup = stream_presence_dedup(drain.source(parquet_path, schema), delta_seconds)
+        return drain.result(drain.run(dedup, "memory"))
 
 
 def streaming_frame_counts_from_parquet(
@@ -135,36 +114,16 @@ def streaming_frame_counts_from_parquet(
     parquet_path: str,
     schema,  # noqa: ANN001 — StructType of the batch-read table
     delta_seconds: int = 3600,
-    ts_is_nanos: bool | None = None,  # retained for API compat; ignored
     slide_seconds: int | None = None,
 ) -> DataFrame:
     """Run the tumbling count as a bounded stream and return the result.
 
     Uses Trigger.AvailableNow so the stream drains all existing files
     and stops — deterministic, suitable for differential testing
-    against the batch plan (and the DuckDB oracle). The ts arrival type
-    is derived from ``schema``, never from the flag.
+    against the batch plan (and the DuckDB oracle).
     """
-    from neo4j_dynagraph_spark.sources.tables import normalize_stream_ts
-    from neo4j_dynagraph_spark.streaming.staging import stage_single_file
-
-    # FileStreamSource requires a directory basePath; when pointed at a
-    # single parquet file, stage a symlink inside a temp dir (testdata is
-    # read-only — never copied or modified).
-    parquet_path = stage_single_file(parquet_path)
-    reader = spark.readStream.schema(schema)
-    stream = reader.parquet(parquet_path)
-    stream = normalize_stream_ts(spark, stream, schema)
-    agg = stream_tumbling_counts(stream, delta_seconds, slide_seconds=slide_seconds)
-    sink_name = f"stream_frames_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="dynagraph_ckpt_")
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return snapshot_and_drop(spark, sink_name)
+    with bounded_drain(spark) as drain:
+        agg = stream_tumbling_counts(
+            drain.source(parquet_path, schema), delta_seconds, slide_seconds=slide_seconds
+        )
+        return drain.result(drain.run(agg, "memory", "complete"))

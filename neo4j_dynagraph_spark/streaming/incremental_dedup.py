@@ -29,91 +29,61 @@ format (Delta/Iceberg MERGE) — the protocol is unchanged.
 from __future__ import annotations
 
 import os
-import tempfile
+import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from neo4j_dynagraph_spark.streaming.staging import cleanup_on_error
+from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
 
-@cleanup_on_error
 def stream_dedup_documents(
     spark: SparkSession,
     docs_path: str,
     schema,  # noqa: ANN001
     store_root: str | None = None,
-    out_dir: str | None = None,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Drain a documents file-stream through the first-seen filter.
 
-    Returns the surviving (doc_id, content_hash) set as a batch
-    DataFrame read back from the per-batch output directories.
+    Returns the (doc_id, content_hash) docs first seen in THIS drain,
+    read back from its per-batch output directories (``_out/<run>``
+    under the drain root: a persistent root keeps every run's output).
     """
-    from neo4j_dynagraph_spark.streaming.staging import (
-        drain_dirs,
-        release_root,
-        stage_single_file,
-    )
+    with bounded_drain(spark, store_root) as drain:
+        store = DimensionStore(spark, drain.root, ["content_hash"])
+        out_dir = drain.path("_out", uuid.uuid4().hex[:12])
 
-    store_root, ckpt, src_stage, eph = drain_dirs(
-        store_root, "dynagraph_dedup_"
-    )
-    # out_dir is NOT ephemeral: it backs the returned DataFrame (the
-    # surviving-docs output is data-sized — callers own its lifetime)
-    out_dir = out_dir or tempfile.mkdtemp(prefix="dynagraph_dedup_out_")
-    store = DimensionStore(spark, store_root, ["content_hash"])
-
-    # stage single-file fixtures behind a symlink (no sentinel needed —
-    # foreachBatch has no watermark to push)
-    docs_path = stage_single_file(docs_path, into=src_stage)
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_path)
-
-    def dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
-        hashed = batch_df.select(
-            "doc_id", F.md5("text").alias("content_hash")
-        )
-        # within-batch first-seen: min doc_id per hash
-        batch_first = hashed.groupBy("content_hash").agg(
-            F.min("doc_id").alias("doc_id")
-        )
-        seen = store.read()
-        novel = (
-            batch_first
-            if seen is None
-            else batch_first.join(
-                F.broadcast(seen), "content_hash", "left_anti"
+        def dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
+            hashed = batch_df.select(
+                "doc_id", F.md5("text").alias("content_hash")
             )
+            # within-batch first-seen: min doc_id per hash
+            batch_first = hashed.groupBy("content_hash").agg(
+                F.min("doc_id").alias("doc_id")
+            )
+            seen = store.read()
+            novel = (
+                batch_first
+                if seen is None
+                else batch_first.join(
+                    F.broadcast(seen), "content_hash", "left_anti"
+                )
+            )
+            # replay-safe emit: the output path is a pure function of
+            # batch_id, so a re-delivered batch overwrites itself
+            novel.select("doc_id", "content_hash").write.mode(
+                "overwrite"
+            ).parquet(os.path.join(out_dir, f"batch_{batch_id}"))
+            store.merge(novel)
+
+        drain.run(
+            drain.source(docs_path, schema, max_files_per_trigger), dedup_batch
         )
-        # replay-safe emit: the output path is a pure function of
-        # batch_id, so a re-delivered batch overwrites itself
-        novel.select("doc_id", "content_hash").write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_{batch_id}")
-        )
-        store.merge(novel)
-
-    q = (
-        stream.writeStream.foreachBatch(dedup_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.read.parquet(os.path.join(out_dir, "batch_*"))
-    # the result reads out_dir, not the store — the first-seen state +
-    # checkpoint are safe to delete in ephemeral mode (ledger-aware:
-    # a bare rmtree would leave the pending-roots entry behind)
-    release_root(eph)
-    return out
+        return drain.result(spark.read.parquet(os.path.join(out_dir, "batch_*")))
 
 
-@cleanup_on_error
 def stream_dedup_minhash(
     spark: SparkSession,
     docs_path: str,
@@ -154,11 +124,6 @@ def stream_dedup_minhash(
         minhash_signatures,
         shingles_df,
     )
-    from neo4j_dynagraph_spark.streaming.staging import (
-        drain_dirs,
-        finalize_drain,
-        stage_single_file,
-    )
     from neo4j_dynagraph_spark.streaming.training_mix import BatchRowStore
 
     if num_hashes % rows_per_band:
@@ -167,72 +132,59 @@ def stream_dedup_minhash(
         )
     r = rows_per_band
     hcols = [f"h{j}" for j in range(r)]
-    store_root, ckpt, src_stage, eph = drain_dirs(
-        store_root, "dynagraph_lshdedup_"
-    )
-    store = BatchRowStore(
-        spark,
-        os.path.join(store_root, "bands"),
-        ["batch_id", "doc_id", "band", *hcols],
-    )
-    docs_path = stage_single_file(docs_path, into=src_stage)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_path)
+    with bounded_drain(spark, store_root) as drain:
+        store = BatchRowStore(
+            spark,
+            drain.path("bands"),
+            ["batch_id", "doc_id", "band", *hcols],
+        )
+        stream = drain.source(docs_path, schema, max_files_per_trigger)
 
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                *[F.col(f"h{r * b + j}").alias(f"h{j}") for j in range(r)],
+        band_structs = F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    *[F.col(f"h{r * b + j}").alias(f"h{j}") for j in range(r)],
+                )
+                for b in range(num_hashes // r)
+            ]
+        )
+
+        def band_batch(batch_df: DataFrame, batch_id: int) -> None:
+            sigs = minhash_signatures(
+                shingles_df(batch_df), num_hashes=num_hashes
             )
-            for b in range(num_hashes // r)
-        ]
-    )
+            rows = sigs.select(
+                F.lit(batch_id).cast("long").alias("batch_id"),
+                "doc_id",
+                F.explode(band_structs).alias("bs"),
+            ).select(
+                "batch_id",
+                "doc_id",
+                "bs.band",
+                *[F.col(f"bs.h{j}").alias(f"h{j}") for j in range(r)],
+            )
+            store.merge(rows)
 
-    def band_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sigs = minhash_signatures(
-            shingles_df(batch_df), num_hashes=num_hashes
-        )
-        rows = sigs.select(
-            F.lit(batch_id).cast("long").alias("batch_id"),
-            "doc_id",
-            F.explode(band_structs).alias("bs"),
-        ).select(
-            "batch_id",
-            "doc_id",
-            "bs.band",
-            *[F.col(f"bs.h{j}").alias(f"h{j}") for j in range(r)],
-        )
-        store.merge(rows)
+        drain.run(stream, band_batch)
 
-    q = (
-        stream.writeStream.foreachBatch(band_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    bands = store.read()
-    if bands is None:
-        return finalize_drain(
-            spark.createDataFrame([], "doc_id long, is_near_dup boolean"),
-            eph,
+        bands = store.read()
+        if bands is None:
+            return drain.result(
+                spark.createDataFrame([], "doc_id long, is_near_dup boolean")
+            )
+        keys = ["band", *hcols]
+        buckets = bands.groupBy(*keys).agg(
+            F.min("doc_id").alias("_mn"), F.count(F.lit(1)).alias("_n")
         )
-    keys = ["band", *hcols]
-    buckets = bands.groupBy(*keys).agg(
-        F.min("doc_id").alias("_mn"), F.count(F.lit(1)).alias("_n")
-    )
-    out = (
-        bands.join(buckets, keys)
-        .groupBy("doc_id")
-        .agg(
-            F.bool_or(
-                (F.col("_n") <= max_bucket) & (F.col("_mn") < F.col("doc_id"))
-            ).alias("is_near_dup")
+        out = (
+            bands.join(buckets, keys)
+            .groupBy("doc_id")
+            .agg(
+                F.bool_or(
+                    (F.col("_n") <= max_bucket) & (F.col("_mn") < F.col("doc_id"))
+                ).alias("is_near_dup")
+            )
+            .orderBy("doc_id")
         )
-        .orderBy("doc_id")
-    )
-    return finalize_drain(out, eph)
+        return drain.result(out)

@@ -22,6 +22,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from neo4j_dynagraph_spark.streaming.drain import bounded_drain
+
 
 def stream_interval_overlap(
     events: DataFrame,
@@ -124,24 +126,16 @@ def stream_interval_overlap_from_parquet(
     sink): stage the input plus the end-of-stream sentinel, run the
     streaming interval join to completion, and return the finalized
     aggregate for differential testing against the batch operator."""
-    from neo4j_dynagraph_spark.sources.tables import normalize_stream_ts
-    from neo4j_dynagraph_spark.streaming.drain import drain_stream_to_parquet
-    from neo4j_dynagraph_spark.streaming.edges import _stage_with_sentinel
-
     # one sentinel per joined type: the per-branch event_type filters
     # get pushed below the watermark node, so each branch must see a
     # sentinel of its OWN type or its watermark stalls on its last
     # real event (staggered > spell apart so the sentinels can't pair)
-    stage = _stage_with_sentinel(
-        spark,
-        parquet_path,
-        schema,
-        type_values=("signup", "purchase"),
-        stagger_seconds=max(3600, 2 * spell_seconds),
-    )
-    stream = spark.readStream.schema(schema).parquet(stage)
-    stream = normalize_stream_ts(spark, stream, schema)
-    return drain_stream_to_parquet(
-        stream_interval_overlap(stream, spell_seconds=spell_seconds),
-        "stream_intervals",
-    )
+    with bounded_drain(spark) as drain:
+        stream = drain.source(
+            parquet_path,
+            schema,
+            sentinel=("signup", "purchase"),
+            stagger_seconds=max(3600, 2 * spell_seconds),
+        )
+        overlap = stream_interval_overlap(stream, spell_seconds=spell_seconds)
+        return drain.result(drain.run(overlap, "parquet"))

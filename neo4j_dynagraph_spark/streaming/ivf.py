@@ -40,12 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from neo4j_dynagraph_spark.operators.hub import materialize
 from neo4j_dynagraph_spark.operators.similarity import ivf_assign
-from neo4j_dynagraph_spark.streaming.staging import (
-    cleanup_on_error,
-    drain_dirs,
-    finalize_drain,
-    stage_single_file,
-)
+from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
 
@@ -79,7 +74,6 @@ class CellPartitionedStore(DimensionStore):
         )
 
 
-@cleanup_on_error
 def stream_ivf_assign(
     spark: SparkSession,
     emb_path: str,
@@ -99,41 +93,29 @@ def stream_ivf_assign(
     drains ephemerally; a persistent root keeps checkpoint + source
     stage inside it so re-invocations assign only new files.
     """
-    store_root, ckpt, src_stage, eph = drain_dirs(
-        store_root, "dynagraph_ivf_"
-    )
-    store = CellPartitionedStore(
-        spark, os.path.join(store_root, "cells"), ["vec_id", "cell"]
-    )
-    # freeze the codebook once — foreachBatch re-evaluates closures
-    # per batch, and the contract is that every batch sees the SAME
-    # centroids regardless of what the codebook frame reads from
-    cent = centroids.transform(materialize)
-
-    emb_path = stage_single_file(emb_path, into=src_stage)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(emb_path)
-
-    def assign_batch(batch_df: DataFrame, batch_id: int) -> None:
-        vecs = batch_df.select(
-            "vec_id", F.col(vec_col).cast("array<double>").alias("v")
+    with bounded_drain(spark, store_root) as drain:
+        store = CellPartitionedStore(
+            spark, drain.path("cells"), ["vec_id", "cell"]
         )
-        assigned = ivf_assign(vecs, cent, nprobe=1).select("vec_id", "cell")
-        store.merge(assigned)
+        # freeze the codebook once — foreachBatch re-evaluates closures
+        # per batch, and the contract is that every batch sees the SAME
+        # centroids regardless of what the codebook frame reads from
+        cent = centroids.transform(materialize)
 
-    q = (
-        stream.writeStream.foreachBatch(assign_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        stream = drain.source(emb_path, schema, max_files_per_trigger)
 
-    state = store.read()
-    if state is None:  # empty stream
-        out = spark.createDataFrame([], "vec_id long, cell long")
-    else:
-        out = state.select("vec_id", "cell")
-    return finalize_drain(out, eph)
+        def assign_batch(batch_df: DataFrame, batch_id: int) -> None:
+            vecs = batch_df.select(
+                "vec_id", F.col(vec_col).cast("array<double>").alias("v")
+            )
+            assigned = ivf_assign(vecs, cent, nprobe=1).select("vec_id", "cell")
+            store.merge(assigned)
+
+        drain.run(stream, assign_batch)
+
+        state = store.read()
+        if state is None:  # empty stream
+            out = spark.createDataFrame([], "vec_id long, cell long")
+        else:
+            out = state.select("vec_id", "cell")
+        return drain.result(out)

@@ -31,12 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from neo4j_dynagraph_spark import functions as dfn
 from neo4j_dynagraph_spark.operators.sketch import _TWO_60, kmv_estimate
-from neo4j_dynagraph_spark.streaming.staging import (
-    cleanup_on_error,
-    drain_dirs,
-    finalize_drain,
-    stage_single_file,
-)
+from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
 
@@ -71,7 +66,6 @@ class KMVStore(DimensionStore):
         self._commit(pruned)
 
 
-@cleanup_on_error
 def stream_kmv_distinct(
     spark: SparkSession,
     events_path: str,
@@ -96,49 +90,36 @@ def stream_kmv_distinct(
     the result materializes); a persistent ``store_root`` keeps its
     checkpoint inside it so re-invocations are truly incremental.
     """
-    store_root, ckpt, src_stage, eph = drain_dirs(
-        store_root, "dynagraph_kmv_"
-    )
-    store = KMVStore(spark, store_root, group_col, k)
+    with bounded_drain(spark, store_root) as drain:
+        store = KMVStore(spark, drain.root, group_col, k)
 
-    # no sentinel needed — foreachBatch has no watermark to push
-    events_path = stage_single_file(events_path, into=src_stage)
+        # no sentinel needed — foreachBatch has no watermark to push
+        stream = drain.source(events_path, schema, max_files_per_trigger)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(events_path)
+        u = (
+            dfn.hash64(F.concat(F.lit(seed), F.col(value_col).cast("string"))) + 1
+        ) / F.lit(_TWO_60)
 
-    u = (
-        dfn.hash64(F.concat(F.lit(seed), F.col(value_col).cast("string"))) + 1
-    ) / F.lit(_TWO_60)
+        def sketch_batch(batch_df: DataFrame, batch_id: int) -> None:
+            vals = batch_df.select(F.col(group_col), u.alias("u")).distinct()
+            w = Window.partitionBy(group_col).orderBy("u")
+            candidates = (
+                vals.withColumn("_r", F.row_number().over(w))
+                .where(F.col("_r") <= k)
+                .drop("_r")
+            )
+            store.merge(candidates)
 
-    def sketch_batch(batch_df: DataFrame, batch_id: int) -> None:
-        vals = batch_df.select(F.col(group_col), u.alias("u")).distinct()
-        w = Window.partitionBy(group_col).orderBy("u")
-        candidates = (
-            vals.withColumn("_r", F.row_number().over(w))
-            .where(F.col("_r") <= k)
-            .drop("_r")
-        )
-        store.merge(candidates)
-
-    q = (
-        stream.writeStream.foreachBatch(sketch_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    state = store.read()
-    if state is None:  # empty stream: no groups
-        # group column type comes from the INPUT schema — hardcoding
-        # string would diverge from the non-empty result for
-        # non-string group columns
-        gtype = schema[group_col].dataType.simpleString()
-        out = spark.createDataFrame(
-            [], f"{group_col} {gtype}, n_seen bigint, est_distinct double"
-        )
-    else:
-        out = kmv_estimate(state, group_col, k)
-    return finalize_drain(out, eph)
+        drain.run(stream, sketch_batch)
+        state = store.read()
+        if state is None:  # empty stream: no groups
+            # group column type comes from the INPUT schema — hardcoding
+            # string would diverge from the non-empty result for
+            # non-string group columns
+            gtype = schema[group_col].dataType.simpleString()
+            out = spark.createDataFrame(
+                [], f"{group_col} {gtype}, n_seen bigint, est_distinct double"
+            )
+        else:
+            out = kmv_estimate(state, group_col, k)
+        return drain.result(out)

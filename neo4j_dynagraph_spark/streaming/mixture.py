@@ -21,22 +21,14 @@ micro-batch chopping — the same DuckDB oracle grades both.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from neo4j_dynagraph_spark.operators.text import temperature_mix_from_catalog
-from neo4j_dynagraph_spark.streaming.staging import (
-    cleanup_on_error,
-    drain_dirs,
-    finalize_drain,
-    stage_single_file,
-)
+from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.training_mix import BatchRowStore
 
 
-@cleanup_on_error
 def stream_temperature_mix(
     spark: SparkSession,
     docs_path: str,
@@ -54,46 +46,34 @@ def stream_temperature_mix(
     the result materializes); a persistent ``store_root`` keeps its
     checkpoint inside it so re-invocations ingest only new files.
     """
-    store_root, ckpt, src_stage, eph = drain_dirs(
-        store_root, "dynagraph_mix_"
-    )
-    catalog = BatchRowStore(
-        spark,
-        os.path.join(store_root, "catalog"),
-        ["batch_id", "doc_id", "source"],
-    )
-    docs_path = stage_single_file(docs_path, into=src_stage)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_path)
+    with bounded_drain(spark, store_root) as drain:
+        catalog = BatchRowStore(
+            spark,
+            drain.path("catalog"),
+            ["batch_id", "doc_id", "source"],
+        )
+        stream = drain.source(docs_path, schema, max_files_per_trigger)
 
-    def catalog_batch(batch_df: DataFrame, batch_id: int) -> None:
-        catalog.merge(
-            batch_df.select(
-                F.lit(batch_id).cast("long").alias("batch_id"),
-                "doc_id",
-                F.col(source_col).alias("source"),
+        def catalog_batch(batch_df: DataFrame, batch_id: int) -> None:
+            catalog.merge(
+                batch_df.select(
+                    F.lit(batch_id).cast("long").alias("batch_id"),
+                    "doc_id",
+                    F.col(source_col).alias("source"),
+                )
             )
-        )
 
-    q = (
-        stream.writeStream.foreachBatch(catalog_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        drain.run(stream, catalog_batch)
 
-    state = catalog.read()
-    if state is None:
-        out = spark.createDataFrame(
-            [],
-            "source string, n_docs bigint, share double, "
-            "target_share double, keep_rate double, n_kept bigint",
-        )
-    else:
-        out = temperature_mix_from_catalog(
-            state.select("doc_id", "source"), alpha
-        )
-    return finalize_drain(out, eph)
+        state = catalog.read()
+        if state is None:
+            out = spark.createDataFrame(
+                [],
+                "source string, n_docs bigint, share double, "
+                "target_share double, keep_rate double, n_kept bigint",
+            )
+        else:
+            out = temperature_mix_from_catalog(
+                state.select("doc_id", "source"), alpha
+            )
+        return drain.result(out)

@@ -35,20 +35,13 @@ DuckDB oracle as the batch row.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from neo4j_dynagraph_spark import functions as dfn
 from neo4j_dynagraph_spark.operators.hub import materialize
 from neo4j_dynagraph_spark.operators.ingest import DEFAULT_DELTA
-from neo4j_dynagraph_spark.streaming.staging import (
-    cleanup_on_error,
-    drain_dirs,
-    finalize_drain,
-    stage_single_file,
-)
+from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
 
@@ -84,7 +77,6 @@ def _hop_hash(hop: int):  # noqa: ANN202
     )
 
 
-@cleanup_on_error
 def stream_neighbor_sampling(
     spark: SparkSession,
     events_path: str,
@@ -104,101 +96,85 @@ def stream_neighbor_sampling(
     the result materializes); a persistent ``store_root`` keeps its
     checkpoint inside it so re-invocations ingest only new files.
     """
-    from neo4j_dynagraph_spark.sources.tables import normalize_stream_ts
-
-    store_root, ckpt, src_stage, eph = drain_dirs(
-        store_root, "dynagraph_ns_"
-    )
-    pres = DimensionStore(
-        spark, os.path.join(store_root, "presence"), ["frame_id", "actor"]
-    )
-    lattices = [
-        MinKLattice(spark, os.path.join(store_root, f"hop{i}"), fo)
-        for i, fo in enumerate(fanouts, start=1)
-    ]
-
-    events_path = stage_single_file(events_path, into=src_stage)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = normalize_stream_ts(spark, reader.parquet(events_path), schema)
-
-    def sample_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ev = batch_df if where is None else batch_df.where(where)
-        newp = (
-            ev.select(
-                dfn.frame_id(
-                    dfn.epoch_seconds(F.col("ts")), delta, 0
-                ).alias("frame_id"),
-                F.col("user_id").alias("actor"),
-            )
-            .distinct()
+    with bounded_drain(spark, store_root) as drain:
+        pres = DimensionStore(
+            spark, drain.path("presence"), ["frame_id", "actor"]
         )
-        old = pres.read()
-        if old is not None:
-            newp = newp.join(old, ["frame_id", "actor"], "left_anti")
-        newp = newp.transform(materialize)
-        if newp.count() == 0:
-            return
-        # Commit order matters for crash-replay exactly-once: the
-        # presence store is the dedup gate for the left-anti above, so
-        # it must commit LAST. The lattice merges are idempotent
-        # (hash-keyed min-k), so a replay after a crash between stores
-        # recomputes newp non-empty and re-merges harmlessly; committing
-        # presence first would make a replayed batch's newp empty and
-        # drop its edges from the lattices forever.
-        allp = newp if old is None else old.unionByName(newp)
-        pairs = (
-            newp.alias("a")
-            .join(allp.alias("b"), "frame_id")
-            .where(F.col("a.actor") != F.col("b.actor"))
-            .select(
-                F.col("a.actor").alias("src"),
-                F.col("b.actor").alias("dst"),
-            )
-            .distinct()
-        )
-        # fresh x stored covers (new, old) and (new, new); the (old,
-        # new) orientation is the same pairs reversed
-        sym_new = pairs.unionByName(
-            pairs.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        ).distinct().transform(materialize)
-        for hop, lat in enumerate(lattices, start=1):
-            lat.merge(
-                sym_new.select("src", "dst", _hop_hash(hop).alias("h"))
-            )
-        pres.merge(newp)  # dedup gate commits last (see above)
+        lattices = [
+            MinKLattice(spark, drain.path(f"hop{i}"), fo)
+            for i, fo in enumerate(fanouts, start=1)
+        ]
 
-    q = (
-        stream.writeStream.foreachBatch(sample_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        stream = drain.source(events_path, schema, max_files_per_trigger)
 
-    first = lattices[0].read()
-    if first is None:
-        out = spark.createDataFrame(
-            [], "seed long, hop int, src long, dst long"
+        def sample_batch(batch_df: DataFrame, batch_id: int) -> None:
+            ev = batch_df if where is None else batch_df.where(where)
+            newp = (
+                ev.select(
+                    dfn.frame_id(
+                        dfn.epoch_seconds(F.col("ts")), delta, 0
+                    ).alias("frame_id"),
+                    F.col("user_id").alias("actor"),
+                )
+                .distinct()
+            )
+            old = pres.read()
+            if old is not None:
+                newp = newp.join(old, ["frame_id", "actor"], "left_anti")
+            newp = newp.transform(materialize)
+            if newp.count() == 0:
+                return
+            # Commit order matters for crash-replay exactly-once: the
+            # presence store is the dedup gate for the left-anti above, so
+            # it must commit LAST. The lattice merges are idempotent
+            # (hash-keyed min-k), so a replay after a crash between stores
+            # recomputes newp non-empty and re-merges harmlessly; committing
+            # presence first would make a replayed batch's newp empty and
+            # drop its edges from the lattices forever.
+            allp = newp if old is None else old.unionByName(newp)
+            pairs = (
+                newp.alias("a")
+                .join(allp.alias("b"), "frame_id")
+                .where(F.col("a.actor") != F.col("b.actor"))
+                .select(
+                    F.col("a.actor").alias("src"),
+                    F.col("b.actor").alias("dst"),
+                )
+                .distinct()
+            )
+            # fresh x stored covers (new, old) and (new, new); the (old,
+            # new) orientation is the same pairs reversed
+            sym_new = pairs.unionByName(
+                pairs.select(
+                    F.col("dst").alias("src"), F.col("src").alias("dst")
+                )
+            ).distinct().transform(materialize)
+            for hop, lat in enumerate(lattices, start=1):
+                lat.merge(
+                    sym_new.select("src", "dst", _hop_hash(hop).alias("h"))
+                )
+            pres.merge(newp)  # dedup gate commits last (see above)
+
+        drain.run(stream, sample_batch)
+
+        first = lattices[0].read()
+        if first is None:
+            out = spark.createDataFrame(
+                [], "seed long, hop int, src long, dst long"
+            )
+            return drain.result(out)
+        out = first.select(
+            F.col("src").alias("seed"),
+            F.lit(1).alias("hop"),
+            "src",
+            "dst",
         )
-        return finalize_drain(out, eph)
-    out = first.select(
-        F.col("src").alias("seed"),
-        F.lit(1).alias("hop"),
-        "src",
-        "dst",
-    )
-    frontier = out.select("seed", F.col("dst").alias("v")).distinct()
-    for hop in range(2, len(fanouts) + 1):
-        lat = lattices[hop - 1].read()
-        block = frontier.join(lat, frontier.v == lat.src).select(
-            "seed", F.lit(hop).alias("hop"), "src", "dst"
-        )
-        out = out.unionByName(block)
-        frontier = block.select("seed", F.col("dst").alias("v")).distinct()
-    return finalize_drain(
-        out.orderBy("seed", "hop", "src", "dst"), eph
-    )
+        frontier = out.select("seed", F.col("dst").alias("v")).distinct()
+        for hop in range(2, len(fanouts) + 1):
+            lat = lattices[hop - 1].read()
+            block = frontier.join(lat, frontier.v == lat.src).select(
+                "seed", F.lit(hop).alias("hop"), "src", "dst"
+            )
+            out = out.unionByName(block)
+            frontier = block.select("seed", F.col("dst").alias("v")).distinct()
+        return drain.result(out.orderBy("seed", "hop", "src", "dst"))

@@ -26,12 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from neo4j_dynagraph_spark.operators.text import gopher_rules
 from neo4j_dynagraph_spark.streaming.corpus_stats import CounterStore
-from neo4j_dynagraph_spark.streaming.staging import (
-    cleanup_on_error,
-    drain_dirs,
-    finalize_drain,
-    stage_single_file,
-)
+from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
 _RULES = ("r_wc", "r_mwl", "r_alpha", "r_stop", "r_rep")
@@ -45,7 +40,6 @@ class QualityStore(CounterStore):
         DimensionStore.__init__(self, spark, root, ["batch_id", "source"])
 
 
-@cleanup_on_error
 def stream_gopher_stats(
     spark: SparkSession,
     docs_path: str,
@@ -67,61 +61,48 @@ def stream_gopher_stats(
     the result materializes); a persistent ``store_root`` keeps its
     checkpoint inside it so re-invocations are truly incremental.
     """
-    store_root, ckpt, src_stage, eph = drain_dirs(
-        store_root, "dynagraph_qual_"
-    )
-    store = QualityStore(spark, store_root)
-    docs_path = stage_single_file(docs_path, into=src_stage)
+    with bounded_drain(spark, store_root) as drain:
+        store = QualityStore(spark, drain.root)
+        stream = drain.source(docs_path, schema, max_files_per_trigger)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_path)
-
-    def quality_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rules = gopher_rules(batch_df, text_col)
-        partial = rules.groupBy("source").agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            *[
-                F.sum(F.when(~F.col(c), 1).otherwise(0))
+        def quality_batch(batch_df: DataFrame, batch_id: int) -> None:
+            rules = gopher_rules(batch_df, text_col)
+            partial = rules.groupBy("source").agg(
+                F.count(F.lit(1)).cast("long").alias("n_docs"),
+                *[
+                    F.sum(F.when(~F.col(c), 1).otherwise(0))
+                    .cast("long")
+                    .alias(f"fail_{c[2:]}")
+                    for c in _RULES
+                ],
+                F.sum(F.when(F.col("passed"), 1).otherwise(0))
                 .cast("long")
-                .alias(f"fail_{c[2:]}")
-                for c in _RULES
-            ],
-            F.sum(F.when(F.col("passed"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_pass"),
-        )
-        store.merge(
-            partial.select(
-                F.lit(batch_id).cast("long").alias("batch_id"), "*"
+                .alias("n_pass"),
             )
-        )
+            store.merge(
+                partial.select(
+                    F.lit(batch_id).cast("long").alias("batch_id"), "*"
+                )
+            )
 
-    q = (
-        stream.writeStream.foreachBatch(quality_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    state = store.read()
-    cols = ["n_docs"] + [f"fail_{c[2:]}" for c in _RULES] + ["n_pass"]
-    if state is None:
-        out = spark.createDataFrame(
-            [],
-            "source string, "
-            + ", ".join(f"{c} bigint" for c in cols)
-            + ", pass_rate double",
-        )
-    else:
-        out = (
-            state.groupBy("source")
-            .agg(*[F.sum(c).cast("long").alias(c) for c in cols])
-            .withColumn(
-                "pass_rate",
-                F.round(F.col("n_pass") / F.col("n_docs").cast("double"), 6),
+        drain.run(stream, quality_batch)
+        state = store.read()
+        cols = ["n_docs"] + [f"fail_{c[2:]}" for c in _RULES] + ["n_pass"]
+        if state is None:
+            out = spark.createDataFrame(
+                [],
+                "source string, "
+                + ", ".join(f"{c} bigint" for c in cols)
+                + ", pass_rate double",
             )
-            .orderBy("source")
-        )
-    return finalize_drain(out, eph)
+        else:
+            out = (
+                state.groupBy("source")
+                .agg(*[F.sum(c).cast("long").alias(c) for c in cols])
+                .withColumn(
+                    "pass_rate",
+                    F.round(F.col("n_pass") / F.col("n_docs").cast("double"), 6),
+                )
+                .orderBy("source")
+            )
+        return drain.result(out)

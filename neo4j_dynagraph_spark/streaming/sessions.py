@@ -27,6 +27,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StructField, StructType
 
+from neo4j_dynagraph_spark.streaming.drain import bounded_drain
+
 SESSION_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -153,7 +155,6 @@ def stateful_sessions_from_parquet(
     parquet_path: str,
     schema,  # noqa: ANN001
     gap_seconds: int = 1800,
-    ts_is_nanos: bool | None = None,  # retained for API compat; ignored
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Run the stateful sessionizer over a bounded file stream
@@ -164,33 +165,6 @@ def stateful_sessions_from_parquet(
     at a directory of time-ordered files with cap 1 forces sessions to
     span micro-batches, exercising the state-carry path.
     """
-    import tempfile
-    import uuid
-
-    from neo4j_dynagraph_spark.streaming.staging import stage_single_file
-
-    parquet_path = stage_single_file(parquet_path, "dynagraph_sess_src_")
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        # one time-ordered file per batch, oldest first
-        reader = reader.option("latestFirst", "false")
-    stream = reader.parquet(parquet_path)
-    from neo4j_dynagraph_spark.sources.tables import normalize_stream_ts
-
-    stream = normalize_stream_ts(spark, stream, schema)
-    sessions = stateful_sessionize(stream, gap_seconds)
-    sink_name = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="dynagraph_ckpt_")
-    query = (
-        sessions.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    from neo4j_dynagraph_spark.streaming.drain import snapshot_and_drop
-
-    return snapshot_and_drop(spark, sink_name)
+    with bounded_drain(spark) as drain:
+        stream = drain.source(parquet_path, schema, max_files_per_trigger)
+        return drain.result(drain.run(stateful_sessionize(stream, gap_seconds), "memory"))

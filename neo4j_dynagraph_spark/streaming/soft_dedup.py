@@ -18,8 +18,6 @@ graded on ITS oracle.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -27,16 +25,10 @@ from neo4j_dynagraph_spark.operators.dedup import (
     soft_dedup_fingerprints,
     soft_dedup_from_fingerprints,
 )
-from neo4j_dynagraph_spark.streaming.staging import (
-    cleanup_on_error,
-    drain_dirs,
-    finalize_drain,
-    stage_single_file,
-)
+from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.training_mix import BatchRowStore
 
 
-@cleanup_on_error
 def stream_soft_dedup(
     spark: SparkSession,
     docs_path: str,
@@ -53,44 +45,31 @@ def stream_soft_dedup(
     ``store_root=None`` drains ephemerally; a persistent root keeps
     its checkpoint so re-invocations ingest only new files.
     """
-    store_root, ckpt, src_stage, eph = drain_dirs(
-        store_root, "dynagraph_softdedup_"
-    )
-    fp_store = BatchRowStore(
-        spark, os.path.join(store_root, "fp"), ["batch_id", "doc_id"]
-    )
-    docs_path = stage_single_file(docs_path, into=src_stage)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_path)
+    with bounded_drain(spark, store_root) as drain:
+        fp_store = BatchRowStore(
+            spark, drain.path("fp"), ["batch_id", "doc_id"]
+        )
+        stream = drain.source(docs_path, schema, max_files_per_trigger)
 
-    def fp_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fp_store.merge(
-            soft_dedup_fingerprints(batch_df, text_col).select(
-                F.lit(batch_id).cast("long").alias("batch_id"), "*"
+        def fp_batch(batch_df: DataFrame, batch_id: int) -> None:
+            fp_store.merge(
+                soft_dedup_fingerprints(batch_df, text_col).select(
+                    F.lit(batch_id).cast("long").alias("batch_id"), "*"
+                )
+            )
+
+        drain.run(stream, fp_batch)
+
+        state = fp_store.read()
+        if state is None:
+            out = spark.createDataFrame(
+                [],
+                "source string, n_docs bigint, dup_docs bigint, "
+                "effective_docs double, effective_tokens double",
+            )
+            return drain.result(out)
+        return drain.result(
+            soft_dedup_from_fingerprints(
+                state.select("doc_id", "source", "h", "ws")
             )
         )
-
-    q = (
-        stream.writeStream.foreachBatch(fp_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    state = fp_store.read()
-    if state is None:
-        out = spark.createDataFrame(
-            [],
-            "source string, n_docs bigint, dup_docs bigint, "
-            "effective_docs double, effective_tokens double",
-        )
-        return finalize_drain(out, eph)
-    return finalize_drain(
-        soft_dedup_from_fingerprints(
-            state.select("doc_id", "source", "h", "ws")
-        ),
-        eph,
-    )

@@ -25,12 +25,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from neo4j_dynagraph_spark.streaming.staging import (
-    cleanup_on_error,
-    drain_dirs,
-    finalize_drain,
-    stage_single_file,
-)
+from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
 
@@ -52,7 +47,6 @@ class MinMaxStore(DimensionStore):
         )
 
 
-@cleanup_on_error
 def stream_sq_stats(
     spark: SparkSession,
     emb_path: str,
@@ -72,39 +66,26 @@ def stream_sq_stats(
     the result materializes); a persistent ``store_root`` keeps its
     checkpoint inside it so re-invocations are truly incremental.
     """
-    store_root, ckpt, src_stage, eph = drain_dirs(
-        store_root, "dynagraph_sq_"
-    )
-    store = MinMaxStore(spark, store_root)
-    emb_path = stage_single_file(emb_path, into=src_stage)
+    with bounded_drain(spark, store_root) as drain:
+        store = MinMaxStore(spark, drain.root)
+        stream = drain.source(emb_path, schema, max_files_per_trigger)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(emb_path)
-
-    def calib_batch(batch_df: DataFrame, batch_id: int) -> None:
-        partial = (
-            batch_df.select(
-                F.posexplode(
-                    F.col(vec_col).cast("array<double>")
-                ).alias("i", "x")
+        def calib_batch(batch_df: DataFrame, batch_id: int) -> None:
+            partial = (
+                batch_df.select(
+                    F.posexplode(
+                        F.col(vec_col).cast("array<double>")
+                    ).alias("i", "x")
+                )
+                .groupBy("i")
+                .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
             )
-            .groupBy("i")
-            .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
-        )
-        store.merge(partial)
+            store.merge(partial)
 
-    q = (
-        stream.writeStream.foreachBatch(calib_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    state = store.read()
-    if state is None:
-        out = spark.createDataFrame([], "i int, mn double, mx double")
-    else:
-        out = state.orderBy("i")
-    return finalize_drain(out, eph)
+        drain.run(stream, calib_batch)
+        state = store.read()
+        if state is None:
+            out = spark.createDataFrame([], "i int, mn double, mx double")
+        else:
+            out = state.orderBy("i")
+        return drain.result(out)

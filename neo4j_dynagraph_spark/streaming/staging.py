@@ -1,158 +1,121 @@
-"""Single-file staging for FileStreamSource drains.
+"""Input staging for bounded file-stream drains.
 
-Spark's file stream source requires a DIRECTORY basePath; every drain
-in this package that accepts a single parquet file stages a symlink
-inside a temp dir (the testdata is read-only — never copied). Five
-modules carried verbatim copies of this logic, and every copy shared
-the same latent flaw: ``os.symlink`` stores the target string
-VERBATIM, so a RELATIVE input path produced a symlink that resolves
-relative to the temp dir — a broken link the file source reads as
-zero files, i.e. a silently empty stream. One shared helper, one
-``abspath``, five call sites.
+Spark's file stream source reads a DIRECTORY. A drain stages its input
+into ``<root>/_src`` of its :class:`~.drain.Drain` root in one of two
+ways:
+
+- :func:`stage_input`: a single parquet file becomes a directory
+  holding one symlink to it (the testdata is read-only, never
+  copied); a directory passes through unchanged. For a persistent
+  store root the stage is idempotent and pinned to one source: the
+  FileStreamSource checkpoint records source paths, so a different
+  basePath per invocation would make every seen file look new and
+  double-count additive state.
+- :func:`stage_with_sentinel`: symlinks to every input parquet file
+  plus an END-OF-STREAM SENTINEL event far past the real data, for
+  append-mode stateful plans (watermarked joins, windows, event-time
+  timeouts) whose trailing frames only emit once the watermark passes
+  them.
+
+Symlink targets are always absolute: ``os.symlink`` stores the target
+string verbatim, so a relative input path would resolve relative to
+the stage dir, a broken link the file source reads as zero files.
 """
 
 from __future__ import annotations
 
 import functools
 import os
-import shutil
-import tempfile
-import threading
 
-from pyspark.sql import DataFrame
+import pyspark.sql.functions as F
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType
 
-from neo4j_dynagraph_spark.operators.hub import materialize
-
-# Ephemeral roots created by drain_dirs that have not yet been cleaned
-# up by finalize_drain. Thread-local so concurrent drains (e.g. a
-# parallel test runner) never free each other's roots. Consumed by
-# cleanup_on_error, which every drain function wears — without it a
-# failing streaming query or eager localCheckpoint would leak the
-# mkdtemp root (store + checkpoint + stage) on disk.
-_local = threading.local()
+_HORIZON_S = 7 * 24 * 3600
 
 
-def _pending_roots() -> list:
-    roots = getattr(_local, "roots", None)
-    if roots is None:
-        roots = _local.roots = []
-    return roots
-
-
-def cleanup_on_error(fn):
-    """Decorator for drain functions: any ephemeral root registered by
-    :func:`drain_dirs` during the call that is still pending when the
-    call raises (streaming query failure, eager materialization error)
-    is deleted before the exception propagates. Success-path cleanup
-    stays in :func:`finalize_drain`; persistent-store drains register
-    nothing, so their on-disk state is never touched."""
-
-    @functools.wraps(fn)
-    def wrapper(*args, **kwargs):
-        roots = _pending_roots()
-        depth = len(roots)
-        try:
-            return fn(*args, **kwargs)
-        except BaseException:
-            while len(roots) > depth:
-                shutil.rmtree(roots.pop(), ignore_errors=True)
-            raise
-
-    return wrapper
-
-
-def stage_single_file(
-    path: str,
-    prefix: str = "dynagraph_stream_src_",
-    into: str | None = None,
-) -> str:
-    """If ``path`` is a single file, return a directory containing a
-    symlink to it (absolute target — see module docstring);
-    directories pass through unchanged.
-
-    ``into`` pins the stage directory (idempotent re-stage) instead of
-    a fresh mkdtemp — REQUIRED for persistent-store drains, because the
-    FileStreamSource checkpoint records source paths: a fresh temp
-    basePath per invocation would make every previously-seen file look
-    new and double-count additive state.
-    """
+def stage_input(path: str, into: str) -> str:
+    """If ``path`` is a single file, symlink it into ``into`` and return
+    ``into``; a directory is returned unchanged. Re-staging the same
+    file is a no-op; re-pointing a stage at another file raises."""
     if not os.path.isfile(path):
         return path
     target = os.path.abspath(path)
-    if into is not None:
-        os.makedirs(into, exist_ok=True)
-        link = os.path.join(into, os.path.basename(target))
-        if os.path.islink(link):
-            if os.readlink(link) != target:
-                raise ValueError(
-                    f"stage dir {into} already streams {os.readlink(link)}; "
-                    f"cannot re-point it at {target} — one persistent store "
-                    "tracks one source"
-                )
-        else:
-            os.symlink(target, link)
-        return into
-    stage = tempfile.mkdtemp(prefix=prefix)
-    os.symlink(target, os.path.join(stage, os.path.basename(target)))
-    return stage
+    os.makedirs(into, exist_ok=True)
+    link = os.path.join(into, os.path.basename(target))
+    if os.path.islink(link):
+        if os.readlink(link) != target:
+            raise ValueError(
+                f"stage dir {into} already streams {os.readlink(link)}; "
+                f"cannot re-point it at {target} — one persistent store "
+                "tracks one source"
+            )
+    else:
+        os.symlink(target, link)
+    return into
 
 
-def drain_dirs(
-    store_root: str | None, prefix: str
-) -> tuple[str, str, str, str | None]:
-    """Resolve the directory layout for a store-backed foreachBatch
-    drain: ``(store_root, checkpoint, source_stage, ephemeral_root)``.
+def stage_with_sentinel(
+    spark: SparkSession,
+    path: str,
+    schema,  # noqa: ANN001
+    into: str,
+    types: tuple[str, ...] = (),
+    stagger_seconds: int = 3600,
+) -> str:
+    """Stage the input parquet file(s) plus a sentinel event into
+    ``into`` and return it.
 
-    Caller passed a ``store_root`` → PERSISTENT mode: the checkpoint
-    and source stage live inside it, so a second invocation resumes
-    from the recorded offsets and processes only new files — the
-    "readable at any time without rescanning history" semantics the
-    incremental stores promise. No cleanup.
+    Append-mode stateful operators only emit what the watermark has
+    passed, and a drained stream's watermark stops at max_ts - delay;
+    the sentinel (the MAX-ts row moved a week later, alone in its own
+    frame so it never pairs) pushes the final watermark past every real
+    frame. The ts arrival type (legacy long nanos, timestamp,
+    timestamp_ntz) comes from ``schema``.
 
-    ``store_root is None`` → EPHEMERAL mode: store, checkpoint and
-    stage share one temp root which the caller must delete after
-    materializing the result (see :func:`finalize_drain`) — a graded
-    or bench run must not leak temp directories.
+    ``types``: when the plan filters the stream by ``event_type`` into
+    branches, Catalyst pushes the filters below the watermark node, so
+    a branch whose type the sentinel lacks never sees it and stalls.
+    One sentinel per value is staged, each ``stagger_seconds`` further
+    out so no two fall inside one frame or spell and pair.
     """
-    if store_root is None:
-        root = tempfile.mkdtemp(prefix=prefix)
-        _pending_roots().append(root)
-        return (
-            os.path.join(root, "store"),
-            os.path.join(root, "checkpoint"),
-            os.path.join(root, "src"),
-            root,
-        )
-    return (
-        store_root,
-        os.path.join(store_root, "_checkpoint"),
-        os.path.join(store_root, "_src"),
-        None,
+    os.makedirs(into, exist_ok=True)
+    src = os.path.abspath(path)
+    files = (
+        [src]
+        if os.path.isfile(src)
+        else [os.path.join(src, f) for f in os.listdir(src) if f.endswith(".parquet")]
     )
+    for f in files:
+        os.symlink(f, os.path.join(into, os.path.basename(f)))
+    last = (
+        spark.read.schema(schema)
+        .parquet(path)
+        .orderBy(F.col("ts").desc_nulls_last())
+        .limit(1)
+    )
+    if last.isEmpty():
+        raise ValueError(f"no rows under {path}; nothing to stream")
 
+    def advanced(seconds: int):  # noqa: ANN202
+        if isinstance(schema["ts"].dataType, LongType):
+            ts = (F.col("ts") + F.lit(seconds * 1_000_000_000)).cast("long")
+        else:
+            # interval addition keeps the exact column type, so the
+            # sentinel file's physical type matches the real files
+            ts = F.col("ts") + F.expr(f"INTERVAL {seconds} SECONDS")
+        return last.withColumn("ts", ts)
 
-def release_root(ephemeral_root: str | None) -> None:
-    """Delete an ephemeral drain root AND retire its pending-ledger
-    entry. The one correct way to free a root without going through
-    :func:`finalize_drain` (a drain whose result reads a separate
-    caller-owned out_dir, not the store): a bare ``shutil.rmtree``
-    leaves the ledger entry behind, which accumulates across drains on
-    the thread and makes later cleanup bookkeeping lie."""
-    if ephemeral_root is None:
-        return
-    shutil.rmtree(ephemeral_root, ignore_errors=True)
-    roots = _pending_roots()
-    if ephemeral_root in roots:
-        roots.remove(ephemeral_root)
-
-
-def finalize_drain(df: DataFrame, ephemeral_root: str | None) -> DataFrame:
-    """Materialize a drain's (sketch-sized, by the stores' O(state)
-    contracts) result off its backing store, then delete the ephemeral
-    root. Persistent mode (``ephemeral_root is None``) returns ``df``
-    lazily — its store stays on disk by design."""
-    if ephemeral_root is None:
-        return df
-    out = materialize(df)
-    release_root(ephemeral_root)
-    return out
+    parts = [
+        advanced(_HORIZON_S + i * stagger_seconds).withColumn(
+            "event_type", F.lit(v)
+        )
+        for i, v in enumerate(types)
+    ] or [advanced(_HORIZON_S)]
+    sentinel = functools.reduce(DataFrame.unionByName, parts)
+    out = os.path.join(into, "_sentinel")
+    sentinel.write.mode("overwrite").parquet(out)
+    for f in os.listdir(out):
+        if f.endswith(".parquet"):
+            os.rename(os.path.join(out, f), os.path.join(into, f"zz_sentinel_{f}"))
+    return into

@@ -46,12 +46,7 @@ from neo4j_dynagraph_spark.operators.text import (
     text_stats,
 )
 from neo4j_dynagraph_spark.streaming.corpus_stats import CounterStore
-from neo4j_dynagraph_spark.streaming.staging import (
-    cleanup_on_error,
-    drain_dirs,
-    finalize_drain,
-    stage_single_file,
-)
+from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
 
@@ -85,7 +80,6 @@ class BatchRowStore(CounterStore):
         DimensionStore.__init__(self, spark, root, key_cols)
 
 
-@cleanup_on_error
 def stream_training_mix(
     spark: SparkSession,
     docs_path: str,
@@ -109,121 +103,107 @@ def stream_training_mix(
     ``store_root`` keeps its checkpoint inside it so re-invocations
     ingest only new files and re-assemble.
     """
-    store_root, ckpt, src_stage, eph = drain_dirs(
-        store_root, "dynagraph_trainmix_"
-    )
-    import os
-
-    dedup_store = MinIdStore(spark, os.path.join(store_root, "dedup"))
-    stats_store = BatchRowStore(
-        spark,
-        os.path.join(store_root, "stats"),
-        ["batch_id", "doc_id", "n_tokens", "ttr"],
-    )
-    tgram_store = BatchRowStore(
-        spark,
-        os.path.join(store_root, "train_grams"),
-        ["batch_id", "doc_id", "gh"],
-    )
-    bgram_store = DimensionStore(
-        spark, os.path.join(store_root, "bench_grams"), ["gh"]
-    )
-
-    docs_path = stage_single_file(docs_path, into=src_stage)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_path)
-
-    gram = F.expr(
-        f"transform(sequence(0, size(t) - {ngram}), "
-        f"i -> concat_ws(' ', slice(t, i + 1, {ngram})))"
-    )
-
-    def mix_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        bid = F.lit(batch_id).cast("long").alias("batch_id")
-        # the batch's text is tokenized/hashed by BOTH gram commits
-        # (train split + bench split) — checkpoint the per-batch gram
-        # table once (r13)
-        toked = batch_df.select(
-            "doc_id", dfn.tokens(F.col("text")).alias("t")
-        ).where(F.size("t") >= ngram)
-        grams = (
-            toked.select("doc_id", F.explode(gram).alias("g"))
-            .select("doc_id", dfn.hash64(F.col("g")).alias("gh"))
-            .distinct()
-            .transform(materialize)
+    with bounded_drain(spark, store_root) as drain:
+        dedup_store = MinIdStore(spark, drain.path("dedup"))
+        stats_store = BatchRowStore(
+            spark,
+            drain.path("stats"),
+            ["batch_id", "doc_id", "n_tokens", "ttr"],
         )
-        # the four store commits are independent of each other — run
-        # them as concurrent jobs so each commit's write tail
-        # back-fills the others' idle cores (guide §2.6 'overlap
-        # independent jobs'); each store owns its own directory, so
-        # the commits share no mutable state
-        tasks = [
-            # stage 1 — dedup lattice: batch-local min per hash + merge
-            lambda: dedup_store.merge(
-                batch_df.select(
-                    F.md5("text").alias("content_hash"), "doc_id"
-                ).groupBy("content_hash").agg(F.min("doc_id").alias("doc_id"))
-            ),
-            # stage 2 — per-doc quality stats (the batch pipeline's
-            # exact text_stats projection, so the rounded ttr gate
-            # matches)
-            lambda: stats_store.merge(
-                text_stats(batch_df).select(bid, "doc_id", "n_tokens", "ttr")
-            ),
-            # stage 3 — n-gram split: train pairs keyed by batch,
-            # bench hashes as a set-union lattice
-            lambda: tgram_store.merge(
-                grams.where(F.col("doc_id") % bench_mod != 0).select(
-                    bid, "doc_id", "gh"
-                )
-            ),
-            lambda: bgram_store.merge(
-                grams.where(F.col("doc_id") % bench_mod == 0).select("gh")
-            ),
-        ]
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            for f in [pool.submit(t) for t in tasks]:
-                f.result()
-
-    q = (
-        stream.writeStream.foreachBatch(mix_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    # read-time assembly: identical set algebra to the batch capstone,
-    # over the drained stores instead of the raw corpus
-    empty = spark.createDataFrame(
-        [], "seq_id bigint, doc_id long, seg_off bigint, seg_len bigint"
-    )
-    survivors = dedup_store.read()
-    stats = stats_store.read()
-    if survivors is None or stats is None:
-        return finalize_drain(empty, eph)
-    keep = survivors.select("doc_id")
-    good = (
-        stats.where(
-            (F.col("n_tokens") >= min_tokens) & (F.col("ttr") >= min_ttr)
+        tgram_store = BatchRowStore(
+            spark,
+            drain.path("train_grams"),
+            ["batch_id", "doc_id", "gh"],
         )
-        .select("doc_id", F.col("n_tokens").alias("n_tok"))
-        .join(keep, "doc_id")
-        .where(F.col("doc_id") % bench_mod != 0)
-    )
-    tgrams, bgrams = tgram_store.read(), bgram_store.read()
-    if tgrams is not None and bgrams is not None:
-        contam = (
-            tgrams.join(F.broadcast(bgrams), "gh")
-            .select("doc_id")
-            .distinct()
+        bgram_store = DimensionStore(
+            spark, drain.path("bench_grams"), ["gh"]
         )
-        good = good.join(contam, "doc_id", "left_anti")
-    out = pack_token_counts(
-        good.select("doc_id", "n_tok"), seq_len=seq_len
-    )
-    return finalize_drain(out, eph)
+
+        stream = drain.source(docs_path, schema, max_files_per_trigger)
+
+        gram = F.expr(
+            f"transform(sequence(0, size(t) - {ngram}), "
+            f"i -> concat_ws(' ', slice(t, i + 1, {ngram})))"
+        )
+
+        def mix_batch(batch_df: DataFrame, batch_id: int) -> None:
+            from concurrent.futures import ThreadPoolExecutor
+
+            bid = F.lit(batch_id).cast("long").alias("batch_id")
+            # the batch's text is tokenized/hashed by BOTH gram commits
+            # (train split + bench split) — checkpoint the per-batch gram
+            # table once (r13)
+            toked = batch_df.select(
+                "doc_id", dfn.tokens(F.col("text")).alias("t")
+            ).where(F.size("t") >= ngram)
+            grams = (
+                toked.select("doc_id", F.explode(gram).alias("g"))
+                .select("doc_id", dfn.hash64(F.col("g")).alias("gh"))
+                .distinct()
+                .transform(materialize)
+            )
+            # the four store commits are independent of each other — run
+            # them as concurrent jobs so each commit's write tail
+            # back-fills the others' idle cores (guide §2.6 'overlap
+            # independent jobs'); each store owns its own directory, so
+            # the commits share no mutable state
+            tasks = [
+                # stage 1 — dedup lattice: batch-local min per hash + merge
+                lambda: dedup_store.merge(
+                    batch_df.select(
+                        F.md5("text").alias("content_hash"), "doc_id"
+                    ).groupBy("content_hash").agg(F.min("doc_id").alias("doc_id"))
+                ),
+                # stage 2 — per-doc quality stats (the batch pipeline's
+                # exact text_stats projection, so the rounded ttr gate
+                # matches)
+                lambda: stats_store.merge(
+                    text_stats(batch_df).select(bid, "doc_id", "n_tokens", "ttr")
+                ),
+                # stage 3 — n-gram split: train pairs keyed by batch,
+                # bench hashes as a set-union lattice
+                lambda: tgram_store.merge(
+                    grams.where(F.col("doc_id") % bench_mod != 0).select(
+                        bid, "doc_id", "gh"
+                    )
+                ),
+                lambda: bgram_store.merge(
+                    grams.where(F.col("doc_id") % bench_mod == 0).select("gh")
+                ),
+            ]
+            with ThreadPoolExecutor(max_workers=4) as pool:
+                for f in [pool.submit(t) for t in tasks]:
+                    f.result()
+
+        drain.run(stream, mix_batch)
+
+        # read-time assembly: identical set algebra to the batch capstone,
+        # over the drained stores instead of the raw corpus
+        empty = spark.createDataFrame(
+            [], "seq_id bigint, doc_id long, seg_off bigint, seg_len bigint"
+        )
+        survivors = dedup_store.read()
+        stats = stats_store.read()
+        if survivors is None or stats is None:
+            return drain.result(empty)
+        keep = survivors.select("doc_id")
+        good = (
+            stats.where(
+                (F.col("n_tokens") >= min_tokens) & (F.col("ttr") >= min_ttr)
+            )
+            .select("doc_id", F.col("n_tokens").alias("n_tok"))
+            .join(keep, "doc_id")
+            .where(F.col("doc_id") % bench_mod != 0)
+        )
+        tgrams, bgrams = tgram_store.read(), bgram_store.read()
+        if tgrams is not None and bgrams is not None:
+            contam = (
+                tgrams.join(F.broadcast(bgrams), "gh")
+                .select("doc_id")
+                .distinct()
+            )
+            good = good.join(contam, "doc_id", "left_anti")
+        out = pack_token_counts(
+            good.select("doc_id", "n_tok"), seq_len=seq_len
+        )
+        return drain.result(out)

@@ -18,8 +18,6 @@ to batch q_unimax_mix and graded on ITS oracle.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -28,16 +26,10 @@ from neo4j_dynagraph_spark.operators.text import (
     token_counts,
     unimax_from_counts,
 )
-from neo4j_dynagraph_spark.streaming.staging import (
-    cleanup_on_error,
-    drain_dirs,
-    finalize_drain,
-    stage_single_file,
-)
+from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.training_mix import BatchRowStore
 
 
-@cleanup_on_error
 def stream_unimax_mix(
     spark: SparkSession,
     docs_path: str,
@@ -58,69 +50,57 @@ def stream_unimax_mix(
     ``store_root`` keeps its checkpoint inside it so re-invocations
     ingest only new files.
     """
-    store_root, ckpt, src_stage, eph = drain_dirs(
-        store_root, "dynagraph_unimax_"
-    )
-    counts = BatchRowStore(
-        spark,
-        os.path.join(store_root, "counts"),
-        ["batch_id", "source"],
-    )
-    docs_path = stage_single_file(docs_path, into=src_stage)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_path)
-
-    def counts_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # text_col passes through to the tokenizer so the twin tracks
-        # batch unimax_mix's full signature (r12 advice)
-        part = (
-            token_counts(batch_df, text_col)
-            .join(
-                batch_df.select(
-                    "doc_id", F.col(source_col).alias("source")
-                ),
-                "doc_id",
-            )
-            .groupBy("source")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum("ws_tokens").cast("long").alias("n_tokens"),
-            )
-            .select(
-                F.lit(batch_id).cast("long").alias("batch_id"),
-                "source",
-                "n_docs",
-                "n_tokens",
-            )
+    with bounded_drain(spark, store_root) as drain:
+        counts = BatchRowStore(
+            spark,
+            drain.path("counts"),
+            ["batch_id", "source"],
         )
-        counts.merge(part)
+        stream = drain.source(docs_path, schema, max_files_per_trigger)
 
-    q = (
-        stream.writeStream.foreachBatch(counts_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    state = counts.read()
-    if state is None:
-        out = spark.createDataFrame(
-            [],
-            "source string, n_docs bigint, n_tokens bigint, "
-            "capped boolean, alloc_tokens double, epochs double, "
-            "weight double",
-        )
-    else:
-        per = (
-            state.groupBy("source")
-            .agg(
-                F.sum("n_docs").cast("long").alias("n_docs"),
-                F.sum("n_tokens").cast("long").alias("n_tokens"),
+        def counts_batch(batch_df: DataFrame, batch_id: int) -> None:
+            # text_col passes through to the tokenizer so the twin tracks
+            # batch unimax_mix's full signature (r12 advice)
+            part = (
+                token_counts(batch_df, text_col)
+                .join(
+                    batch_df.select(
+                        "doc_id", F.col(source_col).alias("source")
+                    ),
+                    "doc_id",
+                )
+                .groupBy("source")
+                .agg(
+                    F.count(F.lit(1)).cast("long").alias("n_docs"),
+                    F.sum("ws_tokens").cast("long").alias("n_tokens"),
+                )
+                .select(
+                    F.lit(batch_id).cast("long").alias("batch_id"),
+                    "source",
+                    "n_docs",
+                    "n_tokens",
+                )
             )
-            .transform(materialize)
-        )
-        out = unimax_from_counts(per, epoch_cap, budget_num, budget_den)
-    return finalize_drain(out, eph)
+            counts.merge(part)
+
+        drain.run(stream, counts_batch)
+
+        state = counts.read()
+        if state is None:
+            out = spark.createDataFrame(
+                [],
+                "source string, n_docs bigint, n_tokens bigint, "
+                "capped boolean, alloc_tokens double, epochs double, "
+                "weight double",
+            )
+        else:
+            per = (
+                state.groupBy("source")
+                .agg(
+                    F.sum("n_docs").cast("long").alias("n_docs"),
+                    F.sum("n_tokens").cast("long").alias("n_tokens"),
+                )
+                .transform(materialize)
+            )
+            out = unimax_from_counts(per, epoch_cap, budget_num, budget_den)
+        return drain.result(out)

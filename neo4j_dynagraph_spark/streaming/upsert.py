@@ -88,14 +88,13 @@ def stream_actor_dimension(
 ) -> "object":
     """Maintain the actor dimension from an event stream via
     foreachBatch — micro-batch commits, the reference's tx batching
-    (T2) + set semantics (T4). Returns the StreamingQuery."""
+    (T2) + set semantics (T4). Drains the stream to completion on an
+    ephemeral drain root and returns the terminated StreamingQuery."""
+    from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         store.merge(batch_df.select(batch_df[actor_col].alias("actor")))
 
-    return (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="dynagraph_dim_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    with bounded_drain(store.spark) as drain:
+        drain.run(stream, upsert)
+    return drain.query

@@ -10,7 +10,11 @@ import pytest
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from neo4j_dynagraph_spark.operators import graph
-from neo4j_dynagraph_spark.operators.hub import checkpoint_hub, counted_barrier
+from neo4j_dynagraph_spark.operators.hub import (
+    checkpoint_hub,
+    counted_barrier,
+    materialize,
+)
 
 # canonical edges of: triangle 1-2-3, plus path 3-4, 4-5, and edge 1-5
 EDGES = [(1, 2), (1, 3), (2, 3), (3, 4), (4, 5), (1, 5)]
@@ -1711,6 +1715,28 @@ def test_counted_barrier_reliable_mode_same_jobs(spark, reliable_mode, tmp_path)
     assert jobs_b <= jobs_a and stages_b <= stages_a
     assert ck.count() == 97
     assert any(tmp_path.rglob("part-*"))
+
+
+def test_reliable_checkpoint_files_freed_after_drop(spark, reliable_mode, tmp_path):
+    """get_spark turns on Spark's checkpoint cleaner: once a reliable
+    barrier's frame is dropped and the JVM collects it, its RDD dir
+    under the checkpoint dir goes away (bounded poll)."""
+    import gc
+    import time
+
+    def rdd_dirs():
+        return list((tmp_path / "checkpoints").rglob("rdd-*"))
+
+    with reliable_mode():
+        df = materialize(spark.range(100).select((F.col("id") * 2).alias("x")))
+        assert df.count() == 100 and rdd_dirs()
+        del df
+        deadline = time.time() + 60
+        while rdd_dirs() and time.time() < deadline:
+            gc.collect()
+            spark.sparkContext._jvm.System.gc()
+            time.sleep(0.5)
+        assert rdd_dirs() == []
 
 
 def test_barriers_stay_in_hub():

@@ -117,33 +117,6 @@ def test_max_actors_per_frame_guard(spark):
     assert len(capped) == 1 and capped[0].frame_id == 2
 
 
-def test_salt_hot_threshold_equals_plain(spark):
-    # targeted salting (salt only frames with >= threshold actors)
-    # must be result-identical to the unsalted join; frame 1 crosses
-    # the threshold, frame 2 stays cold
-    from neo4j_dynagraph_spark.operators import ingest
-
-    rows = [(1, a, a % 3 + 1) for a in range(10, 16)] + [
-        (2, 20, 1),
-        (2, 21, 2),
-    ]
-    presence = spark.createDataFrame(
-        rows, "frame_id long, actor long, n_events long"
-    )
-    key = ["frame_id", "actor1", "actor2", "weight"]
-    plain = sorted(
-        tuple(r[k] for k in key)
-        for r in ingest.presence_to_frame_interactions(presence).collect()
-    )
-    targeted = sorted(
-        tuple(r[k] for k in key)
-        for r in ingest.presence_to_frame_interactions(
-            presence, n_salt=4, salt_hot_threshold=4
-        ).collect()
-    )
-    assert plain == targeted and len(plain) == 16  # C(6,2) + C(2,2)
-
-
 def test_sessionize_invariants(spark):
     """Session semantics on real data: counts conserve, bounds ordered,
     consecutive sessions of a user separated by >= gap."""
@@ -249,78 +222,6 @@ def test_bucketed_star_join_no_shuffle(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {db}.frame_actors")
         spark.sql(f"DROP TABLE IF EXISTS {db}.frame_interactions")
         spark.sql(f"DROP DATABASE IF EXISTS {db}")
-
-
-def test_salted_join_differential(spark):
-    # salting must be result-invisible: identical edge set (including
-    # weights) to the unsalted join, with the salt in the join key
-    rows = [(1, a, a + 1) for a in range(12)] + [(2, 20, 1), (2, 21, 2)]
-    presence = spark.createDataFrame(rows, "frame_id long, actor long, n_events long")
-    plain = sorted(
-        tuple(r) for r in ingest.presence_to_frame_interactions(presence).collect()
-    )
-    salted = sorted(
-        tuple(r)
-        for r in ingest.presence_to_frame_interactions(presence, n_salt=4).collect()
-    )
-    assert plain == salted and len(plain) == 66 + 1
-    # the physical join key must include the salt column
-    from neo4j_dynagraph_spark import plans
-
-    s = plans.plan_str(
-        ingest.presence_to_frame_interactions(presence, n_salt=4), "simple"
-    )
-    assert "_salt" in s
-
-
-def test_salted_join_property(spark):
-    # random small tables, inner and left: salted == plain, always
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    @settings(max_examples=8, deadline=None)
-    @given(
-        lrows=st.lists(
-            st.tuples(st.integers(0, 5), st.integers(0, 100)),
-            min_size=0, max_size=25,
-        ),
-        rrows=st.lists(
-            st.tuples(st.integers(0, 5), st.integers(0, 100)),
-            min_size=0, max_size=25,
-        ),
-        n_salt=st.sampled_from([1, 3, 8]),
-        how=st.sampled_from(["inner", "left"]),
-        hot=st.sampled_from([None, [0], [1, 3], [0, 1, 2, 3, 4, 5]]),
-    )
-    def check(lrows, rrows, n_salt, how, hot):
-        left = spark.createDataFrame(
-            lrows or [(None, None)], "k int, lv int"
-        ).where(F.lit(bool(lrows)))
-        right = spark.createDataFrame(
-            rrows or [(None, None)], "k int, rv int"
-        ).where(F.lit(bool(rrows)))
-        plain = sorted(
-            map(tuple, left.join(right, ["k"], how).collect())
-        )
-        # hot_keys targeted mode: equality must hold whether the hot
-        # set is empty-overlap, partial, or covers every key
-        hot_df = (
-            None
-            if hot is None
-            else spark.createDataFrame([(k,) for k in hot], "k int")
-        )
-        salted = sorted(
-            map(
-                tuple,
-                ingest.salted_equi_join(
-                    left, right, ["k"], n_salt=n_salt, how=how,
-                    hot_keys=hot_df,
-                ).collect(),
-            )
-        )
-        assert plain == salted
-
-    check()
 
 
 def test_zorder_layout_tightens_both_dims(spark, tmp_path):

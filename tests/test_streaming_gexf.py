@@ -18,7 +18,7 @@ from tests.conftest import SF_SMALL
 def test_stream_equals_batch(spark):
     raw_schema = spark.read.parquet(f"{SF_SMALL}/events.parquet").schema
     streamed = streaming_frame_counts_from_parquet(
-        spark, f"{SF_SMALL}/events.parquet", raw_schema, 3600, ts_is_nanos=True
+        spark, f"{SF_SMALL}/events.parquet", raw_schema, 3600
     ).collect()
     from neo4j_dynagraph_spark.sources.tables import load_table
 
@@ -177,7 +177,7 @@ def test_stateful_sessions_multibatch_equals_batch(spark, tmp_path):
 
     raw_schema = raw.schema
     streamed = stateful_sessions_from_parquet(
-        spark, str(flat), raw_schema, gap_seconds=1800, ts_is_nanos=True,
+        spark, str(flat), raw_schema, gap_seconds=1800,
         max_files_per_trigger=1,
     )
     got = sorted(map(tuple, streamed.collect()))
@@ -222,7 +222,7 @@ def test_stream_edges_equal_batch(spark):
 
     raw_schema = spark.read.parquet(f"{SF_SMALL}/events.parquet").schema
     got = streaming_frame_edges_from_parquet(
-        spark, f"{SF_SMALL}/events.parquet", raw_schema, 3600, ts_is_nanos=True
+        spark, f"{SF_SMALL}/events.parquet", raw_schema, 3600
     )
     batch = ingest.presence_to_frame_interactions(
         ingest.events_to_presence(load_table(spark, SF_SMALL, "events"))
@@ -446,42 +446,6 @@ def test_stream_interval_overlap_equals_batch_with_trailing_events(spark, tmp_pa
             expect[p] = (len(ov), sum(ov))
     assert got == expect
     assert 7 in got  # the trailing purchase must have flushed
-
-
-def test_drain_restart_is_idempotent(spark, tmp_path):
-    """drain_stream_to_parquet(restarts=N): a checkpoint-preserving
-    AvailableNow restart with no new source data must add NO rows —
-    the escape-hatch parameter is safe to use unconditionally."""
-    import datetime as dt
-
-    from neo4j_dynagraph_spark.sources.tables import normalize_stream_ts
-    from neo4j_dynagraph_spark.streaming.drain import drain_stream_to_parquet
-    from neo4j_dynagraph_spark.streaming.edges import _stage_with_sentinel
-
-    base = dt.datetime(2024, 3, 1)
-    rows = [
-        (i, base + dt.timedelta(seconds=600 * i), i, "click") for i in range(6)
-    ]
-    src = str(tmp_path / "events.parquet")
-    spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, event_type string"
-    ).coalesce(1).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stage = _stage_with_sentinel(spark, src, schema)
-    stream = normalize_stream_ts(
-        spark, spark.readStream.schema(schema).parquet(stage), schema
-    )
-    agg = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1800 seconds"))
-        .count()
-    )
-    out = drain_stream_to_parquet(agg, "restart_test", restarts=2)
-    # 6 real events at 600-s spacing = two half-hour windows of 3; the
-    # sentinel's own trailing window correctly never finalizes (the
-    # watermark stops 10 min before it) and restarts add no duplicates
-    got = sorted((r["window"].start, r["count"]) for r in out.collect())
-    assert [c for _, c in got] == [3, 3]
 
 
 def test_incremental_dedup_multibatch_first_seen(spark, tmp_path):
@@ -1191,48 +1155,65 @@ def test_stream_temperature_mix_multibatch_rates_rebind(spark, tmp_path):
     assert by_source["small"][4] == 1.0
 
 
-def test_cleanup_on_error_removes_ephemeral_drain_roots(tmp_path):
-    """ADVICE r10: a drain that raises mid-stream (or during the eager
-    localCheckpoint materialization) must not leak its mkdtemp root
-    (store + checkpoint + stage). cleanup_on_error deletes any root
-    registered by drain_dirs that finalize_drain never consumed;
-    persistent-mode state is never touched."""
-    import os
+def test_failing_drain_frees_ephemeral_root_keeps_store_root(
+    spark, tmp_path, monkeypatch
+):
+    """A batch function that raises must not leak the drain's temp root
+    (store + checkpoint + stage), and must leave a caller's persistent
+    store_root, with its checkpoint and stage, in place."""
+    import tempfile
 
     import pytest
 
-    from neo4j_dynagraph_spark.streaming import staging
+    from neo4j_dynagraph_spark.streaming.cms import stream_cms_table
+    from neo4j_dynagraph_spark.streaming.corpus_stats import CounterStore
+    from neo4j_dynagraph_spark.streaming.kmv import stream_kmv_distinct
 
-    captured = {}
+    def boom(self, df):
+        raise RuntimeError("injected batch failure")
 
-    @staging.cleanup_on_error
-    def failing_drain():
-        store, ckpt, src, eph = staging.drain_dirs(None, "dynagraph_leaktest_")
-        captured["eph"] = eph
-        os.makedirs(store)  # simulate the drain writing state
-        raise RuntimeError("boom")
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    monkeypatch.setattr(CounterStore, "merge", boom)
+    docs = f"{SF_SMALL}/documents.parquet"
+    schema = spark.read.parquet(docs).schema
+    with pytest.raises(Exception, match="injected batch failure"):
+        stream_cms_table(spark, docs, schema)
+    assert list(tmp.iterdir()) == []
 
-    with pytest.raises(RuntimeError, match="boom"):
-        failing_drain()
-    assert not os.path.exists(captured["eph"])
+    store = tmp_path / "cms_store"
+    with pytest.raises(Exception, match="injected batch failure"):
+        stream_cms_table(spark, docs, schema, store_root=str(store))
+    assert (store / "_checkpoint").is_dir() and (store / "_src").is_dir()
+    assert list(tmp.iterdir()) == []
 
-    # persistent mode registers nothing: the caller-owned store root
-    # survives a failing drain (incremental re-invocation contract)
-    root = tmp_path / "persistent_store"
-    root.mkdir()
+    # a drain that succeeds leaves nothing either, and its result stays
+    # readable after the root is gone
+    events = f"{SF_SMALL}/events.parquet"
+    est = stream_kmv_distinct(spark, events, spark.read.parquet(events).schema)
+    assert est.count() > 0
+    assert list(tmp.iterdir()) == []
 
-    @staging.cleanup_on_error
-    def failing_persistent():
-        staging.drain_dirs(str(root), "dynagraph_leaktest_")
-        raise RuntimeError("boom")
 
-    with pytest.raises(RuntimeError, match="boom"):
-        failing_persistent()
-    assert root.is_dir()
+def test_drains_leave_no_temp_files(spark, tmp_path, monkeypatch):
+    """One registry row per sink kind (memory, parquet, pair store,
+    foreachBatch store, per-batch output files) with tempfile pointed
+    at an empty dir: every result is readable and nothing remains."""
+    import tempfile
 
-    # success path unchanged: finalize_drain consumes the pending root
-    # so a later error in the SAME thread cannot double-free it
-    assert staging._pending_roots() == []
+    from neo4j_dynagraph_spark.queries import REGISTRY
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for name in (
+        "q_stream_tumbling",
+        "q_stream_edges_stateful",
+        "q_stream_degree",
+        "q_stream_cms",
+        "q_stream_dedup_docs",
+    ):
+        assert REGISTRY[name].fn(spark, SF_SMALL).collect(), name
+        assert list(tmp_path.iterdir()) == [], name
 
 
 def test_stream_ivf_assign_multibatch_equals_batch(spark, tmp_path):

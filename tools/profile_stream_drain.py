@@ -31,37 +31,25 @@ def main() -> None:
     spark = get_spark("drain-profile")
     spark.sparkContext.setLogLevel("ERROR")
 
-    import tempfile
-
-    from neo4j_dynagraph_spark.sources.tables import normalize_stream_ts
-    from neo4j_dynagraph_spark.streaming.edges import (
-        _stage_with_sentinel,
-        stateful_frame_edges,
-    )
+    from neo4j_dynagraph_spark.streaming.drain import bounded_drain
+    from neo4j_dynagraph_spark.streaming.edges import stateful_frame_edges
 
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
-    stage = _stage_with_sentinel(spark, path, schema)
-    stream = spark.readStream.schema(schema).parquet(stage)
-    stream = normalize_stream_ts(spark, stream, schema)
-    edges = stateful_frame_edges(stream, DELTA)
-
-    out_dir = tempfile.mkdtemp(prefix="dynagraph_profile_out_")
-    ckpt = tempfile.mkdtemp(prefix="dynagraph_profile_ckpt_")
-    t0 = time.perf_counter()
-    q = (
-        edges.writeStream.format("parquet")
-        .option("path", out_dir)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    wall = time.perf_counter() - t0
+    with bounded_drain(spark) as drain:
+        edges = stateful_frame_edges(
+            drain.source(path, schema, sentinel=True), DELTA
+        )
+        t0 = time.perf_counter()
+        out = drain.run(edges, "parquet")
+        wall = time.perf_counter() - t0
+        t1 = time.perf_counter()
+        n = out.count()
+        readback = time.perf_counter() - t1
+        progress = drain.query.recentProgress
 
     batches = []
-    for p in q.recentProgress:
+    for p in progress:
         dur = p.get("durationMs", {})
         st = (p.get("stateOperators") or [{}])[0]
         batches.append(
@@ -77,9 +65,6 @@ def main() -> None:
             }
         )
 
-    t1 = time.perf_counter()
-    n = spark.read.schema(edges.schema).parquet(out_dir).count()
-    readback = time.perf_counter() - t1
     print(
         json.dumps(
             {

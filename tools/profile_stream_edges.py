@@ -1,9 +1,9 @@
 """Phase-level profile of q_stream_edges_stateful (opt round r13).
 
 Splits the query's wall into: sentinel staging, the AvailableNow drain
-(micro-batch machinery + state shuffle), the parquet read-back, and the
-bench's toPandas materialization — so the optimization targets the
-phase that actually costs, per guide §1.
+(micro-batch machinery + state shuffle, plus the materialized
+read-back of the parquet sink), a count, and the bench's toPandas —
+so the optimization targets the phase that actually costs.
 """
 
 from __future__ import annotations
@@ -22,30 +22,25 @@ def main() -> None:
     spark = get_spark("profile-stream-edges")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from neo4j_dynagraph_spark.sources.tables import normalize_stream_ts
-    from neo4j_dynagraph_spark.streaming.edges import (
-        _drain,
-        _stage_with_sentinel,
-        stateful_frame_edges,
-    )
+    from neo4j_dynagraph_spark.streaming.drain import bounded_drain
+    from neo4j_dynagraph_spark.streaming.edges import stateful_frame_edges
 
     parquet_path = f"{sf_dir}/events.parquet"
     raw_schema = spark.read.parquet(parquet_path).schema
 
     for rep in range(3):
-        t0 = time.perf_counter()
-        stage = _stage_with_sentinel(spark, parquet_path, raw_schema)
-        t1 = time.perf_counter()
-        stream = spark.readStream.schema(raw_schema).parquet(stage)
-        stream = normalize_stream_ts(spark, stream, raw_schema)
-        edges = stateful_frame_edges(stream, 3600)
-        t2 = time.perf_counter()
-        out = _drain(edges, "prof_edges")
-        t3 = time.perf_counter()
-        n = out.count()
-        t4 = time.perf_counter()
-        pdf = out.toPandas()
-        t5 = time.perf_counter()
+        with bounded_drain(spark) as drain:
+            t0 = time.perf_counter()
+            stream = drain.source(parquet_path, raw_schema, sentinel=True)
+            t1 = time.perf_counter()
+            edges = stateful_frame_edges(stream, 3600)
+            t2 = time.perf_counter()
+            out = drain.result(drain.run(edges, "parquet"))
+            t3 = time.perf_counter()
+            n = out.count()
+            t4 = time.perf_counter()
+            out.toPandas()
+            t5 = time.perf_counter()
         print(
             f"rep{rep}: stage={t1-t0:.3f}s plan={t2-t1:.3f}s "
             f"drain={t3-t2:.3f}s count={t4-t3:.3f}s({n}) "

@@ -1,30 +1,25 @@
-"""Skew stress for the salted ingest join: measure salted vs unsalted.
+"""Skew stress for the ingest pair join: one hot frame, timed.
 
 The ingest hot join (presence x presence on frame_id,
-operators/ingest.py:presence_to_frame_interactions) is salted because
-one HOT frame — a burst where thousands of actors share a frame —
-creates quadratic join OUTPUT from tiny join INPUT. AQE's skew-join
-split keys on shuffle-partition BYTES, so a 20k-row hot partition
-(a few hundred KB) never trips it, yet its 20k x 20k pair explosion
-pins one task while every other core idles. Salting is the lever for
-exactly this compute-skew shape: scatter the hot key's probe across
-n_salt tasks at the cost of replicating the build side n_salt x.
+operators/ingest.py:presence_to_frame_interactions) meets its worst
+case in one HOT frame — a burst where thousands of actors share a
+frame — which creates quadratic join OUTPUT from tiny join INPUT.
+AQE's skew-join split keys on shuffle-partition BYTES, so a 20k-row
+hot partition never trips it, and its 20k x 20k pair explosion runs
+in one task. ``max_actors_per_frame`` is the guard that drops such
+frames; this tool measures what an unguarded hot frame costs.
 
-This tool builds a deterministic skewed presence fixture (the
-generator knobs below), runs the REAL ingest join body with n_salt=0
-vs n_salt=N, verifies both produce identical aggregate results, and
-prints one JSON line per variant:
+It builds a deterministic skewed presence fixture, runs the real
+pair builder once, and prints one JSON line:
 
-    python tools/skew_stress.py [n_frames] [actors_per_frame] \
-        [hot_actors] [n_salt]
+    python tools/skew_stress.py [n_frames] [actors_per_frame] [hot_actors]
 
-Defaults: 2000 frames x 40 actors + ONE hot frame with 20000 actors,
-n_salt=32. Pair output: 2000 * C(40,2) + C(20000,2) ~= 2.0e8, of
-which 99.2% comes from the single hot frame.
+Defaults: 2000 frames x 40 actors + ONE hot frame with 20000 actors.
+Pair output: 2000 * C(40,2) + C(20000,2) ~= 2.0e8, of which 99.2%
+comes from the single hot frame.
 
-Result rows go through an order-insensitive checksum (sum of
-xxhash-style per-row hashes via F.hash), never a collect — the pair
-enumeration is O(10^8).
+Result rows go through an order-insensitive checksum (sum of per-row
+hashes via F.hash), never a collect — the pair enumeration is O(10^8).
 """
 
 from __future__ import annotations
@@ -39,6 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pyspark.sql.functions as F  # noqa: E402
 
 from neo4j_dynagraph_spark import get_spark  # noqa: E402
+from neo4j_dynagraph_spark.operators.hub import materialize  # noqa: E402
 from neo4j_dynagraph_spark.operators.ingest import (  # noqa: E402
     presence_to_frame_interactions,
 )
@@ -94,71 +90,27 @@ def main() -> None:
     n_frames = int(sys.argv[1]) if len(sys.argv) > 1 else 2000
     per_frame = int(sys.argv[2]) if len(sys.argv) > 2 else 40
     hot_actors = int(sys.argv[3]) if len(sys.argv) > 3 else 20000
-    n_salt = int(sys.argv[4]) if len(sys.argv) > 4 else 32
-    only = set(sys.argv[5].split(",")) if len(sys.argv) > 5 else None
 
     spark = get_spark("skew-stress")
     spark.sparkContext.setLogLevel("ERROR")
-    presence = skewed_presence(spark, n_frames, per_frame, hot_actors)
-    # materialize the fixture once so both variants time the JOIN, not
+    # materialize the fixture once so the timing covers the JOIN, not
     # the generator
-    presence = presence.localCheckpoint()
-
-    # targeted threshold: anything well above the cold per-frame size
-    # and well below the hot frame qualifies; 4x cold is the
-    # rule-of-thumb a production config would use
-    threshold = 4 * per_frame
-    results = {}
-    for label, kwargs in (
-        ("unsalted", {}),
-        ("salted_all", {"n_salt": n_salt}),
-        (
-            "salted_hot",
-            {"n_salt": n_salt, "salt_hot_threshold": threshold},
+    presence = materialize(skewed_presence(spark, n_frames, per_frame, hot_actors))
+    t0 = time.perf_counter()
+    n, h = checksum(presence_to_frame_interactions(presence))
+    print(
+        json.dumps(
+            {
+                "n_frames": n_frames,
+                "per_frame": per_frame,
+                "hot_actors": hot_actors,
+                "pairs": n,
+                "checksum": h,
+                "wall_sec": round(time.perf_counter() - t0, 1),
+            }
         ),
-    ):
-        if only is not None and label not in only:
-            continue
-        t0 = time.perf_counter()
-        try:
-            n, h = checksum(
-                presence_to_frame_interactions(presence, **kwargs)
-            )
-        except Exception as ex:  # a variant OOMing IS a data point
-            print(
-                json.dumps(
-                    {
-                        "variant": label,
-                        "n_frames": n_frames,
-                        "per_frame": per_frame,
-                        "hot_actors": hot_actors,
-                        "error": type(ex).__name__,
-                        "wall_sec": round(time.perf_counter() - t0, 1),
-                    }
-                ),
-                flush=True,
-            )
-            continue
-        wall = time.perf_counter() - t0
-        results[label] = (n, h)
-        print(
-            json.dumps(
-                {
-                    "variant": label,
-                    "n_frames": n_frames,
-                    "per_frame": per_frame,
-                    "hot_actors": hot_actors,
-                    "pairs": n,
-                    "checksum": h,
-                    "wall_sec": round(wall, 1),
-                }
-            ),
-            flush=True,
-        )
-    vals = list(results.values())
-    if any(v != vals[0] for v in vals[1:]):
-        print("RESULT MISMATCH across variants", file=sys.stderr)
-        sys.exit(1)
+        flush=True,
+    )
 
 
 if __name__ == "__main__":

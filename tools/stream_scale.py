@@ -35,92 +35,70 @@ import os
 import sys
 import tempfile
 import time
-import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from neo4j_dynagraph_spark import get_spark  # noqa: E402
+from neo4j_dynagraph_spark.streaming.drain import bounded_drain  # noqa: E402
 
 
-def _chunked_stage(spark, events_path: str, schema, n_chunks: int) -> str:
-    """Re-stage events as n_chunks time-ordered parquet files plus the
-    far-future sentinel (same flush contract as _stage_with_sentinel)."""
+def _chunk(spark, events_path: str, schema, n_chunks: int, into: str) -> str:
+    """Re-write events as n_chunks time-ordered parquet files under
+    ``into`` (lexicographic order == time order, so maxFilesPerTrigger=1
+    replays the stream in event-time order) and return ``into``."""
     import pyspark.sql.functions as F
 
-    from neo4j_dynagraph_spark.streaming.edges import _stage_with_sentinel
-
-    if n_chunks <= 1:
-        return _stage_with_sentinel(spark, events_path, schema)
-    stage = tempfile.mkdtemp(prefix="dynagraph_chunks_")
     df = spark.read.schema(schema).parquet(events_path).orderBy("ts")
     n = df.count()
     per = (n + n_chunks - 1) // n_chunks
     chunk = (F.monotonically_increasing_id() / per).cast("long")
-    # write each time-ordered chunk as one file, lexicographic order ==
-    # time order so maxFilesPerTrigger=1 + latestFirst=false replays
-    # the stream in event-time order
-    pdf_dir = os.path.join(stage, "parts")
+    parts = os.path.join(into, "_parts")
     (
         df.coalesce(1)
         .withColumn("_chunk", chunk)
         .write.partitionBy("_chunk")
         .mode("overwrite")
-        .parquet(pdf_dir)
+        .parquet(parts)
     )
     idx = 0
-    for sub in sorted(os.listdir(pdf_dir)):
+    for sub in sorted(os.listdir(parts)):
         if not sub.startswith("_chunk="):
             continue
-        for f in sorted(os.listdir(os.path.join(pdf_dir, sub))):
+        for f in sorted(os.listdir(os.path.join(parts, sub))):
             if f.endswith(".parquet"):
                 os.rename(
-                    os.path.join(pdf_dir, sub, f),
-                    os.path.join(stage, f"chunk_{idx:05d}.parquet"),
+                    os.path.join(parts, sub, f),
+                    os.path.join(into, f"chunk_{idx:05d}.parquet"),
                 )
                 idx += 1
-    # sentinel past every real frame (reuse the canonical builder on a
-    # single-file stage, then move its sentinel file in)
-    single = _stage_with_sentinel(spark, events_path, schema)
-    for f in os.listdir(single):
-        if f.startswith("zz_sentinel"):
-            os.rename(os.path.join(single, f), os.path.join(stage, f))
-    return stage
+    return into
 
 
-def _drain_with_metrics(spark, stream_df, output_mode: str):  # noqa: ANN001
-    """AvailableNow drain to a PARQUET sink, returning (rows, wall_sec,
+def _drain_with_metrics(spark, source: str, schema, n_chunks: int, build):  # noqa: ANN001
+    """AvailableNow drain of ``build(stream)`` to a PARQUET sink, with
+    the end-of-stream sentinel, returning (rows, wall_sec,
     state_rows_peak, state_mem_peak_mb, n_batches).
 
     A parquet sink, not memory: at sf1 the per-frame edge stream is
     O(10^8) rows, and accumulating that in a driver-side memory sink is
     exactly the collect-the-enumeration anti-pattern SCALE.md warns
     about. Parquet is also the terminal a production drain would use,
-    so the wall-clock includes the real sink cost. (Parquet sinks only
-    support append mode; every drain here is append.)
+    so the wall-clock includes the real sink cost.
     """
-    if output_mode != "append":
-        raise ValueError("parquet scale drain supports append mode only")
-    out = tempfile.mkdtemp(prefix="dynagraph_scale_out_")
-    ckpt = tempfile.mkdtemp(prefix="dynagraph_ckpt_")
-    t0 = time.perf_counter()
-    q = (
-        stream_df.writeStream.format("parquet")
-        .option("path", out)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    wall = time.perf_counter() - t0
-    rows_peak = mem_peak = batches = 0
-    for p in q.recentProgress:
-        batches += 1
-        for op in p.get("stateOperators", []):
-            rows_peak = max(rows_peak, op.get("numRowsTotal", 0))
-            mem_peak = max(mem_peak, op.get("memoryUsedBytes", 0))
-    n = spark.read.parquet(out).count()
-    return n, wall, rows_peak, mem_peak / 1e6, batches
+    with bounded_drain(spark) as drain:
+        stream = drain.source(
+            source, schema, 1 if n_chunks > 1 else None, sentinel=True
+        )
+        t0 = time.perf_counter()
+        out = drain.run(build(stream), "parquet")
+        wall = time.perf_counter() - t0
+        rows_peak = mem_peak = batches = 0
+        for p in drain.query.recentProgress:
+            batches += 1
+            for op in p.get("stateOperators", []):
+                rows_peak = max(rows_peak, op.get("numRowsTotal", 0))
+                mem_peak = max(mem_peak, op.get("memoryUsedBytes", 0))
+        return out.count(), wall, rows_peak, mem_peak / 1e6, batches
 
 
 def main() -> None:
@@ -139,7 +117,6 @@ def main() -> None:
         )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from neo4j_dynagraph_spark.sources.tables import normalize_stream_ts
     from neo4j_dynagraph_spark.streaming.edges import (
         stateful_frame_edges,
         stream_frame_edges,
@@ -147,36 +124,36 @@ def main() -> None:
 
     events_path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(events_path).schema
-    stage = _chunked_stage(spark, events_path, schema, n_chunks)
-
-    def reader():
-        r = spark.readStream.schema(schema)
-        if n_chunks > 1:
-            r = r.option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-        return normalize_stream_ts(spark, r.parquet(stage), schema)
-
-    for name, build, mode in [
-        ("stream_edges_stateful", lambda s: stateful_frame_edges(s), "append"),
-        ("stream_edges_join", lambda s: stream_frame_edges(s), "append"),
-    ]:
-        if only is not None and name not in only:
-            continue
-        n, wall, rp, mm, nb = _drain_with_metrics(spark, build(reader()), mode)
-        print(
-            json.dumps(
-                {
-                    "query": name,
-                    "sf_dir": sf_dir,
-                    "n_chunks": n_chunks,
-                    "rows": n,
-                    "wall_sec": round(wall, 1),
-                    "state_rows_peak": rp,
-                    "state_mem_peak_mb": round(mm, 1),
-                    "batches": nb,
-                }
-            ),
-            flush=True,
+    with tempfile.TemporaryDirectory(prefix="dynagraph_chunks_") as chunks:
+        source = (
+            _chunk(spark, events_path, schema, n_chunks, chunks)
+            if n_chunks > 1
+            else events_path
         )
+        for name, build in [
+            ("stream_edges_stateful", stateful_frame_edges),
+            ("stream_edges_join", stream_frame_edges),
+        ]:
+            if only is not None and name not in only:
+                continue
+            n, wall, rp, mm, nb = _drain_with_metrics(
+                spark, source, schema, n_chunks, build
+            )
+            print(
+                json.dumps(
+                    {
+                        "query": name,
+                        "sf_dir": sf_dir,
+                        "n_chunks": n_chunks,
+                        "rows": n,
+                        "wall_sec": round(wall, 1),
+                        "state_rows_peak": rp,
+                        "state_mem_peak_mb": round(mm, 1),
+                        "batches": nb,
+                    }
+                ),
+                flush=True,
+            )
 
     # incrementally-maintained degree view (foreachBatch upsert): state
     # lives in the parquet-backed DimensionStore, so report the store's
