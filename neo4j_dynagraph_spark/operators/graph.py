@@ -20,11 +20,13 @@ Scale notes:
   `WITH DISTINCT` stages (cypher_query_timing.py:163-198) and is
   required to cap intermediate cardinality (X5 in SURVEY.md §4).
 
-Shared loops: seven iterative rounds are written once each, and their
-callers differ only in the inputs they pass. Three fixpoint loops are
-keyed: an analysis over every frame, day, source or lane at once
-carries that dimension in its join and group-by keys (empty for the
-global form) rather than looping over it on the driver:
+Iterative operators: every round loop is :func:`supersteps`
+(operators/hub.py), which owns the loop, each round's barrier, the
+stop rule and the per-round history; an operator passes its initial
+state and one round's step. Seven steps serve several callers each.
+The three keyed ones run an analysis over every frame, day, source or
+lane at once by carrying that dimension in their join and group-by
+keys (empty for the global form):
 - :func:`_relax_rounds` — frontier relaxation to the first empty
   frontier: earliest arrival for temporal_reachability, temporal
   closeness (keyed by source) and the SI family (global, or keyed by
@@ -36,26 +38,21 @@ global form) rather than looping over it on the driver:
   connected_components_per_frame (keyed by frame);
 - :func:`_wl_rounds` — 1-WL color rounds, used by wl_refinement
   (global) and wl_day_similarity (keyed by day).
-Four more take their variation as columns or a round function:
-- :func:`_power_rounds` — the PageRank power method over a
-  degree-annotated adjacency, used by pagerank (unit weights, uniform
-  teleport), pagerank_weighted (edge weights) and
-  personalized_pagerank (seed teleport);
+Four take their variation as columns or a round function:
+- :func:`_power_rounds` — the PageRank power method, used by pagerank
+  (unit weights, uniform teleport), pagerank_weighted (edge weights)
+  and personalized_pagerank (seed teleport);
 - :func:`_l1_rounds` — L1-normalized propagation hops, used by
   eigenvector_centrality (one hop per round) and hits_bipartite (two);
-- :func:`_peel_rounds` — peel to a fixpoint on counted barriers, used
-  by k_core and k_core_rounds (:func:`_core_peel_round`) and k_truss
-  and k_truss_rounds (:func:`_truss_peel_round`);
+- :func:`_peel_rounds` — peel to a fixpoint, used by k_core,
+  k_core_rounds, k_truss and k_truss_rounds;
 - :func:`_walk_rounds` — one join of the frontier to its node's
-  neighbor array per hop and an in-row pick, used by random_walks
-  (uniform), node2vec_walks (second-order weights) and temporal_walks
-  (later-frame candidates, walks may end early).
-Each caller keeps its own set-up (symmetrize, coin filter, seeds, lane
-grid, adjacency arrays) and terminal — the PageRank family shares its
-rank terminal — and a loop branches on its inputs only. Rounds still
-written in place: label_propagation, betweenness_centrality,
-neighbor_sampling, luby_mis, densest_subgraph, sage_aggregate,
-influence_seeds and temporal_pagerank.
+  neighbor array per hop and an in-row pick, used by random_walks,
+  node2vec_walks and temporal_walks.
+betweenness_centrality (both Brandes passes), neighbor_sampling,
+luby_mis, densest_subgraph, influence_seeds and temporal_pagerank pass
+their own step. label_propagation's rounds hold no barrier and stay a
+plain lazy chain.
 """
 
 from __future__ import annotations
@@ -71,6 +68,7 @@ from neo4j_dynagraph_spark.operators.hub import (
     checkpoint_hub,
     counted_barrier,
     materialize,
+    supersteps,
 )
 
 
@@ -83,8 +81,8 @@ def _relax_rounds(
     max_rounds: int,
 ) -> list[DataFrame]:
     """Frontier relaxation rounds in Pregelix's superstep shape: one
-    join plus one group-by per round, under one driver loop that stops
-    at the first empty frontier or after ``max_rounds``.
+    join plus one group-by per round, on :func:`supersteps`, which
+    stops at the first empty frontier or after ``max_rounds``.
 
     ``state`` holds (*keys, v, x) — node v's best value x per key lane,
     x the last column; ``adj`` holds (src, dst, ...) plus whichever
@@ -93,8 +91,8 @@ def _relax_rounds(
     to ``adj`` on those keys and v = src, computes dst's candidate with
     ``step`` (null: no path) and merges it by the ``better`` aggregate
     (min, max, KMV union-then-prune). The old value rides through the
-    same group-by, so the changed rows — the next frontier, passed
-    through :func:`counted_barrier` — need no second join.
+    same group-by, so the changed rows — the next frontier, the
+    driver's counted barrier — need no second join.
 
     Every caller's ``step`` is monotone in x and ``better`` is an
     idempotent merge, so a row that did not change was already
@@ -106,9 +104,9 @@ def _relax_rounds(
     barrier that the frontier's counted job materializes."""
     x = state.columns[-1]
     on = [k for k in keys if k in adj.columns] + ["src"]
-    history = [state]
-    frontier = state
-    for _ in range(max_rounds):
+
+    def relax(st: tuple, _r: int) -> tuple[DataFrame, DataFrame]:
+        frontier, state = st
         # rename on the frontier side: the E-sized adjacency reaches
         # its join unprojected
         cand = (
@@ -133,15 +131,16 @@ def _relax_rounds(
             )
             .transform(materialize, eager=False)
         )
-        frontier, rows = counted_barrier(
+        return (
             merged.where(F.col("was").isNull() | (F.col(x) != F.col("was")))
-            .select(*keys, "v", x)
+            .select(*keys, "v", x),
+            merged.select(*keys, "v", x),
         )
-        state = merged.select(*keys, "v", x)
-        history.append(state)
-        if rows == 0:
-            break
-    return history
+
+    states, _ = supersteps(
+        (state, state), relax, max_rounds, barrier="counted", halt="empty"
+    )
+    return [merged for _, merged in states]
 
 
 def _arrival_step() -> Column:
@@ -164,19 +163,14 @@ def _min_label_rounds(
     rather than O(diameter). Two shuffles per round whatever the
     number of key values. Returns (*keys, actor, label).
 
-    Each round's labels are a lazy barrier (lineage would
-    otherwise double per round); the changed flag rides inside the
-    round's plan (old_label is already in flight), and counting the
+    Each round's labels are the driver's flagged barrier (lineage
+    would otherwise double per round); the changed flag rides inside
+    the round's plan (old_label is already in flight), and counting the
     changed rows is the one job that both materializes the round's
     labels and returns the count the loop stops on — no re-join of new
     vs old labels, no second action."""
-    labels = (
-        sym.select(*keys, F.col("src").alias("actor"))
-        .distinct()
-        .withColumn("label", F.col("actor"))
-        .transform(materialize)
-    )
-    for _ in range(max_iterations):
+
+    def min_label(labels: DataFrame, _r: int) -> DataFrame:
         # rename on the edge side: the labels scan stays unprojected,
         # so AQE reuses its shuffle in the stepped join (one job fewer
         # per round than renaming the labels side)
@@ -202,23 +196,23 @@ def _min_label_rounds(
             F.col("label").alias("l_label"),
         )
         jumped = F.coalesce(F.col("l_label"), F.col("label"))
-        new_labels = (
-            stepped.join(lmap, [*keys, "label"], "left")
-            .select(
-                *keys,
-                "actor",
-                jumped.alias("label"),
-                (jumped != F.col("old_label")).alias("chg"),
-            )
-            .transform(materialize, eager=False)
+        return stepped.join(lmap, [*keys, "label"], "left").select(
+            *keys,
+            "actor",
+            jumped.alias("label"),
+            (jumped != F.col("old_label")).alias("chg"),
         )
-        # count through the internal RDD: the one job that materializes
-        # the round's labels, with no checkpoint of the changed rows
-        changed = new_labels.where("chg")._jdf.queryExecution().toRdd().count()
-        labels = new_labels.select(*keys, "actor", "label")
-        if changed == 0:
-            break
-    return labels
+
+    labels = (
+        sym.select(*keys, F.col("src").alias("actor"))
+        .distinct()
+        .withColumn("label", F.col("actor"))
+        .transform(materialize)
+    )
+    states, _ = supersteps(
+        labels, min_label, max_iterations, barrier="flagged", halt="empty"
+    )
+    return states[-1]
 
 
 # two co-prime 31-bit moduli: each neighbor color folds to two
@@ -241,18 +235,7 @@ def _wl_rounds(sym: DataFrame, keys: list[str], rounds: int) -> DataFrame:
     small). Returns (*keys, actor, color)."""
     from neo4j_dynagraph_spark import functions as dfn
 
-    colors, _ = counted_barrier(
-        sym.groupBy(*keys, F.col("src").alias("actor"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .select(
-            *keys,
-            "actor",
-            dfn.hash64(
-                F.concat(F.lit("wl0:"), F.col("deg").cast("string"))
-            ).alias("color"),
-        )
-    )
-    for r in range(1, rounds + 1):
+    def recolor(colors: DataFrame, r: int) -> DataFrame:
         nb = (
             sym.join(
                 colors.select(
@@ -269,25 +252,35 @@ def _wl_rounds(sym: DataFrame, keys: list[str], rounds: int) -> DataFrame:
                 F.count(F.lit(1)).alias("deg"),
             )
         )
-        colors, _ = counted_barrier(
-            nb.join(colors, [*keys, "actor"]).select(
-                *keys,
-                "actor",
-                dfn.hash64(
-                    F.concat(
-                        F.lit(f"wl{r}:"),
-                        F.col("color").cast("string"),
-                        F.lit(":"),
-                        F.col("s1").cast("string"),
-                        F.lit(":"),
-                        F.col("s2").cast("string"),
-                        F.lit(":"),
-                        F.col("deg").cast("string"),
-                    )
-                ).alias("color"),
-            )
+        return nb.join(colors, [*keys, "actor"]).select(
+            *keys,
+            "actor",
+            dfn.hash64(
+                F.concat(
+                    F.lit(f"wl{r}:"),
+                    F.col("color").cast("string"),
+                    F.lit(":"),
+                    F.col("s1").cast("string"),
+                    F.lit(":"),
+                    F.col("s2").cast("string"),
+                    F.lit(":"),
+                    F.col("deg").cast("string"),
+                )
+            ).alias("color"),
         )
-    return colors
+
+    colors, _ = counted_barrier(
+        sym.groupBy(*keys, F.col("src").alias("actor"))
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .select(
+            *keys,
+            "actor",
+            dfn.hash64(
+                F.concat(F.lit("wl0:"), F.col("deg").cast("string"))
+            ).alias("color"),
+        )
+    )
+    return supersteps(colors, recolor, rounds, barrier="counted")[0][-1]
 
 
 def _power_rounds(
@@ -307,7 +300,10 @@ def _power_rounds(
     each round is one join + one group-by, ranks
     eagerly checkpointed. Every node is some edge's dst, so each round
     carries the whole node vector (no dangling mass; an unreached node
-    sums exact 0.0 contributions). Columns: actor, rank (1e-6, desc)."""
+    sums exact 0.0 contributions). A ``damping`` outside [0, 1] (or
+    NaN) raises ``ValueError``. Columns: actor, rank (1e-6, desc)."""
+    if not 0.0 <= damping <= 1.0:
+        raise ValueError(f"damping must be finite and in [0, 1], got {damping}")
     sym = materialize(symmetrize(edges))
     adj = materialize(
         sym.join(sym.groupBy("src").agg(F.sum(weight).alias("wdeg")), "src")
@@ -318,9 +314,9 @@ def _power_rounds(
         rank0, tele = F.lit(1.0 / n), F.lit((1.0 - damping) / n)
     else:
         rank0, tele = teleport, F.lit(1.0 - damping) * teleport
-    ranks = nodes.select("actor", rank0.alias("rank")).transform(materialize)
-    for _ in range(iterations):
-        ranks = (
+
+    def power(ranks: DataFrame, _r: int) -> DataFrame:
+        return (
             adj.join(ranks, adj.src == ranks.actor)
             .select(
                 "dst", (F.col("rank") * weight / F.col("wdeg")).alias("contrib")
@@ -328,8 +324,10 @@ def _power_rounds(
             .groupBy(F.col("dst").alias("actor"))
             .agg(F.sum("contrib").alias("mass"))
             .select("actor", (tele + F.lit(damping) * F.col("mass")).alias("rank"))
-            .transform(materialize)
         )
+
+    ranks = nodes.select("actor", rank0.alias("rank")).transform(materialize)
+    ranks = supersteps(ranks, power, iterations)[0][-1]
     return ranks.select("actor", F.round("rank", 6).alias("rank")).orderBy(
         F.desc("rank"), "actor"
     )
@@ -341,29 +339,28 @@ def _l1_rounds(
     rounds: int,
 ) -> list[DataFrame]:
     """L1-normalized propagation rounds over the vector ``scores`` (key,
-    value). Each round applies every hop (edges, on, by, out) in turn:
-    join the vector to ``edges`` on ``on``, sum its value by ``by``,
-    divide by the broadcast 1-row total, checkpoint as (by, out) — the
-    next hop's input. One double division is the only nonlinearity, so
-    an unrolled oracle hash-matches. Returns each hop's last vector
-    (zero rounds: the input vector for every hop)."""
-    last = [scores] * len(hops)
-    for _ in range(rounds):
-        last = []
-        for edges, on, by, out in hops:
-            raw = (
-                edges.join(scores, on)
-                .groupBy(by)
-                .agg(F.sum(scores.columns[1]).alias("raw"))
-            )
-            total = raw.agg(F.sum("raw").alias("t"))
-            scores = (
-                raw.crossJoin(broadcast(total))
-                .select(raw.columns[0], (F.col("raw") / F.col("t")).alias(out))
-                .transform(materialize)
-            )
-            last.append(scores)
-    return last
+    value). Each round applies every hop (edges, on, by, out) in turn,
+    one superstep per hop: join the vector to ``edges`` on ``on``, sum
+    its value by ``by``, divide by the broadcast 1-row total,
+    checkpoint as (by, out) — the next hop's input. One double division
+    is the only nonlinearity, so an unrolled oracle hash-matches.
+    Returns each hop's last vector (zero rounds: the input vector for
+    every hop)."""
+
+    def hop(scores: DataFrame, r: int) -> DataFrame:
+        edges, on, by, out = hops[(r - 1) % len(hops)]
+        raw = (
+            edges.join(scores, on)
+            .groupBy(by)
+            .agg(F.sum(scores.columns[1]).alias("raw"))
+        )
+        total = raw.agg(F.sum("raw").alias("t"))
+        return raw.crossJoin(broadcast(total)).select(
+            raw.columns[0], (F.col("raw") / F.col("t")).alias(out)
+        )
+
+    states, _ = supersteps(scores, hop, rounds * len(hops))
+    return states[-len(hops):] if rounds else [scores] * len(hops)
 
 
 def _peel_rounds(
@@ -371,21 +368,33 @@ def _peel_rounds(
     peel: Callable[[DataFrame, int], DataFrame],
     k: int,
     max_rounds: int,
-) -> tuple[DataFrame, bool]:
+    fixpoint_of: str | None = None,
+) -> DataFrame:
     """Peel rounds toward a unique fixpoint (k-core, k-truss): ``peel(e,
     k)`` keeps a subset of ``e``, so a round that removes nothing has
     reached the fixpoint and every later round is the identity. The
     input and each round pass :func:`counted_barrier`, whose one job
-    also returns the row count; the loop stops after the first round
-    that keeps every row, or after ``max_rounds``, and returns (edges,
-    converged)."""
-    e, rows = counted_barrier(e)
-    for _ in range(max_rounds):
-        e, n = counted_barrier(peel(e, k))
-        if n == rows:
-            return e, True
-        rows = n
-    return e, False
+    also returns the row count; :func:`supersteps` stops after the
+    first round that keeps every row, or after ``max_rounds``. An
+    operator that promises the fixpoint names itself in
+    ``fixpoint_of``: if the rounds run out first, the survivors are a
+    superset of it and ``RuntimeError`` is raised."""
+    e, n = counted_barrier(e)
+    states, rows = supersteps(
+        e,
+        lambda e, _r: peel(e, k),
+        max_rounds,
+        barrier="counted",
+        halt="fixpoint",
+        rows=n,
+    )
+    if fixpoint_of and not (len(rows) > 1 and rows[-1] == rows[-2]):
+        raise RuntimeError(
+            f"{fixpoint_of} did not converge within max_iterations={max_rounds}: "
+            f"the survivors are a superset of the {fixpoint_of}. "
+            "Increase max_iterations."
+        )
+    return states[-1]
 
 
 def _walk_draw(seed: str, i: int, n: Column) -> Column:
@@ -437,16 +446,18 @@ def _walk_rounds(
     materializes it and no per-hop blocking action runs on the
     driver. Returns the union of every
     frontier over start's columns."""
-    out = cur = start
-    for i in range(1, n_steps + 1):
+
+    def hop(cur: DataFrame, i: int) -> DataFrame:
         nxt = pick(cur.join(adj_arr, adj_arr.src == F.col("node")), i)
-        cur = (
-            nxt.select("walk_id", F.lit(i).alias("step"), *nxt.columns[1:])
-            .where(F.col("node").isNotNull())
-            .transform(materialize, eager=False)
-        )
-        out = out.unionByName(cur.select(*start.columns))
-    return out
+        return nxt.select(
+            "walk_id", F.lit(i).alias("step"), *nxt.columns[1:]
+        ).where(F.col("node").isNotNull())
+
+    states, _ = supersteps(start, hop, n_steps, barrier="lazy")
+    return reduce(
+        DataFrame.unionByName,
+        [start, *(cur.select(*start.columns) for cur in states[1:])],
+    )
 
 
 def symmetrize(edges: DataFrame, a1: str = "actor1", a2: str = "actor2") -> DataFrame:
@@ -560,13 +571,17 @@ def k_core(edges: DataFrame, k: int = 2, max_iterations: int = 50) -> DataFrame:
     regardless of peel order — which is what makes the operator
     testable without an oracle. The rounds are :func:`_peel_rounds`,
     whose counted barriers end the loop on the first round that peels
-    nothing, with no action of their own.
+    nothing, with no action of their own. If ``max_iterations`` runs
+    out before that round, the survivors are a superset of the k-core
+    and ``RuntimeError`` is raised, as :func:`k_truss` does; use
+    :func:`k_core_rounds` for the bounded superset.
     """
-    e, _ = _peel_rounds(
+    e = _peel_rounds(
         symmetrize(edges.select("actor1", "actor2").distinct()),
         _core_peel_round,
         k,
         max_iterations,
+        fixpoint_of="k_core",
     )
     return (
         e.groupBy(F.col("src").alias("actor"))
@@ -600,7 +615,7 @@ def k_core_rounds(
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    e, _ = _peel_rounds(
+    e = _peel_rounds(
         symmetrize(edges.select("actor1", "actor2").distinct()),
         _core_peel_round,
         k,
@@ -1030,7 +1045,7 @@ def k_truss_rounds(edges: DataFrame, k: int = 4, rounds: int = 2) -> DataFrame:
         raise ValueError("rounds must be >= 1")
     e = edges.select("actor1", "actor2").distinct()
     if k > 2:
-        e, _ = _peel_rounds(e, _truss_peel_round, k, rounds)
+        e = _peel_rounds(e, _truss_peel_round, k, rounds)
     return e.orderBy("actor1", "actor2")
 
 
@@ -1064,13 +1079,9 @@ def k_truss(edges: DataFrame, k: int = 4, max_iterations: int = 30) -> DataFrame
     # every edge is trivially in the 2-truss; the support semi-join
     # would wrongly drop triangle-free edges (no support row)
     if k > 2:
-        e, converged = _peel_rounds(e, _truss_peel_round, k, max_iterations)
-        if not converged:
-            raise RuntimeError(
-                f"k_truss did not converge within max_iterations={max_iterations}: "
-                "the surviving edge set is a superset of the k-truss. "
-                "Increase max_iterations."
-            )
+        e = _peel_rounds(
+            e, _truss_peel_round, k, max_iterations, fixpoint_of="k_truss"
+        )
     return e.orderBy("actor1", "actor2")
 
 
@@ -2590,33 +2601,32 @@ def betweenness_centrality(
             F.lit(1).cast("long").alias("sigma"),
         )
     )
-    layers = [layer]
-    # seen is a UNION of already-checkpointed layer frames: its lineage
-    # stays <= max_dist LogicalRDD scans, so re-checkpointing it each
-    # layer only added an eager job per round (r13; the layer
-    # checkpoints themselves stay — each layer is reused by the next
-    # round's anti-join AND the backward pass)
-    seen = layer.select("s", "v")
-    while n and len(layers) <= max_dist:
+
+    def forward(st: tuple, _r: int) -> tuple[DataFrame, DataFrame]:
+        # seen is a UNION of already-checkpointed layer frames: its
+        # lineage stays <= max_dist LogicalRDD scans, so re-checkpointing
+        # it each layer only added an eager job per round (r13; the
+        # layer checkpoints themselves stay — each layer is reused by
+        # the next round's anti-join AND the backward pass)
+        layer, seen = st
+        front = layer.select("s", "v")
+        seen = front if seen is None else seen.unionByName(front)
         expanded = (
             layer.join(sym, layer.v == sym.src)
             .groupBy("s", F.col("dst").alias("v"))
             .agg(F.sum("sigma").alias("sigma"))
         )
-        layer, n = counted_barrier(
-            expanded.join(seen, ["s", "v"], "left_anti")
-        )
-        if n:
-            seen = seen.unionByName(layer.select("s", "v"))
-            layers.append(layer)
-    # the deepest layer that exists has no successors (the next one is
-    # empty or past the radius), so its dependencies are all zero;
-    # layer 0 holds the sources themselves, which earn no betweenness
-    delta = layers[-1].withColumn("delta", F.lit(0.0))
-    if len(layers) == 1:  # no source reached any node
-        delta = delta.where(F.lit(False))
-    deltas = [delta]  # kept in layer order 1..deepest
-    for u_layer in reversed(layers[1:-1]):
+        return expanded.join(seen, ["s", "v"], "left_anti"), seen
+
+    states, rows = supersteps(
+        (layer, None), forward, max_dist, barrier="counted", halt="empty", rows=n
+    )
+    layers = [layer for layer, _ in states]
+    if len(layers) > 1 and rows[-1] == 0:  # the empty layer that stopped it
+        layers.pop()
+
+    def backward(delta: DataFrame, r: int) -> DataFrame:
+        u_layer = layers[-1 - r]
         contrib = (
             delta.join(sym, delta.v == sym.src)
             .select(
@@ -2638,18 +2648,24 @@ def betweenness_centrality(
                 ).alias("acc")
             )
         )
-        delta, _ = counted_barrier(
-            u_layer.join(acc, ["s", "v"], "left").select(
-                "s",
-                "v",
-                "sigma",
-                F.coalesce(F.col("acc"), F.lit(0.0)).alias("delta"),
-            )
+        return u_layer.join(acc, ["s", "v"], "left").select(
+            "s",
+            "v",
+            "sigma",
+            F.coalesce(F.col("acc"), F.lit(0.0)).alias("delta"),
         )
-        deltas.insert(0, delta)
-    all_delta = deltas[0]
-    for delta in deltas[1:]:
-        all_delta = all_delta.unionByName(delta)
+
+    # the deepest layer that exists has no successors (the next one is
+    # empty or past the radius), so its dependencies are all zero;
+    # layer 0 holds the sources themselves, which earn no betweenness
+    delta = layers[-1].withColumn("delta", F.lit(0.0))
+    if len(layers) == 1:  # no source reached any node
+        delta = delta.where(F.lit(False))
+    deltas, _ = supersteps(
+        delta, backward, max(len(layers) - 2, 0), barrier="counted"
+    )
+    # in layer order 1..deepest
+    all_delta = reduce(DataFrame.unionByName, reversed(deltas))
     if sources is None:
         return (
             all_delta.groupBy("v")
@@ -2901,7 +2917,8 @@ def neighbor_sampling(
 
     ``seeds``: one-column ``seed`` DataFrame; defaults to every node.
     Columns: seed, hop (1-based), src, dst — the sampled edges of
-    each seed's block, hop h rows expanding hop h-1's frontier.
+    each seed's block, hop h rows expanding hop h-1's frontier (no
+    rows for empty ``fanouts``).
     """
     from pyspark.sql import Window
 
@@ -2912,9 +2929,13 @@ def neighbor_sampling(
     ).transform(materialize)
     if seeds is None:
         seeds = sym.select(F.col("src").alias("seed")).distinct()
-    frontier = seeds.select("seed", F.col("seed").alias("v"))
-    sampled = []
-    for hop, fo in enumerate(fanouts, start=1):
+
+    def sample(block: DataFrame, hop: int) -> DataFrame:
+        frontier = (
+            block
+            if hop == 1
+            else block.select("seed", F.col("dst").alias("v")).distinct()
+        )
         cand = frontier.join(sym, frontier.v == sym.src).select(
             "seed",
             "src",
@@ -2929,20 +2950,21 @@ def neighbor_sampling(
             ).alias("h"),
         )
         w = Window.partitionBy("seed", "src").orderBy("h", "dst")
-        block = (
+        return (
             cand.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= fo)
-            .select(
-                "seed", F.lit(hop).alias("hop"), "src", "dst"
-            )
-            .transform(materialize, eager=False)
+            .where(F.col("rk") <= fanouts[hop - 1])
+            .select("seed", F.lit(hop).alias("hop"), "src", "dst")
         )
-        sampled.append(block)
-        frontier = block.select("seed", F.col("dst").alias("v")).distinct()
-    out = sampled[0]
-    for block in sampled[1:]:
-        out = out.unionByName(block)
-    return out.orderBy("seed", "hop", "src", "dst")
+
+    start = seeds.select("seed", F.col("seed").alias("v"))
+    blocks = supersteps(start, sample, len(fanouts), barrier="lazy")[0][1:]
+    if not blocks:
+        return sym.select(
+            F.col("src").alias("seed"), F.lit(0).alias("hop"), "src", "dst"
+        ).limit(0)
+    return reduce(DataFrame.unionByName, blocks).orderBy(
+        "seed", "hop", "src", "dst"
+    )
 
 
 def temporal_closeness(
@@ -3159,9 +3181,9 @@ def luby_mis(edges: DataFrame, rounds: int = 6) -> DataFrame:
     sym = symmetrize(
         edges.select("actor1", "actor2").distinct()
     ).transform(materialize)
-    active = sym.select(F.col("src").alias("v")).distinct().transform(materialize)
-    decided = []
-    for r in range(1, rounds + 1):
+
+    def luby_round(st: tuple, r: int) -> tuple[DataFrame, DataFrame, DataFrame]:
+        active = st[0]
         draws = active.select(
             "v",
             dfn.hash64(
@@ -3190,33 +3212,27 @@ def luby_mis(edges: DataFrame, rounds: int = 6) -> DataFrame:
             .join(winners, "v", "left_anti")
             .transform(materialize)
         )
-        decided.append(
-            winners.select(
-                "v", F.lit("mis").alias("status"), F.lit(r).alias("round")
-            )
+        return (
+            active.join(winners, "v", "left_anti").join(
+                dominated, "v", "left_anti"
+            ),
+            winners,
+            dominated,
         )
-        decided.append(
-            dominated.select(
-                "v",
-                F.lit("dominated").alias("status"),
-                F.lit(r).alias("round"),
-            )
-        )
-        active = (
-            active.join(winners, "v", "left_anti")
-            .join(dominated, "v", "left_anti")
-            .transform(materialize)
-        )
-    out = decided[0]
-    for frame in decided[1:]:
-        out = out.unionByName(frame)
-    out = out.unionByName(
-        active.select(
-            "v",
-            F.lit("undecided").alias("status"),
-            F.lit(None).cast("int").alias("round"),
-        )
+
+    active = sym.select(F.col("src").alias("v")).distinct().transform(materialize)
+    states, _ = supersteps((active,), luby_round, rounds)
+    decided = [
+        frame.select("v", F.lit(status).alias("status"), F.lit(r).alias("round"))
+        for r, (_, winners, dominated) in enumerate(states[1:], start=1)
+        for frame, status in ((winners, "mis"), (dominated, "dominated"))
+    ]
+    undecided = states[-1][0].select(
+        "v",
+        F.lit("undecided").alias("status"),
+        F.lit(None).cast("int").alias("round"),
     )
+    out = reduce(DataFrame.unionByName, [*decided, undecided])
     return out.select(F.col("v").alias("actor"), "status", "round").orderBy(
         "actor"
     )
@@ -3245,9 +3261,9 @@ def densest_subgraph(edges: DataFrame, rounds: int = 8) -> DataFrame:
     Columns: round, n_nodes, n_edges, density (round 6), is_best
     (density equals the max over emitted rounds).
     """
-    e = edges.select("actor1", "actor2").distinct().transform(materialize)
-    stats = []
-    for r in range(1, rounds + 1):
+
+    def peel(st: tuple, r: int) -> tuple[DataFrame, DataFrame]:
+        e = st[0]
         deg = (
             symmetrize(e)
             .groupBy(F.col("src").alias("v"))
@@ -3255,7 +3271,16 @@ def densest_subgraph(edges: DataFrame, rounds: int = 8) -> DataFrame:
         )
         ne = e.agg(F.count(F.lit(1)).alias("n_edges"))
         nv = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
-        stats.append(
+        survivors = (
+            deg.crossJoin(broadcast(ne))
+            .crossJoin(broadcast(nv))
+            .where(F.col("deg") * F.col("n_nodes") > 2 * F.col("n_edges"))
+            .select("v")
+        )
+        return (
+            e.join(survivors.select(F.col("v").alias("actor1")), "actor1")
+            .join(survivors.select(F.col("v").alias("actor2")), "actor2")
+            .select("actor1", "actor2"),
             ne.crossJoin(nv).select(
                 F.lit(r).alias("round"),
                 "n_nodes",
@@ -3263,27 +3288,18 @@ def densest_subgraph(edges: DataFrame, rounds: int = 8) -> DataFrame:
                 F.round(
                     F.col("n_edges") / F.col("n_nodes").cast("double"), 6
                 ).alias("density"),
-            )
+            ),
         )
-        survivors = (
-            deg.crossJoin(broadcast(ne))
-            .crossJoin(broadcast(nv))
-            .where(
-                F.col("deg") * F.col("n_nodes") > 2 * F.col("n_edges")
-            )
-            .select("v")
+
+    e = edges.select("actor1", "actor2").distinct().transform(materialize)
+    stats = [stat for _, stat in supersteps((e,), peel, rounds)[0][1:]]
+    out = (
+        reduce(DataFrame.unionByName, stats)
+        if stats
+        else e.sparkSession.createDataFrame(
+            [], "round int, n_nodes long, n_edges long, density double"
         )
-        e = (
-            e.join(
-                survivors.select(F.col("v").alias("actor1")), "actor1"
-            )
-            .join(survivors.select(F.col("v").alias("actor2")), "actor2")
-            .select("actor1", "actor2")
-            .transform(materialize)
-        )
-    out = stats[0]
-    for frame in stats[1:]:
-        out = out.unionByName(frame)
+    )
     out = out.where(F.col("n_nodes") > 0)
     from pyspark.sql import Window
 
@@ -3912,10 +3928,8 @@ def influence_seeds(edges: DataFrame, k: int = 8, p10: int = 3) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("d"))
         .transform(materialize)
     )
-    chosen = deg.sparkSession.createDataFrame(
-        [], "round long, actor long, degree long, dd10 long"
-    )
-    for r in range(1, k + 1):
+
+    def pick_one(chosen: DataFrame, r: int) -> DataFrame:
         t = (
             sym.join(
                 broadcast(chosen.select(F.col("actor").alias("dst"))),
@@ -3953,8 +3967,12 @@ def influence_seeds(edges: DataFrame, k: int = 8, p10: int = 3) -> DataFrame:
                 "dd10",
             )
         )
-        chosen = chosen.unionByName(pick).transform(materialize)
-    return chosen.orderBy("round")
+        return chosen.unionByName(pick)
+
+    chosen = deg.sparkSession.createDataFrame(
+        [], "round long, actor long, degree long, dd10 long"
+    )
+    return supersteps(chosen, pick_one, k)[0][-1].orderBy("round")
 
 
 def si_offspring(
@@ -4282,8 +4300,11 @@ def temporal_pagerank(
     therefore a UNION of delta rows (+r, -deg*s per sender, +s per
     receipt) collapsed by one groupBy SUM — no state self-join
     anywhere, flat ~0.1 s/round at any depth, and the integer
-    arithmetic is identical (exact sums commute).
+    arithmetic is identical (exact sums commute). A ``beta`` outside
+    [0, 1] (or NaN) raises ``ValueError``.
     """
+    if not 0.0 <= beta <= 1.0:
+        raise ValueError(f"beta must be finite and in [0, 1], got {beta}")
     e = (
         frame_edges.select("frame_id", "actor1", "actor2")
         .distinct()
@@ -4304,16 +4325,10 @@ def temporal_pagerank(
     nv = actors.agg(F.count(F.lit(1)).cast("long").alias("nv"))
     from pyspark.sql.functions import broadcast
 
-    r = (
-        actors.crossJoin(broadcast(nv))
-        .select(
-            "actor",
-            F.round(F.lit(1e9) / F.col("nv")).cast("long").alias("r"),
-        )
-        .transform(materialize)
-    )
-    for fid in sorted(frame_ids):
-        ef = sym.where(F.col("frame_id") == fid)
+    frames = sorted(frame_ids)
+
+    def flow(r: DataFrame, i: int) -> DataFrame:
+        ef = sym.where(F.col("frame_id") == frames[i - 1])
         deg = ef.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("deg"))
         s = r.join(deg, r.actor == deg.src).select(
             "actor",
@@ -4328,13 +4343,22 @@ def temporal_pagerank(
         recv = ef.join(s, ef.src == s.actor).select(
             F.col("dst").alias("actor"), F.col("s").alias("r")
         )
-        r = (
+        return (
             r.unionByName(sent)
             .unionByName(recv)
             .groupBy("actor")
             .agg(F.sum("r").alias("r"))
-            .transform(materialize)
         )
+
+    r = (
+        actors.crossJoin(broadcast(nv))
+        .select(
+            "actor",
+            F.round(F.lit(1e9) / F.col("nv")).cast("long").alias("r"),
+        )
+        .transform(materialize)
+    )
+    r = supersteps(r, flow, len(frames))[0][-1]
     return (
         r.select("actor", F.round(F.col("r") / F.lit(1e9), 6).alias("tpr"))
         .orderBy("actor")

@@ -54,9 +54,18 @@ Two entry points add to :func:`materialize`:
 - :func:`counted_barrier`, the loop barrier: it returns the row count
   from the barrier's own job, so a loop stops on an empty frontier or
   a round that removed nothing without a second action.
+
+:func:`supersteps` is the package's only loop that runs a barrier each
+round (Pregelix's one iteration operator): an operator supplies its
+initial state and one round's step; the driver owns the loop, the
+barrier, the stop rule and the per-round history.
+``test_round_loops_use_supersteps`` fails on any other such loop.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from typing import Any, Literal
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation
@@ -143,3 +152,53 @@ def counted_barrier(df: DataFrame) -> tuple[DataFrame, int]:
     if not wide and rows * (len(ck.columns) + 1) * 8 <= limit:
         ck = broadcast(ck)
     return ck, rows
+
+
+def supersteps(
+    state: Any,
+    step: Callable[[Any, int], Any],
+    rounds: int,
+    *,
+    barrier: Literal["eager", "lazy", "hub", "counted", "flagged"] = "eager",
+    halt: Literal["empty", "fixpoint"] | None = None,
+    rows: int | None = None,
+) -> tuple[list[Any], list[int | None]]:
+    """Run ``step(state, r)`` for r = 1..``rounds``, cutting each new
+    state at a ``barrier``: ``"eager"`` / ``"lazy"`` :func:`materialize`,
+    ``"hub"`` :func:`checkpoint_hub`, ``"counted"``
+    :func:`counted_barrier`, or ``"flagged"``, a lazy materialize whose
+    one job counts the rows of its boolean ``chg`` column (the state
+    drops ``chg``). ``step`` returns a frame, or a tuple whose first
+    frame is cut and whose other items ride along as they are.
+
+    ``halt`` reads the counts: ``"empty"`` stops after a round that
+    counts 0 rows, ``"fixpoint"`` after one that counts as many as the
+    round before. ``rows`` is the input state's count when the caller
+    has it. Returns ``(states, rows)``: the input state, then each
+    round's, and their counts (None where nothing was counted)."""
+    if rounds < 0:
+        raise ValueError(f"round bound must be >= 0, got {rounds}")
+    states, counts = [state], [rows]
+    for r in range(1, rounds + 1):
+        if (halt == "empty" and counts[-1] == 0) or (
+            halt == "fixpoint" and len(counts) > 1 and counts[-1] == counts[-2]
+        ):
+            break
+        out = step(state, r)
+        carry = isinstance(out, tuple)
+        head, *rest = out if carry else (out,)
+        n = None
+        if barrier == "counted":
+            head, n = counted_barrier(head)
+        elif barrier == "flagged":
+            head = materialize(head, eager=False)
+            n = head.where("chg")._jdf.queryExecution().toRdd().count()
+            head = head.select(*[c for c in head.columns if c != "chg"])
+        elif barrier == "hub":
+            head = checkpoint_hub(head)
+        else:
+            head = materialize(head, eager=barrier == "eager")
+        state = (head, *rest) if carry else head
+        states.append(state)
+        counts.append(n)
+    return states, counts

@@ -21,7 +21,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from neo4j_dynagraph_spark.operators.hub import checkpoint_hub, materialize
+from neo4j_dynagraph_spark.operators.hub import (
+    checkpoint_hub,
+    materialize,
+    supersteps,
+)
 
 _DOT = "aggregate(zip_with(qv, v, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
 _NORM = "sqrt(aggregate(transform({c}, x -> x * x), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x))"
@@ -511,8 +515,8 @@ def kmeans_fixed(
     """
     from pyspark.sql import Window
 
-    if k <= 0 or n_iter < 0:
-        raise ValueError("k must be positive and n_iter non-negative")
+    if k <= 0:
+        raise ValueError("k must be positive")
     base = corpus.select(F.col(id_col), F.col(vec_col).alias("_kv"))
     cent = (
         base.orderBy(id_col)
@@ -539,9 +543,9 @@ def kmeans_fixed(
             .select(id_col, "_kv", F.col("_best.cid").alias("cid"))
         )
 
-    for _ in range(n_iter):
-        cent = (
-            assign(cent)
+    def lloyd(c: DataFrame, _r: int) -> DataFrame:
+        return (
+            assign(c)
             .select("cid", F.posexplode("_kv").alias("pos", "x"))
             .groupBy("cid", "pos")
             .agg(F.round(F.avg("x"), 9).alias("m"))
@@ -551,15 +555,15 @@ def kmeans_fixed(
                     "transform(array_sort(collect_list(struct(pos, m))), s -> s.m)"
                 ).alias("_cv")
             )
-            # r14 (VERDICT r13 #6): checkpoint the k-row centroid table
-            # per Lloyd round. Without the cut, round i's broadcast
-            # build re-executes every prior round's assign (map-only
-            # over the corpus — no Exchange for ReuseExchange to
-            # dedup), so the job chain re-scans the corpus O(n_iter^2)
-            # times; with it each round is exactly one corpus pass.
-            # k x 2 narrow columns — the textbook hub.
-            .transform(checkpoint_hub)
         )
+
+    # r14 (VERDICT r13 #6): checkpoint the k-row centroid table per
+    # Lloyd round. Without the cut, round i's broadcast build
+    # re-executes every prior round's assign (map-only over the corpus
+    # — no Exchange for ReuseExchange to dedup), so the job chain
+    # re-scans the corpus O(n_iter^2) times; with it each round is
+    # exactly one corpus pass. k x 2 narrow columns — the textbook hub.
+    cent = supersteps(cent, lloyd, n_iter, barrier="hub")[0][-1]
     return assign(cent).select(id_col, F.col("cid").alias("cluster"))
 
 
@@ -706,21 +710,20 @@ def pca_top_component(
     vec = gram.select("i").distinct().select(
         F.col("i").alias("j"), F.lit(1.0).alias("val")
     )
-    for _ in range(n_iter):
+
+    def power(vec: DataFrame, _r: int) -> DataFrame:
         mv = (
             gram.join(vec, "j")
             .groupBy("i")
             .agg(F.sum(F.col("g") * F.col("val")).alias("val"))
         )
         nrm = mv.agg(F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("n"))
-        vec = (
-            mv.crossJoin(F.broadcast(nrm))
-            .select(
-                F.col("i").alias("j"),
-                (F.col("val") / F.col("n")).alias("val"),
-            )
-            .transform(materialize)
+        return mv.crossJoin(F.broadcast(nrm)).select(
+            F.col("i").alias("j"),
+            (F.col("val") / F.col("n")).alias("val"),
         )
+
+    vec = supersteps(vec, power, n_iter)[0][-1]
     gv = (
         gram.join(vec, "j")
         .groupBy("i")
@@ -981,8 +984,8 @@ def pq_codebooks(
     Output: (j, cid, cv) — subspace index 0..m-1, centroid id 1..k,
     centroid subvector.
     """
-    if m <= 0 or k <= 0 or n_iter < 0:
-        raise ValueError("m and k must be positive, n_iter non-negative")
+    if m <= 0 or k <= 0:
+        raise ValueError("m and k must be positive")
     from pyspark.sql import Window
 
     sub = (
@@ -1028,9 +1031,9 @@ def pq_codebooks(
             .select(id_col, "j", "_sv", F.col("_best.cid").alias("cid"))
         )
 
-    for _ in range(n_iter):
-        cent = (
-            assign(cent)
+    def lloyd(c: DataFrame, _r: int) -> DataFrame:
+        return (
+            assign(c)
             .select("j", "cid", F.posexplode("_sv").alias("pos", "x"))
             .groupBy("j", "cid", "pos")
             .agg(F.round(F.avg("x"), 9).alias("mu"))
@@ -1040,14 +1043,14 @@ def pq_codebooks(
                     "transform(array_sort(collect_list(struct(pos, mu))), s -> s.mu)"
                 ).alias("_cv")
             )
-            # r13: m*k rows — without the per-round cut, round i's
-            # assign embeds round i-1's whole plan and every CONSUMER
-            # of the returned books (encode + the ADC table, i.e. two
-            # references in each pq consumer) re-executes the entire
-            # unrolled training (q_pq_recall's audited plan carried
-            # 44 parquet scans)
-            .transform(materialize)
         )
+
+    # r13: m*k rows — without the per-round cut, round i's assign
+    # embeds round i-1's whole plan and every CONSUMER of the returned
+    # books (encode + the ADC table, i.e. two references in each pq
+    # consumer) re-executes the entire unrolled training (q_pq_recall's
+    # audited plan carried 44 parquet scans)
+    cent = supersteps(cent, lloyd, n_iter)[0][-1]
     return cent.select("j", "cid", F.col("_cv").alias("cv"))
 
 
@@ -1425,7 +1428,9 @@ def mf_rank1(
     v = rn.select("part").distinct().select(
         "part", F.lit(0.1).cast("double").alias("v")
     ).transform(materialize)
-    for _ in range(steps):
+
+    def gd(vu: tuple, _r: int) -> tuple[DataFrame, DataFrame]:
+        v, u = vu
         j = (
             rn.join(u, "cust")
             .join(v, "part")
@@ -1474,7 +1479,9 @@ def mf_rank1(
                     * (F.col("g") - F.lit(reg) * F.col("v_old"))
                 ).alias("v"),
             )
-            .transform(materialize)
         )
-        u, v = un, vn
+        # the driver cuts vn after the step's own cut of un
+        return vn, un
+
+    v, u = supersteps((v, u), gd, steps)[0][-1]
     return u, v

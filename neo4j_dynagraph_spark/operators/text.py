@@ -9,13 +9,18 @@ token pipelines at 100 TB live or die on staying inside codegen).
 from __future__ import annotations
 
 import math
+from functools import reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from neo4j_dynagraph_spark import functions as dfn
 from neo4j_dynagraph_spark.operators.dedup import shingles_df, tokens_df
-from neo4j_dynagraph_spark.operators.hub import checkpoint_hub, materialize
+from neo4j_dynagraph_spark.operators.hub import (
+    checkpoint_hub,
+    materialize,
+    supersteps,
+)
 
 # tiny, deterministic stopword profiles for the heuristic language-ID
 LANG_PROFILES: dict[str, tuple[str, ...]] = {
@@ -1058,8 +1063,29 @@ def _bpe_fit(
             ),
         ).otherwise(F.concat(acc, F.array(x)))
 
-    bests = []
-    for r in range(1, n_merges + 1):
+    def apply(seq: DataFrame, best: DataFrame) -> DataFrame:
+        return (
+            seq.crossJoin(
+                F.broadcast(best.select("left_sym", "right_sym", "merged"))
+            )
+            .select(
+                "word",
+                "cnt",
+                F.aggregate(
+                    "s",
+                    F.expr("CAST(array() AS array<string>)"),
+                    merge_step,
+                ).alias("s"),
+            )
+            .transform(materialize)
+        )
+
+    # a round applies the last round's rule, then picks its own: the
+    # last rule is applied after the loop, and only when asked
+    def merge_round(st: tuple, r: int) -> tuple[DataFrame, DataFrame]:
+        best, seq = st
+        if best is not None:
+            seq = apply(seq, best)
         pairs = (
             seq.where(F.size("s") >= 2)
             .select(
@@ -1086,30 +1112,14 @@ def _bpe_fit(
                 F.concat("left_sym", "right_sym").alias("merged"),
                 "weight",
             )
-            .transform(materialize)
         )
-        bests.append(best)
-        if r < n_merges or apply_last:
-            seq = (
-                seq.crossJoin(
-                    F.broadcast(
-                        best.select("left_sym", "right_sym", "merged")
-                    )
-                )
-                .select(
-                    "word",
-                    "cnt",
-                    F.aggregate(
-                        "s",
-                        F.expr("CAST(array() AS array<string>)"),
-                        merge_step,
-                    ).alias("s"),
-                )
-                .transform(materialize)
-            )
-    out = bests[0]
-    for b in bests[1:]:
-        out = out.unionByName(b)
+        return best, seq
+
+    states, _ = supersteps((None, seq), merge_round, n_merges)
+    best, seq = states[-1]
+    if apply_last:
+        seq = apply(seq, best)
+    out = reduce(DataFrame.unionByName, [best for best, _ in states[1:]])
     return out.orderBy("round"), seq
 
 
@@ -1717,8 +1727,8 @@ def train_quality_probe(
         F.lit(0.0).alias("b"),
         *[F.lit(0.0).alias(f"w_{f[2:]}") for f in _PROBE_FEATS],
     )
-    log_rows = []
-    for step in range(steps + 1):
+
+    def grad(w: DataFrame) -> DataFrame:
         z = F.col("b")
         for f in _PROBE_FEATS:
             z = z + F.col(f"w_{f[2:]}") * F.col(f)
@@ -1737,7 +1747,7 @@ def train_quality_probe(
                 )
             ).alias("ll"),
         )
-        g = scored.agg(
+        return scored.agg(
             F.avg("ll").alias("loss"),
             F.avg("r").alias("g_b"),
             *[
@@ -1745,36 +1755,29 @@ def train_quality_probe(
                 for f in _PROBE_FEATS
             ],
         )
-        log_rows.append(
-            w.crossJoin(F.broadcast(g)).select(
-                F.lit(step).alias("step"),
-                F.round("loss", 6).alias("loss"),
-                F.round("b", 6).alias("b"),
-                *[
-                    F.round(f"w_{f[2:]}", 6).alias(f"w_{f[2:]}")
-                    for f in _PROBE_FEATS
-                ],
-            )
-        )
-        if step < steps:
-            w = (
-                w.crossJoin(F.broadcast(g))
-                .select(
-                    (F.col("b") - F.lit(lr) * F.col("g_b")).alias("b"),
-                    *[
-                        (
-                            F.col(f"w_{f[2:]}")
-                            - F.lit(lr) * F.col(f"g_{f[2:]}")
-                        ).alias(f"w_{f[2:]}")
-                        for f in _PROBE_FEATS
-                    ],
+
+    def descend(w: DataFrame, _r: int) -> DataFrame:
+        return w.crossJoin(F.broadcast(grad(w))).select(
+            (F.col("b") - F.lit(lr) * F.col("g_b")).alias("b"),
+            *[
+                (F.col(f"w_{f[2:]}") - F.lit(lr) * F.col(f"g_{f[2:]}")).alias(
+                    f"w_{f[2:]}"
                 )
-                .transform(materialize)
-            )
-    out = log_rows[0]
-    for frame in log_rows[1:]:
-        out = out.unionByName(frame)
-    return out.orderBy("step")
+                for f in _PROBE_FEATS
+            ],
+        )
+
+    # the log row of step i reads the loss at step i's weights
+    log_rows = [
+        w.crossJoin(F.broadcast(grad(w))).select(
+            F.lit(step).alias("step"),
+            F.round("loss", 6).alias("loss"),
+            F.round("b", 6).alias("b"),
+            *[F.round(f"w_{f[2:]}", 6).alias(f"w_{f[2:]}") for f in _PROBE_FEATS],
+        )
+        for step, w in enumerate(supersteps(w, descend, steps)[0])
+    ]
+    return reduce(DataFrame.unionByName, log_rows).orderBy("step")
 
 
 def bigram_ppl(

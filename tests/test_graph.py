@@ -9,7 +9,7 @@ import pyspark.sql.functions as F
 import pytest
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
-from neo4j_dynagraph_spark.operators import graph
+from neo4j_dynagraph_spark.operators import graph, hub
 from neo4j_dynagraph_spark.operators.hub import (
     checkpoint_hub,
     counted_barrier,
@@ -23,6 +23,23 @@ EDGES = [(1, 2), (1, 3), (2, 3), (3, 4), (4, 5), (1, 5)]
 @pytest.fixture(scope="module")
 def edges(spark):
     return spark.createDataFrame(EDGES, "actor1 long, actor2 long")
+
+
+@pytest.fixture
+def barrier_rows(monkeypatch):
+    """The row count of every counted barrier, in call order: those an
+    operator cuts itself and the per-round ones of hub.supersteps."""
+    rows = []
+    barrier = hub.counted_barrier
+
+    def counting(df):
+        out = barrier(df)
+        rows.append(out[1])
+        return out
+
+    monkeypatch.setattr(graph, "counted_barrier", counting)
+    monkeypatch.setattr(hub, "counted_barrier", counting)
+    return rows
 
 
 def test_symmetrize_doubles_rows(edges):
@@ -187,6 +204,75 @@ def test_k_core_rounds_matches_fixpoint_when_converged(spark):
     r1 = {r.actor: r.degree for r in graph.k_core_rounds(e, k=2, rounds=1).collect()}
     # after one round only leaf 6 is gone; 5 survives with degree 1
     assert r1 == {1: 3, 2: 3, 3: 3, 4: 4, 5: 1}
+
+
+def test_k_core_raises_when_it_stops_short(spark):
+    """A 13-node path peels two leaves per round toward an empty
+    2-core; two rounds leave a superset (actor 2 with degree 1), which
+    k_core must not return as the 2-core."""
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "actor1 long, actor2 long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        graph.k_core(path, k=2, max_iterations=2)
+    assert graph.k_core(path, k=2).collect() == []
+
+
+_ROUND_BOUNDS = {
+    "luby_mis zero rounds": (
+        lambda e: graph.luby_mis(e, rounds=0),
+        ["actor", "status", "round"],
+        [(v, "undecided", None) for v in range(1, 6)],
+    ),
+    "densest_subgraph zero rounds": (
+        lambda e: graph.densest_subgraph(e, rounds=0),
+        ["round", "n_nodes", "n_edges", "density", "is_best"],
+        [],
+    ),
+    "neighbor_sampling no hops": (
+        lambda e: graph.neighbor_sampling(e, []),
+        ["seed", "hop", "src", "dst"],
+        [],
+    ),
+    "pagerank negative iterations": (
+        lambda e: graph.pagerank(e, iterations=-1), None, ValueError
+    ),
+    "wl_refinement negative rounds": (
+        lambda e: graph.wl_refinement(e, rounds=-1), None, ValueError
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_ROUND_BOUNDS))
+def test_round_bounds_zero_defined_negative_raise(edges, case):
+    run, columns, want = _ROUND_BOUNDS[case]
+    if want is ValueError:
+        with pytest.raises(ValueError, match="round bound"):
+            run(edges)
+        return
+    got = run(edges)
+    assert got.columns == columns
+    assert [tuple(r) for r in got.collect()] == want
+
+
+@pytest.mark.parametrize(
+    "run",
+    [
+        lambda e: graph.pagerank(e, damping=float("nan")),
+        lambda e: graph.pagerank(e, damping=1.5),
+        lambda e: graph.pagerank_weighted(
+            e.withColumn("w", F.lit(1)), damping=float("inf")
+        ),
+        lambda e: graph.personalized_pagerank(e, [1], damping=-0.1),
+        lambda e: graph.temporal_pagerank(
+            e.withColumn("frame_id", F.lit(0)), [0], beta=float("nan")
+        ),
+    ],
+    ids=["nan", "above_one", "inf_weighted", "negative_personalized", "temporal_nan"],
+)
+def test_damping_must_be_finite_in_unit_interval(edges, run):
+    with pytest.raises(ValueError, match=r"finite and in \[0, 1\]"):
+        run(edges)
 
 
 def test_k_core_rounds_spill_dir_bit_identical(spark, reliable_mode, monkeypatch):
@@ -490,18 +576,9 @@ def test_k_truss_max_iterations_boundary(spark):
     assert got == set(k4)
 
 
-def test_peel_rounds_stop_when_a_round_removes_nothing(spark, monkeypatch):
+def test_peel_rounds_stop_when_a_round_removes_nothing(spark, barrier_rows):
     # the bounded form runs at most `rounds` peels but stops at the
     # first round whose counted barrier sees no edge removed
-    rows = []
-    barrier = graph.counted_barrier
-
-    def counting(df):
-        out = barrier(df)
-        rows.append(out[1])
-        return out
-
-    monkeypatch.setattr(graph, "counted_barrier", counting)
     k4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
     pendant = [(3, 5), (4, 5), (4, 6), (5, 6)]
     e = spark.createDataFrame(k4 + pendant, "actor1 long, actor2 long")
@@ -511,7 +588,7 @@ def test_peel_rounds_stop_when_a_round_removes_nothing(spark, monkeypatch):
     }
     assert got == set(k4)
     # barriers: the input, then rounds 1-3; round 3 removes nothing
-    assert rows == [10, 7, 6, 6]
+    assert barrier_rows == [10, 7, 6, 6]
 
 
 def test_temporal_path_counts_hand_graph(spark):
@@ -1616,19 +1693,10 @@ def test_betweenness_sampled_single_source_scaling(spark):
         assert got[leaf] == pytest.approx(0.0, abs=1e-6)
 
 
-def test_betweenness_stops_at_first_empty_layer(spark, monkeypatch):
+def test_betweenness_stops_at_first_empty_layer(spark, barrier_rows):
     # K5, max_dist=4: every node is one hop from every source, so the
     # forward pass materializes layer 1 (5 sources x 4 nodes) and the
     # empty layer 2, then stops instead of running layers 3 and 4
-    rows = []
-    barrier = graph.counted_barrier
-
-    def counting(df):
-        out = barrier(df)
-        rows.append(out[1])
-        return out
-
-    monkeypatch.setattr(graph, "counted_barrier", counting)
     k5 = spark.createDataFrame(
         [(a, b) for a in range(5) for b in range(a + 1, 5)],
         "actor1 long, actor2 long",
@@ -1636,33 +1704,24 @@ def test_betweenness_stops_at_first_empty_layer(spark, monkeypatch):
     got = graph.betweenness_centrality(k5, max_dist=4).collect()
     # barriers: symmetrized edges, the sources (layer 0), layers 1-2;
     # no backward barrier, since layer 1 is the deepest non-empty one
-    assert rows == [20, 5, 20, 0]
+    assert barrier_rows == [20, 5, 20, 0]
     assert {r.actor: r.betweenness for r in got} == {v: 0.0 for v in range(5)}
 
 
-def test_relax_rounds_stop_at_first_empty_frontier(spark, monkeypatch):
+def test_relax_rounds_stop_at_first_empty_frontier(spark, barrier_rows):
     # K4, every contact in frame 0: round 1 reaches every node from
     # every source, round 2 improves nothing, and the loop stops there
     # instead of running the remaining rounds
-    rows = []
-    barrier = graph.counted_barrier
-
-    def counting(df):
-        out = barrier(df)
-        rows.append(out[1])
-        return out
-
-    monkeypatch.setattr(graph, "counted_barrier", counting)
     k4 = [(0, a, b) for a in range(4) for b in range(a + 1, 4)]
     fe = spark.createDataFrame(k4, "frame_id long, actor1 long, actor2 long")
     got = {r.actor: r.n_reached for r in graph.temporal_closeness(fe).collect()}
     assert got == {v: 3 for v in range(4)}
     # frontier barriers: 4 sources x 3 first arrivals, then empty
-    assert rows == [12, 0]
-    rows.clear()
+    assert barrier_rows == [12, 0]
+    barrier_rows.clear()
     reach = graph.bounded_distances(fe.drop("frame_id"), max_dist=4).collect()
     assert sorted(r.d for r in reach) == [0] * 4 + [1] * 12
-    assert rows == [12, 0]
+    assert barrier_rows == [12, 0]
 
 
 def test_checkpoint_hub_narrow_frame_roundtrips(spark):
@@ -1757,6 +1816,47 @@ def test_barriers_stay_in_hub():
         and isinstance(node.func, ast.Attribute)
         and node.func.attr in ("localCheckpoint", "checkpoint")
     ]
+    assert offenders == []
+
+
+# loops that may hold a barrier outside hub.supersteps, each with the
+# reason its shape does not fit the driver: {"<module>:<function>": why}
+_ROUND_LOOP_EXCEPTIONS: dict[str, str] = {}
+
+
+def test_round_loops_use_supersteps():
+    """Every loop that runs a barrier each round is hub.supersteps: no
+    loop (for, while or comprehension) of the package outside
+    operators/hub.py names materialize, counted_barrier or
+    checkpoint_hub, unless its function is an allowlisted exception."""
+    import ast
+    from pathlib import Path
+
+    barriers = {"materialize", "counted_barrier", "checkpoint_hub"}
+    loops = (
+        ast.For, ast.While, ast.ListComp, ast.SetComp, ast.DictComp,
+        ast.GeneratorExp,
+    )
+    pkg = Path(graph.__file__).resolve().parent.parent
+    offenders = []
+
+    def visit(node, module, fn):
+        if isinstance(node, ast.FunctionDef):
+            fn = node.name
+        where = f"{module}:{fn}"
+        if isinstance(node, loops) and where not in _ROUND_LOOP_EXCEPTIONS:
+            named = {
+                getattr(n, "id", getattr(n, "attr", None)) for n in ast.walk(node)
+            }
+            if named & barriers:
+                offenders.append(f"{where}:{node.lineno}")
+        for child in ast.iter_child_nodes(node):
+            visit(child, module, fn)
+
+    for path in sorted(pkg.rglob("*.py")):
+        if path != pkg / "operators" / "hub.py":
+            module = path.relative_to(pkg).with_suffix("").as_posix()
+            visit(ast.parse(path.read_text()), module, "<module>")
     assert offenders == []
 
 
