@@ -7,13 +7,12 @@ directory without writing code —
     python -m neo4j_dynagraph_spark list [substr]
     python -m neo4j_dynagraph_spark run q10_degree /root/testdata/sf0.01
     python -m neo4j_dynagraph_spark explain q1_time_range /root/testdata/sf0.01
+    python -m neo4j_dynagraph_spark oracle q_curate
 
 `run` prints up to --limit rows (default 20, the driver never holds
 more); `explain` prints the formatted physical plan (the same text the
-plans_audit/ gate pins, un-normalized). The developer-facing twin is
-tools/run_query.py (adds --oracle to print a query's DuckDB SQL and
-per-run timing); this module is the packaged `python -m` entry point
-and adds the discovery `list`.
+plans_audit/ gate pins, un-normalized); `oracle` prints the DuckDB SQL
+the parity gate grades a query against (no Spark session needed).
 """
 
 from __future__ import annotations
@@ -28,6 +27,7 @@ def main(argv: list[str] | None = None) -> int:
 
     p_list = sub.add_parser("list", help="list registered queries")
     p_list.add_argument("substr", nargs="?", default="")
+    sub.add_parser("oracle", help="print a query's DuckDB SQL").add_argument("query")
 
     for name in ("run", "explain"):
         p = sub.add_parser(name)
@@ -51,6 +51,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.query not in REGISTRY:
         print(f"unknown query {args.query!r}; see `list`", file=sys.stderr)
         return 2
+    if args.cmd == "oracle":
+        print(REGISTRY[args.query].oracle or "(no SQL oracle — rows-only check)")
+        return 0
 
     from neo4j_dynagraph_spark import get_spark
 

@@ -311,6 +311,8 @@ def _power_rounds(
     nodes = adj.select(F.col("src").alias("actor")).distinct()
     if teleport is None:
         n = nodes.count()
+        if n == 0:  # edgeless: no nodes, no uniform distribution
+            return nodes.select("actor", F.lit(0.0).alias("rank"))
         rank0, tele = F.lit(1.0 / n), F.lit((1.0 - damping) / n)
     else:
         rank0, tele = teleport, F.lit(1.0 - damping) * teleport
@@ -2366,6 +2368,8 @@ def eigenvector_centrality(
         edges.select("actor1", "actor2").distinct()
     ).transform(materialize)
     n = sym.select("src").distinct().count()
+    if n == 0:  # edgeless: no nodes to normalize over
+        return sym.select(F.col("src").alias("actor"), F.lit(0.0).alias("score"))
     scores = (
         sym.select(F.col("src").alias("actor"))
         .distinct()
@@ -3463,6 +3467,12 @@ def hits_bipartite(presence: DataFrame, iterations: int = 8) -> DataFrame:
         )
     inc = presence.select("frame_id", "actor").distinct().transform(materialize)
     n_a = inc.select("actor").distinct().count()
+    if n_a == 0:  # no presence: no actors or frames to score
+        return inc.select(
+            F.lit("actor").alias("kind"),
+            F.col("actor").alias("id"),
+            F.lit(0.0).alias("score"),
+        )
     hub = (
         inc.select("actor")
         .distinct()

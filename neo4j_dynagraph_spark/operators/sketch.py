@@ -47,12 +47,20 @@ def kmv_distinct(
     """
     if k < 2:
         raise ValueError("k must be >= 2")
-    # map into (0, 1]: (h + 1) / 2^60 — h is uniform on [0, 2^60)
+    return kmv_estimate(kmv_hashes(df, group_col, value, seed), group_col, k)
+
+
+def kmv_hashes(
+    df: DataFrame, group_col: str, value: Column, seed: str = "kmv:"
+) -> DataFrame:
+    """The distinct (group, u) normalized hashes a KMV sketch keeps the
+    k smallest of: u = (hash64(seed || value) + 1) / 2^60 maps the
+    uniform 60-bit hash into (0, 1]. Shared by the batch sketch and
+    the streaming one (streaming/kmv.py), so both hash alike."""
     u = (dfn.hash64(F.concat(F.lit(seed), value.cast("string"))) + 1) / F.lit(
         _TWO_60
     )
-    vals = df.select(F.col(group_col), u.alias("u")).distinct()
-    return kmv_estimate(vals, group_col, k)
+    return df.select(F.col(group_col), u.alias("u")).distinct()
 
 
 def kmv_estimate(vals: DataFrame, group_col: str, k: int) -> DataFrame:
@@ -83,6 +91,24 @@ def kmv_estimate(vals: DataFrame, group_col: str, k: int) -> DataFrame:
     )
 
 
+def _cms_cells(d: int, w: int) -> Column:
+    """A ``token``'s d Count-Min cells: the array of (r, c) structs,
+    c = hash64('cms<r>:' || token) mod w — the one cell expression of
+    the counter table, its pre-aggregated twin and the probe."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(r).alias("r"),
+                F.pmod(
+                    dfn.hash64(F.concat(F.lit(f"cms{r}:"), F.col("token"))),
+                    F.lit(w),
+                ).alias("c"),
+            )
+            for r in range(d)
+        ]
+    )
+
+
 def cms_table(tokens: DataFrame, d: int = 4, w: int = 1024) -> DataFrame:
     """Count-Min sketch counter table over a token stream — the
     portable frequency sketch joining KMV (cardinality) and the
@@ -100,22 +126,8 @@ def cms_table(tokens: DataFrame, d: int = 4, w: int = 1024) -> DataFrame:
     Input: DataFrame with a ``token`` column, one row per occurrence.
     Columns: r, c, cnt.
     """
-    cells = F.array(
-        *[
-            F.struct(
-                F.lit(r).alias("r"),
-                F.pmod(
-                    dfn.hash64(
-                        F.concat(F.lit(f"cms{r}:"), F.col("token"))
-                    ),
-                    F.lit(w),
-                ).alias("c"),
-            )
-            for r in range(d)
-        ]
-    )
     return (
-        tokens.select(F.explode(cells).alias("cell"))
+        tokens.select(F.explode(_cms_cells(d, w)).alias("cell"))
         .groupBy(F.col("cell.r").alias("r"), F.col("cell.c").alias("c"))
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
@@ -134,22 +146,8 @@ def cms_table_from_counts(
     — shuffle and process fewer bytes when an upstream aggregate
     already exists). Columns: r, c, cnt.
     """
-    cells = F.array(
-        *[
-            F.struct(
-                F.lit(r).alias("r"),
-                F.pmod(
-                    dfn.hash64(
-                        F.concat(F.lit(f"cms{r}:"), F.col("token"))
-                    ),
-                    F.lit(w),
-                ).alias("c"),
-            )
-            for r in range(d)
-        ]
-    )
     return (
-        counts.select(F.explode(cells).alias("cell"), "cnt")
+        counts.select(F.explode(_cms_cells(d, w)).alias("cell"), "cnt")
         .groupBy(F.col("cell.r").alias("r"), F.col("cell.c").alias("c"))
         .agg(F.sum("cnt").cast("long").alias("cnt"))
     )
@@ -174,25 +172,7 @@ def cms_probe(
     sketch (streaming/cms.py), which are bit-equal counter tables.
     Columns: token, cms_est."""
     probes = probe.select(
-        "token",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).alias("r"),
-                        F.pmod(
-                            dfn.hash64(
-                                F.concat(
-                                    F.lit(f"cms{r}:"), F.col("token")
-                                )
-                            ),
-                            F.lit(w),
-                        ).alias("c"),
-                    )
-                    for r in range(d)
-                ]
-            )
-        ).alias("cell"),
+        "token", F.explode(_cms_cells(d, w)).alias("cell")
     ).select("token", "cell.r", "cell.c")
     # LEFT join + coalesce-to-0: a probe token hashing to a cell with no
     # counter row has a true CMS count of 0 there, and the per-token min

@@ -2898,7 +2898,7 @@ def q_stream_neighbor_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained through incremental per-hop neighbor-sample lattices
     (per source, keep the fanout smallest neighbors by the hop hash —
     union + dedup + keep-k-min is associative/commutative/idempotent,
-    the TopKScoreStore shape), with a presence-key store making
+    the running top-k's shape), with a presence-key store making
     cross-batch edge discovery exact (an actor arriving in batch 5
     pairs with frame-mates from batches 0-4 — the late-arrival hazard
     again). Read-time composition chains the hop lattices; bit-equal

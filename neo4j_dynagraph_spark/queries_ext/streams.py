@@ -746,7 +746,7 @@ def q_stream_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING activity-burst monitor: the events stream drained
     through per-batch (frame_id, actor) count partials into a
-    batch_id-keyed CounterStore (additive class — a frame's count may
+    by-batch DimensionStore (additive class — a frame's count may
     arrive split across micro-batches; the sum over partials is
     order-free and replay-safe), with the trailing-week z-score burst
     pass recomputed at READ time over the summed presence by the

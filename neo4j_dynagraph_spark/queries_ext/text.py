@@ -1459,7 +1459,7 @@ def q_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING LM-count maintenance: the documents stream drained
     through incremental bigram/context count partials (additive
-    BatchRowStore class — replay replaces its own batch_id rows),
+    by-batch store — replay replaces its own batch_id rows),
     a set-union vocab store, and the batch-keyed doc store; at read
     the summed counts feed the SAME shared scoring pipeline as the
     batch operator, so the per-source perplexity table is bit-equal

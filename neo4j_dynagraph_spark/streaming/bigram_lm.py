@@ -6,7 +6,7 @@ source and scores the whole corpus. A curation service ingests
 documents continuously and wants the CURRENT per-source perplexity
 signal without retraining from scratch. Three stores make that exact:
 
-- count partials (BatchRowStore, keyed batch_id + group): a batch's
+- count partials (by-batch DimensionStores): a batch's
   reference-source bigram pairs collapse to (v, w, c) / (v, c)
   partials before the commit — additive counters, replay replaces
   the same batch_id's rows (exactly-once), the q_stream_cms class.
@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 from neo4j_dynagraph_spark.operators.hub import materialize
 from neo4j_dynagraph_spark.operators.text import bigram_pairs, bigram_score
 from neo4j_dynagraph_spark.streaming.drain import bounded_drain
-from neo4j_dynagraph_spark.streaming.training_mix import BatchRowStore
 from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
 
@@ -76,32 +75,21 @@ def _drain_counts(
     read from them, or None for an empty stream — the stateful half
     shared by the perplexity and domain-weight streaming terminals."""
     spark = drain.spark
-    cb_store = BatchRowStore(spark, drain.path("cb"), ["batch_id", "v", "w"])
-    cu_store = BatchRowStore(spark, drain.path("cu"), ["batch_id", "v"])
+    cb_store, cu_store, doc_store = (
+        DimensionStore(spark, drain.path(name), by_batch=True)
+        for name in ("cb", "cu", "docs")
+    )
     vocab_store = DimensionStore(spark, drain.path("vocab"), ["tok"])
-    doc_store = BatchRowStore(spark, drain.path("docs"), ["batch_id", "doc_id"])
 
     def count_batch(batch_df: DataFrame, batch_id: int) -> None:
         docs = batch_df.select("doc_id", "source", text_col).transform(materialize)
-        doc_store.merge(
-            docs.select(
-                F.lit(batch_id).cast("long").alias("batch_id"), "*"
-            )
-        )
+        doc_store.merge(docs, batch_id)
         tr = bigram_pairs(docs, text_col).where(
             F.col("source") == train_source
         )
-        bid = F.lit(batch_id).cast("long").alias("batch_id")
-        cb_store.merge(
-            tr.groupBy("v", "w")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .select(bid, "v", "w", "c")
-        )
-        cu_store.merge(
-            tr.groupBy("v")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .select(bid, "v", "c")
-        )
+        cnt = F.count(F.lit(1)).alias("c")
+        cb_store.merge(tr.groupBy("v", "w").agg(cnt), batch_id)
+        cu_store.merge(tr.groupBy("v").agg(cnt), batch_id)
         vocab_store.merge(tr.select(F.col("w").alias("tok")))
 
     drain.run(drain.source(docs_path, schema, max_files_per_trigger), count_batch)

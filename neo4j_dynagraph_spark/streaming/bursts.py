@@ -10,9 +10,9 @@ right now" is readable at any time without rescanning history.
 The state is in the simplest mergeable class of the taxonomy
 (streaming/quality.py, streaming/corpus_stats.py): per-(frame_id,
 actor) event counts are ADDITIVE — an actor's events in one frame may
-arrive split across micro-batches, so per-batch PARTIAL counts are
-committed keyed by (batch_id, frame_id, actor) (a re-delivered batch
-overwrites its own rows — exactly-once) and the readable presence is
+arrive split across micro-batches, so per-batch PARTIAL counts go to a
+by-batch DimensionStore (a re-delivered batch overwrites its own
+batch_id's rows — exactly-once) and the readable presence is
 the SUM over batch partials. Integer sums are associative/commutative
 over any chopping, so the drained presence — and therefore the burst
 verdicts computed from it by the IDENTICAL pure function
@@ -37,19 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from neo4j_dynagraph_spark import functions as dfn
 from neo4j_dynagraph_spark.operators.graph import burst_windows
 from neo4j_dynagraph_spark.operators.ingest import DEFAULT_DELTA
-from neo4j_dynagraph_spark.streaming.corpus_stats import CounterStore
 from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
-
-
-class PresenceStore(CounterStore):
-    """CounterStore keyed by (batch_id, frame_id, actor): replace-on-
-    batch_id merge (inherited) makes the additive counts exactly-once."""
-
-    def __init__(self, spark: SparkSession, root: str) -> None:
-        DimensionStore.__init__(
-            self, spark, root, ["batch_id", "frame_id", "actor"]
-        )
 
 
 def stream_burst_windows(
@@ -75,7 +64,7 @@ def stream_burst_windows(
     are truly incremental.
     """
     with bounded_drain(spark, store_root) as drain:
-        store = PresenceStore(spark, drain.root)
+        store = DimensionStore(spark, drain.root, by_batch=True)
         stream = drain.source(events_path, schema, max_files_per_trigger)
 
         def count_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -89,11 +78,7 @@ def stream_burst_windows(
                 .groupBy("frame_id", "actor")
                 .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
             )
-            store.merge(
-                partial.select(
-                    F.lit(batch_id).cast("long").alias("batch_id"), "*"
-                )
-            )
+            store.merge(partial, batch_id)
 
         drain.run(stream, count_batch)
         state = store.read()

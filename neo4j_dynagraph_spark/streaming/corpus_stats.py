@@ -10,12 +10,13 @@ cluster runs across SPACE, applied across TIME).
 
 Exactly-once the idempotent way: unlike KMV (whose union-prune merge
 is natively idempotent), plain counters would DOUBLE-count on
-foreachBatch re-delivery. So partial aggregates are committed keyed
-by (batch_id, key) — a re-delivered batch OVERWRITES its own rows
-instead of adding to them — and the readable stats are the sum over
-batch rows. State is O(batches x terms): a few long counters per
-micro-batch, never corpus-sized; compact old batches into one row
-whenever that ever matters.
+foreachBatch re-delivery. So partial aggregates go to a by-batch
+DimensionStore, stamped with the foreachBatch batch_id — a
+re-delivered batch OVERWRITES its own rows instead of adding to them —
+and the readable stats are the sum over batch rows. State is
+O(batches x terms): a few long counters per micro-batch, never
+corpus-sized; compact old batches into one row whenever that ever
+matters.
 
 The drained stats equal the batch aggregate exactly (integer counter
 sums are associative/commutative over any micro-batch chopping), so
@@ -33,25 +34,6 @@ from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
 _CORPUS_KEY = "#corpus"
-
-
-class CounterStore(DimensionStore):
-    """DimensionStore of per-batch partial-aggregate rows keyed by
-    (batch_id, key). merge() REPLACES the incoming batch_id's rows —
-    re-delivery of a micro-batch commits the identical partials over
-    itself, which is what makes additive counters exactly-once."""
-
-    def __init__(self, spark: SparkSession, root: str) -> None:
-        super().__init__(spark, root, ["batch_id", "key"])
-
-    def merge(self, batch: DataFrame) -> None:
-        existing = self.read()
-        if existing is None:
-            self._commit(batch)
-            return
-        bids = [r.batch_id for r in batch.select("batch_id").distinct().collect()]
-        kept = existing.where(~F.col("batch_id").isin(bids))
-        self._commit(kept.unionByName(batch))
 
 
 def stream_corpus_stats(
@@ -79,7 +61,7 @@ def stream_corpus_stats(
     from neo4j_dynagraph_spark import functions as dfn
 
     with bounded_drain(spark, store_root) as drain:
-        store = CounterStore(spark, drain.root)
+        store = DimensionStore(spark, drain.root, by_batch=True)
         stream = drain.source(docs_path, schema, max_files_per_trigger)
 
         def stats_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -106,7 +88,6 @@ def stream_corpus_stats(
                 ],
             )
             rows = agg.select(
-                F.lit(batch_id).cast("long").alias("batch_id"),
                 F.lit(_CORPUS_KEY).alias("key"),
                 F.col("n_docs").alias("cnt_docs"),
                 F.col("tok_sum").alias("cnt_toks"),
@@ -115,14 +96,13 @@ def stream_corpus_stats(
             for i, t in enumerate(terms):
                 rows = rows.unionByName(
                     agg.select(
-                        F.lit(batch_id).cast("long").alias("batch_id"),
                         F.lit(t).alias("key"),
                         F.lit(0).cast("long").alias("cnt_docs"),
                         F.lit(0).cast("long").alias("cnt_toks"),
                         F.col(f"df{i}").alias("cnt_df"),
                     )
                 )
-            store.merge(rows)
+            store.merge(rows, batch_id)
 
         drain.run(stream, stats_batch)
         state = store.read()

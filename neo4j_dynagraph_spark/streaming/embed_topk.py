@@ -6,14 +6,14 @@ over a finished corpus. A serving system ingests embeddings
 continuously and wants the CURRENT top-k readable at any time without
 rescoring history. Three stores make that exact:
 
-- VecStore: the corpus vectors, appended keyed by batch_id (replay
-  overwrites its own rows). Corpus-sized BY DESIGN — this IS the
+- vectors: the corpus vectors, a by-batch store (replay overwrites
+  its own batch_id's rows). Corpus-sized BY DESIGN — this IS the
   serving index; an ANN system stores its vectors.
-- QueryStore: query vectors seen so far (merge-on-key, idempotent).
-- TopKStore: per query, the running top-k (cid, sim_raw) — a PRUNED
-  LATTICE like the KMV store: union the batch's candidate scores,
-  drop duplicate (qid, cid) rows (scores are deterministic, so
-  replayed rows are identical), keep the k best by (sim_raw DESC,
+- queries: query vectors seen so far (set union, idempotent).
+- topk: per query, the running top-k (cid, sim_raw) — a keep-k
+  PRUNED LATTICE like the KMV store: union the batch's candidate
+  scores, drop duplicate (qid, cid) rows (scores are deterministic,
+  so replayed rows are identical), keep the k best by (sim_raw DESC,
   cid). Associative/commutative/idempotent => the drained state
   equals the batch brute-force top-k under ANY micro-batch chopping.
 
@@ -37,28 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from neo4j_dynagraph_spark.operators.hub import materialize
 from neo4j_dynagraph_spark.operators.similarity import _DOT, _NORM
 from neo4j_dynagraph_spark.streaming.drain import bounded_drain
-from neo4j_dynagraph_spark.streaming.training_mix import BatchRowStore
 from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
-
-
-class TopKScoreStore(DimensionStore):
-    """Per-qid pruned top-k lattice over (qid, cid, sim_raw) rows."""
-
-    def __init__(self, spark: SparkSession, root: str, k: int) -> None:
-        super().__init__(spark, root, ["qid", "cid", "sim_raw"])
-        self.k = k
-
-    def merge(self, batch: DataFrame) -> None:
-        new = batch.select("qid", "cid", "sim_raw")
-        existing = self.read()
-        merged = new if existing is None else existing.unionByName(new)
-        w = Window.partitionBy("qid").orderBy(F.desc("sim_raw"), "cid")
-        self._commit(
-            merged.dropDuplicates(["qid", "cid"])
-            .withColumn("_r", F.row_number().over(w))
-            .where(F.col("_r") <= self.k)
-            .drop("_r")
-        )
 
 
 def _scores(cand: DataFrame, queries: DataFrame) -> DataFrame:
@@ -96,15 +75,16 @@ def stream_embed_topk(
     checkpoint inside it so re-invocations ingest only new files.
     """
     with bounded_drain(spark, store_root) as drain:
-        vec_store = BatchRowStore(
-            spark, drain.path("vectors"), ["batch_id", "vec_id"]
-        )
+        vec_store = DimensionStore(spark, drain.path("vectors"), by_batch=True)
         # key_cols carry the vector too — DimensionStore.merge projects to
         # its key_cols, and the scorer needs (qid, qv) back from read()
         query_store = DimensionStore(
             spark, drain.path("queries"), ["qid", "qv"]
         )
-        topk_store = TopKScoreStore(spark, drain.path("topk"), k)
+        topk_store = DimensionStore(
+            spark, drain.path("topk"), ["qid", "cid"], keep=k, per="qid",
+            order=[F.desc("sim_raw"), "cid"],
+        )
 
         stream = drain.source(emb_path, schema, max_files_per_trigger)
 
@@ -115,13 +95,7 @@ def stream_embed_topk(
                 is_query.alias("_q"),
             ).transform(materialize)
             # 1. the batch joins the index (replay overwrites its own rows)
-            vec_store.merge(
-                vecs.select(
-                    F.lit(batch_id).cast("long").alias("batch_id"),
-                    "vec_id",
-                    "v",
-                )
-            )
+            vec_store.merge(vecs.select("vec_id", "v"), batch_id)
             # 2. EXISTING queries score only the new candidates
             old_q = query_store.read()
             if old_q is not None:

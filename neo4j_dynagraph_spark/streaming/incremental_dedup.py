@@ -124,8 +124,6 @@ def stream_dedup_minhash(
         minhash_signatures,
         shingles_df,
     )
-    from neo4j_dynagraph_spark.streaming.training_mix import BatchRowStore
-
     if num_hashes % rows_per_band:
         raise ValueError(
             f"signature width {num_hashes} not divisible by r={rows_per_band}"
@@ -133,11 +131,7 @@ def stream_dedup_minhash(
     r = rows_per_band
     hcols = [f"h{j}" for j in range(r)]
     with bounded_drain(spark, store_root) as drain:
-        store = BatchRowStore(
-            spark,
-            drain.path("bands"),
-            ["batch_id", "doc_id", "band", *hcols],
-        )
+        store = DimensionStore(spark, drain.path("bands"), by_batch=True)
         stream = drain.source(docs_path, schema, max_files_per_trigger)
 
         band_structs = F.array(
@@ -155,16 +149,13 @@ def stream_dedup_minhash(
                 shingles_df(batch_df), num_hashes=num_hashes
             )
             rows = sigs.select(
-                F.lit(batch_id).cast("long").alias("batch_id"),
-                "doc_id",
-                F.explode(band_structs).alias("bs"),
+                "doc_id", F.explode(band_structs).alias("bs")
             ).select(
-                "batch_id",
                 "doc_id",
                 "bs.band",
                 *[F.col(f"bs.h{j}").alias(f"h{j}") for j in range(r)],
             )
-            store.merge(rows)
+            store.merge(rows, batch_id)
 
         drain.run(stream, band_batch)
 

@@ -4,7 +4,8 @@
 cell-partitioned ANN layout in one batch pass, but a 100 TB pipeline
 appends embeddings continuously. This drain closes that gap: each
 arriving vector is assigned to its nearest FROZEN coarse centroid and
-the (vec_id, cell) rows merge into a cell-partitioned DimensionStore.
+the (vec_id, cell) rows merge into a DimensionStore whose commits are
+partitioned by cell.
 
 Assign-only is a deliberate contract, not a shortcut: re-fitting the
 coarse codebook re-homes EXISTING vectors, i.e. rewrites the whole
@@ -31,10 +32,6 @@ the changed cell partitions (upsert.py module docstring).
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -42,36 +39,6 @@ from neo4j_dynagraph_spark.operators.hub import materialize
 from neo4j_dynagraph_spark.operators.similarity import ivf_assign
 from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
-
-
-class CellPartitionedStore(DimensionStore):
-    """DimensionStore whose versioned commits are PARTITIONED BY the
-    cell column — the streaming twin of write_ivf_corpus's at-rest
-    layout, so a probe of the drained index prunes to nprobe/C of the
-    files exactly like the batch-built one."""
-
-    def _commit(self, df: DataFrame) -> None:
-        version = f"v_{uuid.uuid4().hex[:12]}"
-        (
-            df.write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(os.path.join(self.root, version))
-        )
-        tmp = tempfile.NamedTemporaryFile(
-            "w", dir=self.root, delete=False, suffix=".ptr"
-        )
-        tmp.write(version)
-        tmp.close()
-        os.replace(tmp.name, self._pointer)
-
-    def read(self) -> DataFrame | None:
-        # partition-column discovery infers `cell` as INT; the batch
-        # assignment carries the centroid id's own type (long) — pin
-        # it so drained == batch schemas agree
-        df = super().read()
-        return None if df is None else df.withColumn(
-            "cell", F.col("cell").cast("long")
-        )
 
 
 def stream_ivf_assign(
@@ -94,8 +61,11 @@ def stream_ivf_assign(
     stage inside it so re-invocations assign only new files.
     """
     with bounded_drain(spark, store_root) as drain:
-        store = CellPartitionedStore(
-            spark, drain.path("cells"), ["vec_id", "cell"]
+        # commits partitioned by cell — the streaming twin of
+        # write_ivf_corpus's at-rest layout, so a probe of the drained
+        # index prunes to nprobe/C of the files like the batch-built one
+        store = DimensionStore(
+            spark, drain.path("cells"), ["vec_id", "cell"], partition_col="cell"
         )
         # freeze the codebook once — foreachBatch re-evaluates closures
         # per batch, and the contract is that every batch sees the SAME

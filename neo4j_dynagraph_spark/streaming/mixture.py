@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from neo4j_dynagraph_spark.operators.text import temperature_mix_from_catalog
 from neo4j_dynagraph_spark.streaming.drain import bounded_drain
-from neo4j_dynagraph_spark.streaming.training_mix import BatchRowStore
+from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
 
 def stream_temperature_mix(
@@ -47,20 +47,13 @@ def stream_temperature_mix(
     checkpoint inside it so re-invocations ingest only new files.
     """
     with bounded_drain(spark, store_root) as drain:
-        catalog = BatchRowStore(
-            spark,
-            drain.path("catalog"),
-            ["batch_id", "doc_id", "source"],
-        )
+        catalog = DimensionStore(spark, drain.path("catalog"), by_batch=True)
         stream = drain.source(docs_path, schema, max_files_per_trigger)
 
         def catalog_batch(batch_df: DataFrame, batch_id: int) -> None:
             catalog.merge(
-                batch_df.select(
-                    F.lit(batch_id).cast("long").alias("batch_id"),
-                    "doc_id",
-                    F.col(source_col).alias("source"),
-                )
+                batch_df.select("doc_id", F.col(source_col).alias("source")),
+                batch_id,
             )
 
         drain.run(stream, catalog_batch)

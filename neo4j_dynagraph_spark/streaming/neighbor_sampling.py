@@ -7,16 +7,16 @@ ingests interaction events continuously and wants the CURRENT sampled
 blocks readable at any time without re-ranking history. Two store
 kinds make that exact:
 
-- PresenceKeyStore: distinct (frame_id, actor) presence keys seen so
-  far (DimensionStore merge-on-key, idempotent). Data-sized BY
+- presence: distinct (frame_id, actor) presence keys seen so far
+  (a set-union DimensionStore, idempotent). Data-sized BY
   DESIGN — it is what makes cross-batch edge discovery exact: an
   actor's events landing in batch 5 must pair with frame-mates from
   batches 0-4 (the same late-arrival hazard as the training-mix
   decontamination index and the embed-topk late query).
-- One MinKLattice per hop: per source node, the ``fanout`` smallest
-  neighbors by the hop's hash — union + dropDuplicates + keep-k-min
-  is associative, commutative, and idempotent (the TopKScoreStore /
-  KMV shape), so the drained lattice equals the batch window's
+- One keep-k lattice per hop: per source node, the ``fanout``
+  smallest neighbors by the hop's hash — union + dropDuplicates +
+  keep-k-min is associative, commutative, and idempotent (the running
+  top-k / KMV shape), so the drained lattice equals the batch window's
   hash-rank top-k over the FULL neighbor set under ANY micro-batch
   chopping, including replays.
 
@@ -36,34 +36,13 @@ DuckDB oracle as the batch row.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from neo4j_dynagraph_spark import functions as dfn
 from neo4j_dynagraph_spark.operators.hub import materialize
 from neo4j_dynagraph_spark.operators.ingest import DEFAULT_DELTA
 from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
-
-
-class MinKLattice(DimensionStore):
-    """Per-src pruned min-k lattice over (src, dst, h) rows: keep each
-    source's k smallest (h, dst) neighbors — the hash-rank sample."""
-
-    def __init__(self, spark: SparkSession, root: str, k: int) -> None:
-        super().__init__(spark, root, ["src", "dst", "h"])
-        self.k = k
-
-    def merge(self, batch: DataFrame) -> None:
-        new = batch.select("src", "dst", "h")
-        existing = self.read()
-        merged = new if existing is None else existing.unionByName(new)
-        w = Window.partitionBy("src").orderBy("h", "dst")
-        self._commit(
-            merged.dropDuplicates(["src", "dst"])
-            .withColumn("_r", F.row_number().over(w))
-            .where(F.col("_r") <= self.k)
-            .drop("_r")
-        )
 
 
 def _hop_hash(hop: int):  # noqa: ANN202
@@ -101,7 +80,10 @@ def stream_neighbor_sampling(
             spark, drain.path("presence"), ["frame_id", "actor"]
         )
         lattices = [
-            MinKLattice(spark, drain.path(f"hop{i}"), fo)
+            DimensionStore(
+                spark, drain.path(f"hop{i}"), ["src", "dst"], keep=fo,
+                per="src", order=["h", "dst"],
+            )
             for i, fo in enumerate(fanouts, start=1)
         ]
 

@@ -8,8 +8,8 @@ readable at any time without rescanning history, and a regression
 shows up batches (not a full recrawl) after it starts.
 
 Exactly-once follows corpus_stats' protocol: rule counters are
-ADDITIVE, so per-batch partials are committed keyed by
-(batch_id, source) — a re-delivered batch overwrites its own rows —
+ADDITIVE, so per-batch partials go to a by-batch DimensionStore — a
+re-delivered batch overwrites its own batch_id's rows —
 and the readable audit is the sum over batch partials. Integer
 counter sums are associative/commutative over any micro-batch
 chopping, so the drained audit equals the batch q_gopher_rules
@@ -25,19 +25,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from neo4j_dynagraph_spark.operators.text import gopher_rules
-from neo4j_dynagraph_spark.streaming.corpus_stats import CounterStore
 from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
 _RULES = ("r_wc", "r_mwl", "r_alpha", "r_stop", "r_rep")
-
-
-class QualityStore(CounterStore):
-    """CounterStore keyed by (batch_id, source): replace-on-batch_id
-    merge (inherited) makes the additive rule counters exactly-once."""
-
-    def __init__(self, spark: SparkSession, root: str) -> None:
-        DimensionStore.__init__(self, spark, root, ["batch_id", "source"])
 
 
 def stream_gopher_stats(
@@ -62,7 +53,7 @@ def stream_gopher_stats(
     checkpoint inside it so re-invocations are truly incremental.
     """
     with bounded_drain(spark, store_root) as drain:
-        store = QualityStore(spark, drain.root)
+        store = DimensionStore(spark, drain.root, by_batch=True)
         stream = drain.source(docs_path, schema, max_files_per_trigger)
 
         def quality_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -79,11 +70,7 @@ def stream_gopher_stats(
                 .cast("long")
                 .alias("n_pass"),
             )
-            store.merge(
-                partial.select(
-                    F.lit(batch_id).cast("long").alias("batch_id"), "*"
-                )
-            )
+            store.merge(partial, batch_id)
 
         drain.run(stream, quality_batch)
         state = store.read()

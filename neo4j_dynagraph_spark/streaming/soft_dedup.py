@@ -7,7 +7,7 @@ mixture twins, NOTHING can finalize mid-stream: a duplicate arriving
 in batch 9 shrinks the weight of every copy ingested since batch 0.
 The drained state is therefore the per-doc FINGERPRINT table —
 (batch_id, doc_id, source, h, ws), the ~40-byte content digest +
-token count, never the text — kept in a batch_id-keyed BatchRowStore
+token count, never the text — kept in a by-batch DimensionStore
 (replay replaces its own rows, the commit-order contract). Group
 sizes and the integer-grid weight arithmetic are late-bound at read
 time through the SAME shared core as the batch operator
@@ -18,7 +18,6 @@ graded on ITS oracle.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from neo4j_dynagraph_spark.operators.dedup import (
@@ -26,7 +25,7 @@ from neo4j_dynagraph_spark.operators.dedup import (
     soft_dedup_from_fingerprints,
 )
 from neo4j_dynagraph_spark.streaming.drain import bounded_drain
-from neo4j_dynagraph_spark.streaming.training_mix import BatchRowStore
+from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
 
 def stream_soft_dedup(
@@ -46,17 +45,11 @@ def stream_soft_dedup(
     its checkpoint so re-invocations ingest only new files.
     """
     with bounded_drain(spark, store_root) as drain:
-        fp_store = BatchRowStore(
-            spark, drain.path("fp"), ["batch_id", "doc_id"]
-        )
+        fp_store = DimensionStore(spark, drain.path("fp"), by_batch=True)
         stream = drain.source(docs_path, schema, max_files_per_trigger)
 
         def fp_batch(batch_df: DataFrame, batch_id: int) -> None:
-            fp_store.merge(
-                soft_dedup_fingerprints(batch_df, text_col).select(
-                    F.lit(batch_id).cast("long").alias("batch_id"), "*"
-                )
-            )
+            fp_store.merge(soft_dedup_fingerprints(batch_df, text_col), batch_id)
 
         drain.run(stream, fp_batch)
 

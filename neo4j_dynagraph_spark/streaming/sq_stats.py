@@ -12,9 +12,10 @@ streaming edge: KMV merges by idempotent set-prune, CMS / corpus / rule
 counters are ADDITIVE (exactly-once via batch_id-keyed overwrite), and
 min/max are an idempotent LATTICE — re-merging any batch (foreachBatch
 re-delivery) is absorbed by the lattice, so like KMV this store needs
-NO batch keying. min/max are associative, commutative, and idempotent,
-so the drained calibration equals the batch aggregate BIT-FOR-BIT
-under any micro-batch chopping or replay.
+NO batch keying: its DimensionStore merges by a per-key (min, max)
+aggregate over the dimension index. min/max are associative,
+commutative, and idempotent, so the drained calibration equals the
+batch aggregate BIT-FOR-BIT under any micro-batch chopping or replay.
 
 State is exactly d rows (the vector dimensionality) forever.
 """
@@ -27,24 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
-
-
-class MinMaxStore(DimensionStore):
-    """DimensionStore of per-dimension (mn, mx) rows keyed by the
-    dimension index; merge() is the min/max lattice join — idempotent,
-    so replays and overlapping batches are harmless by algebra."""
-
-    def __init__(self, spark: SparkSession, root: str) -> None:
-        super().__init__(spark, root, ["i"])
-
-    def merge(self, batch: DataFrame) -> None:
-        existing = self.read()
-        merged = batch if existing is None else existing.unionByName(batch)
-        self._commit(
-            merged.groupBy("i").agg(
-                F.min("mn").alias("mn"), F.max("mx").alias("mx")
-            )
-        )
 
 
 def stream_sq_stats(
@@ -67,7 +50,10 @@ def stream_sq_stats(
     checkpoint inside it so re-invocations are truly incremental.
     """
     with bounded_drain(spark, store_root) as drain:
-        store = MinMaxStore(spark, drain.root)
+        store = DimensionStore(
+            spark, drain.root, ["i"],
+            agg=[F.min("mn").alias("mn"), F.max("mx").alias("mx")],
+        )
         stream = drain.source(emb_path, schema, max_files_per_trigger)
 
         def calib_batch(batch_df: DataFrame, batch_id: int) -> None:

@@ -9,8 +9,8 @@ has a cross-batch dependency:
 
 - DEDUP: the min-doc_id survivor for a content hash may arrive in any
   batch — per content hash, MIN(doc_id) is a lattice (idempotent,
-  commutative, associative), so the store keeps the running min and
-  re-delivered batches are absorbed.
+  commutative, associative), so the store keeps the running min (the
+  first row per hash by doc_id) and re-delivered batches are absorbed.
 - QUALITY: purely per-document — each batch's text_stats projection is
   committed keyed by batch_id (a doc lives in exactly one batch, so a
   re-delivered batch OVERWRITES its own rows; corpus_stats' protocol).
@@ -45,39 +45,8 @@ from neo4j_dynagraph_spark.operators.text import (
     pack_token_counts,
     text_stats,
 )
-from neo4j_dynagraph_spark.streaming.corpus_stats import CounterStore
 from neo4j_dynagraph_spark.streaming.drain import bounded_drain
 from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
-
-
-class MinIdStore(DimensionStore):
-    """content_hash -> running MIN(doc_id): the exact-dedup survivor
-    lattice. Min is idempotent/commutative/associative, so replays and
-    arbitrary batch chopping converge to the batch groupBy-min."""
-
-    def __init__(self, spark: SparkSession, root: str) -> None:
-        super().__init__(spark, root, ["content_hash", "doc_id"])
-
-    def merge(self, batch: DataFrame) -> None:
-        new = batch.select("content_hash", "doc_id")
-        existing = self.read()
-        merged = new if existing is None else existing.unionByName(new)
-        self._commit(
-            merged.groupBy("content_hash").agg(
-                F.min("doc_id").alias("doc_id")
-            )
-        )
-
-
-class BatchRowStore(CounterStore):
-    """Per-batch row partials keyed by batch_id (replace-on-batch_id
-    merge inherited from CounterStore): exactly-once for projections
-    where each document belongs to exactly one batch."""
-
-    def __init__(
-        self, spark: SparkSession, root: str, key_cols: list[str]
-    ) -> None:
-        DimensionStore.__init__(self, spark, root, key_cols)
 
 
 def stream_training_mix(
@@ -104,16 +73,13 @@ def stream_training_mix(
     ingest only new files and re-assemble.
     """
     with bounded_drain(spark, store_root) as drain:
-        dedup_store = MinIdStore(spark, drain.path("dedup"))
-        stats_store = BatchRowStore(
-            spark,
-            drain.path("stats"),
-            ["batch_id", "doc_id", "n_tokens", "ttr"],
+        dedup_store = DimensionStore(
+            spark, drain.path("dedup"), ["content_hash", "doc_id"], keep=1,
+            per="content_hash", order=["doc_id"],
         )
-        tgram_store = BatchRowStore(
-            spark,
-            drain.path("train_grams"),
-            ["batch_id", "doc_id", "gh"],
+        stats_store = DimensionStore(spark, drain.path("stats"), by_batch=True)
+        tgram_store = DimensionStore(
+            spark, drain.path("train_grams"), by_batch=True
         )
         bgram_store = DimensionStore(
             spark, drain.path("bench_grams"), ["gh"]
@@ -129,7 +95,6 @@ def stream_training_mix(
         def mix_batch(batch_df: DataFrame, batch_id: int) -> None:
             from concurrent.futures import ThreadPoolExecutor
 
-            bid = F.lit(batch_id).cast("long").alias("batch_id")
             # the batch's text is tokenized/hashed by BOTH gram commits
             # (train split + bench split) — checkpoint the per-batch gram
             # table once (r13)
@@ -148,24 +113,21 @@ def stream_training_mix(
             # independent jobs'); each store owns its own directory, so
             # the commits share no mutable state
             tasks = [
-                # stage 1 — dedup lattice: batch-local min per hash + merge
+                # stage 1 — dedup lattice: the store keeps the min per hash
                 lambda: dedup_store.merge(
-                    batch_df.select(
-                        F.md5("text").alias("content_hash"), "doc_id"
-                    ).groupBy("content_hash").agg(F.min("doc_id").alias("doc_id"))
+                    batch_df.select(F.md5("text").alias("content_hash"), "doc_id")
                 ),
                 # stage 2 — per-doc quality stats (the batch pipeline's
                 # exact text_stats projection, so the rounded ttr gate
                 # matches)
                 lambda: stats_store.merge(
-                    text_stats(batch_df).select(bid, "doc_id", "n_tokens", "ttr")
+                    text_stats(batch_df).select("doc_id", "n_tokens", "ttr"),
+                    batch_id,
                 ),
                 # stage 3 — n-gram split: train pairs keyed by batch,
                 # bench hashes as a set-union lattice
                 lambda: tgram_store.merge(
-                    grams.where(F.col("doc_id") % bench_mod != 0).select(
-                        bid, "doc_id", "gh"
-                    )
+                    grams.where(F.col("doc_id") % bench_mod != 0), batch_id
                 ),
                 lambda: bgram_store.merge(
                     grams.where(F.col("doc_id") % bench_mod == 0).select("gh")

@@ -27,7 +27,7 @@ from neo4j_dynagraph_spark.operators.text import (
     unimax_from_counts,
 )
 from neo4j_dynagraph_spark.streaming.drain import bounded_drain
-from neo4j_dynagraph_spark.streaming.training_mix import BatchRowStore
+from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
 
 def stream_unimax_mix(
@@ -51,11 +51,7 @@ def stream_unimax_mix(
     ingest only new files.
     """
     with bounded_drain(spark, store_root) as drain:
-        counts = BatchRowStore(
-            spark,
-            drain.path("counts"),
-            ["batch_id", "source"],
-        )
+        counts = DimensionStore(spark, drain.path("counts"), by_batch=True)
         stream = drain.source(docs_path, schema, max_files_per_trigger)
 
         def counts_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -74,14 +70,8 @@ def stream_unimax_mix(
                     F.count(F.lit(1)).cast("long").alias("n_docs"),
                     F.sum("ws_tokens").cast("long").alias("n_tokens"),
                 )
-                .select(
-                    F.lit(batch_id).cast("long").alias("batch_id"),
-                    "source",
-                    "n_docs",
-                    "n_tokens",
-                )
             )
-            counts.merge(part)
+            counts.merge(part, batch_id)
 
         drain.run(stream, counts_batch)
 

@@ -5,6 +5,8 @@ creates each dimension node once (load_gexf_to_neo4j.py:163-164,193,
 204). The streaming equivalent maintains a parquet dimension table from
 a micro-batched stream with idempotent set semantics: each batch's new
 keys union-merge into the table; replays of the same batch are no-ops.
+Every streaming twin keeps its state in this one store; what differs is
+the merge rule, chosen where the drain builds its store.
 
 Write protocol: write merged to a fresh versioned directory then flip a
 pointer file — readers never see a half-written table, and the previous
@@ -20,31 +22,69 @@ import os
 import tempfile
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pyspark.sql.functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 
 class DimensionStore:
-    """A tiny versioned parquet dimension table with merge-on-key.
+    """A tiny versioned parquet table with one merge rule.
+
+    Merge rules, each idempotent under foreachBatch re-delivery:
+
+    - set union on ``key_cols`` (the default): the batch's distinct
+      keys union into the table — the dimension's create-once set.
+    - ``by_batch=True``: per-micro-batch partial rows. ``merge(rows,
+      batch_id)`` stamps the rows with a ``batch_id`` column and
+      REPLACES that id's rows, so a re-delivered batch overwrites
+      itself; readers sum over batches. This is what makes additive
+      counters exactly-once (``key_cols`` are unused).
+    - ``keep=k``: a pruned lattice. Dedup on ``key_cols``, then keep
+      the first k rows of each ``per`` group in ``order`` (the KMV
+      sketch's k smallest hashes, a neighbor sample's k smallest
+      hash ranks, a running top-k, the min-id dedup survivor at k=1).
+      The non-key columns must be a function of the key (hash-keyed
+      or deterministic scores), or the prune depends on arrival order.
+    - ``agg=[...]``: a per-key aggregate: group the union by
+      ``key_cols`` and apply the aggregates, which must themselves be
+      a lattice join (min, max).
+
+    ``partition_col`` partitions every committed version by that
+    integral column, read back as long (partition discovery would
+    infer INT).
 
     COMMIT-ORDER CONTRACT for foreachBatch drains that keep more than
-    one store (round-12 audit, prompted by the neighbor-sampling
-    crash-replay hole): a store whose contents GATE the batch's work —
-    the left-anti/novelty side that makes a replayed batch a no-op —
-    must commit LAST in the batch function. All other merges must be
-    replay-idempotent on their own (set union, min/k-min lattices,
-    batch_id-keyed overwrite-own-batch partials), so a crash between
-    commits replays into a re-merge, never a loss. Audited conforming:
-    incremental_dedup (output write before first-seen merge),
-    embed_topk (query gate commits after both score merges),
-    training_mix / bigram_lm / quality / mixture / bursts / cms / kmv /
-    sq_stats / corpus_stats / ivf (single store or idempotent-only),
-    neighbor_sampling (presence gate last — fixed this round, pinned
-    by the injected-crash test)."""
+    one store: a store whose contents GATE the batch's work — the
+    left-anti novelty side that makes a replayed batch a no-op — must
+    commit LAST in the batch function. Every other store must be
+    replay-idempotent on its own (any rule above), so a crash between
+    commits replays into a re-merge, never a loss. Gates in the
+    package: the first-seen content-hash set of the exact dedup drain
+    (its output write comes before it), the seen-query set of the
+    running top-k (after both score merges) and the presence-key set
+    of the neighbor sampler (after every hop lattice; pinned by the
+    injected-crash test). Every other drain keeps one store, or only
+    idempotent ones."""
 
-    def __init__(self, spark: SparkSession, root: str, key_cols: list[str]) -> None:
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        key_cols: list[str] = (),
+        *,
+        by_batch: bool = False,
+        keep: int | None = None,
+        per: str | None = None,
+        order: list[str | Column] = (),
+        agg: list[Column] = (),
+        partition_col: str | None = None,
+    ) -> None:
         self.spark = spark
         self.root = root
-        self.key_cols = key_cols
+        self.key_cols = list(key_cols)
+        self.by_batch = by_batch
+        self.keep, self.per, self.order = keep, per, list(order)
+        self.agg = list(agg)
+        self.partition_col = partition_col
         os.makedirs(root, exist_ok=True)
 
     @property
@@ -60,21 +100,47 @@ class DimensionStore:
 
     def read(self) -> DataFrame | None:
         path = self.current_path()
-        return self.spark.read.parquet(path) if path else None
+        if path is None:
+            return None
+        df = self.spark.read.parquet(path)
+        p = self.partition_col
+        return df.withColumn(p, F.col(p).cast("long")) if p else df
 
-    def merge(self, batch: DataFrame) -> None:
-        """Set-union the batch's keys into the dimension (idempotent)."""
-        new = batch.select(*self.key_cols).distinct()
+    def merge(self, batch: DataFrame, batch_id: int | None = None) -> None:
+        """Merge one micro-batch by the store's rule (class docstring);
+        a ``by_batch`` store needs the foreachBatch ``batch_id``."""
         existing = self.read()
-        merged = new if existing is None else existing.unionByName(new).distinct()
+        if self.by_batch:
+            if batch_id is None:
+                raise ValueError("a by_batch store merges with its batch_id")
+            batch = batch.withColumn("batch_id", F.lit(batch_id).cast("long"))
+            if existing is not None:
+                existing = existing.where(F.col("batch_id") != batch_id)
+        elif self.keep is None and not self.agg:
+            batch = batch.select(*self.key_cols).distinct()
+        merged = batch if existing is None else existing.unionByName(batch)
+        if self.agg:
+            merged = merged.groupBy(*self.key_cols).agg(*self.agg)
+        elif self.keep is not None:
+            w = Window.partitionBy(self.per).orderBy(*self.order)
+            merged = (
+                merged.dropDuplicates(self.key_cols)
+                .withColumn("_r", F.row_number().over(w))
+                .where(F.col("_r") <= self.keep)
+                .drop("_r")
+            )
+        elif not self.by_batch and existing is not None:
+            merged = merged.distinct()
         self._commit(merged)
 
     def _commit(self, df: DataFrame) -> None:
         """Versioned write + atomic pointer flip — the commit half of
-        the protocol, shared by merge() and subclasses with their own
-        merge semantics (e.g. the pruned KMV sketch store)."""
+        the protocol, the package's only pointer flip."""
         version = f"v_{uuid.uuid4().hex[:12]}"
-        df.write.mode("overwrite").parquet(os.path.join(self.root, version))
+        writer = df.write.mode("overwrite")
+        if self.partition_col:
+            writer = writer.partitionBy(self.partition_col)
+        writer.parquet(os.path.join(self.root, version))
         tmp = tempfile.NamedTemporaryFile(
             "w", dir=self.root, delete=False, suffix=".ptr"
         )

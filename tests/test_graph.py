@@ -275,6 +275,36 @@ def test_damping_must_be_finite_in_unit_interval(edges, run):
         run(edges)
 
 
+@pytest.mark.parametrize(
+    "run, dtypes",
+    [
+        (graph.pagerank, [("actor", "bigint"), ("rank", "double")]),
+        (
+            lambda e: graph.pagerank_weighted(e.withColumn("w", F.lit(1))),
+            [("actor", "bigint"), ("rank", "double")],
+        ),
+        (graph.eigenvector_centrality, [("actor", "bigint"), ("score", "double")]),
+        (
+            lambda e: graph.hits_bipartite(
+                e.select(
+                    F.col("actor1").alias("frame_id"), F.col("actor2").alias("actor")
+                )
+            ),
+            [("kind", "string"), ("id", "bigint"), ("score", "double")],
+        ),
+    ],
+    ids=["pagerank", "pagerank_weighted", "eigenvector", "hits_bipartite"],
+)
+def test_uniform_start_on_empty_input_gives_no_rows(spark, run, dtypes):
+    """Operators that start from a uniform 1/n vector divide by the node
+    count they already took: on a 0-row input they return no rows with
+    their output schema instead of raising ZeroDivisionError."""
+    empty = spark.createDataFrame([], "actor1 long, actor2 long")
+    got = run(empty)
+    assert got.dtypes == dtypes
+    assert got.collect() == []
+
+
 def test_k_core_rounds_spill_dir_bit_identical(spark, reliable_mode, monkeypatch):
     """Reliable checkpoints (the successor of the spill_dir parquet
     path) give the default mode's survivors, and both modes stop at the
@@ -1860,6 +1890,38 @@ def test_round_loops_use_supersteps():
     assert offenders == []
 
 
+def test_one_store():
+    """Streaming state has one store: no class of the package subclasses
+    DimensionStore (a drain picks a merge rule where it builds its
+    store), and the only os.replace pointer flip is in
+    streaming/upsert.py."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(graph.__file__).resolve().parent.parent
+    bases, flips = {}, []
+    for path in sorted(pkg.rglob("*.py")):
+        module = path.relative_to(pkg).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ClassDef):
+                bases[f"{module}:{node.name}"] = {
+                    getattr(b, "id", getattr(b, "attr", None)) for b in node.bases
+                }
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "attr", None) == "replace"
+                and getattr(node.func.value, "id", None) == "os"
+            ):
+                flips.append(module)
+    # transitive: a subclass of a subclass is a store subclass too
+    stores, grew = {"DimensionStore"}, True
+    while grew:
+        found = {c.split(":")[1] for c, b in bases.items() if b & stores}
+        grew, stores = not found <= stores, stores | found
+    assert sorted(stores - {"DimensionStore"}) == []
+    assert flips == ["streaming/upsert.py"]
+
+
 def test_wedge_pairs_contract_checked_under_flag(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CHECK_INVARIANTS", "1")
     dup = spark.createDataFrame(
@@ -2070,9 +2132,7 @@ def test_minklattice_merge_chop_invariant(spark, tmp_path):
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from neo4j_dynagraph_spark.streaming.neighbor_sampling import (
-        MinKLattice,
-    )
+    from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
     @settings(max_examples=6, deadline=None)
     @given(
@@ -2095,8 +2155,9 @@ def test_minklattice_merge_chop_invariant(spark, tmp_path):
         import uuid
 
         def drain(chunks_):
-            lat = MinKLattice(
-                spark, str(tmp_path / f"lat_{uuid.uuid4().hex}"), k=2
+            lat = DimensionStore(
+                spark, str(tmp_path / f"lat_{uuid.uuid4().hex}"), ["src", "dst"],
+                keep=2, per="src", order=["h", "dst"],
             )
             for ch in chunks_:
                 if ch:

@@ -53,6 +53,14 @@ def test_entry_contract(spark):
     assert set(e.oracle_sql()) <= set(e.queries())
 
 
+def test_cli_oracle_prints_registry_sql(capsys):
+    from neo4j_dynagraph_spark.__main__ import main
+
+    assert main(["oracle", "q10_degree"]) == 0
+    assert capsys.readouterr().out == REGISTRY["q10_degree"].oracle + "\n"
+    assert main(["oracle", "no_such_query"]) == 2
+
+
 def test_approx_quantiles_error_bound(spark):
     from neo4j_dynagraph_spark.queries import REGISTRY
     from tests.conftest import SF_SMALL

@@ -539,9 +539,9 @@ def test_stream_kmv_multibatch_equals_batch(spark, tmp_path):
     b_rows = sorted(map(tuple, batch.collect()))
     assert s_rows == b_rows and len(s_rows) == 2
     # bounded state: the committed sketch holds <= k rows per group
-    from neo4j_dynagraph_spark.streaming.kmv import KMVStore
+    from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
-    state = KMVStore(spark, store_root, "event_type", 4).read()
+    state = DimensionStore(spark, store_root).read()
     per_group = {
         r.event_type: r.n
         for r in state.groupBy("event_type")
@@ -629,9 +629,11 @@ def test_kmv_store_merge_is_idempotent(spark, tmp_path):
     a hash the prune already discarded — must leave the sketch state
     and the estimate unchanged (union + prune is idempotent)."""
     from neo4j_dynagraph_spark.operators.sketch import kmv_estimate
-    from neo4j_dynagraph_spark.streaming.kmv import KMVStore
+    from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
-    store = KMVStore(spark, str(tmp_path / "store"), "g", k=3)
+    store = DimensionStore(
+        spark, str(tmp_path / "store"), ["g", "u"], keep=3, per="g", order=["u"]
+    )
     b1 = spark.createDataFrame(
         [("a", 0.1), ("a", 0.5), ("a", 0.9), ("a", 0.3)], "g string, u double"
     )
@@ -657,10 +659,8 @@ def test_stream_corpus_stats_multibatch_equals_batch(spark, tmp_path):
     not change the totals."""
     import pyspark.sql.functions as F
 
-    from neo4j_dynagraph_spark.streaming.corpus_stats import (
-        CounterStore,
-        stream_corpus_stats,
-    )
+    from neo4j_dynagraph_spark.streaming.corpus_stats import stream_corpus_stats
+    from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
     docs = spark.createDataFrame(
         [
@@ -703,18 +703,41 @@ def test_stream_corpus_stats_multibatch_equals_batch(spark, tmp_path):
 
     # replay idempotence: re-merging identical partials for an
     # existing batch_id leaves the store unchanged
-    store = CounterStore(spark, str(tmp_path / "store"))
+    store = DimensionStore(spark, str(tmp_path / "store"), by_batch=True)
     rows = spark.createDataFrame(
         [(0, "#corpus", 5, 50, 0), (0, "spark", 0, 0, 2)],
         "batch_id long, key string, cnt_docs long, cnt_toks long, cnt_df long",
     )
-    store.merge(rows)
-    store.merge(rows)  # re-delivery
+    store.merge(rows, 0)
+    store.merge(rows, 0)  # re-delivery
     state = store.read()
     assert state.count() == 2
     assert (
         state.agg(F.sum("cnt_docs")).collect()[0][0] == 5
     )  # not doubled
+
+
+def test_additive_merge_takes_batch_id_from_caller(spark, tmp_path):
+    """A by-batch merge into a non-empty store runs two jobs: one infers
+    the stored version's schema, one writes the new version. Learning
+    the batch id from the rows (a distinct + collect over the batch's
+    lineage) ran two more."""
+    from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
+
+    sc = spark.sparkContext
+    store = DimensionStore(spark, str(tmp_path / "store"), by_batch=True)
+    rows = spark.createDataFrame(
+        [("#corpus", 5, 50, 0), ("spark", 0, 0, 2)],
+        "key string, cnt_docs long, cnt_toks long, cnt_df long",
+    )
+    store.merge(rows, 0)
+    sc.setJobGroup("additive-merge", "by-batch merge into a non-empty store")
+    try:
+        store.merge(rows, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("additive-merge")) == 2
+    assert sorted(r.batch_id for r in store.read().collect()) == [0, 0, 1, 1]
 
 
 def test_stream_cms_multibatch_equals_batch_and_replay_idempotent(spark, tmp_path):
@@ -728,7 +751,8 @@ def test_stream_cms_multibatch_equals_batch_and_replay_idempotent(spark, tmp_pat
     import shutil
 
     from neo4j_dynagraph_spark.operators.sketch import cms_table
-    from neo4j_dynagraph_spark.streaming.cms import CMSStore, stream_cms_table
+    from neo4j_dynagraph_spark.streaming.cms import stream_cms_table
+    from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
     src = tmp_path / "docs"
     src.mkdir()
@@ -762,10 +786,11 @@ def test_stream_cms_multibatch_equals_batch_and_replay_idempotent(spark, tmp_pat
     s_rows = sorted(map(tuple, streamed.collect()))
     assert s_rows == sorted(map(tuple, batch.collect()))
     # replay a batch's own partials: summed sketch must not change
-    store = CMSStore(spark, store_root)
+    store = DimensionStore(spark, store_root, by_batch=True)
     state = store.read()
-    one_batch = state.where(F.col("batch_id") == state.agg(F.min("batch_id")).first()[0])
-    store.merge(one_batch)
+    bid = state.agg(F.min("batch_id")).first()[0]
+    one_batch = state.where(F.col("batch_id") == bid)
+    store.merge(one_batch, bid)
     replayed = (
         store.read()
         .groupBy("r", "c")
@@ -842,10 +867,8 @@ def test_stream_sq_stats_multibatch_and_replay_absorbed(spark, tmp_path):
     import os
     import shutil
 
-    from neo4j_dynagraph_spark.streaming.sq_stats import (
-        MinMaxStore,
-        stream_sq_stats,
-    )
+    from neo4j_dynagraph_spark.streaming.sq_stats import stream_sq_stats
+    from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
     src = tmp_path / "emb"
     src.mkdir()
@@ -875,7 +898,10 @@ def test_stream_sq_stats_multibatch_and_replay_absorbed(spark, tmp_path):
     }
     assert got == {0: (-2.0, 3.0), 1: (-5.0, 7.0)}
     # replay absorption: merging the final state into itself changes nothing
-    store = MinMaxStore(spark, store_root)
+    store = DimensionStore(
+        spark, store_root, ["i"],
+        agg=[F.min("mn").alias("mn"), F.max("mx").alias("mx")],
+    )
     store.merge(store.read())
     again = {r.i: (r.mn, r.mx) for r in store.read().collect()}
     assert again == got
@@ -1166,16 +1192,18 @@ def test_failing_drain_frees_ephemeral_root_keeps_store_root(
     import pytest
 
     from neo4j_dynagraph_spark.streaming.cms import stream_cms_table
-    from neo4j_dynagraph_spark.streaming.corpus_stats import CounterStore
     from neo4j_dynagraph_spark.streaming.kmv import stream_kmv_distinct
+    from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
-    def boom(self, df):
+    real_merge = DimensionStore.merge
+
+    def boom(self, df, batch_id=None):
         raise RuntimeError("injected batch failure")
 
     tmp = tmp_path / "tmp"
     tmp.mkdir()
     monkeypatch.setattr(tempfile, "tempdir", str(tmp))
-    monkeypatch.setattr(CounterStore, "merge", boom)
+    monkeypatch.setattr(DimensionStore, "merge", boom)
     docs = f"{SF_SMALL}/documents.parquet"
     schema = spark.read.parquet(docs).schema
     with pytest.raises(Exception, match="injected batch failure"):
@@ -1190,6 +1218,7 @@ def test_failing_drain_frees_ephemeral_root_keeps_store_root(
 
     # a drain that succeeds leaves nothing either, and its result stays
     # readable after the root is gone
+    monkeypatch.setattr(DimensionStore, "merge", real_merge)
     events = f"{SF_SMALL}/events.parquet"
     est = stream_kmv_distinct(spark, events, spark.read.parquet(events).schema)
     assert est.count() > 0
@@ -1555,13 +1584,14 @@ def test_stream_neighbor_sampling_crash_between_commits_replays(
     real_merge = DimensionStore.merge
     calls = {"n": 0}
 
-    def dying_merge(self, df):
+    def dying_merge(self, df, batch_id=None):
         # presence merges once per non-empty batch; batch 2 = call 3.
         # Raise BEFORE the real merge: lattices committed, presence not.
-        calls["n"] += 1
-        if calls["n"] == 3:
-            raise RuntimeError("injected crash before presence commit")
-        return real_merge(self, df)
+        if os.path.basename(self.root) == "presence":
+            calls["n"] += 1
+            if calls["n"] == 3:
+                raise RuntimeError("injected crash before presence commit")
+        return real_merge(self, df, batch_id)
 
     monkeypatch.setattr(DimensionStore, "merge", dying_merge)
     import pytest as _pytest
