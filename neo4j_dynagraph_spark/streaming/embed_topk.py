@@ -82,7 +82,7 @@ def stream_embed_topk(
             spark, drain.path("queries"), ["qid", "qv"]
         )
         topk_store = DimensionStore(
-            spark, drain.path("topk"), ["qid", "cid"], keep=k, per="qid",
+            spark, drain.path("topk"), ["qid", "cid"], keep=k,
             order=[F.desc("sim_raw"), "cid"],
         )
 

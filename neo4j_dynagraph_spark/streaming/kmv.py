@@ -50,9 +50,10 @@ def stream_kmv_distinct(
     final sketch state — bit-identical to the batch
     operators.sketch.kmv_distinct on the same data.
 
-    Per-batch work: kmv_distinct's hash and per-group distinct, then
-    the store's keep-k merge (one window over the batch's hashes and
-    the O(k x groups) state).
+    Per-batch work: kmv_distinct's hash and per-group distinct, a
+    batch-local prune to the k smallest (the store's keep-k rule over
+    the BATCH, bounded by trigger size), then the store's union-prune
+    merge against O(k x groups) state.
 
     ``store_root=None`` drains ephemerally (temp root deleted after
     the result materializes); a persistent ``store_root`` keeps its
@@ -60,15 +61,15 @@ def stream_kmv_distinct(
     """
     with bounded_drain(spark, store_root) as drain:
         store = DimensionStore(
-            spark, drain.root, [group_col, "u"], keep=k, per=group_col,
-            order=["u"],
+            spark, drain.root, [group_col, "u"], keep=k, order=["u"]
         )
 
         # no sentinel needed — foreachBatch has no watermark to push
         stream = drain.source(events_path, schema, max_files_per_trigger)
 
         def sketch_batch(batch_df: DataFrame, batch_id: int) -> None:
-            store.merge(kmv_hashes(batch_df, group_col, F.col(value_col), seed))
+            hashes = kmv_hashes(batch_df, group_col, F.col(value_col), seed)
+            store.merge(store.prune(hashes))
 
         drain.run(stream, sketch_batch)
         state = store.read()

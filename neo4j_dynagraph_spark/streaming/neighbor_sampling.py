@@ -82,7 +82,7 @@ def stream_neighbor_sampling(
         lattices = [
             DimensionStore(
                 spark, drain.path(f"hop{i}"), ["src", "dst"], keep=fo,
-                per="src", order=["h", "dst"],
+                order=["h", "dst"],
             )
             for i, fo in enumerate(fanouts, start=1)
         ]

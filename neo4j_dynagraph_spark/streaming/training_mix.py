@@ -9,8 +9,8 @@ has a cross-batch dependency:
 
 - DEDUP: the min-doc_id survivor for a content hash may arrive in any
   batch — per content hash, MIN(doc_id) is a lattice (idempotent,
-  commutative, associative), so the store keeps the running min (the
-  first row per hash by doc_id) and re-delivered batches are absorbed.
+  commutative, associative), so the store keeps the running min (a
+  per-key min aggregate) and re-delivered batches are absorbed.
 - QUALITY: purely per-document — each batch's text_stats projection is
   committed keyed by batch_id (a doc lives in exactly one batch, so a
   re-delivered batch OVERWRITES its own rows; corpus_stats' protocol).
@@ -74,8 +74,8 @@ def stream_training_mix(
     """
     with bounded_drain(spark, store_root) as drain:
         dedup_store = DimensionStore(
-            spark, drain.path("dedup"), ["content_hash", "doc_id"], keep=1,
-            per="content_hash", order=["doc_id"],
+            spark, drain.path("dedup"), ["content_hash"],
+            agg=[F.min("doc_id").alias("doc_id")],
         )
         stats_store = DimensionStore(spark, drain.path("stats"), by_batch=True)
         tgram_store = DimensionStore(
@@ -113,9 +113,11 @@ def stream_training_mix(
             # independent jobs'); each store owns its own directory, so
             # the commits share no mutable state
             tasks = [
-                # stage 1 — dedup lattice: the store keeps the min per hash
+                # stage 1 — dedup lattice: batch-local min per hash + merge
                 lambda: dedup_store.merge(
-                    batch_df.select(F.md5("text").alias("content_hash"), "doc_id")
+                    batch_df.select(
+                        F.md5("text").alias("content_hash"), "doc_id"
+                    ).groupBy("content_hash").agg(F.min("doc_id").alias("doc_id"))
                 ),
                 # stage 2 — per-doc quality stats (the batch pipeline's
                 # exact text_stats projection, so the rounded ttr gate

@@ -38,15 +38,18 @@ class DimensionStore:
       REPLACES that id's rows, so a re-delivered batch overwrites
       itself; readers sum over batches. This is what makes additive
       counters exactly-once (``key_cols`` are unused).
-    - ``keep=k``: a pruned lattice. Dedup on ``key_cols``, then keep
-      the first k rows of each ``per`` group in ``order`` (the KMV
-      sketch's k smallest hashes, a neighbor sample's k smallest
-      hash ranks, a running top-k, the min-id dedup survivor at k=1).
-      The non-key columns must be a function of the key (hash-keyed
-      or deterministic scores), or the prune depends on arrival order.
+    - ``keep=k``: a pruned lattice (``prune``). Dedup on ``key_cols``,
+      then keep the first k rows in ``order`` of each group of the
+      first key column (the KMV sketch's k smallest hashes, a neighbor
+      sample's k smallest hash ranks, a running top-k). The non-key
+      columns must be a function of the key (hash-keyed or
+      deterministic scores), or the prune depends on arrival order.
     - ``agg=[...]``: a per-key aggregate: group the union by
       ``key_cols`` and apply the aggregates, which must themselves be
-      a lattice join (min, max).
+      a lattice join (min, max; the min-id dedup survivor).
+
+    The three named rules exclude each other; the constructor rejects
+    a combination rather than pick one by precedence.
 
     ``partition_col`` partitions every committed version by that
     integral column, read back as long (partition discovery would
@@ -73,16 +76,19 @@ class DimensionStore:
         *,
         by_batch: bool = False,
         keep: int | None = None,
-        per: str | None = None,
         order: list[str | Column] = (),
         agg: list[Column] = (),
         partition_col: str | None = None,
     ) -> None:
+        if by_batch + (keep is not None) + bool(agg) > 1:
+            raise ValueError("by_batch, keep and agg are exclusive rules")
+        if keep is not None and not (key_cols and order):
+            raise ValueError("keep needs key_cols (group first) and order")
         self.spark = spark
         self.root = root
         self.key_cols = list(key_cols)
         self.by_batch = by_batch
-        self.keep, self.per, self.order = keep, per, list(order)
+        self.keep, self.order = keep, list(order)
         self.agg = list(agg)
         self.partition_col = partition_col
         os.makedirs(root, exist_ok=True)
@@ -122,16 +128,23 @@ class DimensionStore:
         if self.agg:
             merged = merged.groupBy(*self.key_cols).agg(*self.agg)
         elif self.keep is not None:
-            w = Window.partitionBy(self.per).orderBy(*self.order)
-            merged = (
-                merged.dropDuplicates(self.key_cols)
-                .withColumn("_r", F.row_number().over(w))
-                .where(F.col("_r") <= self.keep)
-                .drop("_r")
-            )
+            merged = self.prune(merged)
         elif not self.by_batch and existing is not None:
             merged = merged.distinct()
         self._commit(merged)
+
+    def prune(self, df: DataFrame) -> DataFrame:
+        """The ``keep`` rule on any frame: dedup on ``key_cols``, then
+        the first ``keep`` rows in ``order`` per first key column. A
+        drain may prune its batch with it before ``merge``, so the
+        merge's window sees at most k batch rows per group."""
+        w = Window.partitionBy(self.key_cols[0]).orderBy(*self.order)
+        return (
+            df.dropDuplicates(self.key_cols)
+            .withColumn("_r", F.row_number().over(w))
+            .where(F.col("_r") <= self.keep)
+            .drop("_r")
+        )
 
     def _commit(self, df: DataFrame) -> None:
         """Versioned write + atomic pointer flip — the commit half of

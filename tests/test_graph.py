@@ -2157,7 +2157,7 @@ def test_minklattice_merge_chop_invariant(spark, tmp_path):
         def drain(chunks_):
             lat = DimensionStore(
                 spark, str(tmp_path / f"lat_{uuid.uuid4().hex}"), ["src", "dst"],
-                keep=2, per="src", order=["h", "dst"],
+                keep=2, order=["h", "dst"],
             )
             for ch in chunks_:
                 if ch:

@@ -5,6 +5,7 @@ from __future__ import annotations
 import textwrap
 
 import pyspark.sql.functions as F
+import pytest
 
 from neo4j_dynagraph_spark.operators import ingest
 from neo4j_dynagraph_spark.sources import gexf
@@ -632,7 +633,7 @@ def test_kmv_store_merge_is_idempotent(spark, tmp_path):
     from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
 
     store = DimensionStore(
-        spark, str(tmp_path / "store"), ["g", "u"], keep=3, per="g", order=["u"]
+        spark, str(tmp_path / "store"), ["g", "u"], keep=3, order=["u"]
     )
     b1 = spark.createDataFrame(
         [("a", 0.1), ("a", 0.5), ("a", 0.9), ("a", 0.3)], "g string, u double"
@@ -650,6 +651,25 @@ def test_kmv_store_merge_is_idempotent(spark, tmp_path):
     assert sorted(map(tuple, store.read().collect())) == first
     est = kmv_estimate(store.read(), "g", 3).first()
     assert est.n_seen == 3
+
+
+@pytest.mark.parametrize(
+    "rule",
+    [
+        {"by_batch": True, "keep": 2, "order": ["b"]},
+        {"by_batch": True, "agg": ["min"]},
+        {"keep": 2, "order": ["b"], "agg": ["min"]},
+        {"keep": 2},  # no order
+    ],
+)
+def test_store_rejects_conflicting_rules(tmp_path, rule):
+    """Merge rules exclude each other: the constructor refuses a
+    combination instead of silently picking one."""
+    from neo4j_dynagraph_spark.streaming.upsert import DimensionStore
+
+    with pytest.raises(ValueError):
+        DimensionStore(None, str(tmp_path / "s"), ["a", "b"], **rule)
+    assert not (tmp_path / "s").exists()
 
 
 def test_stream_corpus_stats_multibatch_equals_batch(spark, tmp_path):
